@@ -6,6 +6,7 @@ import graft.table.ChronicleTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.storage.StorageLevel
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -223,13 +224,6 @@ class CdcPipeline(val cfg: PipelineConfig) {
     math.max(1, math.min(math.min(ideal, lastSegments * 2), maxSpb))
   }
 
-  /** Process exactly one pending batch. None = nothing pending.
-    *
-    * Segments are selected by segment NUMBER strictly past the persisted
-    * cursor — not by position in the current listing — so a partial
-    * trailing batch committed while the source was drained cannot cause
-    * segments that arrive later to be skipped.
-    */
   /** Usable bytes on the table's filesystem; overridable so specs can fake
     * a full disk without filling one.
     */
@@ -251,86 +245,18 @@ class CdcPipeline(val cfg: PipelineConfig) {
       full
     }
 
-  def runOnce(spark: SparkSession): Option[MergeResult] = {
-    ensureTable()
-    if (diskFull()) return None
-    val cursor = consumedSegment()
-    val spb = if (cfg.adaptiveBatching) dynamicSpb else cfg.segmentsPerBatch
-    val slice = listSegments().filter(s => segNum(s) > cursor).take(spb)
-    if (slice.isEmpty) None
-    else {
-      val next = lastCommittedBatch() + 1
-      val raw = readBatch(spark, slice)
-      // quarantine splits the batch twice; persist so both read the cache
-      if (cfg.quarantine) raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val t0 = System.nanoTime()
-      try {
-        val r = MergeInto(spark, table,
-          route(spark, raw, next), batchKey(next),
-          source = slice.mkString(","), saltBuckets = cfg.saltBuckets,
-          cursor = Some(cfg.sourceId -> slice.map(segNum).max),
-          mergeOnRead = cfg.mergeOnRead)
-        if (cfg.adaptiveBatching)
-          dynamicSpb = nextBatchSize(slice.size,
-            (System.nanoTime() - t0) / 1e9, cfg.targetBatchSec,
-            cfg.segmentsPerBatch)
-        Some(r)
-      } finally if (cfg.quarantine) raw.unpersist()
-    }
-  }
-
-  /** Periodic in-drain maintenance: compaction bounds the live-file count,
-    * expiry bounds snapshot/metadata history, orphan GC reclaims crash
-    * leftovers. All three go through the normal commit/delete protocols,
-    * so readers only ever see committed snapshots.
-    */
-  private def maybeMaintain(spark: SparkSession, applied: Int): Unit =
-    if (cfg.maintenanceEveryBatches > 0 &&
-        applied % cfg.maintenanceEveryBatches == 0) {
-      // MOR tombstones may be GC'd only up to the MINIMUM high-water mark
-      // across ALL of the table's sources — compaction drops every
-      // tombstone at-or-below the horizon regardless of which source wrote
-      // it, and a shared multi-source table's other source (whose LSN
-      // sequence may run lower) can still redeliver events that the dropped
-      // tombstone had to mask. Unordered sources (no mark bounds their
-      // redelivery) floor the horizon to MinValue — no GC.
-      val horizon =
-        if (cfg.mergeOnRead) table.loadCurrent().tombstoneHorizon
-        else Long.MinValue
-      val r = graft.ops.Compaction(spark, table, cfg.compactMaxFilesPerBucket,
-        tombstoneHorizonLsn = horizon)
-      val (expired, deleted) = table.expireSnapshots(cfg.retainSnapshots)
-      table.gcOrphans()
-      if (verbose) println(s"[cdc] maintenance: compacted ${r.compactedBuckets} " +
-        s"buckets (${r.removedFiles} -> ${r.addedFiles} files), expired " +
-        s"${expired.size} snapshots, deleted ${deleted.size} data files")
-    }
+  /** Process exactly one pending batch. None = nothing pending. */
+  def runOnce(spark: SparkSession): Option[MergeResult] =
+    drain(spark, maxBatches = 1, prepareAhead = false)._2
 
   /** Drain all pending segments. Returns number of batches applied. */
-  def runAll(spark: SparkSession, maxBatches: Int = Int.MaxValue): Int = {
-    var n = 0
-    var done = false
-    while (n < maxBatches && !done) {
-      val t0 = System.nanoTime()
-      runOnce(spark) match {
-        case Some(r) =>
-          n += 1
-          if (verbose) println(f"[cdc] batch applied in ${(System.nanoTime() - t0) / 1e9}%.2fs " +
-            f"(upserts=${r.upserts} deletes=${r.deletes} rewrote=${r.rewrittenFiles} added=${r.addedFiles})")
-          recordMetric(r, (System.nanoTime() - t0) / 1e9, "batch")
-          maybeMaintain(spark, n)
-        case None => done = true
-      }
-    }
-    n
-  }
+  def runAll(spark: SparkSession, maxBatches: Int = Int.MaxValue): Int =
+    drain(spark, maxBatches, prepareAhead = false)._1
 
-  /** Pipelined drain: batch k+1's PREPARE (scan + dedup shuffle — the
-    * CPU-heavy, table-independent phase) runs concurrently with batch k's
-    * APPLY (join + file write + commit — IO-heavy), so the cluster's cores
-    * stay busy through the write's IO waits and stage tails. Correctness
-    * is unchanged: prepare touches no table state, and the exact
-    * high-water-mark redelivery filter runs inside apply (see
+  /** Pipelined drain: batch k+1's PREPARE (scan + dedup shuffle) runs
+    * concurrently with batch k's APPLY ([[MergeInto.prepareAhead]]).
+    * Correctness is unchanged: prepare touches no table state, and the
+    * exact high-water-mark redelivery filter runs inside apply (see
     * [[graft.ops.MergeInto.prepare]]). This is the engine's analogue of
     * the reference's concurrent queue-drain + uploader pool
     * (QueuedSink.run feeding RemoteFileSink's upload executor,
@@ -342,79 +268,80 @@ class CdcPipeline(val cfg: PipelineConfig) {
       "pipelined drain is the trusted-source fast path; route filters and " +
         "quarantine need the sequential runAll (the batch must be routed " +
         "before the table-independent prepare)")
+    drain(spark, maxBatches, prepareAhead = true)._1
+  }
+
+  /** Batches applied by this pipeline instance, whichever entry point
+    * drove them — the cadence of in-drain maintenance.
+    */
+  private var appliedBatches = 0
+
+  /** The one drain loop (suro's QueuedSink.run, QueuedSink.java:96-153):
+    * select the next slice, apply it, then the per-batch tail — adaptive
+    * sizing, timing line, metrics line, maintenance. Returns the batches
+    * applied and the last merge.
+    *
+    * Slices are selected by segment NUMBER strictly past the previous
+    * slice (the persisted cursor for the first) — not by position in the
+    * current listing — so a partial trailing batch committed while the
+    * source was drained cannot cause segments that arrive later to be
+    * skipped. The slice size is re-read from `dynamicSpb` at every
+    * selection; under prepare-ahead, selection runs one batch AHEAD of the
+    * apply that measures the rate (that overlap is the point of the
+    * pipeline), so sizing reacts with a one-batch lag.
+    */
+  private def drain(spark: SparkSession, maxBatches: Int,
+      prepareAhead: Boolean): (Int, Option[MergeResult]) = {
     ensureTable()
-    val exec = java.util.concurrent.Executors.newSingleThreadExecutor()
-    // prepare jobs run under their own job group so an apply-side failure
-    // can CANCEL the in-flight prepare (a bare Future.cancel would only
-    // interrupt the submitter thread and leave the Spark job running)
-    val prepGroup = s"graft-prep-${java.util.UUID.randomUUID()}"
-    def prep(slice: Seq[String]): java.util.concurrent.Future[MergeInto.Prepared] =
-      exec.submit(new java.util.concurrent.Callable[MergeInto.Prepared] {
-        def call(): MergeInto.Prepared = {
-          spark.sparkContext.setJobGroup(prepGroup,
-            "pipelined micro-batch prepare", interruptOnCancel = true)
-          try MergeInto.prepare(spark,
-            readBatch(spark, slice), table.loadCurrent().numBuckets,
-            cfg.saltBuckets)
-          finally spark.sparkContext.clearJobGroup()
-        }
-      })
-    // Backpressure in the pipelined drain: the slice size is re-read from
-    // dynamicSpb at every selection, but selection happens one batch AHEAD
-    // of the apply that measures the rate (that overlap is the point of the
-    // pipeline), so sizing reacts with a one-batch lag — the same
-    // pending/throughput feedback as runAll, minus one step of latency.
-    def spbNow: Int = if (cfg.adaptiveBatching) dynamicSpb else cfg.segmentsPerBatch
-    var n = 0
-    var pendingPrep: java.util.concurrent.Future[MergeInto.Prepared] = null
-    try {
-      def nextSlice(cursor: Long): Seq[String] =
+    val slices = Iterator.unfold(consumedSegment()) { cursor =>
+      val spb = if (cfg.adaptiveBatching) dynamicSpb else cfg.segmentsPerBatch
+      val slice =
         if (diskFull()) Nil
-        else listSegments().filter(s => segNum(s) > cursor).take(spbNow)
-      var cursor = consumedSegment()
-      var slice = nextSlice(cursor)
-      if (slice.isEmpty) return 0
-      pendingPrep = prep(slice)
-      while (slice.nonEmpty && n < maxBatches) {
-        val curSlice = slice
-        val curPrep = pendingPrep
-        cursor = slice.map(segNum).max
-        slice = nextSlice(cursor)
-        pendingPrep =
-          if (slice.isEmpty || n + 1 >= maxBatches) null
-          else prep(slice)
-        val prepared = curPrep.get()
-        val t0 = System.nanoTime()
-        val next = lastCommittedBatch() + 1
-        val r = MergeInto(spark, table, readBatch(spark, curSlice), batchKey(next),
-          source = curSlice.mkString(","), saltBuckets = cfg.saltBuckets,
-          cursor = Some(cfg.sourceId -> curSlice.map(segNum).max),
-          prepared = Some(prepared), mergeOnRead = cfg.mergeOnRead)
-        val applySec = (System.nanoTime() - t0) / 1e9
-        if (cfg.adaptiveBatching)
-          dynamicSpb = nextBatchSize(curSlice.size, applySec,
-            cfg.targetBatchSec, cfg.segmentsPerBatch)
-        n += 1
-        if (verbose) println(f"[cdc] batch applied in $applySec%.2fs " +
-          f"(upserts=${r.upserts} deletes=${r.deletes} rewrote=${r.rewrittenFiles} added=${r.addedFiles})")
-        recordMetric(r, applySec, "pipelined")
-        // safe alongside the in-flight next-batch PREPARE: prepare reads no
-        // table state, and the commit-conflict rebase covers the (single-
-        // threaded here anyway) compaction-vs-merge window
-        maybeMaintain(spark, n)
+        else listSegments().filter(s => segNum(s) > cursor).take(spb)
+      slice.lastOption.map(last => slice -> segNum(last))
+    }.take(maxBatches)
+    var n = 0
+    var lastResult: Option[MergeResult] = None
+    def applyOne(slice: Seq[String], prepared: Option[MergeInto.Prepared]): Unit = {
+      val next = lastCommittedBatch() + 1
+      val raw = readBatch(spark, slice)
+      // quarantine splits the batch twice; persist so both read the cache
+      if (cfg.quarantine) raw.persist(StorageLevel.MEMORY_AND_DISK)
+      val t0 = System.nanoTime()
+      val r =
+        try MergeInto(spark, table, route(spark, raw, next), batchKey(next),
+          source = slice.mkString(","), saltBuckets = cfg.saltBuckets,
+          cursor = Some(cfg.sourceId -> segNum(slice.last)),
+          prepared = prepared, mergeOnRead = cfg.mergeOnRead)
+        finally if (cfg.quarantine) raw.unpersist()
+      val sec = (System.nanoTime() - t0) / 1e9
+      if (cfg.adaptiveBatching)
+        dynamicSpb = nextBatchSize(slice.size, sec, cfg.targetBatchSec,
+          cfg.segmentsPerBatch)
+      n += 1
+      appliedBatches += 1
+      lastResult = Some(r)
+      if (verbose) println(f"[cdc] batch applied in $sec%.2fs " +
+        f"(upserts=${r.upserts} deletes=${r.deletes} rewrote=${r.rewrittenFiles} added=${r.addedFiles})")
+      recordMetric(r, sec, if (prepareAhead) "pipelined" else "batch")
+      // Periodic in-drain maintenance ([[Chain.maintain]]): a normal commit
+      // in the same ledger. Safe alongside an in-flight next-batch PREPARE
+      // — prepare reads no table state, and the commit-conflict rebase
+      // covers the compaction-vs-merge window.
+      if (cfg.maintenanceEveryBatches > 0 &&
+          appliedBatches % cfg.maintenanceEveryBatches == 0) {
+        val m = Chain.maintain(spark, table, cfg.mergeOnRead,
+          cfg.compactMaxFilesPerBucket, cfg.retainSnapshots)
+        if (verbose) println(s"[cdc] maintenance: $m")
       }
-      n
-    } catch {
-      case t: Throwable =>
-        // don't leak the in-flight next-batch prepare: cancel its Spark job
-        // and unpersist its cached dedup result if it already completed
-        if (pendingPrep != null) {
-          spark.sparkContext.cancelJobGroup(prepGroup)
-          try pendingPrep.get(30, java.util.concurrent.TimeUnit.SECONDS).unpersist()
-          catch { case _: Throwable => () }
-        }
-        throw t
-    } finally exec.shutdownNow()
+    }
+    if (prepareAhead)
+      MergeInto.prepareAhead(spark, slices)(slice =>
+        MergeInto.prepare(spark, readBatch(spark, slice),
+          table.loadCurrent().numBuckets, cfg.saltBuckets))(
+        (slice, prepared) => applyOne(slice, Some(prepared)))
+    else slices.foreach(applyOne(_, None))
+    (n, lastResult)
   }
 
   /** Per-batch timing log (set for profiling / CLI runs). */
@@ -425,9 +352,8 @@ class CdcPipeline(val cfg: PipelineConfig) {
 
   private def recordMetric(r: MergeResult, sec: Double, mode: String): Unit =
     if (cfg.recordMetrics)
-      Metrics.append(metricsDir, MetricEvent(cfg.sourceId, r.snapshot.version,
-        System.currentTimeMillis(), r.upserts + r.deletes, sec,
-        r.upserts, r.deletes, mode))
+      Metrics.record(cfg.tableRoot, cfg.sourceId, r.snapshot.version,
+        Seq(r), sec, mode)
 
   /** The metrics ledger as a DataFrame (rates/durations per batch/epoch,
     * alongside [[lineage]]).

@@ -54,25 +54,6 @@ object Chain {
   /** The downstream cursor key for an upstream root. */
   def cursorKey(srcRoot: String): String = s"$cursorPrefix$srcRoot"
 
-  /** Record one metrics-ledger line per applied poll/stream batch on the
-    * DOWNSTREAM table (`<dst>/metrics`, the same ledger the pipeline
-    * writes), so `/stats` on a chain-fed table serves live per-mode rates
-    * — without this the status surface showed ledger state but no rates
-    * for chained drains. One driver-side JSONL append per poll; set false
-    * to silence (benchmarks isolating IO).
-    */
-  @volatile var recordMetrics: Boolean = true
-
-  private def recordMetric(dst: ChronicleTable, srcRoot: String,
-      epoch: Long, merges: Seq[MergeResult], sec: Double,
-      mode: String): Unit =
-    if (recordMetrics) {
-      val up = merges.map(_.upserts).sum
-      val del = merges.map(_.deletes).sum
-      Metrics.append(s"${dst.root}/metrics", MetricEvent(srcRoot, epoch,
-        System.currentTimeMillis(), up + del, sec, up, del, mode))
-    }
-
   private def isChainCursor(k: String): Boolean =
     k.startsWith(cursorPrefix) || k.startsWith(streamCursorPrefix)
 
@@ -95,6 +76,34 @@ object Chain {
           "batch-index keys under one prefix) — drain into a separate table " +
           "and chain it, or drop the chain first")
     }
+
+  /** The checks both chain modes make before anything ships, returning the
+    * downstream's cursors: the upstream must be tailable — failing BEFORE
+    * the bootstrap, not on poll 2, since an unordered upstream can never be
+    * tailed (readChanges would refuse) and shipping its full state first
+    * would strand a half-initialized downstream — and the downstream
+    * (created if absent) must be fed by no pipeline and not by the other
+    * chain mode, whose cursors carry `otherPrefix`.
+    */
+  private def openDownstream(src: ChronicleTable, cur: graft.table.Snapshot,
+      dst: ChronicleTable, numBuckets: Int, otherPrefix: String,
+      otherFed: String, hint: String): Map[String, Long] = {
+    require(cur.unordered.isEmpty,
+      s"upstream ${src.root} has unordered sources " +
+        s"${cur.unordered.mkString(",")} — its changelog cannot be tailed " +
+        "(no mark bounds their redelivery), so it cannot be chained")
+    if (!dst.exists) dst.create(Model.physicalSchemaV1, numBuckets)
+    val cursors = dst.loadCurrent().cursors
+    val other = cursors.keys.filter(_.startsWith(otherPrefix))
+    require(other.isEmpty,
+      s"table ${dst.root} is $otherFed (${other.mkString(",")}): $hint")
+    val direct = cursors.keys.filterNot(isChainCursor)
+    require(direct.isEmpty,
+      s"table ${dst.root} is pipeline-fed (cursors ${direct.mkString(",")})" +
+        ": chaining into it would collide with the pipeline's batch-index " +
+        "ledger keys — see Chain.requireNotChainFed")
+    cursors
+  }
 
   case class ChainResult(
       fromVersion: Long,
@@ -157,25 +166,10 @@ object Chain {
         */
       transform: DataFrame => DataFrame = identity): Option[ChainResult] = {
     val cur = src.loadCurrent()
-    // fail BEFORE the bootstrap, not on poll 2: an unordered upstream can
-    // never be tailed (readChanges would refuse), so shipping its full
-    // state first would strand a half-initialized downstream
-    require(cur.unordered.isEmpty,
-      s"upstream ${src.root} has unordered sources " +
-        s"${cur.unordered.mkString(",")} — its changelog cannot be tailed " +
-        "(no mark bounds their redelivery), so it cannot be chained")
-    if (!dst.exists) dst.create(Model.physicalSchemaV1, numBuckets)
-    val dstCursors = dst.loadCurrent().cursors
-    val streamFed = dstCursors.keys.filter(_.startsWith(streamCursorPrefix))
-    require(streamFed.isEmpty,
-      s"table ${dst.root} is stream-chain-fed (${streamFed.mkString(",")}): " +
-        "poll-mode chaining would interleave a second ledger-key scheme " +
-        "with the stream's batch-id keys — keep tailing via followStream")
-    val direct = dstCursors.keys.filterNot(isChainCursor)
-    require(direct.isEmpty,
-      s"table ${dst.root} is pipeline-fed (cursors ${direct.mkString(",")})" +
-        ": chaining into it would collide with the pipeline's batch-index " +
-        "ledger keys — see Chain.requireNotChainFed")
+    val dstCursors = openDownstream(src, cur, dst, numBuckets,
+      streamCursorPrefix, "stream-chain-fed", "poll-mode chaining would " +
+        "interleave a second ledger-key scheme with the stream's batch-id " +
+        "keys — keep tailing via followStream")
     val key = cursorKey(src.root)
     val lastV = dstCursors.getOrElse(key, -1L)
     if (lastV >= cur.version) return None
@@ -183,47 +177,14 @@ object Chain {
     var known = knownPrefixes(dst.loadCurrent())
     var shipped = Set.empty[String]
 
-    // Ship one change set as one merge per ORIGINAL source, in
-    // deterministic order, so the downstream marks stay per-source; rows
-    // written before the _source column existed (null) ship under a
-    // dedicated legacy prefix. A KNOWN source with NO rows in this set
-    // still gets a (metadata-only) empty commit: every prefix's range
-    // keys then tile contiguously across polls/slices and the ledger
-    // floor folds them away — without this, one quiet poll would leave a
-    // permanent gap and the explicit window would grow by one key per
-    // prefix per later poll. A prefix's FIRST range anchors at version
-    // unit 0 (nothing was ever shipped for it before, so the wider claim
-    // is vacuous) — a source joining mid-stream then tiles from 0 and
-    // its floor folds immediately instead of leaving a permanent
-    // pre-join gap.
-    def shipRange(changes0: DataFrame, unitLo: Long, unitHi: Long,
+    def shipRange(changes: DataFrame, unitLo: Long, unitHi: Long,
         last: Boolean, what: String): Seq[MergeResult] = {
-      val changes = transform(changes0)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val payload = payloadOf(changes.schema)
-        val srcCol = col(Model.sourceColumn)
-        val tagged = changes.select(coalesce(srcCol, lit("_legacy")).as("__src"))
-          .distinct().collect().map(_.getString(0)).toSet
-        val prefixes = (tagged ++ known).toSeq.sorted match {
-          case Nil => Seq("_chain") // empty set on a fresh table: cursor-only
-          case ps => ps
-        }
-        val ms = prefixes.zipWithIndex.map { case (s, i) =>
-          val rows = changes.filter(coalesce(srcCol, lit("_legacy")) === s)
-          val lo = if (known.contains(s)) unitLo else 0L
-          MergeInto(spark, dst, asEvents(rows, payload),
-            batchKey = s"$s#$lo-$unitHi",
-            source = what,
-            cursor = if (last && i == prefixes.size - 1)
-                       Some(key -> cur.version)
-                     else None,
-            mergeOnRead = mergeOnRead)
-        }
-        known ++= prefixes.filterNot(_ == "_chain")
-        shipped ++= prefixes
-        ms
-      } finally { changes.unpersist(); () }
+      val (prefixes, ms) = shipPerSource(dst, transform(changes), known,
+        unitLo, unitHi, rangeKeys = true,
+        if (last) Some(key -> cur.version) else None, what, mergeOnRead)
+      known ++= prefixes.filterNot(_ == "_chain")
+      shipped ++= prefixes
+      ms
     }
 
     val merges: Seq[MergeResult] =
@@ -252,7 +213,9 @@ object Chain {
           }
         }
       }
-    recordMetric(dst, src.root, cur.version, merges,
+    // one metrics line per applied poll on the DOWNSTREAM table, so
+    // `/stats` on a chain-fed table serves live per-mode rates
+    Metrics.record(dst.root, src.root, cur.version, merges,
       (System.nanoTime() - t0) / 1e9, "chain-poll")
     Some(ChainResult(lastV, cur.version, shipped.toSeq.sorted, merges))
   }
@@ -297,15 +260,23 @@ object Chain {
     n
   }
 
-  /** Downstream housekeeping for a long-lived chain — the pipeline drain
-    * runs this every N batches ([[CdcPipeline]] `maintenanceEveryBatches`),
-    * but a CHAIN-fed table has no pipeline: without it an always-on
-    * [[follow]] accumulates a snapshot per poll forever and, under
-    * merge-on-read, delta files between manual compactions. Same recipe as
-    * the pipeline's: fold deltas up to the SAFE tombstone horizon (the
-    * minimum mark across the downstream's mirrored sources; MinValue — no
-    * GC — when any is unordered/unmarked), expire old snapshots, GC aged
-    * orphans.
+  /** The engine's table housekeeping recipe, run every N batches by the
+    * pipeline drain ([[CdcPipeline]] `maintenanceEveryBatches`) and every
+    * N polls/triggers by a chain — without it an always-on [[follow]]
+    * accumulates a snapshot per poll forever and, under merge-on-read,
+    * delta files between manual compactions. Compaction bounds the
+    * live-file count, expiry bounds snapshot/metadata history, orphan GC
+    * reclaims crash leftovers; all three go through the normal
+    * commit/delete protocols, so readers only ever see committed
+    * snapshots. Returns a one-line summary for logs.
+    *
+    * MOR tombstones may be GC'd only up to the MINIMUM high-water mark
+    * across ALL of the table's sources (the snapshot's
+    * `tombstoneHorizon`): compaction drops every tombstone at-or-below
+    * the horizon regardless of which source wrote it, and another source
+    * (whose LSN sequence may run lower) can still redeliver events the
+    * dropped tombstone had to mask. Unordered or unmarked sources floor
+    * the horizon to MinValue — no GC.
     *
     * Retention caveat for CASCADES: a further-downstream tail holds this
     * table's VERSION as its cursor — `retainSnapshots` must cover the
@@ -314,28 +285,63 @@ object Chain {
     */
   def maintain(spark: SparkSession, dst: ChronicleTable,
       mergeOnRead: Boolean = false, maxFilesPerBucket: Int = 8,
-      retainSnapshots: Int = 10): Unit = {
+      retainSnapshots: Int = 10): String = {
     val horizon =
       if (mergeOnRead) dst.loadCurrent().tombstoneHorizon else Long.MinValue
-    graft.ops.Compaction(spark, dst, maxFilesPerBucket,
+    val r = graft.ops.Compaction(spark, dst, maxFilesPerBucket,
       tombstoneHorizonLsn = horizon)
-    dst.expireSnapshots(retainSnapshots)
+    val (expired, deleted) = dst.expireSnapshots(retainSnapshots)
     dst.gcOrphans()
+    s"compacted ${r.compactedBuckets} buckets (${r.removedFiles} -> " +
+      s"${r.addedFiles} files), expired ${expired.size} snapshots, deleted " +
+      s"${deleted.size} data files"
   }
 
-  /** Payload (non-system) column names of a chained schema. */
-  private def payloadOf(schema: org.apache.spark.sql.types.StructType): Seq[String] =
-    schema.fieldNames.filterNot(Model.systemColumns.contains).toSeq
-
-  /** Re-shape changelog rows into change events: tombstone -> D, live row
-    * -> U, each keeping its ORIGINAL `_lsn` as the event order — the
-    * downstream merge then reproduces the upstream's per-source marks.
+  /** Ships one change set downstream as one merge per ORIGINAL source, in
+    * deterministic order, so the downstream marks stay per-source; rows
+    * written before the _source column existed (null) ship under a
+    * dedicated legacy prefix. Returns the prefixes shipped and their
+    * merges; `cursor` rides only the LAST merge.
+    *
+    * Ledger keys claim version units `[unitLo, unitHi]` (a poll's version
+    * range, or a stream's batch id): a poll's key always renders the
+    * range, a stream batch's single unit renders as its bare id
+    * (`rangeKeys = false`). A KNOWN source with NO rows in this set still
+    * gets a (metadata-only) empty commit: every prefix's keys then tile
+    * contiguously across polls/slices/batches and the ledger floor folds
+    * them away — without this, one quiet poll would leave a permanent gap
+    * and the explicit window would grow by one key per prefix per later
+    * poll. A prefix's FIRST key anchors at unit 0 (nothing was ever
+    * shipped for it before, so the wider claim is vacuous) — a source
+    * joining mid-stream then tiles from 0 and its floor folds immediately
+    * instead of leaving a permanent pre-join gap.
     */
-  private def asEvents(rows: DataFrame, payload: Seq[String]): DataFrame =
-    rows.select(
-      col(Model.lsnColumn).as(Model.ordColumn) +:
-        when(col(Model.deletedColumn), "D").otherwise("U").as("op") +:
-        payload.map(col): _*)
+  private def shipPerSource(dst: ChronicleTable, changes0: DataFrame,
+      known: Set[String], unitLo: Long, unitHi: Long, rangeKeys: Boolean,
+      cursor: Option[(String, Long)], what: String,
+      mergeOnRead: Boolean): (Seq[String], Seq[MergeResult]) = {
+    // All work rides the change set's session: a stream batch's is the
+    // cloned micro-batch session (see the session note in MergeInto.apply).
+    val spark = changes0.sparkSession
+    val changes = changes0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val srcOf = coalesce(col(Model.sourceColumn), lit("_legacy"))
+      val tagged = changes.select(srcOf.as("__src"))
+        .distinct().collect().map(_.getString(0)).toSet
+      val prefixes = (tagged ++ known).toSeq.sorted match {
+        case Nil => Seq("_chain") // empty set on a fresh table: cursor-only
+        case ps => ps
+      }
+      prefixes -> prefixes.zipWithIndex.map { case (s, i) =>
+        val lo = if (known.contains(s)) unitLo else 0L
+        MergeInto(spark, dst, MergeInto.eventsOf(changes.filter(srcOf === s)),
+          batchKey = if (!rangeKeys && lo == unitHi) s"$s#$unitHi" else s"$s#$lo-$unitHi",
+          source = what,
+          cursor = if (i == prefixes.size - 1) cursor else None,
+          mergeOnRead = mergeOnRead)
+      }
+    } finally { changes.unpersist(); () }
+  }
 
   /** Source prefixes the downstream table has already seen (maintenance
     * and placeholder prefixes are not sources).
@@ -367,7 +373,7 @@ object Chain {
         drain(spark, src, dst, numBuckets, mergeOnRead = mergeOnRead): Unit
         if (maintainEveryTriggers > 0 && batchId > 0 &&
             batchId % maintainEveryTriggers == 0)
-          maintain(spark, dst, mergeOnRead)
+          maintain(spark, dst, mergeOnRead): Unit
       }
       .start()
 
@@ -402,23 +408,10 @@ object Chain {
       bootstrapSlices: Int = 0): org.apache.spark.sql.streaming.StreamingQuery = {
     val trig = Option(trigger).getOrElse(
       org.apache.spark.sql.streaming.Trigger.ProcessingTime(intervalMs))
-    val cur = src.loadCurrent()
-    require(cur.unordered.isEmpty,
-      s"upstream ${src.root} has unordered sources " +
-        s"${cur.unordered.mkString(",")} — its changelog cannot be tailed " +
-        "(no mark bounds their redelivery), so it cannot be chained")
-    if (!dst.exists) dst.create(Model.physicalSchemaV1, numBuckets)
-    val dstCursors = dst.loadCurrent().cursors
-    val pollFed = dstCursors.keys.filter(_.startsWith(cursorPrefix))
-    require(pollFed.isEmpty,
-      s"table ${dst.root} is poll-chain-fed (${pollFed.mkString(",")}): " +
-        "stream chaining would interleave batch-id ledger keys with the " +
-        "poll chain's version-range keys — keep tailing via pollOnce/follow")
-    val direct = dstCursors.keys.filterNot(isChainCursor)
-    require(direct.isEmpty,
-      s"table ${dst.root} is pipeline-fed (cursors ${direct.mkString(",")})" +
-        ": chaining into it would collide with the pipeline's batch-index " +
-        "ledger keys — see Chain.requireNotChainFed")
+    openDownstream(src, src.loadCurrent(), dst, numBuckets, cursorPrefix,
+      "poll-chain-fed", "stream chaining would interleave batch-id ledger " +
+        "keys with the poll chain's version-range keys — keep tailing via " +
+        "pollOnce/follow")
     val markerKey = s"$streamCursorPrefix${src.root}"
     src.readChangeStream(spark, startingVersion = "bootstrap",
         maxVersionsPerTrigger = maxVersionsPerTrigger,
@@ -429,15 +422,20 @@ object Chain {
       .trigger(trig)
       .option("checkpointLocation", s"${dst.root}/_followstream_checkpoint")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // exactly-once per batch: ledger keys `<src>#<batchId>` — batch
+        // ids are contiguous across restarts (the offset WAL), so the
+        // ledger floor folds them and a replayed batch skips
         val t0 = System.nanoTime()
-        val ms = shipStreamBatch(dst, batch, batchId, markerKey, mergeOnRead)
-        recordMetric(dst, src.root, batchId, ms,
+        val (_, ms) = shipPerSource(dst, batch, knownPrefixes(dst.loadCurrent()),
+          batchId, batchId, rangeKeys = false, Some(markerKey -> batchId),
+          s"chainstream $markerKey batch $batchId", mergeOnRead)
+        Metrics.record(dst.root, src.root, batchId, ms,
           (System.nanoTime() - t0) / 1e9, "chain-stream")
         // same housekeeping as [[follow]]'s — batch ids are contiguous
         // across restarts, so the cadence survives a resume
         if (maintainEveryTriggers > 0 && batchId > 0 &&
             batchId % maintainEveryTriggers == 0)
-          maintain(batch.sparkSession, dst, mergeOnRead)
+          maintain(batch.sparkSession, dst, mergeOnRead): Unit
       }
       .start()
   }
@@ -459,46 +457,4 @@ object Chain {
       bootstrapSliceBytes = bootstrapSliceBytes,
       bootstrapSlices = bootstrapSlices)
       .awaitTermination()
-
-  /** Apply one change-stream micro-batch downstream, exactly-once: one
-    * merge per ORIGINAL source (downstream marks mirror the upstream's),
-    * ledger keys `<src>#<batchId>` — batch ids are contiguous across
-    * restarts (the offset WAL), so the ledger floor folds them and a
-    * replayed batch skips. A prefix first seen at batch N anchors with the
-    * range key `<src>#0-N` (the pre-join claim is vacuous — nothing was
-    * ever shipped for it), so its keys fold immediately instead of
-    * leaving a permanent 0..N-1 gap; a known prefix with no rows this
-    * batch still commits (metadata-only) to keep its tiling contiguous —
-    * both invariants inherited from [[pollOnce]].
-    */
-  private[cdc] def shipStreamBatch(dst: ChronicleTable,
-      batch: DataFrame, batchId: Long, markerKey: String,
-      mergeOnRead: Boolean): Seq[MergeResult] = {
-    // All work rides the BATCH's (cloned micro-batch) session — see the
-    // session note in MergeInto.apply.
-    val spark = batch.sparkSession
-    val changes = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val payload = payloadOf(batch.schema)
-      val srcCol = col(Model.sourceColumn)
-      val tagged = changes.select(coalesce(srcCol, lit("_legacy")).as("__src"))
-        .distinct().collect().map(_.getString(0)).toSet
-      val known = knownPrefixes(dst.loadCurrent())
-      val prefixes = (tagged ++ known).toSeq.sorted match {
-        case Nil => Seq("_chain") // quiet batch on a fresh table
-        case ps => ps
-      }
-      prefixes.zipWithIndex.map { case (s, i) =>
-        val rows = changes.filter(coalesce(srcCol, lit("_legacy")) === s)
-        val lo = if (known.contains(s)) batchId else 0L
-        val key = if (lo >= batchId) s"$s#$batchId" else s"$s#$lo-$batchId"
-        MergeInto(spark, dst, asEvents(rows, payload),
-          batchKey = key,
-          source = s"chainstream $markerKey batch $batchId",
-          cursor = if (i == prefixes.size - 1) Some(markerKey -> batchId)
-                   else None,
-          mergeOnRead = mergeOnRead)
-      }
-    } finally { changes.unpersist(); () }
-  }
 }

@@ -49,6 +49,17 @@ object Metrics {
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
 
+  /** Appends the line of one applied batch/epoch — one or more merges of
+    * one drain step — to the ledger under `<tableRoot>/metrics`.
+    */
+  def record(tableRoot: String, source: String, epoch: Long,
+      merges: Seq[graft.ops.MergeResult], sec: Double, mode: String): Unit = {
+    val up = merges.map(_.upserts).sum
+    val del = merges.map(_.deletes).sum
+    append(s"$tableRoot/metrics", MetricEvent(source, epoch,
+      System.currentTimeMillis(), up + del, sec, up, del, mode))
+  }
+
   /** The metrics ledger as a DataFrame (explicit schema — no inference scan). */
   def view(spark: SparkSession, dir: String): DataFrame =
     if (!Files.exists(file(dir)))

@@ -140,22 +140,42 @@ class MultiSinkPipeline(val cfg: PipelineConfig, val routes: Seq[RouteConfig],
 
   def consumedSegment(): Long = consumedSegment(sinkNames)
 
-  /** Upper bound on concurrently-applied sink merges per batch. */
-  @volatile var maxConcurrentSinks: Int = 4
-
-  /** Apply all sink merges for one persisted batch CONCURRENTLY: the sink
-    * tables are disjoint, each merge is an independent Spark job graph
-    * (Spark schedules concurrent jobs from one session fairly), and the
-    * per-sink batchKey ledger already makes any interleaving of commits
-    * crash-consistent — so per-batch wall-clock is max(sink merge), not
-    * sum. This is the reference's concurrent per-sink queue drain
-    * (QueuedSink.java:96-153: every sink's writer thread drains while the
-    * router keeps feeding).
+  /** Fan one batch out to every sink of the route set `rs` — each route's
+    * matches to its sink, the no-match rest to the default sink — and
+    * apply the sink merges CONCURRENTLY (at most 4 at a time). The batch
+    * is persisted first, so N sink merges read the cache, not the source.
+    * The sink tables are disjoint, each merge is an independent Spark job
+    * graph (Spark schedules concurrent jobs from one session fairly), and
+    * the per-sink batchKey ledger already makes any interleaving of
+    * commits crash-consistent — so per-batch wall-clock is max(sink
+    * merge), not sum. This is the reference's concurrent per-sink queue
+    * drain (QueuedSink.java:96-153: every sink's writer thread drains
+    * while the router keeps feeding).
     */
+  private def fanOut(batch: DataFrame, rs: Seq[RouteConfig], batchKey: String,
+      source: String, orderedSource: Boolean,
+      cursor: Option[(String, Long)]): Seq[(String, MergeResult)] = {
+    batch.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val preds = compiledFrom(rs)
+      val noneMatched = preds.map { case (_, p) => !p }
+        .reduceOption(_ && _).getOrElse(lit(true))
+      val sinks = preds.map { case (r, pred) =>
+        r.sink -> aliased(batch.filter(pred), r)
+      } :+ (defaultSink -> batch.filter(noneMatched))
+      applyAll(sinks.map { case (sink, rows) =>
+        sink -> (() => MergeInto(batch.sparkSession, sinkTable(sink), rows,
+          batchKey, source = source, saltBuckets = cfg.saltBuckets,
+          orderedSource = orderedSource, cursor = cursor,
+          mergeOnRead = cfg.mergeOnRead))
+      })
+    } finally batch.unpersist()
+  }
+
   private def applyAll(work: Seq[(String, () => MergeResult)]): Seq[(String, MergeResult)] = {
     if (work.size == 1) return work.map { case (s, f) => s -> f() }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(maxConcurrentSinks, work.size))
+      math.min(4, work.size))
     try {
       val futures = work.map { case (s, f) =>
         s -> pool.submit(new java.util.concurrent.Callable[MergeResult] {
@@ -191,24 +211,9 @@ class MultiSinkPipeline(val cfg: PipelineConfig, val routes: Seq[RouteConfig],
     // deterministic on replay: the batch IS its segment range
     val batchKey =
       s"${cfg.sourceId}#${shell.segNum(slice.head)}-${shell.segNum(slice.last)}"
-    val advance = Some(cfg.sourceId -> slice.map(shell.segNum).max)
-    val batch = shell.readBatch(spark, slice)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val preds = compiledFrom(rs)
-      val noneMatched = preds.map { case (_, p) => !p }
-        .reduceOption(_ && _).getOrElse(lit(true))
-      val work: Seq[(String, () => MergeResult)] = preds.map { case (r, pred) =>
-        r.sink -> (() => MergeInto(spark, sinkTable(r.sink),
-          aliased(batch.filter(pred), r), batchKey,
-          source = slice.mkString(","), saltBuckets = cfg.saltBuckets,
-          cursor = advance, mergeOnRead = cfg.mergeOnRead))
-      } :+ (defaultSink -> (() => MergeInto(spark, sinkTable(defaultSink),
-        batch.filter(noneMatched), batchKey,
-        source = slice.mkString(","), saltBuckets = cfg.saltBuckets,
-        cursor = advance, mergeOnRead = cfg.mergeOnRead)))
-      Some(applyAll(work))
-    } finally batch.unpersist()
+    Some(fanOut(shell.readBatch(spark, slice), rs, batchKey,
+      source = slice.mkString(","), orderedSource = true,
+      cursor = Some(cfg.sourceId -> shell.segNum(slice.last))))
   }
 
   /** Drain all pending segments. Returns number of batches processed. */
@@ -237,30 +242,15 @@ class MultiSinkPipeline(val cfg: PipelineConfig, val routes: Seq[RouteConfig],
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val batchKey = s"${cfg.sourceId}-ss#$id"
         // per-epoch route snapshot: sink hot-add/remove reaches the stream
         // without a restart (a sink added mid-stream sees traffic from its
         // first epoch; Spark's checkpoint governs the source cursor here,
         // so backfillNewSinks applies only to the batch drain)
         val rs = currentRoutes()
         ensureTables(rs.map(_.sink) :+ defaultSink)
-        batch.persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val preds = compiledFrom(rs)
-          val noneMatched = preds.map { case (_, p) => !p }
-            .reduceOption(_ && _).getOrElse(lit(true))
-          val work: Seq[(String, () => MergeResult)] = preds.map { case (r, pred) =>
-            r.sink -> (() => MergeInto(batch.sparkSession, sinkTable(r.sink),
-              aliased(batch.filter(pred), r), batchKey,
-              source = s"stream-epoch-$id", saltBuckets = cfg.saltBuckets,
-              orderedSource = false, mergeOnRead = cfg.mergeOnRead))
-          } :+ (defaultSink -> (() => MergeInto(batch.sparkSession, sinkTable(defaultSink),
-            batch.filter(noneMatched), batchKey,
-            source = s"stream-epoch-$id", saltBuckets = cfg.saltBuckets,
-            orderedSource = false, mergeOnRead = cfg.mergeOnRead)))
-          applyAll(work)
-          ()
-        } finally batch.unpersist()
+        fanOut(batch, rs, s"${cfg.sourceId}-ss#$id",
+          source = s"stream-epoch-$id", orderedSource = false, cursor = None)
+        ()
       }
       .start()
   }

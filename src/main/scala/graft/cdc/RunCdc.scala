@@ -64,7 +64,6 @@ object RunCdc {
         // <tableRoot>/metrics — surfaced by `stats` as per-mode rates
         recordMetrics = sys.env.get("GRAFT_METRICS").contains("1")))
       p.verbose = true
-      graft.ops.MergeInto.profile = sys.env.get("GRAFT_PROFILE").contains("1")
       val t0 = System.nanoTime()
       // GRAFT_PIPELINED=1: overlap next batch's dedup with current apply;
       // GRAFT_MAX_BATCHES=k: stop after k batches (partial drains for A/B

@@ -47,18 +47,13 @@ object SignatureIndex {
   val sigSchema: StructType = StructType(Seq(
     StructField("conv_id", StringType, nullable = false),
     StructField("turn_idx", IntegerType, nullable = false),
-    StructField("minhash", LongType)) ++ systemFields)
+    StructField("minhash", LongType)) ++ Model.systemFields)
 
   /** Physical schema of the band table (before system columns). */
   val bandSchema: StructType = StructType(Seq(
     StructField("conv_id", StringType, nullable = false),
     StructField("turn_idx", IntegerType, nullable = false),
-    StructField("bandsig", StringType)) ++ systemFields)
-
-  private def systemFields: Seq[StructField] = Seq(
-    StructField(Model.lsnColumn, LongType, nullable = false),
-    StructField(Model.deletedColumn, BooleanType, nullable = false),
-    StructField(Model.sourceColumn, StringType, nullable = true))
+    StructField("bandsig", StringType)) ++ Model.systemFields)
 
   /** Advance both index tables to the document table's current version
     * (chain drain with the signature/band transforms). Returns the number

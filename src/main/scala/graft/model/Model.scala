@@ -98,11 +98,16 @@ object Model {
   /** All system columns, in physical-schema order. */
   val systemColumns: Seq[String] = Seq(lsnColumn, deletedColumn, sourceColumn)
 
-  /** Physical schema v1 of the table files: payload + system columns. */
-  val physicalSchemaV1: StructType = StructType(turnSchemaV1.fields ++ Seq(
+  /** The system columns' physical fields, appended to every table's
+    * payload.
+    */
+  val systemFields: Seq[StructField] = Seq(
     StructField(lsnColumn, LongType, nullable = false),
     StructField(deletedColumn, BooleanType, nullable = false),
-    StructField(sourceColumn, StringType, nullable = true)))
+    StructField(sourceColumn, StringType, nullable = true))
+
+  /** Physical schema v1 of the table files: payload + system columns. */
+  val physicalSchemaV1: StructType = StructType(turnSchemaV1.fields ++ systemFields)
 
   /** Change-event schema (binlog record). */
   val changeSchema: StructType = StructType(

@@ -4,7 +4,7 @@ import graft.model.Model
 import graft.table._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import scala.jdk.CollectionConverters._
 
@@ -78,9 +78,6 @@ object MergeInto {
   private[graft] def maybeBroadcastDf(df: DataFrame, keyCount: Long): DataFrame =
     if (keyCount <= broadcastKeyLimit) broadcast(df) else df
 
-  /** Phase-timing log for profiling runs. */
-  @volatile var profile: Boolean = false
-
   /** Floor on the estimated bytes a single staged-write task should own
     * (guide §2.5/§6: derive partitioning from input size, keep output
     * files from fragmenting). Only ever REDUCES the write's task count —
@@ -108,7 +105,6 @@ object MergeInto {
     val dt = System.nanoTime() - t0
     phaseNanos.computeIfAbsent(name,
       _ => new java.util.concurrent.atomic.LongAdder).add(dt)
-    if (profile) println(f"[merge] $name ${dt / 1e9}%.2fs")
     r
   }
 
@@ -154,14 +150,73 @@ object MergeInto {
   def prepare(spark: SparkSession, batch: DataFrame, numBuckets: Int,
       saltBuckets: Int = 0): Prepared = tick("prepare") {
     val d = dedupOnly(batch, numBuckets, saltBuckets).cache()
-    val s = (d.agg(
+    // a failed or cancelled materialization must not leave the cache pinned
+    val s = try d.agg(
       min("conv_id").as("minKey"), max("conv_id").as("maxKey"),
       count(lit(1)).as("n"), max(col(Model.ordColumn)).as("maxLsn"),
-      collect_set("__bucket").as("buckets")).collect()(0))
+      collect_set("__bucket").as("buckets")).collect()(0)
+    catch { case t: Throwable => d.unpersist(); throw t }
     val n = s.getAs[Long]("n")
     Prepared(d, s.getAs[String]("minKey"), s.getAs[String]("maxKey"), n,
       if (n == 0) -1L else s.getAs[Long]("maxLsn"),
       s.getSeq[Int](s.fieldIndex("buckets")).toSet, numBuckets)
+  }
+
+  /** Applies `batches` in order while the NEXT batch's [[prepare]] runs on
+    * one background thread: the CPU-heavy, table-independent dedup of
+    * batch k+1 overlaps the IO-heavy apply of batch k, so cores stay busy
+    * through the write's IO waits and stage tails. Prepare jobs run under
+    * their own job group, so a failure anywhere CANCELS the in-flight
+    * prepare's Spark jobs, including any it has yet to submit (a bare
+    * Future.cancel would only interrupt the submitter thread and leave the
+    * job running), and unpersists whatever prepared result is still
+    * cached.
+    */
+  def prepareAhead[B](spark: SparkSession, batches: Iterator[B])(
+      prep: B => Prepared)(applyOne: (B, Prepared) => Unit): Unit =
+    if (batches.hasNext) {
+      val sc = spark.sparkContext
+      val exec = java.util.concurrent.Executors.newSingleThreadExecutor()
+      val group = s"graft-prep-${java.util.UUID.randomUUID()}"
+      def submit(b: B) = b -> exec.submit(new java.util.concurrent.Callable[Prepared] {
+        def call(): Prepared = {
+          sc.setJobGroup(group, "prepare ahead", interruptOnCancel = true)
+          try prep(b) finally sc.clearJobGroup()
+        }
+      })
+      var next = Option(submit(batches.next()))
+      var applying: Option[Prepared] = None
+      try while (next.nonEmpty) {
+        val (b, f) = next.get
+        next = if (batches.hasNext) Some(submit(batches.next())) else None
+        applying = Some(f.get())
+        applyOne(b, applying.get)
+        applying = None
+      } catch {
+        case t: Throwable =>
+          applying.foreach(_.unpersist())
+          next.foreach { case (_, f) =>
+            sc.cancelJobGroupAndFutureJobs(group)
+            try f.get(30, java.util.concurrent.TimeUnit.SECONDS).unpersist()
+            catch { case _: Throwable => () }
+          }
+          throw t
+      } finally exec.shutdownNow()
+    }
+
+  /** Change rows in the table's shape (`_lsn`, optional `_deleted`,
+    * `_source`, payload) as merge events: `_lsn` becomes the event order,
+    * a tombstone a `D` and anything else (a null `_deleted` too) a `U`.
+    * `_source` is dropped; the batch key names the source.
+    */
+  def eventsOf(rows: DataFrame): DataFrame = {
+    val deleted =
+      if (rows.columns.contains(Model.deletedColumn))
+        coalesce(col(Model.deletedColumn), lit(false))
+      else lit(false)
+    rows.withColumn("op", when(deleted, "D").otherwise("U"))
+      .drop(Model.deletedColumn, Model.sourceColumn)
+      .withColumnRenamed(Model.lsnColumn, Model.ordColumn)
   }
 
   private def dedupOnly(batch: DataFrame, numBuckets: Int,
@@ -169,8 +224,9 @@ object MergeInto {
     // Window dedup by default: one hash shuffle + one reduce-side sort.
     // In the common CDC shape (keyspace >> per-task events) max_by's
     // map-side combine reduces nothing, so its extra map-side sort of the
-    // full batch costs ~40% of the dedup phase (measured in DedupBench:
-    // 4.2M vs 2.9M events/s at 16 cores, and better 4->16 scaling).
+    // full batch costs ~40% of the dedup phase (BENCH.md, "Absolute
+    // throughput": 4.2M vs 2.9M events/s at 16 cores, and better 4->16
+    // scaling).
     // Salted max_by remains the explicit hot-key path.
     val deduped0 =
       if (saltBuckets > 1)
@@ -220,10 +276,7 @@ object MergeInto {
     val tablePayload = StructType(
       base.schema.fields.filterNot(f => systemCols.contains(f.name)))
     val mergedPayload = ChronicleTable.mergeSchemas(tablePayload, batchPayload)
-    val physicalSchema = StructType(mergedPayload.fields ++ Seq(
-      StructField(Model.lsnColumn, LongType, nullable = false),
-      StructField(Model.deletedColumn, BooleanType, nullable = false),
-      StructField(Model.sourceColumn, StringType, nullable = true)))
+    val physicalSchema = StructType(mergedPayload.fields ++ Model.systemFields)
     // also true for a pre-`_source` table (first merge adds the system
     // column; older files read as null) and for a TYPE WIDENING (same
     // names, wider type — name comparison alone would silently drop the

@@ -81,12 +81,11 @@ object CdcQueries {
   def clearReplayCache(): Unit = replayCache.clear()
 
   /** Replay `numBatches` LSN-range batches of `ch` through MERGE with the
-    * pipelined drain's prepare-ahead: batch b+1's table-independent dedup
-    * (MergeInto.prepare) runs CONCURRENTLY with batch b's apply (guide
-    * §2.6 — overlap independent jobs so the apply's straggler tail is
-    * back-filled), exactly like CdcPipeline.runAllPipelined. Identical
-    * results: prepare reads no table state and the HWM redelivery filter
-    * still runs at apply time.
+    * pipelined drain's prepare-ahead ([[MergeInto.prepareAhead]]): batch
+    * b+1's table-independent dedup runs CONCURRENTLY with batch b's apply,
+    * exactly like CdcPipeline.runAllPipelined. Identical results: prepare
+    * reads no table state and the HWM redelivery filter still runs at
+    * apply time.
     */
   private def replayBatches(spark: SparkSession, ch: DataFrame,
       table: ChronicleTable, numBatches: Int, keyPrefix: String,
@@ -96,22 +95,12 @@ object CdcQueries {
     val step = maxLsn / numBatches + 1
     def batchDf(b: Int): DataFrame =
       ch.filter(col("lsn") >= b * step && col("lsn") < (b + 1) * step)
-    val exec = java.util.concurrent.Executors.newSingleThreadExecutor()
-    try {
-      def prep(b: Int) = exec.submit(
-        new java.util.concurrent.Callable[MergeInto.Prepared] {
-          def call(): MergeInto.Prepared =
-            MergeInto.prepare(spark, batchDf(b), numBuckets = 8)
-        })
-      var pending = prep(0)
-      (0 until numBatches).foreach { b =>
-        val prepared = pending.get()
-        if (b + 1 < numBatches) pending = prep(b + 1)
-        MergeInto(spark, table, batchDf(b), s"$keyPrefix#$b", s"lsn-range-$b",
-          prepared = Some(prepared), mergeOnRead = mergeOnRead)
-        afterBatch(b)
-      }
-    } finally exec.shutdownNow()
+    MergeInto.prepareAhead(spark, (0 until numBatches).iterator)(b =>
+      MergeInto.prepare(spark, batchDf(b), numBuckets = 8)) { (b, prepared) =>
+      MergeInto(spark, table, batchDf(b), s"$keyPrefix#$b", s"lsn-range-$b",
+        prepared = Some(prepared), mergeOnRead = mergeOnRead)
+      afterBatch(b)
+    }
   }
 
   def replayTable(spark: SparkSession, dir: String,
@@ -158,7 +147,7 @@ object CdcQueries {
         val table = new ChronicleTable(r)
         table.create(graft.model.Model.physicalSchemaV1, numBuckets = 8)
         // prepare-ahead is safe alongside the mid-replay compaction too:
-        // prepare is table-independent (see CdcPipeline.maybeMaintain)
+        // prepare is table-independent (see MergeInto.prepareAhead)
         replayBatches(spark, ch, table, numBatches, "fsm", mergeOnRead = true,
           afterBatch = b =>
             if (b == numBatches / 2 - 1) // fold the first half into base files
@@ -312,21 +301,22 @@ object CdcQueries {
     val root = replayCache.getOrElseUpdate((s"$dir#wsink", 1), {
       val base = graft.util.Scratch.shmTemp("graft-wsink")
       val src = s"$base/segments"
-      // 4 lsn-range segments so the drain is a genuine multi-epoch tail.
-      // All 4 segments are staged by ONE partitioned write job (dynamic
-      // partitionBy on the lsn-range id): hash-repartitioning on `seg`
-      // puts each segment's rows in exactly one task, so each seg=N
-      // directory gets exactly one file — the same 4-file layout the
-      // previous 4 separate write ACTIONS produced, minus 3 jobs' worth
-      // of planning/scheduling fixed cost per invocation (guide §2.4:
-      // fewer passes; measured ~1.5s of the query's staging phase). The
-      // sink still merges each file as an UNORDERED epoch (per-key LSN
-      // guard + tombstones), so per-epoch semantics are untouched.
+      // Up to 4 lsn-range segments so the drain is a multi-epoch tail,
+      // staged by ONE partitioned write job (dynamic partitionBy on the
+      // lsn-range id, exact integer division): hash-repartitioning on
+      // `seg` puts each segment's rows in exactly one task, so each seg=N
+      // directory gets exactly one file. Versus one write action per
+      // segment this runs 6 jobs instead of 9, at parity in time
+      // (OPTIMIZATION_r06.md). The number of seg=N directories depends on
+      // the data: partitionBy writes no directory for an empty range, so
+      // a log with maxLsn < 3 stages fewer than 4 epochs. The sink merges
+      // each file as an UNORDERED epoch (per-key LSN guard + tombstones),
+      // so the final state does not depend on the epoch count.
       val ch = changes(spark, dir).cache()
       try {
         val maxLsn = ch.agg(max("lsn")).collect()(0).getLong(0)
         val step = maxLsn / 4 + 1
-        ch.withColumn("seg", floor(col("lsn") / step).cast("int"))
+        ch.withColumn("seg", expr(s"CAST(lsn DIV $step AS INT)"))
           .repartition(4, col("seg"))
           .write.partitionBy("seg").parquet(src)
       } finally ch.unpersist()

@@ -569,7 +569,7 @@ class GraftCatalog extends TableCatalog
       throw new UnsupportedOperationException(
         "graft tables hash-bucket internally on conv_id; PARTITIONED BY " +
           "is not supported — size the layout with TBLPROPERTIES('buckets'='N')")
-    val sysNames = GraftWrite.systemFields.map(_.name).toSet
+    val sysNames = Model.systemFields.map(_.name).toSet
     val payload = schema.fields.filterNot(f => sysNames.contains(f.name))
     for ((k, t) <- Seq(("conv_id", org.apache.spark.sql.types.StringType),
         ("turn_idx", org.apache.spark.sql.types.IntegerType)))
@@ -582,7 +582,7 @@ class GraftCatalog extends TableCatalog
         .TableAlreadyExistsException((ident.namespace() :+ ident.name()).toSeq)
     val buckets = Option(properties.get("buckets")).map(_.toInt).getOrElse(16)
     require(buckets >= 1, "buckets must be positive")
-    t.create(StructType(payload ++ GraftWrite.systemFields), buckets)
+    t.create(StructType(payload ++ Model.systemFields), buckets)
     new GraftTable(t, t.loadCurrent())
   }
 

@@ -5,8 +5,7 @@ import graft.ops.MergeInto
 import graft.table.ChronicleTable
 import org.apache.spark.sql.{DataFrame, Row, Dataset}
 import org.apache.spark.sql.execution.streaming.Sink
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** `df.writeStream.format("graft").option("path", root)` — the engine as a
   * NATIVE Structured Streaming sink: every micro-batch applies through the
@@ -53,23 +52,14 @@ private[sql] class GraftStreamSink(root: String, source: String,
     val cols = batch0.columns.toSet
     val batch =
       if (cols.contains(Model.ordColumn) && cols.contains("op")) batch0
-      else if (cols.contains(Model.lsnColumn)) {
-        val del =
-          if (cols.contains(Model.deletedColumn))
-            coalesce(col(Model.deletedColumn), lit(false))
-          else lit(false)
-        batch0
-          .withColumn("op", when(del, "D").otherwise("U"))
-          .drop(Model.deletedColumn, Model.sourceColumn)
-          .withColumnRenamed(Model.lsnColumn, Model.ordColumn)
-      }
+      else if (cols.contains(Model.lsnColumn)) MergeInto.eventsOf(batch0)
       else throw new IllegalArgumentException(
         s"stream rows need either (lsn, op) or ${Model.lsnColumn} change " +
           s"columns; got ${batch0.columns.mkString(", ")}")
     if (!table.exists) {
       val payload = StructType(batch.schema.fields.filterNot(f =>
         f.name == Model.ordColumn || f.name == "op"))
-      table.create(StructType(payload ++ GraftWrite.systemFields), buckets)
+      table.create(StructType(payload ++ Model.systemFields), buckets)
     }
     MergeInto(batch.sparkSession, table, batch, s"$source-ws#$batchId",
       source = s"$source-epoch-$batchId", saltBuckets = saltBuckets,

@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.InsertableRelation
-import org.apache.spark.sql.types.{BooleanType, LongType, MetadataBuilder, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{MetadataBuilder, StringType, StructField, StructType}
 
 /** SQL DML over a ChronicleTable.
   *
@@ -114,23 +114,11 @@ object GraftWrite {
     val batchKey = s"$src#dml-${s.getAs[Long]("lo")}-${s.getAs[Long]("hi")}" +
       s"-$n-${java.lang.Long.toHexString(s.getAs[Long]("sig"))}"
 
-    val batch = d0
-      .withColumn("op",
-        when(coalesce(col(Model.deletedColumn), lit(false)), "D")
-          .otherwise("U"))
-      .drop(Model.deletedColumn, Model.sourceColumn)
-      .withColumnRenamed(Model.lsnColumn, Model.ordColumn)
     // unordered source: SQL statements carry no global ordering discipline,
     // so correctness rides the per-key LSN guard, never the batch HWM
-    MergeInto(spark, table, batch, batchKey, src,
+    MergeInto(spark, table, MergeInto.eventsOf(d0), batchKey, src,
       orderedSource = false, mergeOnRead = mergeOnRead)
   }
-
-  /** The engine's physical system columns, as appended by CREATE TABLE. */
-  private[sql] val systemFields: Seq[StructField] = Seq(
-    StructField(Model.lsnColumn, LongType, nullable = false),
-    StructField(Model.deletedColumn, BooleanType, nullable = false),
-    StructField(Model.sourceColumn, StringType, nullable = true))
 
   private def withDefault(f: StructField, sql: String): StructField =
     f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)

@@ -299,8 +299,10 @@ case class PendingCommit(
   * Scale notes (100 TB): the snapshot JSON is a manifest LIST (per-bucket
   * summaries only), so per-commit metadata IO is O(touched buckets);
   * MERGE planning prunes at the list level first and opens only surviving
-  * buckets' manifests; file stats come from parquet footers via a
-  * distributed job (MergeInto.collectStats).
+  * buckets' manifests; file stats come from parquet footers
+  * (MergeInto.collectStats) — read on a driver thread pool for commits of
+  * up to `MergeInto.driverFooterThreshold` files, by a distributed job
+  * above that.
   */
 class ChronicleTable(val root: String) {
   import ChronicleTable._

@@ -461,4 +461,86 @@ class CdcPipelineSpec extends SparkSpec {
     p.runAll(spark)
     assert(tableRows(p) == oracleRows(cfg))
   }
+
+  test("runOnce loop: one metrics line per commit, and in-drain maintenance bounds live files") {
+    val cfg = BinlogConfig(numEvents = 1500, numConversations = 10,
+      segmentSize = 100, dupPct = 5)
+    val src = tmpDir("binlog-runonce")
+    BinlogGenerator.writeSegments(spark, cfg, src)
+    // merge-on-read adds delta files every batch, so only maintenance can
+    // bound the live-file count
+    val p = new CdcPipeline(PipelineConfig(src, tmpDir("table-runonce"),
+      segmentsPerBatch = 1, numBuckets = 2, recordMetrics = true,
+      mergeOnRead = true, maintenanceEveryBatches = 5,
+      compactMaxFilesPerBucket = 2, retainSnapshots = 3))
+    var commits = 0
+    while (p.runOnce(spark).isDefined) commits += 1
+    assert(commits == p.listSegments().size)
+    val lines = p.metrics(spark).collect()
+    assert(lines.count(_.getAs[String]("mode") == "batch") == commits,
+      s"want one batch line per commit: ${lines.map(_.getAs[String]("mode")).toSeq}")
+    val snap = p.table.loadCurrent()
+    assert(snap.numFiles <= 2 + 2 * 5,
+      s"maintenance failed to bound files: ${snap.numFiles}")
+    assert(p.table.versions.size <= 3 + 2 * 5,
+      s"snapshot history unbounded: ${p.table.versions.size} versions")
+    assert(tableRows(p) == oracleRows(cfg))
+  }
+
+  test("prepare-ahead: a failed apply cancels the in-flight next prepare and leaks no cache") {
+    val sc = spark.sparkContext
+    def idle(): Boolean = {
+      val deadline = System.currentTimeMillis() + 10000
+      while (sc.statusTracker.getActiveJobIds().nonEmpty &&
+        System.currentTimeMillis() < deadline) Thread.sleep(50)
+      sc.statusTracker.getActiveJobIds().isEmpty
+    }
+    import spark.implicits._
+    val batch = Seq((1L, "U", "conv-1", 0, "user", "t", None: Option[String],
+      new java.sql.Timestamp(0L)))
+      .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+    // batch 1's prepare is a minute-long job; batch 0's apply fails while
+    // that job runs, so only the cancel can end the drain quickly
+    val t0 = System.nanoTime()
+    val e = intercept[RuntimeException] {
+      graft.ops.MergeInto.prepareAhead(spark, Iterator(0, 1)) { b =>
+        if (b == 1) sc.parallelize(1 to 4, 4).foreach(_ => Thread.sleep(60000))
+        graft.ops.MergeInto.prepare(spark, batch, numBuckets = 2)
+      } { (_, _) =>
+        val deadline = System.currentTimeMillis() + 10000
+        while (sc.statusTracker.getActiveJobIds().isEmpty &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20)
+        throw new RuntimeException("simulated apply failure")
+      }
+    }
+    assert(e.getMessage == "simulated apply failure")
+    assert((System.nanoTime() - t0) / 1e9 < 30, "in-flight prepare was not cancelled")
+    assert(idle(), "prepare job still running after the drain failed")
+    assert(sc.getPersistentRDDs.isEmpty,
+      s"failed drain left ${sc.getPersistentRDDs.size} cached RDDs pinned")
+  }
+
+  test("prepare-ahead drain: an apply failure leaves nothing cached and a resumed drain converges") {
+    val cfg = BinlogConfig(numEvents = 1200, numConversations = 10,
+      segmentSize = 200, dupPct = 10, pDelete = 0.2)
+    val src = tmpDir("binlog-prepfail")
+    BinlogGenerator.writeSegments(spark, cfg, src)
+    val p = new CdcPipeline(PipelineConfig(src, tmpDir("table-prepfail"),
+      segmentsPerBatch = 1, numBuckets = 2))
+    p.ensureTable()
+    var commits = 0
+    p.table.beforePublishHook = _ => {
+      if (commits == 2) throw new RuntimeException("simulated apply failure")
+      commits += 1
+    }
+    val e = intercept[RuntimeException](p.runAllPipelined(spark))
+    assert(e.getMessage.contains("simulated apply failure"))
+    p.table.beforePublishHook = _ => ()
+    assert(p.table.loadCurrent().version == 2)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"failed drain left ${spark.sparkContext.getPersistentRDDs.size} cached RDDs pinned")
+    val resumed = new CdcPipeline(p.cfg)
+    assert(resumed.runAllPipelined(spark) == p.listSegments().size - 2)
+    assert(tableRows(resumed) == oracleRows(cfg))
+  }
 }

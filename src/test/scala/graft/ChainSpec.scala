@@ -239,7 +239,7 @@ class ChainSpec extends SparkSpec {
   }
 
   test("chain maintenance: an always-on tail's downstream folds deltas and bounds snapshots") {
-    // a chain-fed table has no pipeline to run maybeMaintain — without
+    // a chain-fed table has no pipeline drain to run maintenance — without
     // Chain.maintain, a long-lived follow leaks a snapshot per poll and
     // (under MOR) delta files between manual compactions
     val cfg = BinlogConfig(numEvents = 1500, numConversations = 10,

@@ -110,6 +110,51 @@ class PlanSpec extends SparkSpec {
       s"point-lookup key filter not pushed:\n${pKey.linesIterator.take(8).mkString("\n")}")
   }
 
+  test("counter guard: Spark jobs per runOnce commit, copy-on-write and merge-on-read") {
+    import graft.cdc.{CdcPipeline, PipelineConfig}
+    import graft.source.{BinlogConfig, BinlogGenerator}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // Job counts are noise-free evidence that the drain does the same work:
+    // a change that moves them changed the commit path. Only jobs carrying
+    // this thread's tag count (broadcast and subquery threads inherit it),
+    // so stray jobs from other suites cannot leak in.
+    val cfg = BinlogConfig(numEvents = 600, numConversations = 6, segmentSize = 200)
+    val src = tmpDir("binlog-jobs")
+    BinlogGenerator.writeSegments(spark, cfg, src)
+    val sc = spark.sparkContext
+    val tag = "graft.test.jobGuard"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(tag) != null)
+          jobs.incrementAndGet()
+    }
+    def jobsPerCommit(mergeOnRead: Boolean): Seq[Int] = {
+      val p = new CdcPipeline(PipelineConfig(src, tmpDir("table-jobs"),
+        segmentsPerBatch = 1, numBuckets = 2, mergeOnRead = mergeOnRead))
+      p.ensureTable()
+      Iterator.continually {
+        org.apache.spark.ListenerBusDrain(sc)
+        jobs.set(0)
+        val r = p.runOnce(spark)
+        org.apache.spark.ListenerBusDrain(sc)
+        r.map(_ => jobs.get)
+      }.takeWhile(_.isDefined).flatten.toSeq
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, "runOnce")
+    try {
+      val cow = jobsPerCommit(mergeOnRead = false)
+      val mor = jobsPerCommit(mergeOnRead = true)
+      // counts measured on this fixture before the drain loop was unified
+      assert(cow == Seq(6, 7, 7), s"jobs per copy-on-write commit moved: $cow")
+      assert(mor == Seq(6, 6, 6), s"jobs per merge-on-read commit moved: $mor")
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("approx profile tracks the exact profile within sketch error") {
     val exact = RelationalQueries.eventProfile(spark, dir).collect()
       .map(r => r.getAs[String]("event_type") -> r).toMap
