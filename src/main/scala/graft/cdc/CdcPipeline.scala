@@ -381,6 +381,25 @@ class CdcPipeline(val cfg: PipelineConfig) {
     else nextBatchSize(current, secs.sum / secs.length, cfg.targetBatchSec, cap)
   }
 
+  /** The source's segments as a stream of change events: two file sources
+    * over the same segment glob, split by extension — parquet from the
+    * generator/bulk path, JSONL from the network intake ([[IngestServer]]).
+    * Each source checkpoints its own offsets; maxFilesPerTrigger applies
+    * per source. The union is safe because the streaming MERGE is
+    * order-independent (per-key LSN guard + tombstones).
+    */
+  private[cdc] def changeStream(spark: SparkSession,
+      maxFilesPerTrigger: Int): DataFrame = {
+    def sourceStream(ext: String) = spark.readStream
+      .schema(Model.changeSchema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("pathGlobFilter", s"*.$ext")
+    val glob = s"${cfg.sourceDir}/segment=*"
+    sourceStream("parquet").parquet(glob)
+      .unionAll(sourceStream("jsonl").json(glob))
+      .select(MergeInto.changeColumns: _*)
+  }
+
   /** The Structured Streaming variant of the same pipeline: Spark's file
     * source tracks offsets in its checkpoint, and foreachBatch applies the
     * identical idempotent MERGE — a replayed epoch after restart is skipped
@@ -395,21 +414,7 @@ class CdcPipeline(val cfg: PipelineConfig) {
       listenerAdded = true
       spark.streams.addListener(new Metrics.EpochListener(queryName, metricsDir))
     }
-    // Two file sources over the same segment glob, split by extension:
-    // parquet from the generator/bulk path, JSONL from the network intake
-    // ([[IngestServer]]). Each source checkpoints its own offsets;
-    // maxFilesPerTrigger applies per source. The union is safe because the
-    // downstream MERGE is order-independent (per-key LSN guard +
-    // tombstones — see the foreachBatch note below).
-    def sourceStream(ext: String) = spark.readStream
-      .schema(Model.changeSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .option("pathGlobFilter", s"*.$ext")
-    val glob = s"${cfg.sourceDir}/segment=*"
-    val stream = sourceStream("parquet").parquet(glob)
-      .unionAll(sourceStream("jsonl").json(glob))
-      .select(MergeInto.changeColumns: _*)
-    stream.writeStream
+    changeStream(spark, maxFilesPerTrigger).writeStream
       .queryName(queryName)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())

@@ -233,12 +233,7 @@ class MultiSinkPipeline(val cfg: PipelineConfig, val routes: Seq[RouteConfig],
   def startStream(spark: SparkSession, checkpointDir: String,
       maxFilesPerTrigger: Int = 8): org.apache.spark.sql.streaming.StreamingQuery = {
     ensureTables()
-    val stream = spark.readStream
-      .schema(Model.changeSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(s"${cfg.sourceDir}/segment=*")
-      .select(MergeInto.changeColumns: _*)
-    stream.writeStream
+    shell.changeStream(spark, maxFilesPerTrigger).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) =>

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.model.Model
 import graft.table._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Table maintenance: small-file compaction and tombstone GC.
@@ -33,26 +33,35 @@ import org.apache.spark.sql.functions._
   */
 object Compaction {
 
-  /** The maintenance rewrite both compaction and rescale share: rows
-    * range-partition on (bucket, conv_id) into ~`targetRowsPerFile` slices
-    * (partition count sized from `victimRows`, the manifests' pre-rewrite
-    * row count — free, no extra job; capped so a mis-sized target cannot
-    * explode the shuffle), sort within partitions, and land under
-    * `staging/bucket=N/` — every produced file covers a contiguous,
-    * disjoint key range WITHIN its bucket, so manifest key bounds stay
-    * selective (point lookups prune to one file per bucket).
+  /** The rewrite + commit compaction and rescale share. `rows` range-
+    * partition on (bucket, conv_id) into ~`targetRowsPerFile` slices
+    * (count sized from the victims' manifest row count — free; capped so a
+    * mis-sized target cannot explode the shuffle) and sort within them, so
+    * every file covers a disjoint key range WITHIN its bucket and manifest
+    * key bounds stay selective. The files replace `victims` under the key
+    * `<op>#<prevFloor+1>-<version>`: unique per run, and folded away by the
+    * contiguous-floor ledger compaction — periodic maintenance must not
+    * accrete one ledger key per run. A `numBuckets` other than the table's
+    * makes the commit a rescale.
     */
-  private[ops] def rangeSplitWrite(spark: SparkSession,
-      rows: org.apache.spark.sql.DataFrame, numBuckets: Int,
-      victimRows: Long, targetRowsPerFile: Long, staging: String): Unit = {
+  private[ops] def rewrite(table: ChronicleTable, base: Snapshot, op: String,
+      source: String, victims: Seq[DataFileMeta], rows: DataFrame,
+      numBuckets: Int, targetRowsPerFile: Long): (Snapshot, Seq[DataFileMeta]) = {
+    val victimRows = victims.map(_.rows).sum
     val parts = math.max(1,
       math.min((victimRows / math.max(1L, targetRowsPerFile) + 1).toInt,
         1 << 15))
-    MergeInto.withMicrosTimestamps(spark)(rows
+    val added = StagedWrite(table, rows
       .withColumn("bucket", ChronicleTable.bucketExpr("conv_id", numBuckets))
       .repartitionByRange(parts, col("bucket"), col("conv_id"))
-      .sortWithinPartitions("bucket", "conv_id", "turn_idx")
-      .write.partitionBy("bucket").mode("overwrite").parquet(staging))
+      .sortWithinPartitions("bucket", "conv_id", "turn_idx"))
+    val key = s"$op#${base.floors.getOrElse(op, -1L) + 1}-${base.version}"
+    val lineage = LineageEntry(key, source, -1L, -1L, 0, 0,
+      added.map(_.rows).sum, 0L, LineageEntry.rowsByBucket(added), -1L)
+    val next = table.commit(base, PendingCommit(key, victims.map(_.path),
+      added, None, lineage,
+      newNumBuckets = Some(numBuckets).filter(_ != base.numBuckets)))
+    (next, added)
   }
 
   case class CompactionResult(
@@ -99,24 +108,9 @@ object Compaction {
       col(Model.lsnColumn) <= lit(tombstoneHorizonLsn)
     val kept = merged.filter(!horizonDrop)
 
-    val staging = table.newStagingDir()
-    // victim row count is the pre-GC upper bound on the output
-    rangeSplitWrite(spark, kept, base.numBuckets,
-      victims.map(_.rows).sum, targetRowsPerFile, staging)
-
-    val added = MergeInto.collectStats(spark, staging)
+    val (next, added) = rewrite(table, base, "compact", "compaction",
+      victims, kept, base.numBuckets, targetRowsPerFile)
     val dropped = victims.map(_.rows).sum - added.map(_.rows).sum
-    // Range-shaped key "compact#<prevFloor+1>-<version>": unique per run
-    // (the version always advances), and the contiguous-floor ledger
-    // compaction folds it away — a periodically-maintained table must not
-    // accrete one explicit ledger key per maintenance run.
-    val key = s"compact#${base.floors.getOrElse("compact", -1L) + 1}-${base.version}"
-    val lineage = LineageEntry(key, "compaction",
-      -1L, -1L, 0, 0, added.map(_.rows).sum, 0L,
-      added.groupBy(_.bucket.toString).map { case (b, fs) => b -> fs.map(_.rows).sum },
-      -1L)
-    val next = table.commit(base, PendingCommit(key,
-      victims.map(_.path), added, None, lineage))
     CompactionResult(next, targets.size, victims.size, added.size, dropped)
   }
 }

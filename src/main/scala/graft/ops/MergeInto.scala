@@ -368,33 +368,30 @@ object MergeInto {
         rows.observe(obs, metricExprs.head, metricExprs.tail: _*)
       }
 
-      // hash-split sorted write of the new files + distributed footer stats
-      // (shared by both modes). `bytesHint` is the manifest-derived
-      // estimate of the staged output (touched bytes + batch estimate):
-      // the split count derives from DATA SIZE, floored so no write task
-      // owns less than ~minWritePartitionBytes — a core-count constant
-      // here produced 32 near-empty files (and 32 footer reads, and a
-      // 32-entry commit) for an 800-row micro-batch, pure fixed overhead
-      // that shrinks at neither cluster size nor data size. At scale the
-      // size-derived count saturates the same shuffle-partition cap as
-      // before, so large merges are unchanged.
+      // hash-split sorted write of the new files, which report their own
+      // manifest stats (shared by both modes). `bytesHint` is the manifest-
+      // derived estimate of the staged output (touched bytes + batch
+      // estimate): the split count derives from DATA SIZE, floored so no
+      // write task owns less than ~minWritePartitionBytes — a core-count
+      // constant here produced 32 near-empty files (and a 32-entry commit)
+      // for an 800-row micro-batch, pure fixed overhead that shrinks at
+      // neither cluster size nor data size. At scale the size-derived count
+      // saturates the same shuffle-partition cap as before, so large merges
+      // are unchanged.
       def writeStaged(newData: DataFrame, bytesHint: Long): Seq[DataFileMeta] = {
-        val staging = table.newStagingDir()
         val cap = math.max(1, math.min(
           sess.conf.get("spark.sql.shuffle.partitions").toInt, buckets.size * 4))
         val parts = math.max(1L, math.min(cap.toLong,
           (bytesHint + minWritePartitionBytes - 1) / minWritePartitionBytes))
           .toInt
         val splitsPerBucket = math.max(1, parts / math.max(1, buckets.size))
-        tick("write")(withMicrosTimestamps(sess)(newData
+        tick("write")(StagedWrite(table, newData
           .withColumn("bucket", ChronicleTable.bucketExpr("conv_id", base.numBuckets))
           .withColumn("__split",
             pmod(xxhash64(col("conv_id"), lit(1)), lit(splitsPerBucket)))
           .repartition(parts, col("bucket"), col("__split"))
           .drop("__split")
-          .sortWithinPartitions("bucket", "conv_id", "turn_idx")
-          .write.partitionBy("bucket").mode("overwrite").parquet(staging)))
-        tick("stats-job")(collectFileStats(sess, staging))
+          .sortWithinPartitions("bucket", "conv_id", "turn_idx")))
       }
 
       // (reads obs — call only after writeStaged's action completed)
@@ -420,8 +417,7 @@ object MergeInto {
           m("minLsn").asInstanceOf[Long], m("maxLsn").asInstanceOf[Long],
           upserts, deletes, added.map(_.rows).sum,
           m("checksum").asInstanceOf[Long],
-          added.groupBy(_.bucket.toString).map { case (b, fs) => b -> fs.map(_.rows).sum },
-          -1L)
+          LineageEntry.rowsByBucket(added), -1L)
         val pending = PendingCommit(batchKey, removed, added,
           if (evolved) Some(physicalSchema) else None, lineage, cursor,
           ordered = orderedSource)
@@ -549,141 +545,6 @@ object MergeInto {
       if (have(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }: _*)
-  }
-
-  /** Per-file manifest stats (row count, conv_id min/max, ts min/max) from
-    * the parquet FOOTERS, read by a tiny DISTRIBUTED job over the file list
-    * — metadata-only (no column data is scanned) and no driver-side per-
-    * file IO. A commit adds O(shuffle partitions) files; opening every
-    * footer on the driver would be O(files) serial driver work per commit,
-    * the kind that caps commit rate at 100× (Iceberg collects these stats
-    * from write-task results for the same reason).
-    *
-    * Listing goes through the Hadoop FileSystem API (not java.nio), so the
-    * staging directory can live on any configured filesystem (S3A, HDFS);
-    * the footer reads on executors carry the SESSION's Hadoop configuration
-    * (spark.hadoop.* credentials/endpoints), not a default one.
-    */
-  private[ops] def collectStats(spark: SparkSession, staging: String): Seq[DataFileMeta] =
-    collectFileStats(spark, staging)
-
-  /** Commits at-or-below this many files read their footers with a driver-
-    * side THREAD POOL instead of a Spark job: a micro-batch commit adds
-    * O(shuffle partitions) files, and the distributed job's cost there is
-    * pure scheduling latency (~0.5s measured — a fixed per-batch term that
-    * caps scaling efficiency, since it shrinks at neither cluster size).
-    * The parallel pool keeps the reads concurrent (never the round-1
-    * serial-driver-IO hazard), and commits larger than the threshold —
-    * compactions, rescales, bulk backfills at 100x — still use the
-    * distributed job, which is the shape that scales with the cluster.
-    */
-  @volatile var driverFooterThreshold: Int =
-    sys.env.getOrElse("GRAFT_DRIVER_FOOTER_MAX", "256").toInt
-
-  private def collectFileStats(spark: SparkSession, staging: String): Seq[DataFileMeta] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    val stagingPath = new HPath(staging)
-    val fs = stagingPath.getFileSystem(hadoopConf)
-    if (!fs.exists(stagingPath)) return Nil
-    // one recursive LIST call (object stores serve this as a flat prefix
-    // listing — no per-directory walk), returning paths WITH sizes; only
-    // the footer decode is shipped to executors
-    val it = fs.listFiles(stagingPath, true)
-    val paths = Iterator.continually(it)
-      .takeWhile(_.hasNext).map(_.next())
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toUri.getPath).toSeq.sorted
-    if (paths.isEmpty) return Nil
-    val metas =
-      if (paths.size <= driverFooterThreshold) {
-        // footer decode is O(KB) metadata IO per file: a bounded driver
-        // pool beats a Spark job's scheduling latency for batch-sized
-        // commits
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, paths.size))
-        try {
-          paths.map(p => pool.submit(
-            new java.util.concurrent.Callable[DataFileMeta] {
-              def call(): DataFileMeta = readFooterStats(p, hadoopConf)
-            })).map(_.get())
-        } finally pool.shutdown()
-      } else {
-        import spark.implicits._
-        val serConf = new org.apache.spark.util.SerializableConfiguration(hadoopConf)
-        val parallelism = math.max(1, math.min(paths.size,
-          spark.sparkContext.defaultParallelism))
-        spark.createDataset(paths)
-          .repartition(parallelism)
-          .mapPartitions(it => it.map(p => readFooterStats(p, serConf.value)))
-          .collect().toSeq
-      }
-    metas.filter(_.rows > 0).sortBy(_.path)
-  }
-
-  /** Run `body` with parquet timestamps written as INT64 micros: Spark's
-    * INT96 default writes NO usable column statistics, which would blind
-    * the footer-based manifest stats (and every engine's row-group
-    * pruning) for the ts column. Readers handle both encodings.
-    *
-    * The conf is set WITHOUT restore: every engine write path wants MICROS,
-    * the set is idempotent, and a set/restore pair is a RACE under
-    * concurrent same-session sink merges (MultiSinkPipeline.applyAll) — one
-    * thread's restore landing while another thread's write is planning
-    * would produce INT96 files with no usable ts stats, silently degrading
-    * time pruning to keep-everything. Engine sessions set it at
-    * construction anyway ([[graft.util.Sessions]]); this is the belt for
-    * externally-built sessions.
-    */
-  private[graft] def withMicrosTimestamps[T](spark: SparkSession)(body: => T): T = {
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    body
-  }
-
-  /** Executor-side footer read for one data file, under the session's
-    * Hadoop configuration (a default `new Configuration()` here would drop
-    * spark.hadoop.* credentials and break on any non-default filesystem).
-    */
-  private def readFooterStats(f: String,
-      conf: org.apache.hadoop.conf.Configuration): DataFileMeta = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val bucketRe = ".*/bucket=(\\d+)/[^/]+$".r
-    val inputFile = HadoopInputFile.fromPath(new HPath(f), conf)
-    val reader = ParquetFileReader.open(inputFile)
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala
-      val rows = blocks.map(_.getRowCount).sum
-      def colStats(name: String) = blocks.flatMap(_.getColumns.asScala
-        .filter(_.getPath.toDotString == name).map(_.getStatistics))
-      val keyStats = colStats("conv_id").collect {
-        case s: org.apache.parquet.column.statistics.BinaryStatistics if !s.isEmpty =>
-          (s.genericGetMin.toStringUsingUTF8, s.genericGetMax.toStringUsingUTF8)
-      }
-      // TimestampType is physically INT64 micros; manifest stores millis
-      val tsStats = colStats("ts").collect {
-        case s: org.apache.parquet.column.statistics.LongStatistics if !s.isEmpty =>
-          (s.genericGetMin / 1000L, s.genericGetMax / 1000L)
-      }
-      // `_lsn` bounds feed the changelog's manifest-level pruning
-      val lsnStats = colStats(Model.lsnColumn).collect {
-        case s: org.apache.parquet.column.statistics.LongStatistics if !s.isEmpty =>
-          (s.genericGetMin, s.genericGetMax)
-      }
-      val bucket = f match {
-        case bucketRe(b) => b.toInt
-        case _ => -1
-      }
-      DataFileMeta(f, rows, bucket,
-        if (keyStats.isEmpty) "" else keyStats.map(_._1).min,
-        if (keyStats.isEmpty) "￿" else keyStats.map(_._2).max,
-        if (tsStats.isEmpty) 0L else tsStats.map(_._1).min,
-        if (tsStats.isEmpty) 0L else tsStats.map(_._2).max,
-        minLsn = if (lsnStats.isEmpty) -1L else lsnStats.map(_._1).min,
-        maxLsn = if (lsnStats.isEmpty) -1L else lsnStats.map(_._2).max,
-        bytes = inputFile.getLength)
-    } finally reader.close()
   }
 
   /** Canonical change-event projection (lsn, op, payload...). */

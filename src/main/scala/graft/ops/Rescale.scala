@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.table._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Online bucket rescaling: rewrite the whole table under a new bucket
   * count through the normal atomic commit protocol.
@@ -52,23 +51,10 @@ object Rescale {
       if (victims.exists(_.delta)) ChronicleTable.mergeDeltas(scan, schema)
       else scan
 
-    val staging = table.newStagingDir()
     // the shared maintenance rewrite, bucketed under the NEW count
-    // (victim row count = pre-fold upper bound on the output)
-    Compaction.rangeSplitWrite(spark, rows, newNumBuckets,
-      victims.map(_.rows).sum, targetRowsPerFile, staging)
-
-    val added = MergeInto.collectStats(spark, staging)
-    // range-shaped key, folded away by the contiguous-floor ledger like
-    // compaction's
-    val key = s"rescale#${base.floors.getOrElse("rescale", -1L) + 1}-${base.version}"
-    val lineage = LineageEntry(key, s"rescale-${base.numBuckets}-to-$newNumBuckets",
-      -1L, -1L, 0, 0, added.map(_.rows).sum, 0L,
-      added.groupBy(_.bucket.toString).map { case (b, fs) => b -> fs.map(_.rows).sum },
-      -1L)
-    val next = table.commit(base, PendingCommit(key,
-      victims.map(_.path), added, None, lineage,
-      newNumBuckets = Some(newNumBuckets)))
+    val (next, added) = Compaction.rewrite(table, base, "rescale",
+      s"rescale-${base.numBuckets}-to-$newNumBuckets", victims, rows,
+      newNumBuckets, targetRowsPerFile)
     RescaleResult(next, base.numBuckets, newNumBuckets, victims.size, added.size)
   }
 }

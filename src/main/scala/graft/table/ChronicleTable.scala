@@ -115,6 +115,12 @@ case class LineageEntry(
     rowsByBucket: Map[String, Long],
     snapshotVersion: Long)
 
+object LineageEntry {
+  /** The `rowsByBucket` of a commit adding `files`. */
+  def rowsByBucket(files: Seq[DataFileMeta]): Map[String, Long] =
+    files.groupBy(_.bucket.toString).map { case (b, fs) => b -> fs.map(_.rows).sum }
+}
+
 /** One immutable snapshot (version) of the table. */
 case class Snapshot(
     version: Long,
@@ -299,10 +305,10 @@ case class PendingCommit(
   * Scale notes (100 TB): the snapshot JSON is a manifest LIST (per-bucket
   * summaries only), so per-commit metadata IO is O(touched buckets);
   * MERGE planning prunes at the list level first and opens only surviving
-  * buckets' manifests; file stats come from parquet footers
-  * (MergeInto.collectStats) — read on a driver thread pool for commits of
-  * up to `MergeInto.driverFooterThreshold` files, by a distributed job
-  * above that.
+  * buckets' manifests; file stats come from the write itself — each write
+  * task folds its file's rows, key/ts/`_lsn` bounds and size as it writes
+  * ([[graft.ops.StagedWrite]]), so a commit of any size lists nothing and
+  * opens no footer.
   */
 class ChronicleTable(val root: String) {
   import ChronicleTable._
@@ -1068,10 +1074,8 @@ object ChronicleTable {
   private val RangeKey = """(.+)#(\d+)-(\d+)""".r
   private val BucketDir = """.*/bucket=(\d+)/[^/]+$""".r
 
-  /** Bucket of a data file, from its `bucket=N` partition directory (the
-    * same convention MergeInto.readFooterStats uses when building stats).
-    */
-  private[table] def bucketOfPath(p: String): Int = p match {
+  /** Bucket of a data file, from its `bucket=N` partition directory. */
+  private[graft] def bucketOfPath(p: String): Int = p match {
     case BucketDir(b) => b.toInt
     case _ => -1
   }

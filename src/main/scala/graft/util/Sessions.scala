@@ -28,8 +28,8 @@ object Sessions {
     * set HERE, once, because a per-write set/restore races under concurrent
     * same-session sink merges (one thread's restore can flip another
     * thread's in-flight write back to INT96, whose files carry no usable
-    * ts statistics — manifests then get (0,0) bounds and time pruning
-    * silently keeps everything).
+    * ts statistics — readers' row-group pruning on ts then keeps
+    * everything).
     */
   def tuneForEngine(b: SparkSession.Builder): SparkSession.Builder = {
     val withTs =

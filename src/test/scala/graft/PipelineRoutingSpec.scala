@@ -327,5 +327,30 @@ class PipelineRoutingSpec extends SparkSpec {
     assert(state("default") == fold(_.role != "user"))
   }
 
+  test("streaming multi-sink fan-out reads JSONL segments from the network intake") {
+    import graft.cdc.MultiSinkPipeline
+    import graft.routing.RouteConfig
+    // one segment in the shape IngestServer publishes: JSON lines
+    val src = tmpDir("binlog-msink-jsonl")
+    val seg = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(src, "segment=0"))
+    val events = (0 until 6).map { i =>
+      val role = if (i % 2 == 0) "user" else "assistant"
+      s"""{"lsn":$i,"op":"I","conv_id":"conv-j$i","turn_idx":0,"role":"$role",""" +
+        s""""text":"jsonl $i","tool":null,"ts":"2024-01-01T00:00:0$i.000Z"}"""
+    }
+    java.nio.file.Files.writeString(seg.resolve("part-00000.jsonl"),
+      events.mkString("", "\n", "\n"))
+    val p = new MultiSinkPipeline(
+      PipelineConfig(src, tmpDir("table-msink-jsonl"), sourceId = "msj", numBuckets = 2),
+      Seq(RouteConfig("users", Some("""xpath("role") = "user""""))))
+    val q = p.startStream(spark, tmpDir("ckpt-msink-jsonl"))
+    q.awaitTermination(120000)
+    def texts(sink: String) =
+      p.sinkState(spark, sink).select("text").as[String].collect().toSeq
+    assert(texts("users") == Seq("jsonl 0", "jsonl 2", "jsonl 4"))
+    assert(texts("default") == Seq("jsonl 1", "jsonl 3", "jsonl 5"))
+  }
+
   private def ts(i: Long) = new java.sql.Timestamp(i * 1000)
 }

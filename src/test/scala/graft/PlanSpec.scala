@@ -110,17 +110,15 @@ class PlanSpec extends SparkSpec {
       s"point-lookup key filter not pushed:\n${pKey.linesIterator.take(8).mkString("\n")}")
   }
 
-  test("counter guard: Spark jobs per runOnce commit, copy-on-write and merge-on-read") {
-    import graft.cdc.{CdcPipeline, PipelineConfig}
-    import graft.source.{BinlogConfig, BinlogGenerator}
+  /** Runs `f` with a job counter: `f`'s argument runs a block and returns
+    * the Spark jobs it started. Job counts are noise-free evidence that a
+    * commit does the same work: a change that moves them changed the commit
+    * path. Only jobs carrying this thread's tag count (broadcast and
+    * subquery threads inherit it), so stray jobs from other suites cannot
+    * leak in.
+    */
+  private def withJobCounter[T](f: ((=> Any) => Int) => T): T = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    // Job counts are noise-free evidence that the drain does the same work:
-    // a change that moves them changed the commit path. Only jobs carrying
-    // this thread's tag count (broadcast and subquery threads inherit it),
-    // so stray jobs from other suites cannot leak in.
-    val cfg = BinlogConfig(numEvents = 600, numConversations = 6, segmentSize = 200)
-    val src = tmpDir("binlog-jobs")
-    BinlogGenerator.writeSegments(spark, cfg, src)
     val sc = spark.sparkContext
     val tag = "graft.test.jobGuard"
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
@@ -129,29 +127,63 @@ class PlanSpec extends SparkSpec {
         if (e.properties != null && e.properties.getProperty(tag) != null)
           jobs.incrementAndGet()
     }
-    def jobsPerCommit(mergeOnRead: Boolean): Seq[Int] = {
-      val p = new CdcPipeline(PipelineConfig(src, tmpDir("table-jobs"),
-        segmentsPerBatch = 1, numBuckets = 2, mergeOnRead = mergeOnRead))
-      p.ensureTable()
-      Iterator.continually {
-        org.apache.spark.ListenerBusDrain(sc)
-        jobs.set(0)
-        val r = p.runOnce(spark)
-        org.apache.spark.ListenerBusDrain(sc)
-        r.map(_ => jobs.get)
-      }.takeWhile(_.isDefined).flatten.toSeq
-    }
     sc.addSparkListener(listener)
-    sc.setLocalProperty(tag, "runOnce")
-    try {
+    sc.setLocalProperty(tag, "counted")
+    try f { body =>
+      org.apache.spark.ListenerBusDrain(sc)
+      jobs.set(0)
+      body
+      org.apache.spark.ListenerBusDrain(sc)
+      jobs.get
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("counter guard: Spark jobs per runOnce commit, copy-on-write and merge-on-read") {
+    import graft.cdc.{CdcPipeline, PipelineConfig}
+    import graft.source.{BinlogConfig, BinlogGenerator}
+    val cfg = BinlogConfig(numEvents = 600, numConversations = 6, segmentSize = 200)
+    val src = tmpDir("binlog-jobs")
+    BinlogGenerator.writeSegments(spark, cfg, src)
+    withJobCounter { jobsOf =>
+      def jobsPerCommit(mergeOnRead: Boolean): Seq[Int] = {
+        val p = new CdcPipeline(PipelineConfig(src, tmpDir("table-jobs"),
+          segmentsPerBatch = 1, numBuckets = 2, mergeOnRead = mergeOnRead))
+        p.ensureTable()
+        Iterator.continually {
+          var committed = false
+          val n = jobsOf { committed = p.runOnce(spark).isDefined }
+          if (committed) Some(n) else None
+        }.takeWhile(_.isDefined).flatten.toSeq
+      }
       val cow = jobsPerCommit(mergeOnRead = false)
       val mor = jobsPerCommit(mergeOnRead = true)
       // counts measured on this fixture before the drain loop was unified
       assert(cow == Seq(6, 7, 7), s"jobs per copy-on-write commit moved: $cow")
       assert(mor == Seq(6, 6, 6), s"jobs per merge-on-read commit moved: $mor")
-    } finally {
-      sc.setLocalProperty(tag, null)
-      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("counter guard: Spark jobs of a commit adding more than 256 files") {
+    import graft.cdc.{CdcPipeline, PipelineConfig}
+    import graft.ops.{MergeInto, Rescale}
+    import spark.implicits._
+    val p = new CdcPipeline(PipelineConfig("", tmpDir("table-jobs-wide"), numBuckets = 2))
+    p.ensureTable()
+    MergeInto(spark, p.table, (0 until 2000).map(k =>
+      (k.toLong, "I", f"conv-$k%05d", 0, "user", s"text $k", None: Option[String],
+        new java.sql.Timestamp(1704067200000L + k)))
+      .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts"), "w#0", "t")
+    withJobCounter { jobsOf =>
+      var added = 0
+      val n = jobsOf { added = Rescale(spark, p.table, 300).addedFiles }
+      assert(added > 256, s"fixture must add more than 256 files, added $added")
+      // measured on this fixture: 4 while file stats came from a post-write
+      // footer pass, which above 256 files ran as its own distributed
+      // (repartitioned) read of the footers; 2 since the write reports them
+      assert(n == 2, s"jobs of a 300-bucket rescale moved: $n")
     }
   }
 

@@ -782,31 +782,114 @@ class TableOpsSpec extends SparkSpec {
     assert(prunedLegacy.map(_.path).toSet == day1 + "/nonexistent/legacy.parquet")
   }
 
-  test("footer stats: driver-pool and distributed paths produce identical manifests") {
-    val batch = (0 until 200).map { k =>
-      (k.toLong, "I", f"conv-$k%04d", k % 4, "user", s"text $k",
-        None: Option[String], new java.sql.Timestamp(1704067200000L + k * 1000L))
-    }.toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
-    def metasWith(threshold: Int): Seq[(Long, Int, String, String, Long, Long, Long, Long)] = {
-      val saved = MergeInto.driverFooterThreshold
-      MergeInto.driverFooterThreshold = threshold
+  test("write-side file stats equal a footer read: CoW, MOR, compact, rescale, no ts") {
+    import graft.model.Model
+    import graft.ops.Rescale
+    import graft.table.{ChronicleTable, DataFileMeta}
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    // The reference: one data file's manifest entry rebuilt from its parquet
+    // footer (row count, column statistics) and its filesystem length.
+    def footer(f: String): DataFileMeta = {
+      import org.apache.parquet.column.statistics.{BinaryStatistics, LongStatistics}
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f), spark.sparkContext.hadoopConfiguration)
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try {
-        val p = new CdcPipeline(PipelineConfig("", tmpDir(s"table-footer-$threshold"),
-          numBuckets = 4))
-        p.ensureTable()
-        MergeInto(spark, p.table, batch, "f#0", "t")
-        p.table.filesOf(p.table.loadCurrent())
-          .map(f => (f.rows, f.bucket, f.minKey, f.maxKey,
-            f.minTsMs, f.maxTsMs, f.minLsn, f.maxLsn))
-          .sortBy(t => (t._2, t._3))
-      } finally MergeInto.driverFooterThreshold = saved
+        val blocks = reader.getFooter.getBlocks.asScala.toSeq
+        def stats(name: String) = blocks.flatMap(_.getColumns.asScala
+          .filter(_.getPath.toDotString == name).map(_.getStatistics))
+        val keys = stats("conv_id").collect {
+          case s: BinaryStatistics if !s.isEmpty =>
+            (s.genericGetMin.toStringUsingUTF8, s.genericGetMax.toStringUsingUTF8)
+        }
+        // ts is INT64 micros on disk; the manifest stores millis
+        val ts = stats("ts").collect {
+          case s: LongStatistics if !s.isEmpty =>
+            (s.genericGetMin / 1000L, s.genericGetMax / 1000L)
+        }
+        val lsn = stats(Model.lsnColumn).collect {
+          case s: LongStatistics if !s.isEmpty => (s.genericGetMin, s.genericGetMax)
+        }
+        val bucket = ".*/bucket=(\\d+)/[^/]+$".r.findFirstMatchIn(f)
+          .map(_.group(1).toInt).getOrElse(-1)
+        DataFileMeta(f, blocks.map(_.getRowCount).sum, bucket,
+          if (keys.isEmpty) "" else keys.map(_._1).min,
+          if (keys.isEmpty) "\uffff" else keys.map(_._2).max,
+          if (ts.isEmpty) 0L else ts.map(_._1).min,
+          if (ts.isEmpty) 0L else ts.map(_._2).max,
+          minLsn = if (lsn.isEmpty) -1L else lsn.map(_._1).min,
+          maxLsn = if (lsn.isEmpty) -1L else lsn.map(_._2).max,
+          bytes = in.getLength)
+      } finally reader.close()
     }
-    val viaDriver = metasWith(Int.MaxValue) // driver thread pool
-    val viaJob = metasWith(0)               // distributed Spark job
-    assert(viaDriver == viaJob)
-    assert(viaDriver.forall { case (rows, b, _, _, tsLo, tsHi, lsnLo, lsnHi) =>
-      rows > 0 && b >= 0 && tsLo > 0 && tsHi >= tsLo && lsnLo >= 0 && lsnHi >= lsnLo
-    })
+    // Every file the latest commit added equals its footer read, and the
+    // added paths are exactly the parquet files of their staging dirs.
+    def checkLatest(t: ChronicleTable, delta: Boolean): Seq[DataFileMeta] = {
+      val snap = t.loadCurrent()
+      val before = t.filesOf(t.loadVersion(snap.version - 1)).map(_.path).toSet
+      val added = t.filesOf(snap).filterNot(f => before(f.path))
+      assert(added.nonEmpty)
+      added.foreach { f =>
+        assert(f.delta == delta, s"${f.path} delta=${f.delta}")
+        assert(f.copy(delta = false) == footer(f.path))
+      }
+      val staged = added.map(f => java.nio.file.Paths.get(f.path).getParent.getParent)
+        .distinct.flatMap { d =>
+          val s = java.nio.file.Files.walk(d)
+          try s.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toList
+          finally s.close()
+        }
+      assert(staged.toSet == added.map(_.path).toSet)
+      added
+    }
+    def ts(i: Long) = new java.sql.Timestamp(1704067200000L + i * 1000L)
+    val inserts = (0 until 200).map { k =>
+      (k.toLong, "I", f"conv-$k%04d", k % 4, "user", s"text $k",
+        None: Option[String], ts(k))
+    }.toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+    // updates, and deletes whose payload is null (the tombstone shape)
+    val changes = (0 until 120 by 3).map { k =>
+      if (k % 2 == 0) (1000L + k, "I", f"conv-$k%04d", k % 4, "user", s"new $k",
+        Some("t"): Option[String], ts(1000 + k))
+      else (1000L + k, "D", f"conv-$k%04d", k % 4, null, null,
+        None: Option[String], null: java.sql.Timestamp)
+    }.toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+
+    // copy-on-write: a fresh write, then a rewrite of the touched files
+    val cow = new CdcPipeline(PipelineConfig("", tmpDir("table-stats-cow"), numBuckets = 4))
+    cow.ensureTable()
+    MergeInto(spark, cow.table, inserts, "s#0", "t")
+    checkLatest(cow.table, delta = false)
+    MergeInto(spark, cow.table, changes, "s#1", "t")
+    checkLatest(cow.table, delta = false)
+
+    // merge-on-read: delta files, tombstones kept with their null payload
+    val mor = new CdcPipeline(PipelineConfig("", tmpDir("table-stats-mor"), numBuckets = 4))
+    mor.ensureTable()
+    MergeInto(spark, mor.table, inserts, "s#0", "t", mergeOnRead = true)
+    checkLatest(mor.table, delta = true)
+    MergeInto(spark, mor.table, changes, "s#1", "t", orderedSource = false,
+      mergeOnRead = true)
+    val tombstones = spark.read
+      .parquet(checkLatest(mor.table, delta = true).map(_.path): _*)
+      .filter(col(Model.deletedColumn))
+    assert(tombstones.count() == 20 && tombstones.filter(col("ts").isNotNull).isEmpty)
+
+    // compaction folds the deltas; rescale rewrites under a new count
+    assert(Compaction(spark, mor.table, maxFilesPerBucket = 1).compactedBuckets > 0)
+    checkLatest(mor.table, delta = false)
+    Rescale(spark, mor.table, 3)
+    assert(checkLatest(mor.table, delta = false).forall(_.bucket < 3))
+
+    // a derived table without a ts column: no time bounds, the rest exact
+    val noTs = new ChronicleTable(tmpDir("table-stats-nots"))
+    noTs.create(StructType(Seq(StructField("conv_id", StringType),
+      StructField("turn_idx", IntegerType), StructField("score", DoubleType)) ++
+      Model.systemFields), 2)
+    MergeInto(spark, noTs, (0 until 50).map(k => (k.toLong, "I", s"k$k", 0, k * 0.5))
+      .toDF("lsn", "op", "conv_id", "turn_idx", "score"), "s#0", "t")
+    assert(checkLatest(noTs, delta = false).forall(f => f.minTsMs == 0L && f.maxTsMs == 0L))
   }
 
   test("CRC integrity: corrupted payloads divert to quarantine, valid rows pass") {
