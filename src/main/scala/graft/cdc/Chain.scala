@@ -79,19 +79,16 @@ object Chain {
 
   /** The checks both chain modes make before anything ships, returning the
     * downstream's cursors: the upstream must be tailable — failing BEFORE
-    * the bootstrap, not on poll 2, since an unordered upstream can never be
-    * tailed (readChanges would refuse) and shipping its full state first
-    * would strand a half-initialized downstream — and the downstream
+    * the bootstrap, not on poll 2 ([[ChronicleTable.requireTailable]] —
+    * readChanges would refuse then, and shipping the full state first would
+    * strand a half-initialized downstream) — and the downstream
     * (created if absent) must be fed by no pipeline and not by the other
     * chain mode, whose cursors carry `otherPrefix`.
     */
   private def openDownstream(src: ChronicleTable, cur: graft.table.Snapshot,
       dst: ChronicleTable, numBuckets: Int, otherPrefix: String,
       otherFed: String, hint: String): Map[String, Long] = {
-    require(cur.unordered.isEmpty,
-      s"upstream ${src.root} has unordered sources " +
-        s"${cur.unordered.mkString(",")} — its changelog cannot be tailed " +
-        "(no mark bounds their redelivery), so it cannot be chained")
+    src.requireTailable(cur)
     if (!dst.exists) dst.create(Model.physicalSchemaV1, numBuckets)
     val cursors = dst.loadCurrent().cursors
     val other = cursors.keys.filter(_.startsWith(otherPrefix))
@@ -193,7 +190,9 @@ object Chain {
         shipRange(src.readChanges(spark, lastV), lastV + 1, cur.version,
           last = true, s"chain ${src.root} v$lastV->v${cur.version}")
       else {
-        val k = bootstrapSliceCount(src, cur, bootstrapSliceBytes)
+        // at most version+1 slice keys can tile the version-unit space
+        val k = src.bootstrapSliceCount(cur, bootstrapSliceBytes,
+          maxSlices = cur.version + 1)
         if (k <= 1)
           // small (or lsn-statless) upstream: one-batch bootstrap of the
           // COLLAPSED visible state, as before
@@ -218,26 +217,6 @@ object Chain {
     Metrics.record(dst.root, src.root, cur.version, merges,
       (System.nanoTime() - t0) / 1e9, "chain-poll")
     Some(ChainResult(lastV, cur.version, shipped.toSeq.sorted, merges))
-  }
-
-  /** Bootstrap slice count for an upstream snapshot: bytes-driven, capped
-    * by version-unit tiling (at most version+1 slice keys can tile the
-    * unit space), by the FILE count (a file is the atomic scan unit —
-    * finer slicing just multiplies near-empty merges) and by the lsn
-    * width; 1 when the manifests carry no lsn bounds (no slicing axis —
-    * pre-upgrade tables).
-    */
-  private def bootstrapSliceCount(src: ChronicleTable,
-      cur: graft.table.Snapshot, sliceBytes: Long): Int = {
-    if (sliceBytes <= 0L) return 1
-    val (gMin, gMax) = src.lsnBounds(cur)
-    if (gMin < 0L || gMax <= gMin) return 1
-    val files = src.filesOf(cur)
-    val bytes = files.map(_.bytes.max(0L)).sum
-    val wanted = 1L + (bytes - 1L).max(0L) / sliceBytes
-    math.min(math.min(wanted, cur.version + 1),
-      math.min(files.size.toLong.max(1L),
-        math.min(gMax - gMin + 1, Int.MaxValue.toLong))).toInt.max(1)
   }
 
   /** Poll until caught up (each poll sees the version the previous one

@@ -1,6 +1,6 @@
 package graft.changes
 
-import graft.table.{ChronicleTable, DataFileMeta, Snapshot}
+import graft.table.{ChronicleTable, FilePrune, Snapshot}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -208,7 +208,7 @@ private[changes] object VersionOffset {
   * marks its rows must clear (marks travel IN the partition so each batch
   * is self-contained — the factory is static across batches).
   */
-private[changes] case class ChangeFilePartition(
+private[graft] case class ChangeFilePartition(
     path: String,
     fileSize: Long,
     marks: Map[String, Long],
@@ -277,7 +277,7 @@ private[changes] class ChangesMicroBatchStream(schema0: StructType,
 
   override def initialOffset(): Offset = {
     val cur = table.loadCurrent()
-    requireTailable(cur)
+    table.requireTailable(cur)
     options.getOrDefault("startingVersion", "latest") match {
       case "latest" => VersionOffset(cur.version)
       case "bootstrap" =>
@@ -286,20 +286,9 @@ private[changes] class ChangesMicroBatchStream(schema0: StructType,
         // reconstructs each slice's interval on restart
         val (gMin, gMax) = table.lsnBounds(cur)
         val k =
-          if (gMin < 0L || gMax <= gMin) 1
-          else if (bootstrapSlicesOverride > 0) bootstrapSlicesOverride
-          else {
-            val files = table.filesOf(cur)
-            val bytes = files.map(_.bytes.max(0L)).sum
-            val wanted = 1L + (bytes - 1L).max(0L) / bootstrapSliceBytes
-            // slices finer than one FILE cannot reduce any batch's IO
-            // further (a file is the atomic scan unit) — cap there, so a
-            // pathological byte budget can't plan thousands of
-            // near-empty micro-batches
-            math.min(math.min(wanted, files.size.toLong.max(1L)),
-                math.min(gMax - gMin + 1, Int.MaxValue.toLong))
-              .toInt.max(1)
-          }
+          if (bootstrapSlicesOverride > 0 && gMin >= 0L && gMax > gMin)
+            bootstrapSlicesOverride
+          else table.bootstrapSliceCount(cur, bootstrapSliceBytes)
         VersionOffset(cur.version, slice = -1, slices = k,
           lsnMin = gMin, lsnMax = gMax)
       case at if at.startsWith("@") =>
@@ -364,23 +353,6 @@ private[changes] class ChangesMicroBatchStream(schema0: StructType,
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 
-  private def requireTailable(snap: Snapshot): Unit = {
-    require(snap.unordered.isEmpty,
-      s"table $root has unordered sources ${snap.unordered.mkString(",")}: " +
-        "their high-water marks do not bound redelivery, so a mark-based " +
-        "change stream would be wrong — tail the source directly instead")
-    // mirror of readChanges' legacy guard: rows without a _source tag can
-    // only be filtered against the GLOBAL mark, which is sound solely for
-    // single-source tables — a pre-upgrade multi-source table would
-    // silently drop rows of a source whose LSN sequence runs below it
-    if (!snap.schema.fieldNames.contains(graft.model.Model.sourceColumn))
-      require(snap.hwms.size <= 1,
-        s"table $root is multi-source (${snap.hwms.keys.mkString(",")}) but " +
-          "its rows carry no _source tag (written pre-upgrade) — " +
-          "per-source change-stream filtering is impossible; " +
-          "compact/rewrite the table to stamp the tag")
-  }
-
   /** The stream schema is pinned at start; a file written after an
     * upstream type WIDENING has a different parquet physical type, which
     * the pinned reader would mis-read — fail with the restart instruction
@@ -403,19 +375,17 @@ private[changes] class ChangesMicroBatchStream(schema0: StructType,
     // slice's lsn interval (manifest-pruned), exact interval filter on rows
     if (eo.inBootstrap && eo.slice >= 0) {
       val to = table.loadVersion(eo.version)
-      requireTailable(to)
+      table.requireTailable(to)
       requireSchemaCompatible(to)
       val (lo, hi) = ChronicleTable.lsnSliceInterval(
         eo.lsnMin, eo.lsnMax, eo.slice, eo.slices)
       batchLsnRange = (
         if (lo == Long.MinValue) None else Some(lo - 1L),
         if (hi == Long.MaxValue) None else Some(hi))
-      return table.filesOf(to)
-        .filter(f => f.minLsn < 0L || f.maxLsn < 0L ||
-          (f.minLsn <= hi && f.maxLsn >= lo))
+      return table.files(to, FilePrune(fromLsn = lo, toLsn = hi))
         .map { f =>
-          ChangeFilePartition(f.path, sizeOf(f), Map.empty, -1L,
-            filtered = false, lsnLo = lo, lsnHi = hi): InputPartition
+          ChangeFilePartition(f.path, ChronicleTable.fileBytes(spark, f),
+            Map.empty, -1L, filtered = false, lsnLo = lo, lsnHi = hi): InputPartition
         }.toArray
     }
 
@@ -423,7 +393,7 @@ private[changes] class ChangesMicroBatchStream(schema0: StructType,
     val toV = eo.version
     if (toV <= fromV) return Array.empty
     val to = table.loadVersion(toV)
-    requireTailable(to)
+    table.requireTailable(to)
     requireSchemaCompatible(to)
 
     val (files, marks, globalMark, filtered) =
@@ -436,27 +406,15 @@ private[changes] class ChangesMicroBatchStream(schema0: StructType,
         val m = to.hwms.map { case (s, _) => s -> since.hwmFor(s) }
         val thr = if (m.nonEmpty) m.values.min else since.hwmLsn
         batchLsnRange = (Some(thr), None)
-        val kept = to.manifestList
-          .filter(mf => mf.maxLsn < 0L || mf.maxLsn > thr)
-          .flatMap(mf => table.loadManifest(mf.path))
-          .filter(f => f.maxLsn < 0L || f.maxLsn > thr)
-        (kept, m, since.hwmLsn, true)
+        (table.files(to, FilePrune(fromLsn = FilePrune.above(thr))),
+          m, since.hwmLsn, true)
       }
     files.map { f =>
-      ChangeFilePartition(f.path, sizeOf(f), marks, globalMark, filtered)
+      ChangeFilePartition(f.path, ChronicleTable.fileBytes(spark, f), marks,
+        globalMark, filtered)
         : InputPartition
     }.toArray
   }
-
-  /** Manifest byte counts plan the split; a pre-upgrade entry without one
-    * is statted once, driver-side, for surviving files only.
-    */
-  private def sizeOf(f: DataFileMeta): Long =
-    if (f.bytes > 0L) f.bytes
-    else {
-      val p = new org.apache.hadoop.fs.Path(f.path)
-      p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p).getLen
-    }
 
   override def createReaderFactory(): PartitionReaderFactory = {
     // Spark's own codegen'd parquet reader, planned once on the driver and

@@ -441,7 +441,8 @@ object MergeInto {
       }
 
       // --- metadata-only file pruning --------------------------------------
-      val touched = table.pruneFiles(base, buckets, minKey, maxKey)
+      val touched = table.files(base,
+        FilePrune(Some(buckets), Some(minKey), Some(maxKey)))
       val touchedPaths = touched.map(_.path)
       val touchedRows = touched.map(_.rows).sum
       // Touched delta files fold into this rewrite: a key may then appear

@@ -362,8 +362,9 @@ object CdcQueries {
   }
 
   /** One-week time-sliced read of the replayed table: manifest-level ts
-    * pruning (pruneFilesByTime) keeps untouched days' files off the scan
-    * entirely, then the residual predicate exacts the bounds — the table's
+    * pruning (`ChronicleTable.files` through the table's one rule,
+    * `FilePrune`) keeps untouched days' files off the scan entirely, then
+    * the residual predicate exacts the bounds — the table's
     * second partition dimension (the reference's date-suffixed sinks,
     * IndexSuffixFormatter.java:27-41).
     */

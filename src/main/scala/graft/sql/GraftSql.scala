@@ -1,7 +1,7 @@
 package graft.sql
 
 import graft.model.Model
-import graft.table.{ChronicleTable, DataFileMeta, LineageEntry, PendingCommit, Snapshot}
+import graft.table.{ChronicleTable, DataFileMeta, FilePrune, LineageEntry, PendingCommit, Snapshot}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -30,14 +30,17 @@ import scala.jdk.CollectionConverters._
   * what [[ChronicleTable.read]] + `!_deleted` yields, as one source. The
   * system columns (`_lsn`, `_source`) stay queryable.
   *
-  * Scale shape (the same discipline as [[graft.table.ChronicleFileIndex]]):
-  *  - filter pushdown prunes data files at the MANIFEST during planning —
-  *    `conv_id` point/range/IN (plus HASH-BUCKET pruning on equality: a
-  *    point lookup opens one bucket, the `readKey` serving path through
-  *    SQL), `ts` bounds (base files), `_lsn` lower bounds;
+  * Scale shape:
+  *  - filter pushdown prunes manifests and data files during planning
+  *    through the table's one pruning rule ([[graft.table.FilePrune]],
+  *    the same rule every reader uses) — `conv_id` point/range/IN (plus
+  *    HASH-BUCKET pruning on equality: a point lookup opens one bucket,
+  *    the `readKey` serving path through SQL), `ts` bounds (base files),
+  *    `_lsn` lower bounds;
   *  - column pruning reaches the parquet reader (a two-column projection
   *    of a wide transcript table reads two column chunks), and the pushed
-  *    filters ride into the reader for row-group/page pruning;
+  *    filters ride into the reader for row-group/page pruning (only key
+  *    filters below a merge-on-read bucket's LWW merge);
   *  - merge-on-read buckets read through a STREAMING SORTED MERGE: every
   *    engine write lands files sorted by (conv_id, turn_idx), so one
   *    input partition per delta-carrying bucket k-way-merges its files
@@ -231,8 +234,6 @@ private[graft] class GraftScan(table: ChronicleTable, snap: Snapshot,
   extends Scan with Batch with SupportsReportStatistics
   with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
 
-  import GraftSql._
-
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
@@ -274,38 +275,10 @@ private[graft] class GraftScan(table: ChronicleTable, snap: Snapshot,
   private def files: Seq[DataFileMeta] = {
     val memo = filesMemo
     if (memo != null) return memo
-    val computed = pruneFiles(pushed ++ runtime)
+    val computed = table.files(snap,
+      FilePrune.of((pushed ++ runtime).toSeq, snap.numBuckets))
     filesMemo = computed
     computed
-  }
-
-  private def pruneFiles(preds: Array[sources.Filter]): Seq[DataFileMeta] = {
-    val keyB = bounds(preds, "conv_id", asKey)
-    val tsB = bounds(preds, "ts", asTsMillis)
-    val lsnB = bounds(preds, Model.lsnColumn, asLsn)
-    // conv_id EQUALITY additionally prunes by hash bucket — the readKey
-    // point-lookup plan, now reachable from SQL
-    val buckets: Option[Set[Int]] = eqValues(preds, "conv_id").map(vs =>
-      vs.map(v => ChronicleTable.bucketOf(v, snap.numBuckets)))
-    table.filesOf(snap).filter { f =>
-      val bucketOk = buckets.forall(_.contains(f.bucket))
-      val keyOk = keyB.forall { case (lo, hi) =>
-        lo.forall(l => f.maxKey >= l.asInstanceOf[String]) &&
-          hi.forall(h => f.minKey <= h.asInstanceOf[String])
-      }
-      // ts pruning applies to BASE files with stats only (a kept delta can
-      // only displace or tombstone — the readSlice soundness argument)
-      val tsOk = f.delta || (f.minTsMs == 0L && f.maxTsMs == 0L) ||
-        tsB.forall { case (lo, hi) =>
-          lo.forall(l => f.maxTsMs >= l.asInstanceOf[Long]) &&
-            hi.forall(h => f.minTsMs <= h.asInstanceOf[Long])
-        }
-      val lsnOk = f.maxLsn < 0L ||
-        lsnB.forall { case (lo, _) =>
-          lo.forall(l => f.maxLsn >= l.asInstanceOf[Long])
-        }
-      bucketOk && keyOk && tsOk && lsnOk
-    }
   }
 
   /** Columns the READER must materialize beyond the projection: the LWW
@@ -320,28 +293,34 @@ private[graft] class GraftScan(table: ChronicleTable, snap: Snapshot,
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val byBucket = files.groupBy(_.bucket)
-    byBucket.toSeq.sortBy(_._1).flatMap { case (_, fs) =>
+    val spark = SparkSession.active
+    def sized(f: DataFileMeta) = (f.path, ChronicleTable.fileBytes(spark, f))
+    files.groupBy(_.bucket).toSeq.sortBy(_._1).flatMap { case (_, fs) =>
       if (fs.exists(_.delta))
         // delta-carrying bucket: ONE partition streaming-merges its files
         // (keys never span buckets, so the per-bucket merge is exact)
-        Seq(GraftPartition(fs.map(f => (f.path, f.bytes)), merge = true))
-      else fs.map(f => GraftPartition(Seq((f.path, f.bytes)), merge = false))
+        Seq(GraftPartition(fs.map(sized), merge = true))
+      else fs.map(f => GraftPartition(Seq(sized(f)), merge = false))
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val spark = SparkSession.active
-    val readFunc = new ParquetFileFormat().buildReaderWithPartitionValues(
-      sparkSession = spark,
-      dataSchema = snap.schema,
-      partitionSchema = new StructType(),
-      requiredSchema = readAll,
-      filters = pushed.toSeq,
-      options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-      hadoopConf = spark.sessionState.newHadoopConf())
+    def reader(filters: Seq[sources.Filter]) =
+      new ParquetFileFormat().buildReaderWithPartitionValues(
+        sparkSession = spark,
+        dataSchema = snap.schema,
+        partitionSchema = new StructType(),
+        requiredSchema = readAll,
+        filters = filters,
+        options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        hadoopConf = spark.sessionState.newHadoopConf())
+    // below the LWW merge only key filters may skip row groups: a skipped
+    // group failing a ts/_lsn filter may hold the version that displaces
+    // (or tombstones) a base row, which would then resurface
+    val keyFilters = pushed.filter(_.references.forall(Model.keyColumns.contains))
     val idx = readAll.fieldNames.zipWithIndex.toMap
-    new GraftReaderFactory(readFunc,
+    new GraftReaderFactory(reader(pushed.toSeq), reader(keyFilters.toSeq),
       convIdx = idx("conv_id"), turnIdx = idx("turn_idx"),
       lsnIdx = idx(Model.lsnColumn), delIdx = idx(Model.deletedColumn),
       outIdx = required.fields.map(f => idx(f.name)),
@@ -367,14 +346,16 @@ private[graft] case class GraftPartition(files: Seq[(String, Long)],
 
 private[sql] class GraftReaderFactory(
     readFunc: PartitionedFile => Iterator[InternalRow],
+    mergeReadFunc: PartitionedFile => Iterator[InternalRow],
     convIdx: Int, turnIdx: Int, lsnIdx: Int, delIdx: Int,
     outIdx: Array[Int], outTypes: Array[DataType],
     readTypes: Array[DataType]) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftPartition]
+    val read = if (p.merge) mergeReadFunc else readFunc
     def open(f: (String, Long)): Iterator[InternalRow] =
-      readFunc(PartitionedFile(InternalRow.empty,
+      read(PartitionedFile(InternalRow.empty,
         SparkPath.fromPathString(f._1), 0L, f._2,
         Array.empty[String], 0L, f._2))
     val rows: Iterator[InternalRow] =
@@ -766,8 +747,9 @@ private[sql] object GraftSql {
   /** EXACT translation of a pushed source filter back to a Catalyst
     * Column, for `DELETE FROM … WHERE` victim selection. None = shape not
     * covered → the DELETE refuses in analysis (never half-applies).
-    * Unlike [[bounds]] (pruning, allowed to be lossy-conservative), this
-    * must be exact: the resulting condition SELECTS the rows to tombstone.
+    * Unlike [[graft.table.FilePrune.of]] (pruning, allowed to be
+    * lossy-conservative), this must be exact: the resulting condition
+    * SELECTS the rows to tombstone.
     */
   def filterColumn(f: sources.Filter,
       schema: StructType): Option[org.apache.spark.sql.Column] = {
@@ -798,99 +780,5 @@ private[sql] object GraftSql {
       case _: sources.AlwaysFalse => Some(lit(false))
       case _ => None
     }
-  }
-
-  /** (lower, upper) bound extraction from pushed source filters for one
-    * column — the DSv2 mirror of [[graft.table.ChronicleFileIndex]]'s
-    * Catalyst-side rules. Unknown filter shapes are ignored (extra files
-    * are merely scanned, never wrong).
-    */
-  def bounds(filters: Array[sources.Filter], name: String,
-      lit: (Any, Boolean, Boolean) => Option[Any])
-      : Option[(Option[Any], Option[Any])] = {
-    var lo: Option[Any] = None
-    var hi: Option[Any] = None
-    def tightenLo(v: Any, strict: Boolean): Unit =
-      lit(v, true, strict).foreach(x => lo = Some(lo.fold(x)(c => maxOf(c, x))))
-    def tightenHi(v: Any, strict: Boolean): Unit =
-      lit(v, false, strict).foreach(x => hi = Some(hi.fold(x)(c => minOf(c, x))))
-    filters.foreach {
-      case sources.EqualTo(a, v) if a == name =>
-        tightenLo(v, strict = false); tightenHi(v, strict = false)
-      case sources.In(a, vs) if a == name && vs.nonEmpty =>
-        val conv = vs.flatMap(v => lit(v, true, false))
-        if (conv.length == vs.length) {
-          tightenLo(conv.reduce(minOf), strict = false)
-          tightenHi(conv.reduce(maxOf), strict = false)
-        }
-      case sources.GreaterThan(a, v) if a == name => tightenLo(v, strict = true)
-      case sources.GreaterThanOrEqual(a, v) if a == name =>
-        tightenLo(v, strict = false)
-      case sources.LessThan(a, v) if a == name => tightenHi(v, strict = true)
-      case sources.LessThanOrEqual(a, v) if a == name =>
-        tightenHi(v, strict = false)
-      case _ => ()
-    }
-    if (lo.isEmpty && hi.isEmpty) None else Some((lo, hi))
-  }
-
-  /** Distinct equality values for a column (EqualTo or In), for bucket
-    * pruning — None when any other predicate shape also constrains it
-    * is NOT needed: bucket pruning composes with range pruning as an
-    * intersection, so it is sound whenever SOME conjunct pins equality.
-    */
-  def eqValues(filters: Array[sources.Filter], name: String): Option[Set[String]] = {
-    val sets = filters.collect {
-      case sources.EqualTo(a, v: String) if a == name => Set(v)
-      case sources.In(a, vs) if a == name && vs.nonEmpty &&
-        vs.forall(_.isInstanceOf[String]) => vs.map(_.asInstanceOf[String]).toSet
-    }
-    if (sets.isEmpty) None else Some(sets.reduce(_ intersect _))
-  }
-
-  def asKey(v: Any, isLower: Boolean, strict: Boolean): Option[Any] = v match {
-    // strings can't tighten a strict bound by one unit; inclusive is sound
-    case s: String => Some(s)
-    case _ => None
-  }
-
-  /** Filter timestamp values arrive as java.sql.Timestamp or
-    * java.time.Instant depending on the session's java8API conf; the
-    * manifest stores millis. Strict bounds tighten by one MICRO before
-    * flooring (micros are the physical grain).
-    */
-  def asTsMillis(v: Any, isLower: Boolean, strict: Boolean): Option[Any] = {
-    val micros: Option[Long] = v match {
-      case t: java.sql.Timestamp =>
-        Some(Math.multiplyExact(t.getTime, 1000L) + (t.getNanos / 1000) % 1000)
-      case i: java.time.Instant =>
-        Some(Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L),
-          i.getNano / 1000L))
-      case _ => None
-    }
-    micros.map { m =>
-      val adj = if (!strict) m else if (isLower) m + 1L else m - 1L
-      Math.floorDiv(adj, 1000L)
-    }
-  }
-
-  def asLsn(v: Any, isLower: Boolean, strict: Boolean): Option[Any] = v match {
-    case n: java.lang.Long =>
-      Some(if (!strict) n.longValue else if (isLower) n + 1L else n - 1L)
-    case n: java.lang.Integer =>
-      Some(if (!strict) n.longValue else if (isLower) n + 1L else n - 1L)
-    case _ => None
-  }
-
-  private def maxOf(a: Any, b: Any): Any = (a, b) match {
-    case (x: String, y: String) => if (x >= y) x else y
-    case (x: Long, y: Long) => math.max(x, y)
-    case _ => a
-  }
-
-  private def minOf(a: Any, b: Any): Any = (a, b) match {
-    case (x: String, y: String) => if (x <= y) x else y
-    case (x: Long, y: Long) => math.min(x, y)
-    case _ => a
   }
 }

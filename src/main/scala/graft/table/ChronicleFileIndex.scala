@@ -1,52 +1,38 @@
 package graft.table
 
-import graft.model.Model
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Catalyst-facing manifest pruning: a [[FileIndex]] whose `listFiles`
-  * translates the data filters Catalyst pushes to the scan into the
-  * table's OWN metadata pruning — the extension point lakehouse formats
-  * plug into Spark through (Delta's TahoeFileIndex, Iceberg's
-  * SparkScanBuilder play the same role).
+  * translates the data filters Catalyst pushes to the scan into source
+  * filters (Spark's own translation, as `FileSourceStrategy` does) and
+  * prunes through the table's one rule, [[FilePrune]] — the
+  * extension point lakehouse formats plug into Spark through (Delta's
+  * TahoeFileIndex, Iceberg's SparkScanBuilder play the same role).
   *
   * With this, ANY DataFrame or SQL filter over [[ChronicleTable.read]] —
   * `WHERE conv_id = 'x'`, `WHERE ts BETWEEN a AND b`, `WHERE _lsn > c` —
-  * prunes data files at PLANNING time from the manifest list, instead of
-  * needing the dedicated readers (`readKey`/`readSlice`/`readChanges`,
-  * which remain the sharp tools: they also pick merge semantics). At
+  * prunes data files at PLANNING time from manifest stats, with the same
+  * rule and soundness argument as the dedicated readers
+  * (`readKey`/`readSlice`/`readChanges`, which remain the sharp tools:
+  * they also prune at the manifest list and pick merge semantics). At
   * 100 TB the difference is a scan that opens one bucket's files versus a
   * scan that opens every live footer and discards row groups.
   *
-  * Supported prune rules, each applied only when its conjunct appears at
-  * the top level of the pushed filters (everything else is conservatively
-  * ignored — extra files are merely scanned, never wrong):
-  *
-  *  - conv_id equality / IN / range → key-bound intersection, for base
-  *    AND delta files (a delta whose key range excludes the key cannot
-  *    displace or tombstone it);
-  *  - ts bounds → time-range intersection, BASE files only (a kept delta
-  *    can only displace or tombstone — the [[ChronicleTable.readSlice]]
-  *    soundness argument), files without ts stats kept;
-  *  - `_lsn` lower bounds → drop files whose maxLsn lies entirely below
-  *    (the changelog rule), files without lsn stats kept.
-  *
   * Split planning and size estimation come from the manifest's per-file
   * byte counts — no filesystem stat per file (pre-upgrade entries without
-  * a size are statted lazily, once, for the surviving files only).
+  * a size are statted once, for the surviving files only:
+  * [[ChronicleTable.fileBytes]]).
   */
 class ChronicleFileIndex(
     spark: SparkSession,
     table: ChronicleTable,
     snapshot: Snapshot,
     files: Seq[DataFileMeta]) extends FileIndex {
-
-  import ChronicleFileIndex._
 
   override def rootPaths: Seq[Path] = Seq(new Path(table.root))
 
@@ -71,140 +57,14 @@ class ChronicleFileIndex(
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val conjuncts = dataFilters.flatMap(splitAnd)
-    val keyB = bounds(conjuncts, "conv_id", asKey)
-    val tsB = bounds(conjuncts, "ts", asTsMillis)
-    val lsnB = bounds(conjuncts, Model.lsnColumn, asLong)
-
-    val survivors = files.filter { f =>
-      val keyOk = keyB.forall { case (lo, hi) =>
-        lo.forall(l => f.maxKey >= l.asInstanceOf[String]) &&
-          hi.forall(h => f.minKey <= h.asInstanceOf[String])
-      }
-      // ts pruning applies to BASE files with stats only
-      val tsOk = f.delta || (f.minTsMs == 0L && f.maxTsMs == 0L) ||
-        tsB.forall { case (lo, hi) =>
-          lo.forall(l => f.maxTsMs >= l.asInstanceOf[Long]) &&
-            hi.forall(h => f.minTsMs <= h.asInstanceOf[Long])
-        }
-      // lsn pruning needs stats; only lower bounds are useful (tailing)
-      val lsnOk = f.maxLsn < 0L ||
-        lsnB.forall { case (lo, _) =>
-          lo.forall(l => f.maxLsn >= l.asInstanceOf[Long])
-        }
-      keyOk && tsOk && lsnOk
-    }
-    Seq(PartitionDirectory(InternalRow.empty, survivors.map(status).toArray))
+    val prune = FilePrune.of(
+      dataFilters.flatMap(org.apache.spark.sql.graft.SourceFilters.translate),
+      snapshot.numBuckets)
+    Seq(PartitionDirectory(InternalRow.empty,
+      files.filter(f => prune.keeps(f)).map(status).toArray))
   }
 
-  /** FileStatus from manifest metadata alone; a pre-upgrade entry without
-    * a byte count stats the file once (surviving files only — pruning has
-    * already happened).
-    */
-  private def status(f: DataFileMeta): FileStatus = {
-    val p = new Path(f.path)
-    val len =
-      if (f.bytes > 0) f.bytes
-      else p.getFileSystem(spark.sessionState.newHadoopConf())
-        .getFileStatus(p).getLen
-    new FileStatus(len, false, 1, 128L * 1024 * 1024, 0L, p)
-  }
-}
-
-object ChronicleFileIndex {
-
-  private def splitAnd(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitAnd(l) ++ splitAnd(r)
-    case other => Seq(other)
-  }
-
-  /** Literal adapter: comparable value of a literal for the column, or
-    * None when the literal's type isn't the shape the rule handles.
-    * `strictTowardLo`/`strictTowardHi` let discrete domains tighten a
-    * strict comparison by one unit (`x > 5` ⇒ lower bound 6); strings
-    * cannot, so the key adapter stays inclusive (sound — an edge file is
-    * merely scanned).
-    */
-  private def asKey(l: Literal, isLower: Boolean, strict: Boolean): Option[Any] =
-    l.value match {
-      case s: UTF8String => Some(s.toString)
-      case _ => None
-    }
-
-  /** Timestamp literals are micros since epoch; manifests store millis.
-    * Strict bounds tighten by one MICRO before the floor-to-millis, so
-    * `ts < day` prunes a file starting exactly at `day` (its every row is
-    * ≥ day micros) while staying sound for mid-milli cutoffs.
-    */
-  private def asTsMillis(l: Literal, isLower: Boolean, strict: Boolean): Option[Any] =
-    l.value match {
-      case v: java.lang.Long =>
-        val adj = if (!strict) v.longValue else if (isLower) v + 1L else v - 1L
-        Some(Math.floorDiv(adj, 1000L))
-      case _ => None
-    }
-
-  private def asLong(l: Literal, isLower: Boolean, strict: Boolean): Option[Any] =
-    l.value match {
-      case v: java.lang.Long =>
-        Some(if (!strict) v.longValue else if (isLower) v + 1L else v - 1L)
-      case v: java.lang.Integer =>
-        Some(if (!strict) v.longValue else if (isLower) v + 1L else v - 1L)
-      case _ => None
-    }
-
-  /** Extract (lowerBound, upperBound) for `name` from the pushed
-    * conjuncts, or None when no conjunct constrains it. Conjuncts the
-    * extractor does not understand are ignored, never mis-read: only
-    * top-level ANDed comparisons against literals participate.
-    */
-  private def bounds(conjuncts: Seq[Expression], name: String,
-      lit: (Literal, Boolean, Boolean) => Option[Any])
-      : Option[(Option[Any], Option[Any])] = {
-    def attr(e: Expression): Boolean = e match {
-      case a: Attribute => a.name.equalsIgnoreCase(name)
-      case _ => false
-    }
-    var lo: Option[Any] = None
-    var hi: Option[Any] = None
-    def tightenLo(l: Literal, strict: Boolean): Unit =
-      lit(l, true, strict).foreach(v => lo = Some(lo.fold(v)(c => maxOf(c, v))))
-    def tightenHi(l: Literal, strict: Boolean): Unit =
-      lit(l, false, strict).foreach(v => hi = Some(hi.fold(v)(c => minOf(c, v))))
-    conjuncts.foreach {
-      case EqualTo(a, l: Literal) if attr(a) =>
-        tightenLo(l, strict = false); tightenHi(l, strict = false)
-      case EqualTo(l: Literal, a) if attr(a) =>
-        tightenLo(l, strict = false); tightenHi(l, strict = false)
-      case In(a, ls) if attr(a) && ls.forall(_.isInstanceOf[Literal]) =>
-        val vs = ls.map(_.asInstanceOf[Literal])
-          .flatMap(l => lit(l, true, false))
-        if (vs.size == ls.size) {
-          lo = Some(lo.fold(vs.reduce(minOf))(c => maxOf(c, vs.reduce(minOf))))
-          hi = Some(hi.fold(vs.reduce(maxOf))(c => minOf(c, vs.reduce(maxOf))))
-        }
-      case GreaterThan(a, l: Literal) if attr(a) => tightenLo(l, strict = true)
-      case GreaterThanOrEqual(a, l: Literal) if attr(a) => tightenLo(l, strict = false)
-      case LessThan(a, l: Literal) if attr(a) => tightenHi(l, strict = true)
-      case LessThanOrEqual(a, l: Literal) if attr(a) => tightenHi(l, strict = false)
-      case GreaterThan(l: Literal, a) if attr(a) => tightenHi(l, strict = true)
-      case GreaterThanOrEqual(l: Literal, a) if attr(a) => tightenHi(l, strict = false)
-      case LessThan(l: Literal, a) if attr(a) => tightenLo(l, strict = true)
-      case LessThanOrEqual(l: Literal, a) if attr(a) => tightenLo(l, strict = false)
-      case _ => ()
-    }
-    if (lo.isEmpty && hi.isEmpty) None else Some((lo, hi))
-  }
-
-  private def maxOf(a: Any, b: Any): Any = (a, b) match {
-    case (x: String, y: String) => if (x >= y) x else y
-    case (x: Long, y: Long) => math.max(x, y)
-    case _ => a
-  }
-
-  private def minOf(a: Any, b: Any): Any = (a, b) match {
-    case (x: String, y: String) => if (x <= y) x else y
-    case (x: Long, y: Long) => math.min(x, y)
-    case _ => a
-  }
+  private def status(f: DataFileMeta): FileStatus =
+    new FileStatus(ChronicleTable.fileBytes(spark, f), false, 1,
+      128L * 1024 * 1024, 0L, new Path(f.path))
 }

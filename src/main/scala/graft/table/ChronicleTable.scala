@@ -52,10 +52,11 @@ case class DataFileMeta(
       */
     minLsn: Long = -1L,
     maxLsn: Long = -1L,
-    /** File size in bytes — lets scan planning ([[ChronicleFileIndex]])
-      * build splits and size estimates from the manifest alone, with no
-      * per-file filesystem stat. 0 = unknown (pre-upgrade manifest) →
-      * statted lazily when planned.
+    /** File size in bytes — lets scan planning (the Catalyst, DSv2 and
+      * change-stream scans) build splits and size estimates from the
+      * manifest alone, with no per-file filesystem stat. 0 = unknown
+      * (pre-upgrade manifest) → statted once when planned
+      * ([[ChronicleTable.fileBytes]]).
       */
     bytes: Long = 0L)
 
@@ -453,7 +454,7 @@ class ChronicleTable(val root: String) {
   /** The file list of one per-bucket manifest (cached; manifest files are
     * immutable, so the cache can never go stale).
     */
-  def loadManifest(path: String): Seq[DataFileMeta] = {
+  private def loadManifest(path: String): Seq[DataFileMeta] = {
     manifestCache.synchronized {
       val hit = manifestCache.get(path)
       if (hit != null) return hit
@@ -466,11 +467,22 @@ class ChronicleTable(val root: String) {
   }
 
   /** The complete file inventory of a snapshot (opens every bucket
-    * manifest — full-scan planning; MERGE planning uses [[pruneFiles]]
-    * which opens only the touched buckets').
+    * manifest — full-scan planning; pruned reads and MERGE planning use
+    * [[files]], which opens only the surviving buckets').
     */
   def filesOf(snapshot: Snapshot): Seq[DataFileMeta] =
     snapshot.manifestList.flatMap(m => loadManifest(m.path))
+
+  /** The files of a snapshot that `prune` keeps — the metadata-only
+    * planning step of every pruned read and of MERGE. Prunes at the
+    * manifest LIST first (bucket + aggregate key/ts/`_lsn` summaries), then
+    * opens ONLY the surviving buckets' manifests and prunes each file:
+    * planning IO is O(surviving buckets), independent of table size.
+    */
+  def files(snapshot: Snapshot, prune: FilePrune): Seq[DataFileMeta] =
+    snapshot.manifestList.filter(m => prune.keeps(m))
+      .flatMap(m => loadManifest(m.path))
+      .filter(f => prune.keeps(f))
 
   /** Write a new immutable per-bucket manifest file; returns its summary. */
   private def writeBucketManifest(bucket: Int, files: Seq[DataFileMeta]): ManifestMeta = {
@@ -613,8 +625,7 @@ class ChronicleTable(val root: String) {
     // This also hard-stops the rebase race the removed-liveness check below
     // cannot see — a concurrent writer that only ADDED files.
     pending.newNumBuckets.foreach { _ =>
-      val uncovered = base.manifestList.flatMap(m => loadManifest(m.path))
-        .map(_.path).filterNot(removed)
+      val uncovered = filesOf(base).map(_.path).filterNot(removed)
       if (uncovered.nonEmpty)
         throw new IllegalStateException(
           s"commit conflict for ${pending.batchKey}: rescale does not cover " +
@@ -729,10 +740,11 @@ class ChronicleTable(val root: String) {
     * The scan plans over a [[ChronicleFileIndex]], so filters Catalyst
     * pushes down — `conv_id` equality/range, `ts` bounds, `_lsn` lower
     * bounds, from DataFrame code or SQL over a registered view — prune
-    * data files at the MANIFEST during planning, not per-footer at
-    * runtime. A key filter even pushes through the merge-on-read LWW
-    * window below (conv_id is a window partition key), so point reads of
-    * a delta-carrying table stay O(one bucket).
+    * data files from manifest stats during planning, not per-footer at
+    * runtime, through the same rule as every other reader ([[FilePrune]]).
+    * A key filter even pushes through the merge-on-read LWW window below
+    * (conv_id is a window partition key), so point reads of a
+    * delta-carrying table stay O(one bucket).
     *
     * A snapshot with merge-on-read delta files reads through a per-key
     * last-writer-wins merge on `_lsn` (one hash aggregate — the same LWW the
@@ -741,16 +753,23 @@ class ChronicleTable(val root: String) {
     * `!_deleted` filter hides them. Delta-free snapshots keep the plain
     * one-scan plan — reads pay the merge only between compactions.
     */
-  def read(spark: SparkSession, snapshot: Snapshot): DataFrame = {
-    val schema = snapshot.schema
-    val files = filesOf(snapshot)
-    if (files.isEmpty) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else {
-      val scan = scanFiles(spark, snapshot, files)
-      if (files.exists(_.delta)) mergeDeltas(scan, schema) else scan
+  def read(spark: SparkSession, snapshot: Snapshot): DataFrame =
+    scan(spark, snapshot, filesOf(snapshot))
+
+  /** A read of `files`: an empty frame when none survived, else a
+    * [[scanFiles]] scan that LWW-merges ([[mergeDeltas]]) only when a
+    * surviving file is a merge-on-read delta — a delta-free file set keeps
+    * the bare one-scan plan.
+    */
+  private def scan(spark: SparkSession, snapshot: Snapshot,
+      files: Seq[DataFileMeta]): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snapshot.schema)
+    else {
+      val s = scanFiles(spark, snapshot, files)
+      if (files.exists(_.delta)) mergeDeltas(s, snapshot.schema) else s
     }
-  }
 
   /** A parquet scan over an explicit file set, planned through
     * [[ChronicleFileIndex]] (manifest-driven filter pruning + manifest
@@ -773,71 +792,27 @@ class ChronicleTable(val root: String) {
 
   def read(spark: SparkSession): DataFrame = read(spark, loadCurrent())
 
-  /** Files whose bucket is in `buckets` and whose conv_id range intersects
-    * [minKey, maxKey] — the metadata-only MERGE planning step. Prunes at
-    * the manifest LIST first (bucket + aggregate key range), then opens
-    * ONLY the surviving buckets' manifests: planning IO is O(touched
-    * buckets), independent of table size.
-    */
-  def pruneFiles(snapshot: Snapshot, buckets: Set[Int],
-      minKey: String, maxKey: String): Seq[DataFileMeta] =
-    snapshot.manifestList
-      .filter(m => buckets.contains(m.bucket) &&
-        m.minKey <= maxKey && m.maxKey >= minKey)
-      .flatMap(m => loadManifest(m.path))
-      .filter(f =>
-        buckets.contains(f.bucket) && f.minKey <= maxKey && f.maxKey >= minKey)
-
-  /** Files whose event-time range intersects [fromMs, toMs] (epoch millis,
-    * inclusive), pruned first at the manifest list (bucket ts summaries),
-    * then per file. Entries without ts stats — written before the stats
-    * existed, marked (0,0) — are conservatively kept. The second-level
-    * partition pruning of the table: the Spark-native analogue of the
-    * reference's date-suffixed sink partitioning
-    * (IndexSuffixFormatter.java:27-41; S3 `date(yyyyMMdd)` prefixes,
-    * DynamicRemotePrefixFormatter.java:16-50).
-    */
-  def pruneFilesByTime(snapshot: Snapshot, fromMs: Long, toMs: Long): Seq[DataFileMeta] =
-    snapshot.manifestList
-      .filter(m => tsOverlaps(m.minTsMs, m.maxTsMs, fromMs, toMs))
-      .flatMap(m => loadManifest(m.path))
-      .filter(f => tsOverlaps(f.minTsMs, f.maxTsMs, fromMs, toMs))
-
-  private def tsOverlaps(minTs: Long, maxTs: Long, fromMs: Long, toMs: Long): Boolean =
-    (minTs == 0L && maxTs == 0L) || (minTs <= toMs && maxTs >= fromMs)
-
-  /** Time-sliced read: lists/scans ONLY the files whose ts bounds intersect
-    * the range (manifest-level pruning — untouched days' files never reach
-    * the scan), then applies the exact residual predicate.
+  /** Time-sliced read of event-time range [fromMs, toMs] (epoch millis,
+    * inclusive): lists/scans ONLY the files whose ts bounds intersect the
+    * range ([[files]] — untouched days' files never reach the scan), then
+    * applies the exact residual predicate. The second-level partition
+    * pruning of the table: the Spark-native analogue of the reference's
+    * date-suffixed sink partitioning (IndexSuffixFormatter.java:27-41; S3
+    * `date(yyyyMMdd)` prefixes, DynamicRemotePrefixFormatter.java:16-50).
     *
     * With merge-on-read deltas present, ts pruning applies to BASE files
-    * only and ALL delta files are kept: a kept delta can only DISPLACE or
-    * TOMBSTONE a base row (never resurrect a pruned one — the pruned base
-    * row would have lost the LWW merge to the kept delta anyway, and a
-    * displaced-row's newer version rides the kept delta itself), and deltas
-    * are O(batches-since-compaction), so between compactions a time-ranged
-    * read pays pruned-bases + deltas instead of the whole table.
+    * only and ALL delta files are kept ([[FilePrune]]): a kept delta can
+    * only DISPLACE or TOMBSTONE a base row (never resurrect a pruned one —
+    * the pruned base row would have lost the LWW merge to the kept delta
+    * anyway, and a displaced-row's newer version rides the kept delta
+    * itself), and deltas are O(batches-since-compaction), so between
+    * compactions a time-ranged read pays pruned-bases + deltas instead of
+    * the whole table.
     */
   def readSlice(spark: SparkSession, fromMs: Long, toMs: Long): DataFrame = {
     val snap = loadCurrent()
-    val residual = unix_millis(col("ts")).between(fromMs, toMs)
-    val schema = snap.schema
-    val files =
-      if (!hasDeltas(snap)) pruneFilesByTime(snap, fromMs, toMs)
-      else {
-        val all = filesOf(snap)
-        all.filter(f => f.delta ||
-          tsOverlaps(f.minTsMs, f.maxTsMs, fromMs, toMs))
-      }
-    val base =
-      if (files.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else scanFiles(spark, snap, files)
-    val merged =
-      if (files.exists(_.delta)) ChronicleTable.mergeDeltas(base, schema)
-      else base
-    merged.filter(residual)
+    scan(spark, snap, files(snap, FilePrune(fromTsMs = fromMs, toTsMs = toMs)))
+      .filter(unix_millis(col("ts")).between(fromMs, toMs))
   }
 
   /** Incremental (changelog) read: the NET row changes applied after
@@ -857,8 +832,8 @@ class ChronicleTable(val root: String) {
     *
     * METADATA-PRUNED: manifests carry per-file `_lsn` bounds, so files
     * whose maxLsn is at-or-below every relevant mark are pruned at the
-    * manifest list — tailing a huge table costs metadata + O(new files),
-    * not a full listing per poll. Pruning before the merge-on-read LWW fold
+    * manifest list ([[files]]) — tailing a huge table costs metadata +
+    * O(new files), not a full listing per poll. Pruning before the merge-on-read LWW fold
     * is sound: a pruned file's every row is at-or-below the minimum mark,
     * so it can neither BE a surviving change (the row filter would drop it)
     * nor displace/tombstone one (it loses the LWW comparison to any row
@@ -872,31 +847,21 @@ class ChronicleTable(val root: String) {
     * tailer that must observe deletes needs merge-on-read mode (tombstones
     * retained up to the GC horizon). `sinceVersion` must still be retained
     * (expiry makes older cursors unreadable, with a clear error). Tables
-    * with UNORDERED sources cannot be tailed this way at all (no mark
-    * bounds their redelivery) and error clearly.
+    * that cannot be tailed ([[requireTailable]]) error clearly.
     */
   def readChanges(spark: SparkSession, sinceVersion: Long): DataFrame = {
     import graft.model.Model
     val since = loadVersion(sinceVersion)
     val cur = loadCurrent()
-    require(cur.unordered.isEmpty,
-      s"table $root has unordered sources ${cur.unordered.mkString(",")}: " +
-        "their high-water marks do not bound redelivery, so a mark-based " +
-        "changelog would be wrong — tail the source directly instead")
-    val schema = cur.schema
+    requireTailable(cur)
     val marks: Map[String, Long] =
       cur.hwms.map { case (s, _) => s -> since.hwmFor(s) }
     val lsn = col(Model.lsnColumn)
     val rowFilter =
-      if (!schema.fieldNames.contains(Model.sourceColumn)) {
-        // legacy table without the row tag: sound only when single-source
-        require(marks.size <= 1,
-          s"table $root is multi-source (${marks.keys.mkString(",")}) but " +
-            "its rows carry no _source tag (written pre-upgrade) — " +
-            "per-source changelog filtering is impossible; compact/rewrite " +
-            "the table to stamp the tag")
+      // legacy table without the row tag: single-source (requireTailable)
+      if (!cur.schema.fieldNames.contains(Model.sourceColumn))
         lsn > since.hwmLsn
-      } else {
+      else {
         val src = col(Model.sourceColumn)
         marks.foldLeft(src.isNull && lsn > since.hwmLsn) {
           case (acc, (s, m)) => acc || (src === s && lsn > m)
@@ -905,19 +870,30 @@ class ChronicleTable(val root: String) {
     // prune threshold: the MINIMUM mark any surviving row could have been
     // compared against (per-source marks are each <= the global mark)
     val thr = if (marks.nonEmpty) marks.values.min else since.hwmLsn
-    val kept = cur.manifestList
-      .filter(m => m.maxLsn < 0L || m.maxLsn > thr)
-      .flatMap(m => loadManifest(m.path))
-      .filter(f => f.maxLsn < 0L || f.maxLsn > thr)
-    val scan =
-      if (kept.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else scanFiles(spark, cur, kept)
-    val merged =
-      if (kept.exists(_.delta)) ChronicleTable.mergeDeltas(scan, schema)
-      else scan
-    merged.filter(rowFilter)
+    scan(spark, cur, files(cur, FilePrune(fromLsn = FilePrune.above(thr))))
+      .filter(rowFilter)
+  }
+
+  /** Refuse a snapshot whose changelog cannot be tailed by `_lsn` marks —
+    * the guard of [[readChanges]], the change stream and chains alike:
+    *  - UNORDERED sources: their marks do not bound redelivery, so a
+    *    mark-based changelog would be wrong;
+    *  - a legacy table whose rows carry no `_source` tag can be filtered
+    *    only against the GLOBAL mark, which is sound solely for a
+    *    single-source table — a pre-upgrade multi-source table would
+    *    silently drop rows of a source whose LSN sequence runs below it.
+    */
+  def requireTailable(snap: Snapshot): Unit = {
+    require(snap.unordered.isEmpty,
+      s"table $root has unordered sources ${snap.unordered.mkString(",")}: " +
+        "their high-water marks do not bound redelivery, so a mark-based " +
+        "changelog would be wrong — tail the source directly instead")
+    if (!snap.schema.fieldNames.contains(graft.model.Model.sourceColumn))
+      require(snap.hwms.size <= 1,
+        s"table $root is multi-source (${snap.hwms.keys.mkString(",")}) but " +
+          "its rows carry no _source tag (written pre-upgrade) — " +
+          "per-source changelog filtering is impossible; compact/rewrite " +
+          "the table to stamp the tag")
   }
 
   /** Global `_lsn` bounds across a snapshot's files, from manifest stats
@@ -933,10 +909,27 @@ class ChronicleTable(val root: String) {
     else (known.map(_.minLsn).min, known.map(_.maxLsn).max)
   }
 
+  /** Slice count of a CHUNKED bootstrap of `snapshot` (chain poll and
+    * change stream alike): ceil(bytes / `sliceBytes`), capped by
+    * `maxSlices`, by the FILE count (a file is the atomic scan unit — finer
+    * slicing just multiplies near-empty batches) and by the lsn width; 1
+    * when the manifests carry no lsn bounds (no slicing axis — pre-upgrade
+    * tables).
+    */
+  def bootstrapSliceCount(snapshot: Snapshot, sliceBytes: Long,
+      maxSlices: Long = Long.MaxValue): Int = {
+    val (gMin, gMax) = lsnBounds(snapshot)
+    if (sliceBytes <= 0L || gMin < 0L || gMax <= gMin) return 1
+    val files = filesOf(snapshot)
+    val wanted = 1L + (files.map(_.bytes.max(0L)).sum - 1L).max(0L) / sliceBytes
+    Seq(wanted, maxSlices, files.size.toLong.max(1L), gMax - gMin + 1,
+      Int.MaxValue.toLong).min.toInt.max(1)
+  }
+
   /** RAW scan of a snapshot restricted to rows with `_lsn` in [lo, hi]:
-    * files pruned at the manifest by lsn-bounds overlap (unknown bounds
-    * conservatively kept), exact residual filter on top. NO merge-on-read
-    * collapse and NO tombstone drop — rows ship as changelog rows
+    * files pruned at the manifest by lsn-bounds overlap ([[files]];
+    * unknown bounds conservatively kept), exact residual filter on top.
+    * NO merge-on-read collapse and NO tombstone drop — rows ship as changelog rows
     * (superseded versions and retained tombstones included), for consumers
     * that LWW on `_lsn` downstream anyway. This is the unit of the
     * CHUNKED chain/stream bootstrap ([[graft.cdc.Chain.pollOnce]]): a
@@ -947,17 +940,9 @@ class ChronicleTable(val root: String) {
     */
   def scanLsnInterval(spark: SparkSession, snapshot: Snapshot,
       lo: Long, hi: Long): DataFrame = {
-    val schema = snapshot.schema
-    val files = snapshot.manifestList
-      .filter(m => m.minLsn < 0L || m.maxLsn < 0L ||
-        (m.minLsn <= hi && m.maxLsn >= lo))
-      .flatMap(m => loadManifest(m.path))
-      .filter(f => f.minLsn < 0L || f.maxLsn < 0L ||
-        (f.minLsn <= hi && f.maxLsn >= lo))
-    if (files.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else scanFiles(spark, snapshot, files)
+    val kept = files(snapshot, FilePrune(fromLsn = lo, toLsn = hi))
+    if (kept.isEmpty) scan(spark, snapshot, kept)
+    else scanFiles(spark, snapshot, kept)
       .filter(col(graft.model.Model.lsnColumn).between(lo, hi))
   }
 
@@ -993,8 +978,8 @@ class ChronicleTable(val root: String) {
   /** Point lookup: every current row of ONE key (a conversation's visible
     * turns), planned from metadata alone — the key's hash bucket is
     * computed driver-side ([[ChronicleTable.bucketOf]] mirrors the write
-    * path's [[ChronicleTable.bucketExpr]]), so planning opens exactly one
-    * bucket manifest and the scan touches only that bucket's files whose
+    * path's [[ChronicleTable.bucketExpr]]), so planning ([[files]] with
+    * [[FilePrune.key]]) opens exactly one bucket manifest and the scan touches only that bucket's files whose
     * key range covers the key: O(files-in-one-bucket) regardless of table
     * size — the serving-path read a 100 TB transcript store needs (the
     * reference's ES sink serves exactly this doc-id lookup,
@@ -1005,22 +990,8 @@ class ChronicleTable(val root: String) {
     */
   def readKey(spark: SparkSession, convId: String): DataFrame = {
     val snap = loadCurrent()
-    val b = ChronicleTable.bucketOf(convId, snap.numBuckets)
-    val schema = snap.schema
-    val files = snap.manifestList
-      .filter(m => m.bucket == b && m.minKey <= convId && m.maxKey >= convId)
-      .flatMap(m => loadManifest(m.path))
-      .filter(f => f.minKey <= convId && f.maxKey >= convId)
-    val scan =
-      if (files.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else scanFiles(spark, snap, files)
-    val merged =
-      if (files.exists(_.delta)) ChronicleTable.mergeDeltas(scan, schema)
-      else scan
-    merged.filter(col("conv_id") === convId &&
-      !col(graft.model.Model.deletedColumn))
+    scan(spark, snap, files(snap, FilePrune.key(convId, snap.numBuckets)))
+      .filter(col("conv_id") === convId && !col(graft.model.Model.deletedColumn))
   }
 
   /** The complete lineage ledger: every commit's entry across all
@@ -1073,6 +1044,17 @@ object ChronicleTable {
   private val NumberedKey = """(.+)#(\d+)""".r
   private val RangeKey = """(.+)#(\d+)-(\d+)""".r
   private val BucketDir = """.*/bucket=(\d+)/[^/]+$""".r
+
+  /** Length of a data file for split planning: the manifest's byte count,
+    * or — for a pre-upgrade entry without one — one filesystem stat (only
+    * files that survived pruning reach here).
+    */
+  private[graft] def fileBytes(spark: SparkSession, f: DataFileMeta): Long =
+    if (f.bytes > 0L) f.bytes
+    else {
+      val p = new org.apache.hadoop.fs.Path(f.path)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p).getLen
+    }
 
   /** Bucket of a data file, from its `bucket=N` partition directory. */
   private[graft] def bucketOfPath(p: String): Int = p match {

@@ -3,9 +3,10 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.classic.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** The one Spark-internal bridge the engine needs, isolated in an
-  * `org.apache.spark.sql.*` package for `private[sql]` access (the same
-  * technique the open lakehouse formats use for their streaming sinks).
+/** A Spark-internal bridge, isolated with the engine's other one
+  * ([[SourceFilters]]) in an `org.apache.spark.sql.*` package for
+  * `private[sql]` access (the same technique the open lakehouse formats use
+  * for their streaming sinks).
   *
   * A v1 streaming `Sink.addBatch` hands over a DataFrame whose logical
   * plan still contains the STREAMING source relations; re-planning any

@@ -171,6 +171,47 @@ class FileIndexSpec extends SparkSpec {
     assert(byPath.collect().map(_.getString(0)).toSeq == Seq(k))
   }
 
+  test("manifest entries without a byte count read fully through the catalog and format(graft)") {
+    import graft.table.{BucketManifest, ChronicleTable}
+    val root = tmpDir("fidx-nobytes")
+    val p = new CdcPipeline(PipelineConfig("", root, numBuckets = 4))
+    p.ensureTable()
+    def rows(lo: Long, op: String, convs: Range) = convs.flatMap { c =>
+      (0 until 5).map { tn =>
+        (lo + c * 5 + tn, op, s"c-$c", tn, "user", s"text $lo c-$c/$tn",
+          None: Option[String], new java.sql.Timestamp(dayMs(0) + lo * 1000L))
+      }
+    }.toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+    MergeInto(spark, p.table, rows(0L, "I", 0 until 10), "nb#0", "t")
+    // a merge-on-read update of two conversations: their buckets read
+    // through the merging partition, the rest as plain per-file partitions
+    MergeInto(spark, p.table, rows(1000L, "U", 0 until 2), "nb#1", "t",
+      mergeOnRead = true)
+
+    // rewrite every manifest as a pre-upgrade one: no byte counts
+    val manifests = java.nio.file.Paths.get(root, "meta", "manifests")
+    java.nio.file.Files.list(manifests).forEach { m =>
+      val bm = ChronicleTable.mapper.readValue(
+        java.nio.file.Files.readString(m), classOf[BucketManifest])
+      java.nio.file.Files.write(m, ChronicleTable.mapper.writeValueAsBytes(
+        bm.copy(files = bm.files.map(_.copy(bytes = 0L)))))
+    }
+    val t = new ChronicleTable(root)
+    assert(t.filesOf(t.loadCurrent()).forall(_.bytes == 0L))
+    assert(t.hasDeltas(t.loadCurrent()))
+
+    def triples(df: DataFrame) = df.select("conv_id", "turn_idx", "text").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
+    val lib = triples(t.read(spark).filter(!col(graft.model.Model.deletedColumn)))
+    assert(lib.size == 50)
+    assert(triples(spark.read.format("graft").load(root)) == lib)
+    val dir = java.nio.file.Paths.get(root)
+    spark.conf.set("spark.sql.catalog.graft_nobytes", "graft.sql.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graft_nobytes.root", dir.getParent.toString)
+    assert(triples(spark.sql(
+      s"SELECT * FROM graft_nobytes.`${dir.getFileName}`")) == lib)
+  }
+
   test("graft catalog: MOR buckets LWW-merge through the streaming sorted file merge") {
     val p = new CdcPipeline(PipelineConfig("", tmpDir("fidx-cat-mor"), numBuckets = 4))
     p.ensureTable()

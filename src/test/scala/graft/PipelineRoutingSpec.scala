@@ -155,10 +155,9 @@ class PipelineRoutingSpec extends SparkSpec {
     p.sinkNames.foreach { s =>
       assert(p.sinkTable(s).loadCurrent().cursors("binlog") == 1L)
     }
-    // every file committed by the concurrent drain carries real ts bounds:
-    // the timestamp conf is session-level now, so no sink's restore can flip
-    // another sink's in-flight write back to stat-less INT96 (which would
-    // silently blind time pruning with (0,0) manifest entries)
+    // every file committed by the concurrent drain carries real ts bounds
+    // (stats come from the write itself, whatever the timestamp encoding;
+    // a (0,0) entry would silently blind time pruning)
     p.sinkNames.foreach { s =>
       val t = p.sinkTable(s)
       val files = t.filesOf(t.loadCurrent())

@@ -3,6 +3,7 @@ package graft
 import graft.cdc.{CdcPipeline, PipelineConfig}
 import graft.ops.{Compaction, Integrity, MergeInto}
 import graft.source.{BinlogConfig, BinlogGenerator}
+import graft.table.FilePrune
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -621,7 +622,7 @@ class TableOpsSpec extends SparkSpec {
     assert(manifestCount <= commits + buckets,
       s"more manifest files than commits: $manifestCount")
     // prune planning opens only the touched bucket's manifest
-    val hit = tbl.pruneFiles(s, Set(3), "conv-0003", "conv-0003")
+    val hit = tbl.files(s, FilePrune(Some(Set(3)), Some("conv-0003"), Some("conv-0003")))
     assert(hit.map(_.path) == Seq("/fake/data/bucket=3/f3.parquet"))
   }
 
@@ -758,7 +759,7 @@ class TableOpsSpec extends SparkSpec {
       f.minTsMs >= dayMs(1) && f.maxTsMs < dayMs(2)).map(_.path).toSet
     assert(day1.nonEmpty)
     // manifest-level pruning selects exactly day 1's files
-    val pruned = p.table.pruneFilesByTime(snap, dayMs(1), dayMs(2) - 1)
+    val pruned = p.table.files(snap, FilePrune(fromTsMs = dayMs(1), toTsMs = dayMs(2) - 1))
     assert(pruned.map(_.path).toSet == day1)
     // the physical scan lists ONLY those files — untouched days never reach it
     val slice = p.table.readSlice(spark, dayMs(1), dayMs(2) - 1)
@@ -777,7 +778,8 @@ class TableOpsSpec extends SparkSpec {
     val legacy = graft.table.ManifestMeta(legacyManifest.toString, 0, 1, 1L,
       "a", "z", 0L, 0L)
     val withLegacy = snap.copy(manifests = legacy +: snap.manifestList)
-    val prunedLegacy = p.table.pruneFilesByTime(withLegacy, dayMs(1), dayMs(2) - 1)
+    val prunedLegacy = p.table.files(withLegacy,
+      FilePrune(fromTsMs = dayMs(1), toTsMs = dayMs(2) - 1))
     assert(prunedLegacy.exists(_.path == "/nonexistent/legacy.parquet"))
     assert(prunedLegacy.map(_.path).toSet == day1 + "/nonexistent/legacy.parquet")
   }
@@ -1023,5 +1025,146 @@ class TableOpsSpec extends SparkSpec {
       !col(graft.model.Model.deletedColumn))
       .select("conv_id", "turn_idx", "role", "text")
     assert(gotMor.collect().toSet == expMor.collect().toSet)
+  }
+
+  test("one pruning rule: files() equals a brute-force reference and every reader plans exactly those files") {
+    import graft.model.Model
+    import graft.table.ChronicleTable
+    import org.apache.spark.sql.DataFrame
+    def dayMs(d: Int) = 1704067200000L + d.toLong * 86400000L
+    val root = tmpDir("table-prune-ref")
+    val p = new CdcPipeline(PipelineConfig("", root, numBuckets = 4))
+    p.ensureTable()
+    def keys(d: Int) = (0 until 12).map(k => f"conv-$d-$k%03d")
+    def batch(lsn0: Long, op: String, day: Int, ks: Seq[String]) =
+      ks.zipWithIndex.map { case (k, i) =>
+        (lsn0 + i, op, k, 0, "user", s"text $lsn0 $k", None: Option[String],
+          new java.sql.Timestamp(dayMs(day) + i * 1000L))
+      }.toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+    // two sources, three days, disjoint key ranges per day (copy-on-write
+    // merges then append files instead of rewriting earlier days')
+    MergeInto(spark, p.table, batch(0L, "I", 0, keys(0)), "a#0", "t")
+    MergeInto(spark, p.table, batch(100L, "I", 1, keys(1)), "a#1", "t")
+    MergeInto(spark, p.table, batch(5L, "I", 2, keys(2)), "b#0", "t")
+    val sinceV = p.table.loadCurrent().version
+    // merge-on-read updates of two day-0 keys: deltas in their buckets only
+    MergeInto(spark, p.table, batch(200L, "U", 2, keys(0).take(2)), "a#2", "t",
+      mergeOnRead = true)
+    val snap = p.table.loadCurrent()
+    val all = p.table.filesOf(snap)
+    val deltaBuckets = all.filter(_.delta).map(_.bucket).toSet
+    assert(deltaBuckets.nonEmpty && deltaBuckets.size < 4,
+      s"deltas should land in some buckets only: $deltaBuckets")
+
+    // the reference: a file can hold a row inside every bound unless a
+    // known stat proves otherwise; deltas ignore ts bounds
+    def ref(buckets: Set[Int] = Set(0, 1, 2, 3),
+        kLo: String = "", kHi: String = "\uffff",
+        tLo: Long = Long.MinValue, tHi: Long = Long.MaxValue,
+        lLo: Long = Long.MinValue, lHi: Long = Long.MaxValue): Set[String] =
+      all.filter { f =>
+        val tsKnown = !(f.minTsMs == 0L && f.maxTsMs == 0L)
+        buckets.contains(f.bucket) && f.maxKey >= kLo && f.minKey <= kHi &&
+          (f.delta || !tsKnown || (f.maxTsMs >= tLo && f.minTsMs <= tHi)) &&
+          (f.maxLsn < 0L || f.maxLsn >= lLo) && (f.minLsn < 0L || f.minLsn <= lHi)
+      }.map(_.path).toSet
+    def pruned(prune: FilePrune) = p.table.files(snap, prune).map(_.path).toSet
+
+    val k = "conv-1-005"
+    val kb = ChronicleTable.bucketOf(k, 4)
+    val grid = Seq(
+      FilePrune(minKey = Some(k), maxKey = Some(k)) -> ref(kLo = k, kHi = k),
+      FilePrune.key(k, 4) -> ref(Set(kb), k, k),
+      FilePrune(minKey = Some("conv-0-005"), maxKey = Some("conv-1-003")) ->
+        ref(kLo = "conv-0-005", kHi = "conv-1-003"),
+      FilePrune(Some(Set(0, 2))) -> ref(Set(0, 2)),
+      FilePrune(fromTsMs = dayMs(1), toTsMs = dayMs(2) - 1) ->
+        ref(tLo = dayMs(1), tHi = dayMs(2) - 1),
+      FilePrune(Some(Set(1, 3)), fromTsMs = dayMs(0), toTsMs = dayMs(1) - 1) ->
+        ref(Set(1, 3), tLo = dayMs(0), tHi = dayMs(1) - 1),
+      FilePrune(fromLsn = 100L) -> ref(lLo = 100L),
+      FilePrune(toLsn = 16L) -> ref(lHi = 16L),
+      FilePrune(fromLsn = 5L, toLsn = 11L) -> ref(lLo = 5L, lHi = 11L))
+    grid.foreach { case (prune, want) =>
+      assert(want.nonEmpty && want.size < all.size, s"$prune: degenerate case")
+      assert(pruned(prune) == want, s"$prune planned the wrong files")
+    }
+
+    def local(uris: Array[String]) =
+      uris.map(u => java.nio.file.Paths.get(new java.net.URI(u)).toString).toSet
+    // plan walks that descend into adaptive query stages (a merge-on-read
+    // read shuffles, so its scan sits below a stage)
+    val stages = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    def scanFiles(df: DataFrame): Long = {
+      df.collect()
+      import org.apache.spark.sql.execution.FileSourceScanExec
+      stages.collect(df.queryExecution.executedPlan) {
+        case s: FileSourceScanExec => s.metrics("numFiles").value
+      }.sum
+    }
+    def dsv2Files(df: DataFrame): Set[String] = {
+      df.collect()
+      import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+      stages.collect(df.queryExecution.executedPlan) { case b: BatchScanExec => b }
+        .flatMap(_.batch.planInputPartitions()
+          .flatMap(_.asInstanceOf[graft.sql.GraftPartition].files.map(_._1))).toSet
+    }
+
+    // the dedicated readers, by the files they hand the scan
+    val d0 = keys(0).head // a key with a delta
+    assert(local(p.table.readKey(spark, d0).inputFiles) ==
+      ref(Set(ChronicleTable.bucketOf(d0, 4)), d0, d0))
+    assert(local(p.table.readKey(spark, k).inputFiles) == ref(Set(kb), k, k))
+    assert(local(p.table.readSlice(spark, dayMs(1), dayMs(2) - 1).inputFiles) ==
+      ref(tLo = dayMs(1), tHi = dayMs(2) - 1))
+    val since = p.table.loadVersion(sinceV)
+    val thr = Seq(since.hwmFor("a"), since.hwmFor("b")).min
+    assert(thr == 16L)
+    assert(local(p.table.readChanges(spark, sinceV).inputFiles) == ref(lLo = thr + 1))
+    assert(local(p.table.scanLsnInterval(spark, snap, 5L, 11L).inputFiles) ==
+      ref(lLo = 5L, lHi = 11L))
+
+    // a plain read: Catalyst pushes key filters through the LWW window
+    assert(scanFiles(p.table.read(spark).filter(col("conv_id") === k)) ==
+      ref(Set(kb), k, k).size)
+    assert(scanFiles(p.table.read(spark).filter(
+      col("conv_id") >= "conv-0-005" && col("conv_id") <= "conv-1-003")) ==
+      ref(kLo = "conv-0-005", kHi = "conv-1-003").size)
+
+    // format("graft"), by the files of its planned partitions
+    def dsv2 = spark.read.format("graft").load(root)
+    assert(dsv2Files(dsv2.filter(col("conv_id") === k)) == ref(Set(kb), k, k))
+    assert(dsv2Files(dsv2.filter(col("ts") >= new java.sql.Timestamp(dayMs(1)) &&
+      col("ts") < new java.sql.Timestamp(dayMs(2)))) ==
+      ref(tLo = dayMs(1), tHi = dayMs(2) - 1))
+    assert(dsv2Files(dsv2.filter(col("_lsn") > 16L)) == ref(lLo = 17L))
+    // an _lsn UPPER bound must not prune below the LWW merge (neither a
+    // file nor a parquet row group): the day-0 deltas (lsn 200+) displace
+    // base rows whose lsn passes the filter
+    def visible(df: DataFrame) = df.select("conv_id", "turn_idx", "text").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
+    assert(visible(dsv2.filter(col("_lsn") <= 111L)) == visible(p.table.read(spark)
+      .filter(!col(Model.deletedColumn) && col("_lsn") <= 111L)))
+    // likewise a ts bound: those deltas moved their keys to day 2
+    val day1 = new java.sql.Timestamp(dayMs(1))
+    assert(visible(dsv2.filter(col("ts") < day1)) == visible(p.table.read(spark)
+      .filter(!col(Model.deletedColumn) && col("ts") < day1)))
+
+    // the change stream: a tail batch and both slices of a bootstrap
+    val ms = graft.changes.DefaultSource.microBatchStream(snap.schema, root,
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        java.util.Map.of("path", root)))
+    def planned(from: String, to: String) =
+      ms.planInputPartitions(ms.deserializeOffset(from), ms.deserializeOffset(to))
+        .map(_.asInstanceOf[graft.changes.ChangeFilePartition].path).toSet
+    assert(planned(s"""{"version":$sinceV}""", s"""{"version":${snap.version}}""") ==
+      ref(lLo = thr + 1))
+    val (gMin, gMax) = p.table.lsnBounds(snap)
+    (0 until 2).foreach { i =>
+      val (lo, hi) = ChronicleTable.lsnSliceInterval(gMin, gMax, i, 2)
+      assert(planned(s"""{"version":${snap.version}}""",
+        s"""{"version":${snap.version},"slice":$i,"slices":2,""" +
+          s""""lsnMin":$gMin,"lsnMax":$gMax}""") == ref(lLo = lo, lHi = hi))
+    }
   }
 }
