@@ -2,10 +2,11 @@ package graft.cdc
 
 import graft.model.Model
 import graft.ops.{MergeInto, MergeResult}
+import graft.sql.GraftStreamSink
 import graft.table.ChronicleTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.storage.StorageLevel
 
 import java.nio.file.{Files, Paths}
@@ -57,9 +58,11 @@ case class PipelineConfig(
     maintenanceEveryBatches: Int = 0,
     compactMaxFilesPerBucket: Int = 8,
     retainSnapshots: Int = 10,
-    /** Record one [[MetricEvent]] per applied batch/epoch under
+    /** Record one [[MetricEvent]] per applied batch under
       * <tableRoot>/metrics (the reference's /surosinkstat surface,
-      * SinkStat.java:29-41, as an append-only queryable ledger).
+      * SinkStat.java:29-41, as an append-only queryable ledger), plus the
+      * stream listener's `stream-progress` lines. Stream epochs are
+      * always recorded, by the sink that applies them.
       */
     recordMetrics: Boolean = false,
     /** Merge-on-read writes: each batch lands as DELTA files (O(batch)
@@ -360,23 +363,25 @@ class CdcPipeline(val cfg: PipelineConfig) {
     */
   def metrics(spark: SparkSession): DataFrame = Metrics.view(spark, metricsDir)
 
-  /** Wall-clock seconds of each epoch applied by [[startStream]] since this
-    * pipeline was constructed — the measured signal the adaptive trigger
-    * sizing feeds on.
-    */
-  private val epochSecs = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double]()
   @volatile private var listenerAdded = false
 
-  /** Trigger size for the NEXT stream generation, from the measured mean
-    * epoch duration of the last one — the streaming face of the
-    * checkPause backpressure loop (suro pauses INPUTS when a sink lags,
-    * QueuedSink.java:51-60). A running file source cannot resize its
-    * trigger, but a restart from the same checkpoint re-reads the option:
-    * [[runStreamAdaptive]] cycles generations, each sized by the previous
-    * one's measured rate.
+  /** The query [[startStream]] started last; its progress log carries the
+    * measured epoch durations the adaptive trigger sizing feeds on.
+    */
+  @volatile private var lastStream: Option[StreamingQuery] = None
+
+  /** Trigger size for the NEXT stream generation, from the mean time the
+    * last one spent in the sink per epoch (`addBatch` in its progress
+    * log) — the streaming face of the checkPause backpressure loop (suro
+    * pauses INPUTS when a sink lags, QueuedSink.java:51-60). A running
+    * file source cannot resize its trigger, but a restart from the same
+    * checkpoint re-reads the option: [[runStreamAdaptive]] cycles
+    * generations, each sized by the previous one's measured rate.
     */
   def adaptedMaxFilesPerTrigger(current: Int, cap: Int = 64): Int = {
-    val secs = epochSecs.toArray(Array.empty[java.lang.Double]).map(_.doubleValue)
+    val secs = lastStream.toSeq.flatMap(_.recentProgress)
+      .flatMap(p => Option(p.durationMs.get("addBatch")))
+      .map(_.longValue / 1000.0)
     if (secs.isEmpty) current
     else nextBatchSize(current, secs.sum / secs.length, cfg.targetBatchSec, cap)
   }
@@ -401,37 +406,35 @@ class CdcPipeline(val cfg: PipelineConfig) {
   }
 
   /** The Structured Streaming variant of the same pipeline: Spark's file
-    * source tracks offsets in its checkpoint, and foreachBatch applies the
-    * identical idempotent MERGE — a replayed epoch after restart is skipped
-    * by the batchKey ledger, which is what makes the composition of Spark's
-    * checkpoint and our table crash-safe.
+    * source tracks offsets in its checkpoint, and each epoch is written
+    * through the `format("graft")` sink ([[graft.sql.GraftStreamSink]],
+    * the single-table epoch step) as ledger key `<sourceId>-ss#<epoch>` —
+    * a replayed epoch after restart is skipped by that key, which is what
+    * makes the composition of Spark's checkpoint and our table crash-safe.
+    * Epochs commit through this pipeline's [[table]] instance.
     */
   def startStream(spark: SparkSession, checkpointDir: String,
-      maxFilesPerTrigger: Int = 8): org.apache.spark.sql.streaming.StreamingQuery = {
+      maxFilesPerTrigger: Int = 8): StreamingQuery = {
     ensureTable()
     val queryName = s"graft-${cfg.sourceId}"
     if (cfg.recordMetrics && !listenerAdded) {
       listenerAdded = true
       spark.streams.addListener(new Metrics.EpochListener(queryName, metricsDir))
     }
-    changeStream(spark, maxFilesPerTrigger).writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // Epoch file-listing order is not the log order, so the global
-        // high-water mark cannot be used; tombstones + the per-key LSN
-        // guard make the merge order-independent instead.
-        val t0 = System.nanoTime()
-        val r = MergeInto(batch.sparkSession, table, batch, s"${cfg.sourceId}-ss#$id",
-          source = s"stream-epoch-$id", saltBuckets = cfg.saltBuckets,
-          orderedSource = false, mergeOnRead = cfg.mergeOnRead)
-        val sec = (System.nanoTime() - t0) / 1e9
-        epochSecs.add(sec)
-        recordMetric(r, sec, "stream")
-        ()
-      }
-      .start()
+    val q = GraftStreamSink.startThrough(table) {
+      changeStream(spark, maxFilesPerTrigger).writeStream
+        .queryName(queryName)
+        .format("graft")
+        .option("path", cfg.tableRoot)
+        .option("checkpointLocation", checkpointDir)
+        .option("source", cfg.sourceId)
+        .option("mor", cfg.mergeOnRead)
+        .option("saltBuckets", cfg.saltBuckets)
+        .trigger(Trigger.AvailableNow())
+        .start()
+    }
+    lastStream = Some(q)
+    q
   }
 
   /** Drain the source over several stream GENERATIONS, resizing the trigger
@@ -446,10 +449,8 @@ class CdcPipeline(val cfg: PipelineConfig) {
       timeoutMs: Long = 300000): Int = {
     var mfpt = initialMaxFiles
     (0 until generations).foreach { _ =>
-      epochSecs.clear()
-      val q = startStream(spark, checkpointDir, mfpt)
-      q.awaitTermination(timeoutMs)
-      if (!epochSecs.isEmpty) mfpt = adaptedMaxFilesPerTrigger(mfpt)
+      startStream(spark, checkpointDir, mfpt).awaitTermination(timeoutMs)
+      mfpt = adaptedMaxFilesPerTrigger(mfpt)
     }
     mfpt
   }

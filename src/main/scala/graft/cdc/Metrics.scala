@@ -67,30 +67,6 @@ object Metrics {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else spark.read.schema(schema).json(file(dir).toString)
 
-  /** Per-mode operational rates over the LAST `lastK` recorded
-    * batches/epochs — the numbers the reference serves live from
-    * `/surosinkstat` (message count, rates per sink: SinkStat.java:29-41),
-    * computed from the ledger so they need no running server. Used by
-    * `RunCdc stats`.
-    */
-  def rates(spark: SparkSession, dir: String, lastK: Int = 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val w = Window.partitionBy(col("mode"))
-      .orderBy(col("tsMs").desc, col("epoch").desc)
-    view(spark, dir)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= lastK).drop("__rn")
-      .groupBy("mode").agg(
-        count(lit(1)).as("batches"),
-        sum("rows").as("rows"),
-        when(sum("sec") > 0, round(sum(col("rows")) / sum(col("sec")), 1))
-          .as("rows_per_sec"),
-        round(avg("sec"), 3).as("avg_sec"),
-        max("tsMs").as("last_ts_ms"))
-      .orderBy("mode")
-  }
-
   /** Per-mode summary of recent ledger events (see [[recentRates]]). */
   case class RateSummary(
       batches: Int, rows: Long, rowsPerSec: Option[Double], lastTsMs: Long)
@@ -102,8 +78,8 @@ object Metrics {
     * monitoring system polls this every few seconds against a drain that
     * may have applied millions of micro-batches. A mode whose last event
     * fell out of the tail window is simply absent (it is not "recent").
-    * The HTTP status surface ([[StatusServer]]) serves exactly this fold;
-    * [[rates]] is the same numbers as a queryable DataFrame.
+    * The HTTP status surface ([[StatusServer]]) and `RunCdc stats` serve
+    * exactly this fold.
     */
   def recentRates(dir: String, lastK: Int = 20,
       maxTailBytes: Int = 1 << 20): Map[String, RateSummary] = {
@@ -141,8 +117,8 @@ object Metrics {
 
   /** StreamingQueryListener recording one metrics line per epoch of the
     * named query — the Structured Streaming half of the surface (progress
-    * events carry input rows and trigger durations; the foreachBatch side
-    * records merge-level upsert/delete counts separately).
+    * events carry input rows and trigger durations; the sink records
+    * merge-level upsert/delete counts separately).
     */
   class EpochListener(queryName: String, dir: String) extends StreamingQueryListener {
     override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()

@@ -80,47 +80,22 @@ object RunCdc {
     case "stream" =>
       sys.env.get("GRAFT_STATUS_PORT").foreach(p =>
         StatusServer.start(args(2), p.toInt))
-      val p = new CdcPipeline(PipelineConfig(args(1), args(2)))
+      // the drain through the format("graft") sink; GRAFT_MOR=1 for
+      // merge-on-read epochs
+      val p = new CdcPipeline(PipelineConfig(args(1), args(2),
+        mergeOnRead = sys.env.get("GRAFT_MOR").contains("1")))
       val q = p.startStream(spark, args(3),
         maxFilesPerTrigger = if (args.length > 4) args(4).toInt else 8)
       q.awaitTermination()
       val snap = p.table.loadCurrent()
       println(s"stream drained; snapshot v${snap.version} rows=${snap.totalRows}")
 
-    // wsink <binlogDir> <tableRoot> <checkpointDir> [buckets]: the same
-    // drain through the NATIVE streaming sink — writeStream.format("graft")
-    // instead of the pipeline's foreachBatch ([[graft.sql.GraftStreamSink]];
-    // GRAFT_MOR=1 for merge-on-read epochs)
-    case "wsink" =>
-      import org.apache.spark.sql.streaming.Trigger
-      val q = spark.readStream.schema(graft.model.Model.changeSchema)
-        .option("maxFilesPerTrigger", 8)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(s"${args(1)}/segment=*")
-        .select(graft.ops.MergeInto.changeColumns: _*)
-        .writeStream.format("graft")
-        .option("path", args(2))
-        .option("checkpointLocation", args(3))
-        .option("buckets", if (args.length > 4) args(4) else "16")
-        .option("mor", sys.env.get("GRAFT_MOR").contains("1").toString)
-        .option("source", "wsink")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val t = new graft.table.ChronicleTable(args(2))
-      val ws = t.loadCurrent()
-      println(s"wsink drained; snapshot v${ws.version} rows=${ws.totalRows}")
-
     case "state" =>
       val p = new CdcPipeline(PipelineConfig("", args(1)))
       val df =
         if (args.length > 2 && args(2).startsWith("@")) {
           // timestamp time travel: @<epoch-millis> or @<ISO-8601 instant>
-          val spec = args(2).drop(1)
-          val ts = try spec.toLong catch {
-            case _: NumberFormatException =>
-              java.time.Instant.parse(spec).toEpochMilli
-          }
+          val ts = graft.table.ChronicleTable.instantMillis(args(2))
           val v = p.table.versionAsOf(ts)
           println(s"as-of ts=$ts resolves to v$v")
           p.table.read(spark, p.table.loadVersion(v))
@@ -149,14 +124,10 @@ object RunCdc {
     case "export" =>
       val table = new graft.table.ChronicleTable(args(1))
       val snap =
-        if (args.length > 3 && args(3).startsWith("@")) {
-          val spec = args(3).drop(1)
-          val ts = try spec.toLong catch {
-            case _: NumberFormatException =>
-              java.time.Instant.parse(spec).toEpochMilli
-          }
-          table.loadVersion(table.versionAsOf(ts))
-        } else if (args.length > 3) table.loadVersion(args(3).toLong)
+        if (args.length > 3 && args(3).startsWith("@"))
+          table.loadVersion(table.versionAsOf(
+            graft.table.ChronicleTable.instantMillis(args(3))))
+        else if (args.length > 3) table.loadVersion(args(3).toLong)
         else table.loadCurrent()
       val n = table.exportSnapshot(spark, args(2), snap)
       println(s"exported $n rows of v${snap.version} to ${args(2)}")
@@ -170,11 +141,7 @@ object RunCdc {
       // at that instant (timestamp cursor, as `state @…`)
       val since =
         if (args(2).startsWith("@")) {
-          val spec = args(2).drop(1)
-          val ts = try spec.toLong catch {
-            case _: NumberFormatException =>
-              java.time.Instant.parse(spec).toEpochMilli
-          }
+          val ts = graft.table.ChronicleTable.instantMillis(args(2))
           val v = table.versionAsOf(ts)
           println(s"as-of ts=$ts resolves to v$v")
           v
@@ -202,17 +169,15 @@ object RunCdc {
           s"keys=[${m.minKey} .. ${m.maxKey}]" +
           (if (m.deltaFiles > 0) s" deltas=${m.deltaFiles}" else ""))
       }
-      // live rates off the metrics ledger (the /surosinkstat numbers,
-      // SinkStat.java:29-41) — per mode, over the last 20 batches/epochs;
-      // absent when the pipeline ran without recordMetrics
-      val rates = Metrics.rates(spark, s"${args(1)}/metrics").collect()
+      // live rates off the metrics ledger tail (the /surosinkstat numbers,
+      // SinkStat.java:29-41; the same fold /stats serves) — per mode, over
+      // the last 20 batches/epochs; absent when nothing recorded metrics
+      val rates = Metrics.recentRates(s"${args(1)}/metrics")
       if (rates.nonEmpty) {
         println("recent rates (last 20 per mode):")
-        rates.foreach { r =>
-          println(s"  mode=${r.getAs[String]("mode")} " +
-            s"batches=${r.getAs[Long]("batches")} rows=${r.getAs[Long]("rows")} " +
-            s"rows/sec=${r.getAs[Any]("rows_per_sec")} " +
-            s"avg_sec=${r.getAs[Double]("avg_sec")}")
+        rates.toSeq.sortBy(_._1).foreach { case (mode, r) =>
+          println(s"  mode=$mode batches=${r.batches} rows=${r.rows} " +
+            s"rows/sec=${r.rowsPerSec.getOrElse("null")}")
         }
       }
 

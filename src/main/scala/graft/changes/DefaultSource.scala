@@ -294,17 +294,7 @@ private[changes] class ChangesMicroBatchStream(schema0: StructType,
       case at if at.startsWith("@") =>
         // timestamp cursor: the snapshot live at that instant (fails
         // clearly when the instant predates the oldest retained version)
-        val spec = at.drop(1)
-        val ts = try spec.toLong catch {
-          case _: NumberFormatException =>
-            try java.time.Instant.parse(spec).toEpochMilli catch {
-              case _: java.time.format.DateTimeParseException =>
-                throw new IllegalArgumentException(
-                  s"startingVersion '@…' takes epoch millis or an ISO-8601 " +
-                    s"instant, got '$at'")
-            }
-        }
-        VersionOffset(table.versionAsOf(ts))
+        VersionOffset(table.versionAsOf(ChronicleTable.instantMillis(at)))
       case v =>
         val ver = try v.toLong catch {
           case _: NumberFormatException => throw new IllegalArgumentException(

@@ -32,26 +32,6 @@ object Dedup {
       .select(keys.map(col) ++ payload.map(c => col(s"__latest.$c")): _*)
   }
 
-  /** Two-pass hash-aggregate variant of [[latestByKey]]: pass 1 is a pure
-    * `max(ord)` per key (fixed-width buffer -> HashAggregate, never
-    * SortAggregate), pass 2 joins the winners back and collapses exact
-    * duplicate deliveries (same key AND same max lsn carry identical
-    * payloads by construction of the log) with a first()-style hash
-    * aggregate. Trades the SortAggregate's per-partition sort for one
-    * extra shuffle of the batch — measured in Bench's dedup phase at both
-    * parallelism levels to pick the default.
-    */
-  def latestByKeyJoin(df: DataFrame, keys: Seq[String], ord: String): DataFrame = {
-    val payload = df.columns.filterNot(keys.contains)
-    val winners = df.groupBy(keys.map(col): _*)
-      .agg(max(col(ord)).as(ord))
-    df.join(winners, keys :+ ord)
-      .groupBy(keys.map(col): _*)
-      .agg(first(col(ord)).as(ord),
-        payload.filterNot(_ == ord).map(c => first(col(c)).as(c)): _*)
-      .select(df.columns.map(col): _*)
-  }
-
   /** Window-based variant of [[latestByKey]]: ONE hash shuffle of the batch
     * followed by a single reduce-side sort + row_number filter. When keys
     * rarely repeat within a map task (the common CDC shape: keyspace >>

@@ -67,10 +67,10 @@ object MergeInto {
     * micro-batch — measured to cap cluster scaling long before the shuffle
     * would — so the cutoff stays modest (typical CDC micro-batches are far
     * below it; a bulk backfill is exactly the case where the shuffled join
-    * is right).
+    * is right). Settable only from specs, which lower it to plan the
+    * shuffled join on small fixtures.
     */
-  @volatile var broadcastKeyLimit: Long =
-    sys.env.getOrElse("GRAFT_BROADCAST_KEY_LIMIT", "1000000").toLong
+  @volatile private[graft] var broadcastKeyLimit: Long = 1000000L
 
   /** Broadcast-hint a batch-derived join side only under the key cutoff
     * (above it the hint is omitted and the join shuffles / AQE decides).
@@ -83,12 +83,11 @@ object MergeInto {
     * files from fragmenting). Only ever REDUCES the write's task count —
     * the shuffle-partition/bucket cap still bounds it above — so cluster-
     * scale merges plan exactly as before while micro-batches stop paying
-    * a fleet of near-empty write tasks. Production would set this toward
-    * a full target file size (128M+); the default stays modest so the
+    * a fleet of near-empty write tasks. A production floor would sit
+    * toward a full target file size (128M+); 16 MiB stays modest so the
     * local bench's mid-size merges keep their parallelism.
     */
-  @volatile var minWritePartitionBytes: Long =
-    sys.env.getOrElse("GRAFT_WRITE_MIN_PART_BYTES", (16L << 20).toString).toLong
+  private val MinWritePartitionBytes: Long = 16L << 20
 
   // Cumulative per-phase wall nanos since the last drain — always recorded
   // (two clock reads + one adder bump per phase) so the bench can report a
@@ -254,7 +253,7 @@ object MergeInto {
         * state); CoW stays right when reads dominate commits.
         */
       mergeOnRead: Boolean = false): MergeResult = {
-    // A foreachBatch batch DataFrame rides the micro-batch's CLONED
+    // A streaming epoch's batch DataFrame rides the micro-batch's CLONED
     // session, not the caller's. Every internal scan and the staged write
     // must run on the BATCH's session: the final action executes under the
     // plan root's session, and the write-riding Observation only hears
@@ -372,7 +371,7 @@ object MergeInto {
       // manifest stats (shared by both modes). `bytesHint` is the manifest-
       // derived estimate of the staged output (touched bytes + batch
       // estimate): the split count derives from DATA SIZE, floored so no
-      // write task owns less than ~minWritePartitionBytes — a core-count
+      // write task owns less than ~MinWritePartitionBytes — a core-count
       // constant here produced 32 near-empty files (and a 32-entry commit)
       // for an 800-row micro-batch, pure fixed overhead that shrinks at
       // neither cluster size nor data size. At scale the size-derived count
@@ -382,7 +381,7 @@ object MergeInto {
         val cap = math.max(1, math.min(
           sess.conf.get("spark.sql.shuffle.partitions").toInt, buckets.size * 4))
         val parts = math.max(1L, math.min(cap.toLong,
-          (bytesHint + minWritePartitionBytes - 1) / minWritePartitionBytes))
+          (bytesHint + MinWritePartitionBytes - 1) / MinWritePartitionBytes))
           .toInt
         val splitsPerBucket = math.max(1, parts / math.max(1, buckets.size))
         tick("write")(StagedWrite(table, newData

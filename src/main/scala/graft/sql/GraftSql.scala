@@ -95,7 +95,7 @@ class GraftDataSource extends TableProvider
       "graft sink applies change events incrementally; Complete mode is " +
         "not supported (use Append or Update)")
     val opts = new CaseInsensitiveStringMap(parameters.asJava)
-    new GraftStreamSink(pathOf(opts),
+    new GraftStreamSink(GraftStreamSink.tableFor(pathOf(opts)),
       source = opts.getOrDefault("source", "wstream"),
       mergeOnRead = opts.getBoolean("mor", false),
       buckets = opts.getInt("buckets", 16),

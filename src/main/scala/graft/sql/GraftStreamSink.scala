@@ -1,19 +1,24 @@
 package graft.sql
 
+import graft.cdc.Metrics
 import graft.model.Model
 import graft.ops.MergeInto
 import graft.table.ChronicleTable
-import org.apache.spark.sql.{DataFrame, Row, Dataset}
+import org.apache.spark.sql.{Row, Dataset}
 import org.apache.spark.sql.execution.streaming.Sink
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** `df.writeStream.format("graft").option("path", root)` — the engine as a
-  * NATIVE Structured Streaming sink: every micro-batch applies through the
-  * same exactly-once MERGE as a pipeline epoch ([[graft.cdc.CdcPipeline]]'s
-  * foreachBatch path, with the identical batch-key convention), so Spark's
-  * offset checkpoint composes with the table's replay ledger — a replayed
-  * epoch after a crash/restart is skipped by its batch key, which is the
-  * crash-safety contract every other engine write upholds.
+  * NATIVE Structured Streaming sink, and the single-table epoch step: every
+  * Structured Streaming write into one table applies its micro-batches
+  * here, [[graft.cdc.CdcPipeline.startStream]] included. Each epoch applies
+  * through the exactly-once MERGE under batch key `<source>-ss#<batchId>`,
+  * so Spark's offset checkpoint composes with the table's replay ledger —
+  * a replayed epoch after a crash/restart is skipped by its batch key,
+  * which is the crash-safety contract every other engine write upholds —
+  * and appends one `stream` line to the metrics ledger under
+  * `<root>/metrics` ([[graft.cdc.Metrics]]; served by `/stats`).
   *
   * Input rows may arrive in either change shape:
   *  - pipeline shape: `lsn` + `op` (I/U/D) + payload — the binlog tail;
@@ -34,21 +39,11 @@ import org.apache.spark.sql.types.StructType
   * without staging the batch to disk twice. The micro-batch is re-rooted
   * as a batch DataFrame first ([[org.apache.spark.sql.graft.MicroBatch]]).
   */
-private[sql] class GraftStreamSink(root: String, source: String,
+private[sql] class GraftStreamSink(table: ChronicleTable, source: String,
     mergeOnRead: Boolean, buckets: Int, saltBuckets: Int) extends Sink {
-
-  private val table = new ChronicleTable(root)
 
   override def addBatch(batchId: Long, data: Dataset[Row]): Unit = {
     val batch0 = org.apache.spark.sql.graft.MicroBatch.stripStreaming(data)
-    // The micro-batch rides a session CLONE on which the stream engine
-    // disabled AQE (ResolveWriteToStream: streaming plans don't support
-    // it). The MERGE's jobs are ordinary BATCH queries planned on that
-    // clone, so without this every per-epoch shuffle runs at the full
-    // static partition count with no runtime coalescing — re-enable it
-    // for the batch side; the stream's own incremental plan is unaffected
-    // (it was analyzed before addBatch and never uses AQE).
-    batch0.sparkSession.conf.set("spark.sql.adaptive.enabled", "true")
     val cols = batch0.columns.toSet
     val batch =
       if (cols.contains(Model.ordColumn) && cols.contains("op")) batch0
@@ -61,10 +56,32 @@ private[sql] class GraftStreamSink(root: String, source: String,
         f.name == Model.ordColumn || f.name == "op"))
       table.create(StructType(payload ++ Model.systemFields), buckets)
     }
-    MergeInto(batch.sparkSession, table, batch, s"$source-ws#$batchId",
+    val t0 = System.nanoTime()
+    val r = MergeInto(batch.sparkSession, table, batch, s"$source-ss#$batchId",
       source = s"$source-epoch-$batchId", saltBuckets = saltBuckets,
       orderedSource = false, mergeOnRead = mergeOnRead)
+    Metrics.record(table.root, source, r.snapshot.version, Seq(r),
+      (System.nanoTime() - t0) / 1e9, "stream")
   }
 
-  override def toString: String = s"GraftStreamSink($root)"
+  override def toString: String = s"GraftStreamSink(${table.root})"
+}
+
+private[graft] object GraftStreamSink {
+
+  private val handOff = new ThreadLocal[ChronicleTable]
+
+  /** Starts a `format("graft")` query whose sink commits through `table`
+    * itself rather than a fresh instance of the same root, so the caller's
+    * commit hooks ([[ChronicleTable.beforePublishHook]]) cover its epochs.
+    * `DataStreamWriter.start()` creates a v1 sink on the calling thread,
+    * which is what hands the instance over.
+    */
+  def startThrough(table: ChronicleTable)(start: => StreamingQuery): StreamingQuery = {
+    handOff.set(table)
+    try start finally handOff.remove()
+  }
+
+  private[sql] def tableFor(root: String): ChronicleTable =
+    Option(handOff.get).filter(_.root == root).getOrElse(new ChronicleTable(root))
 }

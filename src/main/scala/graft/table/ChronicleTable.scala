@@ -511,12 +511,6 @@ class ChronicleTable(val root: String) {
     */
   @volatile var beforePublishHook: Snapshot => Unit = _ => ()
 
-  /** How many times a conflicted commit reloads and rebases before giving
-    * up (each retry implies a concurrent writer made progress, so this
-    * never livelocks — someone always wins).
-    */
-  @volatile var maxCommitRetries: Int = 5
-
   /** Atomically publish a commit on top of `base`. Returns the new snapshot.
     *
     * Concurrency: losing the CREATE_NEW version race triggers an automatic
@@ -542,7 +536,7 @@ class ChronicleTable(val root: String) {
       } catch {
         case e: FileAlreadyExistsException =>
           tries += 1
-          if (tries > maxCommitRetries)
+          if (tries > MaxCommitRetries)
             throw new IllegalStateException(
               s"commit of ${pending.batchKey} lost the version race " +
                 s"$tries times — giving up", e)
@@ -1045,6 +1039,28 @@ object ChronicleTable {
   private val RangeKey = """(.+)#(\d+)-(\d+)""".r
   private val BucketDir = """.*/bucket=(\d+)/[^/]+$""".r
 
+  /** How many times a conflicted commit reloads and rebases before giving
+    * up (each retry implies a concurrent writer made progress, so this
+    * never livelocks — someone always wins).
+    */
+  private val MaxCommitRetries = 5
+
+  /** Epoch millis of an `@<epoch-millis|ISO-8601 instant>` argument — the
+    * timestamp cursor that `RunCdc state|export|changes` and the change
+    * stream's `startingVersion` take (resolve it with [[versionAsOf]]).
+    */
+  def instantMillis(at: String): Long = {
+    val spec = at.stripPrefix("@")
+    try spec.toLong catch {
+      case _: NumberFormatException =>
+        try java.time.Instant.parse(spec).toEpochMilli catch {
+          case _: java.time.format.DateTimeParseException =>
+            throw new IllegalArgumentException(
+              s"'@…' takes epoch millis or an ISO-8601 instant, got '$at'")
+        }
+    }
+  }
+
   /** Length of a data file for split planning: the manifest's byte count,
     * or — for a pre-upgrade entry without one — one filesystem stat (only
     * files that survived pruning reach here).
@@ -1204,22 +1220,15 @@ object ChronicleTable {
   }
 
   /** Per-key last-writer-wins merge of a base+delta scan: one shuffle by
-    * key + one reduce-side sort + row_number filter — the same plan shape
-    * the write-side dedup defaults to (Dedup.latestByKeyWindow). NOT
+    * key + one reduce-side sort + row_number filter — the write-side
+    * dedup's window ([[graft.ops.Dedup.latestByKeyWindow]]). NOT
     * `max_by(struct(...))`: a string-bearing struct buffer plans as
     * SortAggregate, which sorts on BOTH sides of the exchange. Ties (same
     * key and lsn: one event landing in two deltas via distinct replay
     * epochs) carry identical payloads by construction of the log, so
     * either wins. Output columns follow `schema`.
     */
-  def mergeDeltas(scan: DataFrame, schema: StructType): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val keys = graft.model.Model.keyColumns
-    val ord = graft.model.Model.lsnColumn
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(ord).desc)
-    scan.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-      .select(schema.fieldNames.map(col): _*)
-  }
+  def mergeDeltas(scan: DataFrame, schema: StructType): DataFrame =
+    graft.ops.Dedup.latestByKeyWindow(scan, graft.model.Model.keyColumns,
+      graft.model.Model.lsnColumn).select(schema.fieldNames.map(col): _*)
 }

@@ -93,7 +93,7 @@ class MergeLawsSpec extends SparkSpec {
     assert(del.deletes == 1L && del.upserts == 0L && del.endLsn == 4L)
   }
 
-  test("all dedup strategies (max_by, join-back, window) agree on any stream") {
+  test("all dedup strategies (max_by, salted, window) agree on any stream") {
     holds(Prop.forAllNoShrink(genEvents, Gen.choose(42L, 46L)) { (evs, seed) =>
       val rnd = new scala.util.Random(seed)
       val delivered = rnd.shuffle(evs ++ evs.filter(_ => rnd.nextInt(3) == 0))
@@ -103,7 +103,7 @@ class MergeLawsSpec extends SparkSpec {
           r.getAs[Long]("lsn"), r.getAs[String]("text")))
         .sortBy(x => (x._1, x._2)).toSeq
       val base = rows(graft.ops.Dedup.latestByKey(df, Model.keyColumns, "lsn"))
-      base == rows(graft.ops.Dedup.latestByKeyJoin(df, Model.keyColumns, "lsn")) &&
+      base == rows(graft.ops.Dedup.saltedLatest(df, Model.keyColumns, "lsn", 4)) &&
         base == rows(graft.ops.Dedup.latestByKeyWindow(df, Model.keyColumns, "lsn"))
     }, 10)
   }
