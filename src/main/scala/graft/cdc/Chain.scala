@@ -322,13 +322,10 @@ object Chain {
     } finally { changes.unpersist(); () }
   }
 
-  /** Source prefixes the downstream table has already seen (maintenance
-    * and placeholder prefixes are not sources).
-    */
+  /** Source prefixes the downstream table has already seen. */
   private def knownPrefixes(snap: graft.table.Snapshot): Set[String] =
     (snap.floors.keys ++ snap.hwms.keys)
-      .filterNot(p => p == "compact" || p == "rescale" || p == "_chain")
-      .toSet
+      .filterNot(graft.table.ChronicleTable.nonSources).toSet
 
   /** Continuous tail: a Structured Streaming query whose every trigger
     * drains the upstream changelog — the always-on form of [[drain]] (the

@@ -158,9 +158,11 @@ object RunCdc {
     case "stats" =>
       val table = new graft.table.ChronicleTable(args(1))
       val s = table.loadCurrent()
+      // ledger units the sources committed: batches, stream epochs, or
+      // segments / upstream versions for range keys
+      val units = graft.table.ChronicleTable.committedUnits(s).values.sum
       println(s"version=${s.version} rows=${s.totalRows} files=${s.numFiles} " +
-        s"manifests=${s.manifestList.size} hwmLsn=${s.hwmLsn} " +
-        s"batches=${s.committedBatches.size} " +
+        s"manifests=${s.manifestList.size} hwmLsn=${s.hwmLsn} units=$units " +
         s"schema=${s.schema.fieldNames.mkString(",")}")
       // the per-bucket report comes straight off the manifest LIST — no
       // bucket manifest is opened (metadata-only, O(buckets))

@@ -1,7 +1,6 @@
 package graft.changes
 
 import graft.table.{ChronicleTable, FilePrune, Snapshot}
-import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -440,9 +439,7 @@ private[changes] class ChangesReaderFactory(
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[ChangeFilePartition]
-    val file = PartitionedFile(InternalRow.empty,
-      SparkPath.fromPathString(p.path), 0L, p.fileSize,
-      Array.empty[String], 0L, p.fileSize)
+    val file = graft.sql.GraftScan.wholeFile(p.path, p.fileSize)
     // exact per-source mark filter (the readChanges row filter, evaluated
     // executor-side): a row passes when its _lsn exceeds ITS OWN source's
     // mark in the from-snapshot; untagged rows compare against the global
@@ -464,13 +461,6 @@ private[changes] class ChangesReaderFactory(
           else p.marks.getOrElse(r.getUTF8String(srcIdx).toString, -1L)
         lsn > mark
       }
-    new PartitionReader[InternalRow] {
-      private var cur: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { cur = it.next(); true } else false
-      override def get(): InternalRow = cur
-      // the parquet record reader registers its own task-completion close
-      override def close(): Unit = ()
-    }
+    graft.sql.GraftScan.reader(it)
   }
 }

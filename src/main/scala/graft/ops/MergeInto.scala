@@ -244,8 +244,9 @@ object MergeInto {
         * tombstones) are written as DELTA files overlaying the table —
         * write IO is O(batch) with NO table reads, where copy-on-write
         * reads and rewrites every touched file. Readers pay a per-key LWW
-        * merge ([[ChronicleTable.mergeDeltas]]) until compaction folds the
-        * deltas into base files; the per-key `_lsn` comparison that the
+        * merge (the scan's sorted bucket merge, `graft.sql.SortedLwwMerge`)
+        * until compaction folds the deltas into base files; the per-key
+        * `_lsn` comparison that the
         * CoW guard join performs at write time happens there at read time,
         * so unordered sources need no guard scan either. The
         * write-amplification arm of the LSM trade — right when batches are

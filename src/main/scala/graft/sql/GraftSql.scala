@@ -9,11 +9,12 @@ import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjecti
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, Table, TableCapability, TableCatalog, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
-import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import java.util.OptionalLong
 import scala.jdk.CollectionConverters._
@@ -26,17 +27,21 @@ import scala.jdk.CollectionConverters._
   * its consumers are sinks, not analysts).
   *
   * Semantics: a scan serves the snapshot's VISIBLE state — merge-on-read
-  * deltas LWW-collapse per key, tombstoned rows are hidden — i.e. exactly
-  * what [[ChronicleTable.read]] + `!_deleted` yields, as one source. The
-  * system columns (`_lsn`, `_source`) stay queryable.
+  * deltas LWW-collapse per key, tombstoned rows are hidden. The system
+  * columns (`_lsn`, `_source`) stay queryable. The same scan serves every
+  * [[ChronicleTable]] reader too, told whether to merge and to keep
+  * tombstone winners ([[LibraryRead]]); each reader states its pruning as
+  * column filters: one LWW merge and one read path for the library, SQL
+  * and `format("graft")`.
   *
   * Scale shape:
   *  - filter pushdown prunes manifests and data files during planning
   *    through the table's one pruning rule ([[graft.table.FilePrune]],
   *    the same rule every reader uses) — `conv_id` point/range/IN (plus
   *    HASH-BUCKET pruning on equality: a point lookup opens one bucket,
-  *    the `readKey` serving path through SQL), `ts` bounds (base files),
-  *    `_lsn` lower bounds;
+  *    the `readKey` serving path through SQL), `ts` bounds (base files
+  *    whose bucket's deltas are all newer), `_lsn` lower bounds (both
+  *    bounds when the merge is off);
   *  - column pruning reaches the parquet reader (a two-column projection
   *    of a wide transcript table reads two column chunks), and the pushed
   *    filters ride into the reader for row-group/page pruning (only key
@@ -44,8 +49,9 @@ import scala.jdk.CollectionConverters._
   *  - merge-on-read buckets read through a STREAMING SORTED MERGE: every
   *    engine write lands files sorted by (conv_id, turn_idx), so one
   *    input partition per delta-carrying bucket k-way-merges its files
-  *    with O(files) memory — no shuffle, no per-bucket hash map. Pure-base
-  *    buckets stay one partition per file.
+  *    with O(files) memory — no shuffle, no per-bucket hash map. The
+  *    files of pure-base buckets pack into partitions of about
+  *    `spark.sql.files.maxPartitionBytes`, as Spark's file scans do.
   *  - statistics (bytes/rows) come from the manifest, so the optimizer
   *    can broadcast a small pruned read.
   *
@@ -117,17 +123,29 @@ private[sql] class MissingGraftTable(root: String) extends Table with SupportsRe
       Seq(root))
 }
 
+/** What one of [[ChronicleTable]]'s readers asks of the scan: `merge`
+  * LWW-merges delta-carrying buckets (off = raw rows, superseded versions
+  * included), and `tombstones` keeps `_deleted` winners visible.
+  */
+private[graft] case class LibraryRead(merge: Boolean = true,
+    tombstones: Boolean = true)
+
 /** One snapshot of one ChronicleTable as a DSv2 batch table. The snapshot
   * is PINNED at resolution time (repeatable reads within a query; time
-  * travel hands in an older one).
+  * travel hands in an older one). `library` = a library read
+  * ([[LibraryRead]]), which exposes the plain snapshot schema (no SQL
+  * default-value metadata).
   */
 private[graft] class GraftTable(val table: ChronicleTable,
-    val snapshot: Snapshot) extends Table with SupportsRead
+    val snapshot: Snapshot, library: Option[LibraryRead] = None)
+  extends Table with SupportsRead
   with org.apache.spark.sql.connector.catalog.SupportsWrite
   with org.apache.spark.sql.connector.catalog.SupportsDelete {
 
   override def name(): String = s"graft(${table.root}@v${snapshot.version})"
-  override def schema(): StructType = GraftWrite.withSqlDefaults(snapshot.schema)
+  override def schema(): StructType =
+    if (library.isDefined) snapshot.schema
+    else GraftWrite.withSqlDefaults(snapshot.schema)
 
   /** `SHOW TBLPROPERTIES` / `DESCRIBE EXTENDED`: the snapshot's health
     * numbers, read from the manifest (no data IO) — the SQL face of
@@ -151,7 +169,7 @@ private[graft] class GraftTable(val table: ChronicleTable,
       TableCapability.V1_BATCH_WRITE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(table, snapshot, options)
+    new GraftScanBuilder(table, snapshot, options, library)
 
   /** `INSERT INTO` = apply a change batch via the exactly-once MERGE; the
     * whole statement plans as one batch, so the V1 whole-DataFrame bridge
@@ -203,7 +221,8 @@ private[graft] class GraftTable(val table: ChronicleTable,
 }
 
 private[graft] class GraftScanBuilder(table: ChronicleTable, snap: Snapshot,
-    options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty())
+    options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty(),
+    library: Option[LibraryRead] = None)
   extends ScanBuilder with SupportsPushDownFilters
   with SupportsPushDownRequiredColumns {
 
@@ -225,17 +244,42 @@ private[graft] class GraftScanBuilder(table: ChronicleTable, snap: Snapshot,
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  override def build(): Scan = new GraftScan(table, snap, pushed, required, options)
+  override def build(): Scan =
+    new GraftScan(table, snap, pushed, required, options, library)
 }
 
 private[graft] class GraftScan(table: ChronicleTable, snap: Snapshot,
     pushed: Array[sources.Filter], required: StructType,
-    options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty())
+    options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty(),
+    library: Option[LibraryRead] = None)
   extends Scan with Batch with SupportsReportStatistics
   with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
 
+  private val merge = library.forall(_.merge)
+  private val tombstones = library.exists(_.tombstones)
+
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+
+  /** Declared up front, so physical planning does not ask each partition
+    * through [[createReaderFactory]] (Spark's default), which would build
+    * the parquet readers before the query runs.
+    */
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    if (columnar) Scan.ColumnarSupportMode.SUPPORTED
+    else Scan.ColumnarSupportMode.UNSUPPORTED
+
+  /** The buckets whose partition LWW-merges its files. */
+  private def merged: Set[Int] =
+    if (merge) files.filter(_.delta).map(_.bucket).toSet else Set.empty
+
+  /** A scan that merges no bucket and keeps tombstone winners hands on
+    * parquet's columnar batches as they are (a delta-free library read).
+    * Decided once, from the pruned file set: runtime filtering only drops
+    * files, so it never adds a merging bucket.
+    */
+  private lazy val columnar: Boolean = tombstones && merged.isEmpty &&
+    new ParquetFileFormat().supportBatch(SparkSession.active, required)
 
   /** `readStream` on the SAME table object serves the changelog: the
     * unified surface delegates to the DSv2 micro-batch change stream
@@ -276,56 +320,71 @@ private[graft] class GraftScan(table: ChronicleTable, snap: Snapshot,
     val memo = filesMemo
     if (memo != null) return memo
     val computed = table.files(snap,
-      FilePrune.of((pushed ++ runtime).toSeq, snap.numBuckets))
+      FilePrune.of((pushed ++ runtime).toSeq, snap.numBuckets, merge))
     filesMemo = computed
     computed
   }
 
-  /** Columns the READER must materialize beyond the projection: the LWW
-    * merge keys + order + tombstone flag, and every pushed filter's
-    * references (so the filters can ride into the parquet reader).
+  /** Columns the row READER must materialize beyond the projection: the
+    * LWW merge keys + order + tombstone flag (pushed filters' columns are
+    * in the projection — Spark re-applies every filter above the scan).
     */
   private lazy val readAll: StructType = {
     val need = required.fieldNames.toSet ++
-      Model.keyColumns ++ Seq(Model.lsnColumn, Model.deletedColumn) ++
-      pushed.flatMap(_.references)
+      Model.keyColumns ++ Seq(Model.lsnColumn, Model.deletedColumn)
     StructType(snap.schema.fields.filter(f => need.contains(f.name)))
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
-    def sized(f: DataFileMeta) = (f.path, ChronicleTable.fileBytes(spark, f))
-    files.groupBy(_.bucket).toSeq.sortBy(_._1).flatMap { case (_, fs) =>
-      if (fs.exists(_.delta))
-        // delta-carrying bucket: ONE partition streaming-merges its files
-        // (keys never span buckets, so the per-bucket merge is exact)
-        Seq(GraftPartition(fs.map(sized), merge = true))
-      else fs.map(f => GraftPartition(Seq(sized(f)), merge = false))
-    }.toArray
+    def whole(f: DataFileMeta) =
+      GraftScan.wholeFile(f.path, ChronicleTable.fileBytes(spark, f))
+    val buckets = merged
+    val (merging, plain) = files.partition(f => buckets(f.bucket))
+    // delta-carrying bucket: ONE partition streaming-merges its files
+    // (keys never span buckets, so the per-bucket merge is exact)
+    val merges = merging.groupBy(_.bucket).toSeq.sortBy(_._1)
+      .map { case (_, fs) => GraftPartition(fs.map(whole), merge = true) }
+    // the other files pack by size, largest first, as Spark's file scans do
+    val wholes = plain.map(whole).sortBy(-_.length)
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val split = FilePartition.maxSplitBytes(spark, wholes.map(_.length + openCost).sum)
+    (merges ++ FilePartition.getFilePartitions(spark, wholes, split)
+      .map(p => GraftPartition(p.files.toSeq, merge = false))).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val spark = SparkSession.active
-    def reader(filters: Seq[sources.Filter]) =
+    def reader(filters: Array[sources.Filter], schema: StructType = readAll) =
       new ParquetFileFormat().buildReaderWithPartitionValues(
         sparkSession = spark,
         dataSchema = snap.schema,
         partitionSchema = new StructType(),
-        requiredSchema = readAll,
-        filters = filters,
-        options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        requiredSchema = schema,
+        filters = filters.toSeq,
+        options = Map(FileFormat.OPTION_RETURNING_BATCH -> columnar.toString),
         hadoopConf = spark.sessionState.newHadoopConf())
-    // below the LWW merge only key filters may skip row groups: a skipped
+    if (columnar) return new GraftBatchReaderFactory(reader(pushed, required))
+    // Below the LWW merge only key filters may skip row groups: a skipped
     // group failing a ts/_lsn filter may hold the version that displaces
-    // (or tombstones) a base row, which would then resurface
+    // (or tombstones) a base row, which would then resurface (Spark's
+    // residual filters keep the result exact). Only the readers the
+    // planned partitions use are built: each broadcasts its Hadoop conf.
     val keyFilters = pushed.filter(_.references.forall(Model.keyColumns.contains))
+    lazy val plainRead = reader(pushed)
+    lazy val mergeRead =
+      if (keyFilters.length == pushed.length) plainRead else reader(keyFilters)
+    val buckets = merged
+    val anyPlain = files.exists(f => !buckets(f.bucket))
     val idx = readAll.fieldNames.zipWithIndex.toMap
-    new GraftReaderFactory(reader(pushed.toSeq), reader(keyFilters.toSeq),
+    new GraftReaderFactory(
+      readFunc = if (anyPlain) plainRead else mergeRead,
+      mergeReadFunc = if (buckets.nonEmpty) mergeRead else plainRead,
       convIdx = idx("conv_id"), turnIdx = idx("turn_idx"),
-      lsnIdx = idx(Model.lsnColumn), delIdx = idx(Model.deletedColumn),
+      lsnIdx = idx(Model.lsnColumn),
+      delIdx = if (tombstones) -1 else idx(Model.deletedColumn),
       outIdx = required.fields.map(f => idx(f.name)),
-      outTypes = required.fields.map(_.dataType),
-      readTypes = readAll.fields.map(_.dataType))
+      outTypes = required.fields.map(_.dataType))
   }
 
   override def estimateStatistics(): Statistics = new Statistics {
@@ -338,44 +397,73 @@ private[graft] class GraftScan(table: ChronicleTable, snap: Snapshot,
   }
 }
 
-/** One scan partition: a pure-base file, or ALL files of a delta-carrying
+/** One scan partition: pure-base files, or ALL files of a delta-carrying
   * bucket (merge = true).
   */
-private[graft] case class GraftPartition(files: Seq[(String, Long)],
-    merge: Boolean) extends InputPartition
+private[graft] case class GraftPartition(files: Seq[PartitionedFile],
+    merge: Boolean) extends InputPartition {
 
+  /** Each file's rows (or columnar batches) through the parquet `read`. */
+  def open(read: PartitionedFile => Iterator[InternalRow]): Iterator[Iterator[InternalRow]] =
+    files.iterator.map(read)
+}
+
+private[graft] object GraftScan {
+
+  /** One whole data file as Spark's parquet reader takes it. */
+  def wholeFile(path: String, len: Long): PartitionedFile =
+    PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path), 0L, len,
+      Array.empty[String], 0L, len)
+
+  /** A partition reader over `it`; parquet record readers close themselves
+    * at task completion.
+    */
+  def reader[T](it: Iterator[T]): PartitionReader[T] = new PartitionReader[T] {
+    private var cur: T = _
+    override def next(): Boolean = it.hasNext && { cur = it.next(); true }
+    override def get(): T = cur
+    override def close(): Unit = ()
+  }
+}
+
+/** Reads partitions as rows; `delIdx` < 0 keeps tombstone winners visible. */
 private[sql] class GraftReaderFactory(
     readFunc: PartitionedFile => Iterator[InternalRow],
     mergeReadFunc: PartitionedFile => Iterator[InternalRow],
     convIdx: Int, turnIdx: Int, lsnIdx: Int, delIdx: Int,
-    outIdx: Array[Int], outTypes: Array[DataType],
-    readTypes: Array[DataType]) extends PartitionReaderFactory {
+    outIdx: Array[Int], outTypes: Array[DataType]) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftPartition]
-    val read = if (p.merge) mergeReadFunc else readFunc
-    def open(f: (String, Long)): Iterator[InternalRow] =
-      read(PartitionedFile(InternalRow.empty,
-        SparkPath.fromPathString(f._1), 0L, f._2,
-        Array.empty[String], 0L, f._2))
     val rows: Iterator[InternalRow] =
       if (p.merge)
-        new SortedLwwMerge(p.files.map(open), convIdx, turnIdx, lsnIdx)
-      else p.files.iterator.flatMap(open)
+        new SortedLwwMerge(p.open(mergeReadFunc).toSeq, convIdx, turnIdx, lsnIdx)
+      else p.open(readFunc).flatten
     // visible state: tombstone winners are hidden
-    val it = rows.filter(r => !r.getBoolean(delIdx))
+    val it = if (delIdx < 0) rows else rows.filter(r => !r.getBoolean(delIdx))
     val project = UnsafeProjection.create(
       outIdx.zip(outTypes).map { case (i, t) =>
         BoundReference(i, t, nullable = true)
       }.toSeq)
-    new PartitionReader[InternalRow] {
-      private var cur: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { cur = project(it.next()); true } else false
-      override def get(): InternalRow = cur
-      override def close(): Unit = ()
-    }
+    GraftScan.reader(it.map(project))
   }
+}
+
+/** Hands on each file's parquet batches (the reader returns them typed as
+  * rows, as Spark's own file scans do).
+  */
+private[sql] class GraftBatchReaderFactory(
+    readFunc: PartitionedFile => Iterator[InternalRow]) extends PartitionReaderFactory {
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("a columnar graft scan reads batches")
+
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+
+  override def createColumnarReader(partition: InputPartition)
+      : PartitionReader[ColumnarBatch] =
+    GraftScan.reader(partition.asInstanceOf[GraftPartition].open(readFunc).flatten
+      .asInstanceOf[Iterator[ColumnarBatch]])
 }
 
 /** Streaming k-way LWW merge of per-file row streams, each sorted by

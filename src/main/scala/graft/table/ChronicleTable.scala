@@ -2,6 +2,7 @@ package graft.table
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import graft.sql.{GraftTable, LibraryRead}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
@@ -217,11 +218,9 @@ case class Snapshot(
     */
   def tombstoneHorizon: Long = {
     val marks = hwms
-    // every source prefix seen by the ledger must be covered by a mark;
-    // maintenance prefixes (compact/rescale) and the chain's cursor-only
-    // placeholder (_chain: never carries rows) are not sources
+    // every source prefix seen by the ledger must be covered by a mark
     val prefixes = (floors.keys ++ committedBatches.keys.map(_.takeWhile(_ != '#')))
-      .filterNot(p => p == "compact" || p == "rescale" || p == "_chain").toSet
+      .filterNot(ChronicleTable.nonSources).toSet
     if (unordered.nonEmpty || marks.isEmpty || !prefixes.forall(marks.contains))
       Long.MinValue
     else marks.values.min
@@ -481,8 +480,7 @@ class ChronicleTable(val root: String) {
     */
   def files(snapshot: Snapshot, prune: FilePrune): Seq[DataFileMeta] =
     snapshot.manifestList.filter(m => prune.keeps(m))
-      .flatMap(m => loadManifest(m.path))
-      .filter(f => prune.keeps(f))
+      .flatMap(m => prune.keepIn(loadManifest(m.path)))
 
   /** Write a new immutable per-bucket manifest file; returns its summary. */
   private def writeBucketManifest(bucket: Int, files: Seq[DataFileMeta]): ManifestMeta = {
@@ -731,83 +729,47 @@ class ChronicleTable(val root: String) {
     * the reference's implicit new-JSON-field appearance, SURVEY.md §1.3,
     * made explicit).
     *
-    * The scan plans over a [[ChronicleFileIndex]], so filters Catalyst
-    * pushes down — `conv_id` equality/range, `ts` bounds, `_lsn` lower
-    * bounds, from DataFrame code or SQL over a registered view — prune
-    * data files from manifest stats during planning, not per-footer at
-    * runtime, through the same rule as every other reader ([[FilePrune]]).
-    * A key filter even pushes through the merge-on-read LWW window below
-    * (conv_id is a window partition key), so point reads of a
-    * delta-carrying table stay O(one bucket).
+    * Every reader is the DSv2 scan of `format("graft")` and SQL
+    * ([[graft.sql.GraftScan]]) over the snapshot. Filters Catalyst pushes
+    * down — `conv_id` equality/range, `ts` bounds, `_lsn` lower bounds,
+    * from the readers below, DataFrame code or SQL over a registered view
+    * — prune manifests and data files from their stats during planning,
+    * through the table's one rule ([[FilePrune]]): a key filter opens one
+    * bucket manifest.
     *
-    * A snapshot with merge-on-read delta files reads through a per-key
-    * last-writer-wins merge on `_lsn` (one hash aggregate — the same LWW the
-    * write path applies, deferred to read): base rows a newer delta displaces
-    * disappear, `_deleted` tombstone winners stay visible so callers'
-    * `!_deleted` filter hides them. Delta-free snapshots keep the plain
-    * one-scan plan — reads pay the merge only between compactions.
+    * A delta-carrying bucket reads as ONE partition that streams a sorted
+    * k-way last-writer-wins merge on `_lsn` over its files (every engine
+    * write lands files sorted by key) — the same LWW the write path
+    * applies, deferred to read, with no shuffle: base rows a newer delta
+    * displaces disappear, `_deleted` tombstone winners stay visible so
+    * callers' `!_deleted` filter hides them. Delta-free buckets read their
+    * files packed into partitions as Spark's file scans do — reads pay the
+    * merge only between compactions.
     */
   def read(spark: SparkSession, snapshot: Snapshot): DataFrame =
-    scan(spark, snapshot, filesOf(snapshot))
+    scan(spark, snapshot, LibraryRead())
 
-  /** A read of `files`: an empty frame when none survived, else a
-    * [[scanFiles]] scan that LWW-merges ([[mergeDeltas]]) only when a
-    * surviving file is a merge-on-read delta — a delta-free file set keeps
-    * the bare one-scan plan.
-    */
+  /** The DSv2 scan of `snapshot` as one of the readers asks for it. */
   private def scan(spark: SparkSession, snapshot: Snapshot,
-      files: Seq[DataFileMeta]): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snapshot.schema)
-    else {
-      val s = scanFiles(spark, snapshot, files)
-      if (files.exists(_.delta)) mergeDeltas(s, snapshot.schema) else s
-    }
-
-  /** A parquet scan over an explicit file set, planned through
-    * [[ChronicleFileIndex]] (manifest-driven filter pruning + manifest
-    * byte counts for splits and size estimates).
-    */
-  def scanFiles(spark: SparkSession, snapshot: Snapshot,
-      files: Seq[DataFileMeta]): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    val index = new ChronicleFileIndex(spark, this, snapshot, files)
-    spark.baseRelationToDataFrame(HadoopFsRelation(
-      location = index,
-      partitionSchema = new StructType(),
-      dataSchema = snapshot.schema,
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat(),
-      options = Map.empty)(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]))
-  }
+      spec: LibraryRead): DataFrame =
+    org.apache.spark.sql.graft.DatasetFactory.ofTable(spark,
+      new GraftTable(this, snapshot, Some(spec)))
 
   def read(spark: SparkSession): DataFrame = read(spark, loadCurrent())
 
   /** Time-sliced read of event-time range [fromMs, toMs] (epoch millis,
-    * inclusive): lists/scans ONLY the files whose ts bounds intersect the
-    * range ([[files]] — untouched days' files never reach the scan), then
-    * applies the exact residual predicate. The second-level partition
-    * pruning of the table: the Spark-native analogue of the reference's
-    * date-suffixed sink partitioning (IndexSuffixFormatter.java:27-41; S3
-    * `date(yyyyMMdd)` prefixes, DynamicRemotePrefixFormatter.java:16-50).
-    *
-    * With merge-on-read deltas present, ts pruning applies to BASE files
-    * only and ALL delta files are kept ([[FilePrune]]): a kept delta can
-    * only DISPLACE or TOMBSTONE a base row (never resurrect a pruned one —
-    * the pruned base row would have lost the LWW merge to the kept delta
-    * anyway, and a displaced-row's newer version rides the kept delta
-    * itself), and deltas are O(batches-since-compaction), so between
-    * compactions a time-ranged read pays pruned-bases + deltas instead of
-    * the whole table.
+    * inclusive): a `ts` filter the scan prunes files by (untouched days'
+    * files never reach it) and Spark applies exactly. The second-level
+    * partition pruning of the table: the Spark-native analogue of the
+    * reference's date-suffixed sink partitioning
+    * (IndexSuffixFormatter.java:27-41; S3 `date(yyyyMMdd)` prefixes,
+    * DynamicRemotePrefixFormatter.java:16-50). With merge-on-read deltas
+    * present, every delta file is kept, and so is each base file that some
+    * delta of its bucket is not newer than ([[FilePrune]]).
     */
-  def readSlice(spark: SparkSession, fromMs: Long, toMs: Long): DataFrame = {
-    val snap = loadCurrent()
-    scan(spark, snap, files(snap, FilePrune(fromTsMs = fromMs, toTsMs = toMs)))
-      .filter(unix_millis(col("ts")).between(fromMs, toMs))
-  }
+  def readSlice(spark: SparkSession, fromMs: Long, toMs: Long): DataFrame =
+    read(spark).filter(col("ts") >= new java.sql.Timestamp(fromMs) &&
+      col("ts") < new java.sql.Timestamp(toMs + 1L))
 
   /** Incremental (changelog) read: the NET row changes applied after
     * snapshot `sinceVersion` (exclusive) up to the current snapshot — every
@@ -824,14 +786,13 @@ class ChronicleTable(val root: String) {
     * SuroClient.java / SuroSink.java:15-38, keeping positions per input,
     * InputManager.java:36-56; Iceberg calls it an incremental scan).
     *
-    * METADATA-PRUNED: manifests carry per-file `_lsn` bounds, so files
-    * whose maxLsn is at-or-below every relevant mark are pruned at the
-    * manifest list ([[files]]) — tailing a huge table costs metadata +
-    * O(new files), not a full listing per poll. Pruning before the merge-on-read LWW fold
-    * is sound: a pruned file's every row is at-or-below the minimum mark,
-    * so it can neither BE a surviving change (the row filter would drop it)
-    * nor displace/tombstone one (it loses the LWW comparison to any row
-    * that passes the filter).
+    * METADATA-PRUNED: the minimum mark rides as its own `_lsn` filter (the
+    * per-source `OR` implies no bounds), so files whose maxLsn is
+    * at-or-below every relevant mark are pruned from manifest stats —
+    * tailing a huge table costs metadata + O(new files) per poll. Pruning
+    * below the merge-on-read LWW fold is sound: a pruned file's rows can
+    * neither BE a surviving change nor displace/tombstone one (they lose
+    * the LWW comparison to any row that passes the filter).
     *
     * Semantics are NET changes at read time: a key updated twice since
     * `sinceVersion` appears once with its latest version. Deletes appear as
@@ -864,8 +825,7 @@ class ChronicleTable(val root: String) {
     // prune threshold: the MINIMUM mark any surviving row could have been
     // compared against (per-source marks are each <= the global mark)
     val thr = if (marks.nonEmpty) marks.values.min else since.hwmLsn
-    scan(spark, cur, files(cur, FilePrune(fromLsn = FilePrune.above(thr))))
-      .filter(rowFilter)
+    read(spark, cur).filter(lsn > thr && rowFilter)
   }
 
   /** Refuse a snapshot whose changelog cannot be tailed by `_lsn` marks —
@@ -921,10 +881,10 @@ class ChronicleTable(val root: String) {
   }
 
   /** RAW scan of a snapshot restricted to rows with `_lsn` in [lo, hi]:
-    * files pruned at the manifest by lsn-bounds overlap ([[files]];
-    * unknown bounds conservatively kept), exact residual filter on top.
-    * NO merge-on-read collapse and NO tombstone drop — rows ship as changelog rows
-    * (superseded versions and retained tombstones included), for consumers
+    * the readers' DSv2 scan with its merge off, whose `_lsn` filter prunes
+    * files by lsn-bounds overlap. NO merge-on-read collapse and NO
+    * tombstone drop — rows ship as changelog rows (superseded versions and
+    * retained tombstones included), for consumers
     * that LWW on `_lsn` downstream anyway. This is the unit of the
     * CHUNKED chain/stream bootstrap ([[graft.cdc.Chain.pollOnce]]): a
     * huge upstream ships as K disjoint lsn intervals instead of one
@@ -933,12 +893,9 @@ class ChronicleTable(val root: String) {
     * (S3Consumer.java:226-290) applied to the initial sync.
     */
   def scanLsnInterval(spark: SparkSession, snapshot: Snapshot,
-      lo: Long, hi: Long): DataFrame = {
-    val kept = files(snapshot, FilePrune(fromLsn = lo, toLsn = hi))
-    if (kept.isEmpty) scan(spark, snapshot, kept)
-    else scanFiles(spark, snapshot, kept)
+      lo: Long, hi: Long): DataFrame =
+    scan(spark, snapshot, LibraryRead(merge = false))
       .filter(col(graft.model.Model.lsnColumn).between(lo, hi))
-  }
 
   /** The changelog as a Structured Streaming SOURCE — the always-on form
     * of [[readChanges]]: offsets are snapshot versions, each micro-batch
@@ -972,21 +929,22 @@ class ChronicleTable(val root: String) {
   /** Point lookup: every current row of ONE key (a conversation's visible
     * turns), planned from metadata alone — the key's hash bucket is
     * computed driver-side ([[ChronicleTable.bucketOf]] mirrors the write
-    * path's [[ChronicleTable.bucketExpr]]), so planning ([[files]] with
-    * [[FilePrune.key]]) opens exactly one bucket manifest and the scan touches only that bucket's files whose
+    * path's [[ChronicleTable.bucketExpr]]), so planning (the scan's
+    * [[FilePrune]] of the key filter) opens exactly one bucket manifest
+    * and the scan touches only that bucket's files whose
     * key range covers the key: O(files-in-one-bucket) regardless of table
     * size — the serving-path read a 100 TB transcript store needs (the
     * reference's ES sink serves exactly this doc-id lookup,
     * ElasticSearchSink.java / DefaultIndexInfoBuilder.java:66-73).
-    * Merge-on-read deltas in the bucket LWW-merge as usual; key-range
-    * pruning is sound for them too (a delta file whose range excludes the
-    * key cannot displace or tombstone it). Tombstoned keys return no rows.
+    * Merge-on-read deltas in the bucket LWW-merge inside the one scan task
+    * (no shuffle: one Spark job, one task); key-range pruning is sound for
+    * them too (a delta file whose range excludes the key cannot displace
+    * or tombstone it). Tombstoned keys return no rows — the scan hides
+    * their winners.
     */
-  def readKey(spark: SparkSession, convId: String): DataFrame = {
-    val snap = loadCurrent()
-    scan(spark, snap, files(snap, FilePrune.key(convId, snap.numBuckets)))
-      .filter(col("conv_id") === convId && !col(graft.model.Model.deletedColumn))
-  }
+  def readKey(spark: SparkSession, convId: String): DataFrame =
+    scan(spark, loadCurrent(), LibraryRead(tombstones = false))
+      .filter(col("conv_id") === convId)
 
   /** The complete lineage ledger: every commit's entry across all
     * RETAINED snapshot versions, in commit order (expiry drops the history
@@ -1087,6 +1045,29 @@ object ChronicleTable {
     case RangeKey(p, lo, hi) => Some((p, lo.toLong, hi.toLong))
     case NumberedKey(p, n) => Some((p, n.toLong, n.toLong))
     case _ => None
+  }
+
+  /** Ledger key prefixes that are not sources: maintenance commits
+    * (compaction, rescale, SQL `ALTER TABLE`) and the chain's cursor-only
+    * placeholder (`_chain`, never carries rows).
+    */
+  val nonSources: Set[String] = Set("compact", "rescale", "altersql", "_chain")
+
+  /** Units each source has committed into `snap`: its ledger prefix's
+    * contiguous floor (0..floor) plus the window's keys beyond it. A
+    * numbered key `p#n` is one unit — one pipeline batch or stream epoch; a
+    * range key `p#lo-hi` spans hi-lo+1 (segments, upstream or table
+    * versions); a key of neither shape counts once.
+    */
+  def committedUnits(snap: Snapshot): Map[String, Long] = {
+    val window = snap.committedBatches.keys.toSeq.map(k => keyRange(k) match {
+      case Some((p, lo, hi)) =>
+        p -> (hi - math.max(lo, snap.floors.getOrElse(p, -1L) + 1L) + 1L).max(0L)
+      case None => k.takeWhile(_ != '#') -> 1L
+    })
+    (snap.floors.toSeq.map { case (p, f) => p -> (f + 1L) } ++ window)
+      .filterNot(u => nonSources(u._1))
+      .groupMapReduce(_._1)(_._2)(_ + _)
   }
 
   /** Has `batchKey` been committed into `snap`? Either fully covered by the
@@ -1219,7 +1200,9 @@ object ChronicleTable {
       .asInstanceOf[Long].toInt
   }
 
-  /** Per-key last-writer-wins merge of a base+delta scan: one shuffle by
+  /** Per-key last-writer-wins merge of a base+delta scan for the writers
+    * that rewrite buckets (compaction, rescale, the copy-on-write survivor
+    * scan; readers merge inside the DSv2 scan instead): one shuffle by
     * key + one reduce-side sort + row_number filter — the write-side
     * dedup's window ([[graft.ops.Dedup.latestByKeyWindow]]). NOT
     * `max_by(struct(...))`: a string-bearing struct buffer plans as

@@ -4,14 +4,19 @@ import org.apache.spark.sql.sources
 
 /** The table's one file-pruning rule: which manifests and data files a read
   * or a merge must see. Every reader ([[ChronicleTable.files]] and the
-  * readers built on it), the Catalyst scan ([[ChronicleFileIndex]]), the
-  * DSv2 scan, the change stream and the merge planner decide through
-  * [[keeps]], so the soundness rules below hold everywhere at once:
+  * readers built on it), the DSv2 scan they all plan through (its pushed
+  * filters, via [[of]]), the change stream and the merge planner decide
+  * through [[keeps]], so the soundness rules below hold everywhere at once:
   *
   *  - entries without stats are kept: ts (0, 0), `_lsn` below 0;
   *  - ts bounds never drop a merge-on-read delta file, nor a manifest that
-  *    holds one (a kept delta can only displace or tombstone a base row,
-  *    never resurrect a pruned one);
+  *    holds one; in such a bucket they drop a base file only when every
+  *    delta is newer than all its rows (known `_lsn` stats). A delta is not
+  *    always newer than the base row it overlays (an unordered source, or
+  *    a second source with lower `_lsn`s): a base winner pruned by ts would
+  *    let the older delta version resurface. A newer delta can only
+  *    displace or tombstone a pruned base row, never resurrect it (base
+  *    files of a bucket hold disjoint keys);
   *  - each `_lsn` side is checked only against the stat on that side: the
   *    lower bound against `maxLsn`, the upper bound against `minLsn`;
   *  - key bounds apply to base and delta files alike (a delta whose key
@@ -34,9 +39,15 @@ final case class FilePrune(
       (m.deltaFiles > 0 || tsOk(m.minTsMs, m.maxTsMs)) &&
       lsnOk(m.minLsn, m.maxLsn)
 
-  def keeps(f: DataFileMeta): Boolean =
-    buckets.forall(_.contains(f.bucket)) && keyOk(f.minKey, f.maxKey) &&
-      (f.delta || tsOk(f.minTsMs, f.maxTsMs)) && lsnOk(f.minLsn, f.maxLsn)
+  /** The files of one bucket (its manifest's) that the rule keeps. */
+  def keepIn(bucket: Seq[DataFileMeta]): Seq[DataFileMeta] = {
+    val oldestDelta = bucket.filter(_.delta).map(_.minLsn).minOption
+    def tsDrops(f: DataFileMeta) = !f.delta &&
+      oldestDelta.forall(d => f.maxLsn >= 0L && f.maxLsn < d)
+    bucket.filter(f => buckets.forall(_.contains(f.bucket)) &&
+      keyOk(f.minKey, f.maxKey) && (!tsDrops(f) || tsOk(f.minTsMs, f.maxTsMs)) &&
+      lsnOk(f.minLsn, f.maxLsn))
+  }
 
   private def keyOk(lo: String, hi: String): Boolean =
     minKey.forall(hi >= _) && maxKey.forall(lo <= _)
@@ -50,11 +61,6 @@ final case class FilePrune(
 
 object FilePrune {
 
-  /** The files holding one key: its hash bucket, and key ranges covering it. */
-  def key(convId: String, numBuckets: Int): FilePrune =
-    FilePrune(Some(Set(ChronicleTable.bucketOf(convId, numBuckets))),
-      Some(convId), Some(convId))
-
   /** The smallest long strictly above `v`, saturating at `Long.MaxValue`. */
   def above(v: Long): Long = if (v == Long.MaxValue) v else v + 1L
 
@@ -62,19 +68,20 @@ object FilePrune {
 
   /** The rule a set of ANDed source filters implies: `conv_id` equality,
     * IN and range (plus hash-bucket pruning on equality and IN), `ts`
-    * bounds and `_lsn` LOWER bounds. Filter shapes it does not understand
-    * are ignored — extra files are merely scanned, never wrong.
+    * bounds and `_lsn` bounds. Filter shapes it does not understand are
+    * ignored — extra files are merely scanned, never wrong.
     *
-    * An `_lsn` upper bound is not taken: the filters may sit above a
-    * merge-on-read LWW fold (the DSv2 scan's visible state), and a file
-    * pruned for holding only newer versions would resurrect the rows those
-    * versions displace. A lower bound is sound there — a pruned file's
-    * rows lose the LWW comparison to every row that passes the filter.
+    * Above a merge-on-read LWW fold (`merged`, the DSv2 scan's visible
+    * state) an `_lsn` upper bound is not taken: a file pruned for holding
+    * only newer versions would resurrect the rows those versions displace.
+    * A lower bound is sound there — a pruned file's rows lose the LWW
+    * comparison to every row that passes the filter.
     */
-  def of(filters: Seq[sources.Filter], numBuckets: Int): FilePrune = {
+  def of(filters: Seq[sources.Filter], numBuckets: Int,
+      merged: Boolean): FilePrune = {
     val (kLo, kHi) = bounds(filters, "conv_id", asKey)
     val (tLo, tHi) = bounds(filters, "ts", asTsMillis)
-    val (lLo, _) = bounds(filters, graft.model.Model.lsnColumn, asLsn)
+    val (lLo, lHi) = bounds(filters, graft.model.Model.lsnColumn, asLsn)
     val eq = filters.collect {
       case sources.EqualTo("conv_id", v: String) => Set(v)
       case sources.In("conv_id", vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
@@ -85,7 +92,8 @@ object FilePrune {
         .map(_.map(ChronicleTable.bucketOf(_, numBuckets))),
       minKey = kLo, maxKey = kHi,
       fromTsMs = tLo.getOrElse(Long.MinValue), toTsMs = tHi.getOrElse(Long.MaxValue),
-      fromLsn = lLo.getOrElse(Long.MinValue))
+      fromLsn = lLo.getOrElse(Long.MinValue),
+      toLsn = lHi.filter(_ => !merged).getOrElse(Long.MaxValue))
   }
 
   /** Inclusive (lower, upper) bounds the filters put on column `name`.

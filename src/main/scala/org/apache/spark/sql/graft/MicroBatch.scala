@@ -1,10 +1,12 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.classic.{DataFrame, Dataset}
+import org.apache.spark.sql.classic.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 /** A Spark-internal bridge, isolated with the engine's other one
-  * ([[SourceFilters]]) in an `org.apache.spark.sql.*` package for
+  * ([[DatasetFactory]], below) in an `org.apache.spark.sql.*` package for
   * `private[sql]` access (the same technique the open lakehouse formats use
   * for their streaming sinks).
   *
@@ -27,4 +29,15 @@ object MicroBatch {
       isStreaming = false)
     Dataset.ofRows(ds.sparkSession, node)
   }
+}
+
+/** A DataFrame over a DataSource v2 table OBJECT (not a name or a path):
+  * the engine's readers hand Spark a snapshot pinned in memory, and
+  * `Dataset.ofRows` — the only way to root a DataFrame at a given logical
+  * plan — is `private[sql]`.
+  */
+object DatasetFactory {
+  def ofTable(spark: org.apache.spark.sql.SparkSession, table: Table): DataFrame =
+    Dataset.ofRows(spark.asInstanceOf[SparkSession],
+      DataSourceV2Relation.create(table, None, None))
 }

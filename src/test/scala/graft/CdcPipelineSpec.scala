@@ -113,6 +113,35 @@ class CdcPipelineSpec extends SparkSpec {
       s"listener progress metrics missing: $modes")
   }
 
+  test("RunCdc stats counts committed ledger units: N pipeline batches, one stream epoch") {
+    def statsLine(root: String): String = {
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(out)(graft.cdc.RunCdc.run(spark, Array("stats", root)))
+      out.toString.linesIterator.next()
+    }
+    val cfg = BinlogConfig(numEvents = 600, numConversations = 6, segmentSize = 100)
+    val src = tmpDir("binlog-stats")
+    BinlogGenerator.writeSegments(spark, cfg, src)
+    val p = new CdcPipeline(PipelineConfig(src, tmpDir("table-stats"),
+      segmentsPerBatch = 1, numBuckets = 2))
+    val n = p.runAll(spark)
+    assert(n == cfg.numSegments && n > 1)
+    // the commit folds contiguous keys into the ledger floor: the window
+    // alone is empty
+    assert(p.table.loadCurrent().committedBatches.isEmpty)
+    assert(statsLine(p.cfg.tableRoot).contains(s" units=$n "), statsLine(p.cfg.tableRoot))
+    // a maintenance commit is not a source's unit
+    assert(graft.ops.Compaction(spark, p.table, maxFilesPerBucket = 0).addedFiles > 0)
+    assert(statsLine(p.cfg.tableRoot).contains(s" units=$n "), statsLine(p.cfg.tableRoot))
+
+    val ss = new CdcPipeline(PipelineConfig(src, tmpDir("table-stats-ss"),
+      sourceId = "sst", numBuckets = 2))
+    ss.startStream(spark, tmpDir("ckpt-stats"), maxFilesPerTrigger = 1000)
+      .awaitTermination()
+    assert(ss.table.fullLineage().map(_.batchKey) == Seq("sst-ss#0"))
+    assert(statsLine(ss.cfg.tableRoot).contains(" units=1 "), statsLine(ss.cfg.tableRoot))
+  }
+
   test("streaming backpressure: trigger size adapts to the measured epoch rate") {
     val cfg = BinlogConfig(numEvents = 1200, numConversations = 10,
       segmentSize = 100, dupPct = 5)

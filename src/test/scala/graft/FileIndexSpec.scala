@@ -5,27 +5,19 @@ import graft.ops.MergeInto
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** ChronicleFileIndex: Catalyst-pushed filters over a plain
-  * `ChronicleTable.read` (or SQL over a registered view) prune data files
-  * at the MANIFEST during planning — the lakehouse-format integration
-  * point. Asserted through the executed plan's `numFiles` scan metric,
-  * which counts the files the scan actually planned over.
+/** Catalyst-pushed filters over a plain `ChronicleTable.read` (or SQL
+  * over a registered view) prune data files at the MANIFEST during
+  * planning — the lakehouse-format integration point. Asserted through
+  * the files the planned DSv2 scan partitions hold
+  * ([[SparkSpec.plannedFiles]]).
   */
 class FileIndexSpec extends SparkSpec {
 
   import spark.implicits._
 
-  /** Files the executed plan's parquet scans touched, including scans
-    * below adaptive query stages (a merge-on-read read shuffles).
-    */
-  private def scanFileCount(df: DataFrame): Long = {
-    df.collect()
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-      .collect(df.queryExecution.executedPlan) {
-        case s: FileSourceScanExec => s.metrics("numFiles").value
-      }.sum
-  }
+  /** The data files the query's graft scans planned. */
+  private def planned(df: DataFrame): Set[String] =
+    plannedFiles(df).toSet
 
   private def dayMs(d: Int) = 1704067200000L + d.toLong * 86400000L
 
@@ -52,33 +44,33 @@ class FileIndexSpec extends SparkSpec {
     val files = t.filesOf(snap)
     val total = files.size.toLong
     val full = t.read(spark)
-    assert(scanFileCount(full) == total)
+    assert(planned(full) == files.map(_.path).toSet)
 
     // expectations derived from the manifest bounds themselves (each
     // commit hash-splits into >1 file, so counts are not hardcoded)
     val k = "conv-1-005"
-    val keyFiles = files.count(f => f.minKey <= k && f.maxKey >= k).toLong
-    assert(keyFiles < total)
+    val keyFiles = files.filter(f => f.minKey <= k && f.maxKey >= k).map(_.path).toSet
+    assert(keyFiles.size < total)
     val byKey = t.read(spark).filter(col("conv_id") === k)
-    assert(scanFileCount(byKey) == keyFiles,
-      s"key equality must plan $keyFiles of $total files")
+    assert(planned(byKey) == keyFiles,
+      s"key equality must plan ${keyFiles.size} of $total files")
     assert(byKey.count() == 1)
 
-    val tsFiles = files.count(f =>
-      f.minTsMs <= dayMs(2) - 1 && f.maxTsMs >= dayMs(1)).toLong
-    assert(tsFiles < total)
+    val tsFiles = files.filter(f =>
+      f.minTsMs <= dayMs(2) - 1 && f.maxTsMs >= dayMs(1)).map(_.path).toSet
+    assert(tsFiles.size < total)
     val byTs = t.read(spark).filter(
       col("ts") >= to_timestamp(lit(new java.sql.Timestamp(dayMs(1)))) &&
         col("ts") < to_timestamp(lit(new java.sql.Timestamp(dayMs(2)))))
-    assert(scanFileCount(byTs) == tsFiles,
-      s"ts range must plan $tsFiles of $total files")
+    assert(planned(byTs) == tsFiles,
+      s"ts range must plan ${tsFiles.size} of $total files")
     assert(byTs.count() == 10)
 
-    val lsnFiles = files.count(_.maxLsn > 199L).toLong
-    assert(lsnFiles < total)
+    val lsnFiles = files.filter(_.maxLsn > 199L).map(_.path).toSet
+    assert(lsnFiles.size < total)
     val byLsn = t.read(spark).filter(col("_lsn") > 199L)
-    assert(scanFileCount(byLsn) == lsnFiles,
-      s"_lsn lower bound must plan $lsnFiles of $total files")
+    assert(planned(byLsn) == lsnFiles,
+      s"_lsn lower bound must plan ${lsnFiles.size} of $total files")
     assert(byLsn.count() == 10)
 
     // the pruned plans return exactly what an unpruned filter would
@@ -91,7 +83,10 @@ class FileIndexSpec extends SparkSpec {
     daysTable.read(spark).createOrReplaceTempView("fidx_conversations")
     val q = spark.sql(
       "SELECT conv_id, text FROM fidx_conversations WHERE conv_id = 'conv-2-003'")
-    assert(scanFileCount(q) == 1L, "SQL key filter must plan one file")
+    val k = "conv-2-003"
+    assert(planned(q) == daysTable.filesOf(daysTable.loadCurrent())
+      .filter(f => f.minKey <= k && f.maxKey >= k).map(_.path).toSet)
+    assert(planned(q).size == 1, "SQL key filter must plan one file")
     assert(q.collect().map(_.getString(0)).toSeq == Seq("conv-2-003"))
   }
 
@@ -117,7 +112,7 @@ class FileIndexSpec extends SparkSpec {
       scans.head.scan.readSchema())
   }
   private def dsv2FileCount(df: DataFrame): Long =
-    dsv2Scan(df)._1.flatMap(_.files.map(_._1)).distinct.size.toLong
+    dsv2Scan(df)._1.flatMap(partitionPaths).distinct.size.toLong
 
   test("graft catalog: SQL reads plan through manifest+bucket pruning, prune columns, and time travel") {
     val t = daysTable
@@ -140,7 +135,7 @@ class FileIndexSpec extends SparkSpec {
     val q = spark.sql(
       s"SELECT conv_id, text FROM graft_fidx.`$name` WHERE conv_id = '$k'")
     val (parts, readSchema) = dsv2Scan(q)
-    assert(parts.flatMap(_.files.map(_._1)).distinct.size.toLong == keyFiles,
+    assert(parts.flatMap(partitionPaths).distinct.size.toLong == keyFiles,
       s"SQL key filter must plan $keyFiles files")
     assert(q.collect().map(_.getString(0)).toSeq == Seq(k))
     assert(!readSchema.fieldNames.contains("role") &&
@@ -282,15 +277,45 @@ class FileIndexSpec extends SparkSpec {
     }.toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
     MergeInto(spark, p.table, batch(0, 64), "m#0", "t", mergeOnRead = true)
     MergeInto(spark, p.table, batch(64, 64), "m#1", "t", mergeOnRead = true)
-    val total = p.table.loadCurrent().numFiles
+    val snap = p.table.loadCurrent()
+    val total = snap.numFiles
 
     val one = p.table.read(spark).filter(col("conv_id") === "conv-3")
-    val scanned = scanFileCount(one)
-    assert(scanned > 0 && scanned < total,
-      s"key filter did not push below the LWW merge ($scanned of $total files)")
+    val scanned = planned(one)
+    val key = graft.table.FilePrune(Some(Set(graft.table.ChronicleTable.bucketOf("conv-3", 4))),
+      Some("conv-3"), Some("conv-3"))
+    assert(scanned == p.table.files(snap, key)
+      .map(_.path).toSet)
+    assert(scanned.nonEmpty && scanned.size < total,
+      s"key filter did not push below the LWW merge (${scanned.size} of $total files)")
     // and the merged result is right: LWW over base+deltas for that key only
     val expect = p.table.read(spark).collect()
       .filter(_.getAs[String]("conv_id") == "conv-3").toSet
     assert(one.collect().toSet == expect)
+  }
+
+  test("a ts filter keeps the base winner of a delta-carrying bucket") {
+    // an unordered source's late delta is OLDER than the base row it
+    // overlays: pruning the base file by ts would let the delta win
+    val p = new CdcPipeline(PipelineConfig("", tmpDir("fidx-late"), numBuckets = 1))
+    p.ensureTable()
+    def row(lsn: Long, op: String, day: Int) =
+      Seq((lsn, op, "conv-k", 0, "user", s"text $lsn", None: Option[String],
+        new java.sql.Timestamp(dayMs(day))))
+        .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+    MergeInto(spark, p.table, row(100L, "I", 2), "late#0", "t", orderedSource = false)
+    MergeInto(spark, p.table, row(50L, "U", 1), "late#1", "t", orderedSource = false,
+      mergeOnRead = true)
+    val t = p.table
+    assert(t.hasDeltas(t.loadCurrent()))
+    assert(t.read(spark).select(graft.model.Model.lsnColumn).as[Long].collect()
+      .toSeq == Seq(100L))
+
+    val day1 = col("ts") >= new java.sql.Timestamp(dayMs(1)) &&
+      col("ts") < new java.sql.Timestamp(dayMs(2))
+    assert(t.read(spark).filter(day1).count() == 0L)
+    assert(t.readSlice(spark, dayMs(1), dayMs(2) - 1L).count() == 0L)
+    assert(spark.read.format("graft").load(t.root).filter(day1).count() == 0L)
+    assert(planned(t.read(spark).filter(day1)) == t.filesOf(t.loadCurrent()).map(_.path).toSet)
   }
 }

@@ -81,22 +81,31 @@ class PlanSpec extends SparkSpec {
       !pCow.contains("Exchange"),
       s"delta-free read lost its bare-scan plan:\n${pCow.linesIterator.take(8).mkString("\n")}")
 
-    // MOR table: read merges via ONE key shuffle + window (no SortAggregate
-    // — max_by over a string-bearing struct would sort on BOTH exchange
-    // sides; the window plan sorts once, reduce-side)
+    // MOR table: read and point lookup merge inside the scan (one sorted
+    // k-way merge per delta-carrying bucket) — no shuffle, no window, no
+    // aggregate
     val mor = new CdcPipeline(PipelineConfig(src, tmpDir("table-planmor"),
       segmentsPerBatch = 1, numBuckets = 2, mergeOnRead = true))
     mor.runAll(spark)
-    val pMor = plan(mor.table.read(spark))
-    assert(pMor.contains("Window"), pMor.linesIterator.take(8).mkString("\n"))
-    assert(!pMor.contains("SortAggregate") && !pMor.contains("SortMergeJoin"), pMor)
-    assert("Exchange".r.findAllIn(pMor).size == 1,
-      s"MOR read should shuffle exactly once:\n${pMor.linesIterator.take(10).mkString("\n")}")
+    assert(mor.table.hasDeltas(mor.table.loadCurrent()))
+    val kMor = mor.table.read(spark)
+      .agg(org.apache.spark.sql.functions.min("conv_id"))
+      .collect()(0).getString(0)
+    for ((what, df) <- Seq("read" -> mor.table.read(spark),
+        "readKey" -> mor.table.readKey(spark, kMor))) {
+      val pMor = plan(df)
+      assert(!pMor.contains("Exchange") && !pMor.contains("Window") &&
+        !pMor.contains("Aggregate"),
+        s"MOR $what must merge without a shuffle:\n${pMor.linesIterator.take(10).mkString("\n")}")
+      assert(pMor.contains("BatchScan"), pMor)
+    }
 
-    // changelog read: the _lsn cursor filter reaches the parquet scan
-    val pChg = plan(cow.table.readChanges(spark, sinceVersion = 1L))
-    assert(pChg.contains("PushedFilters") && pChg.contains("GreaterThan(_lsn"),
-      s"changelog _lsn filter not pushed:\n${pChg.linesIterator.take(8).mkString("\n")}")
+    // changelog read: the _lsn cursor filter is among the DSv2 scan's
+    // pushed filters (its description lists them as source filters)
+    def pushed(p: String) = p.linesIterator.filter(_.contains("BatchScan"))
+      .map(_.replaceAll("^.*pushed=", "")).mkString("\n")
+    val pChg = pushed(plan(cow.table.readChanges(spark, sinceVersion = 1L)))
+    assert(pChg.contains("GreaterThan(_lsn"), s"changelog _lsn filter not pushed: $pChg")
 
     // point lookup: bare scan (no merge/shuffle) with the key equality
     // pushed down to the parquet row groups
@@ -106,7 +115,7 @@ class PlanSpec extends SparkSpec {
     val pKey = plan(cow.table.readKey(spark, k))
     assert(!pKey.contains("Exchange") && !pKey.contains("Window"),
       s"point lookup should stay a bare filtered scan:\n${pKey.linesIterator.take(8).mkString("\n")}")
-    assert(pKey.contains("EqualTo(conv_id"),
+    assert(pushed(pKey).contains("EqualTo(conv_id"),
       s"point-lookup key filter not pushed:\n${pKey.linesIterator.take(8).mkString("\n")}")
   }
 
@@ -164,6 +173,41 @@ class PlanSpec extends SparkSpec {
       assert(cow == Seq(6, 7, 7), s"jobs per copy-on-write commit moved: $cow")
       assert(mor == Seq(6, 6, 6), s"jobs per merge-on-read commit moved: $mor")
     }
+  }
+
+  test("counter guard: a merge-on-read lookup and a changelog poll each run one job; planning builds no reader") {
+    import graft.cdc.{CdcPipeline, PipelineConfig}
+    import graft.source.{BinlogConfig, BinlogGenerator}
+    import graft.table.FilePrune
+    val cfg = BinlogConfig(numEvents = 600, numConversations = 6, segmentSize = 200)
+    val src = tmpDir("binlog-readjobs")
+    BinlogGenerator.writeSegments(spark, cfg, src)
+    val p = new CdcPipeline(PipelineConfig(src, tmpDir("table-readjobs"),
+      segmentsPerBatch = 1, numBuckets = 2, mergeOnRead = true))
+    p.runAll(spark)
+    val snap = p.table.loadCurrent()
+    val k = p.table.read(spark)
+      .agg(org.apache.spark.sql.functions.min("conv_id"))
+      .collect()(0).getString(0)
+    val bucket = graft.table.ChronicleTable.bucketOf(k, 2)
+    assert(p.table.files(snap, FilePrune(Some(Set(bucket)), Some(k), Some(k))).exists(_.delta),
+      "fixture: the looked-up key's bucket must carry deltas")
+    withJobCounter { jobsOf =>
+      var rows = 0
+      // each ran 2 jobs while the merge was a key shuffle plus a window
+      assert(jobsOf { rows = p.table.readKey(spark, k).collect().length } == 1)
+      assert(rows > 0)
+      assert(jobsOf { p.table.readChanges(spark, 1L).collect() } == 1)
+    }
+    // a parquet reader broadcasts its Hadoop conf: broadcast ids taken
+    // around planning show that planning built none (it built two while
+    // the scan left its columnar support to be asked per partition)
+    val sc = spark.sparkContext
+    val before = sc.broadcast(0)
+    plannedFiles(p.table.readKey(spark, k))
+    val after = sc.broadcast(0)
+    assert(after.id == before.id + 1, s"planning broadcast ${after.id - before.id - 1} times")
+    before.destroy(); after.destroy()
   }
 
   test("counter guard: Spark jobs of a commit adding more than 256 files") {

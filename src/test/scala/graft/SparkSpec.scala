@@ -28,4 +28,21 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   def tmpDir(prefix: String): String = SparkSpec.tmpDir(prefix)
+
+  /** The data files a DataFrame's graft scans planned: the partitions of
+    * every `GraftScan` in its physical plan, adaptive stages included
+    * (`Dataset.inputFiles` sees no files under a DSv2 relation). Plans the
+    * query; runs nothing.
+    */
+  private[graft] def plannedFiles(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+            if b.scan.isInstanceOf[graft.sql.GraftScan] => b.inputPartitions
+      }.flatten.flatMap(partitionPaths)
+
+  /** The data files one scan partition reads. */
+  private[graft] def partitionPaths(p: org.apache.spark.sql.connector.read.InputPartition)
+      : Seq[String] =
+    p.asInstanceOf[graft.sql.GraftPartition].files.map(_.filePath.toPath.toString)
 }

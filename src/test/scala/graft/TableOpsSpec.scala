@@ -162,7 +162,7 @@ class TableOpsSpec extends SparkSpec {
     // state unchanged, and a point lookup now scans exactly ONE file
     assert(p.currentState(spark).collect().toSeq == stateBefore)
     val k = stateBefore.map(_.getString(0)).min
-    val scanned = p.table.readKey(spark, k).inputFiles
+    val scanned = plannedFiles(p.table.readKey(spark, k))
     assert(scanned.length == 1,
       s"point lookup should scan one range-split file, got ${scanned.length}")
   }
@@ -322,8 +322,7 @@ class TableOpsSpec extends SparkSpec {
     val hwm = p.table.loadVersion(sinceV).hwmLsn
     val changed = p.table.readChanges(spark, sinceV)
     val expected = files.filter(_.maxLsn > hwm).map(_.path).toSet
-    val scanned = changed.inputFiles.map(f =>
-      java.nio.file.Paths.get(new java.net.URI(f)).toString).toSet
+    val scanned = plannedFiles(changed).toSet
     assert(scanned == expected,
       s"changelog scanned ${scanned.size} files, expected ${expected.size} " +
         s"(of ${files.size} live)")
@@ -379,16 +378,14 @@ class TableOpsSpec extends SparkSpec {
     assert(rows.exists(_.getAs[String]("text") == "patched"))
     assert(!rows.exists(r => r.getAs[String]("conv_id") == "conv-1-005" &&
       r.getAs[String]("text") != "patched"), "stale pre-delta row leaked")
-    val scanned = slice.inputFiles.map(f =>
-      java.nio.file.Paths.get(new java.net.URI(f)).toString).toSet
+    val scanned = plannedFiles(slice).toSet
     assert(scanned == day1Base ++ deltaPaths,
       s"MOR slice scanned ${scanned.size} files, expected day-1 base " +
         s"(${day1Base.size}) + deltas (${deltaPaths.size})")
     // slice day 0: untouched day's answer, still no day-1/2 base scan
     val slice0 = p.table.readSlice(spark, dayMs(0), dayMs(1) - 1)
     assert(slice0.count() == 10)
-    val scanned0 = slice0.inputFiles.map(f =>
-      java.nio.file.Paths.get(new java.net.URI(f)).toString).toSet
+    val scanned0 = plannedFiles(slice0).toSet
     assert(scanned0.intersect(day1Base).isEmpty &&
       deltaPaths.subsetOf(scanned0))
   }
@@ -763,8 +760,7 @@ class TableOpsSpec extends SparkSpec {
     assert(pruned.map(_.path).toSet == day1)
     // the physical scan lists ONLY those files — untouched days never reach it
     val slice = p.table.readSlice(spark, dayMs(1), dayMs(2) - 1)
-    val scanned = slice.inputFiles.map(f =>
-      java.nio.file.Paths.get(new java.net.URI(f)).toString).toSet
+    val scanned = plannedFiles(slice).toSet
     assert(scanned == day1, s"scanned $scanned, expected $day1")
     assert(slice.count() == 10)
     // stat-less entries (pre-upgrade manifests) are conservatively kept at
@@ -1009,7 +1005,7 @@ class TableOpsSpec extends SparkSpec {
     assert(got.collect().toSet == expect.collect().toSet)
     // metadata-only planning: every scanned file is in the key's bucket
     val b = ChronicleTable.bucketOf(k, n)
-    val scanned = got.inputFiles
+    val scanned = plannedFiles(got)
     assert(scanned.nonEmpty && scanned.forall(_.contains(s"bucket=$b/")),
       s"lookup scanned outside bucket $b: ${scanned.mkString(",")}")
     // a key the table never saw plans to zero/irrelevant files and no rows
@@ -1074,7 +1070,7 @@ class TableOpsSpec extends SparkSpec {
     val kb = ChronicleTable.bucketOf(k, 4)
     val grid = Seq(
       FilePrune(minKey = Some(k), maxKey = Some(k)) -> ref(kLo = k, kHi = k),
-      FilePrune.key(k, 4) -> ref(Set(kb), k, k),
+      FilePrune(Some(Set(kb)), Some(k), Some(k)) -> ref(Set(kb), k, k),
       FilePrune(minKey = Some("conv-0-005"), maxKey = Some("conv-1-003")) ->
         ref(kLo = "conv-0-005", kHi = "conv-1-003"),
       FilePrune(Some(Set(0, 2))) -> ref(Set(0, 2)),
@@ -1090,54 +1086,37 @@ class TableOpsSpec extends SparkSpec {
       assert(pruned(prune) == want, s"$prune planned the wrong files")
     }
 
-    def local(uris: Array[String]) =
-      uris.map(u => java.nio.file.Paths.get(new java.net.URI(u)).toString).toSet
-    // plan walks that descend into adaptive query stages (a merge-on-read
-    // read shuffles, so its scan sits below a stage)
-    val stages = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-    def scanFiles(df: DataFrame): Long = {
-      df.collect()
-      import org.apache.spark.sql.execution.FileSourceScanExec
-      stages.collect(df.queryExecution.executedPlan) {
-        case s: FileSourceScanExec => s.metrics("numFiles").value
-      }.sum
-    }
-    def dsv2Files(df: DataFrame): Set[String] = {
-      df.collect()
-      import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-      stages.collect(df.queryExecution.executedPlan) { case b: BatchScanExec => b }
-        .flatMap(_.batch.planInputPartitions()
-          .flatMap(_.asInstanceOf[graft.sql.GraftPartition].files.map(_._1))).toSet
-    }
+    // every reader is the same DSv2 scan: compare the files it planned
+    def scanFiles(df: DataFrame): Set[String] = plannedFiles(df).toSet
 
     // the dedicated readers, by the files they hand the scan
     val d0 = keys(0).head // a key with a delta
-    assert(local(p.table.readKey(spark, d0).inputFiles) ==
+    assert(scanFiles(p.table.readKey(spark, d0)) ==
       ref(Set(ChronicleTable.bucketOf(d0, 4)), d0, d0))
-    assert(local(p.table.readKey(spark, k).inputFiles) == ref(Set(kb), k, k))
-    assert(local(p.table.readSlice(spark, dayMs(1), dayMs(2) - 1).inputFiles) ==
+    assert(scanFiles(p.table.readKey(spark, k)) == ref(Set(kb), k, k))
+    assert(scanFiles(p.table.readSlice(spark, dayMs(1), dayMs(2) - 1)) ==
       ref(tLo = dayMs(1), tHi = dayMs(2) - 1))
     val since = p.table.loadVersion(sinceV)
     val thr = Seq(since.hwmFor("a"), since.hwmFor("b")).min
     assert(thr == 16L)
-    assert(local(p.table.readChanges(spark, sinceV).inputFiles) == ref(lLo = thr + 1))
-    assert(local(p.table.scanLsnInterval(spark, snap, 5L, 11L).inputFiles) ==
+    assert(scanFiles(p.table.readChanges(spark, sinceV)) == ref(lLo = thr + 1))
+    assert(scanFiles(p.table.scanLsnInterval(spark, snap, 5L, 11L)) ==
       ref(lLo = 5L, lHi = 11L))
 
-    // a plain read: Catalyst pushes key filters through the LWW window
+    // a plain read: Catalyst pushes key filters into the scan's pruning
     assert(scanFiles(p.table.read(spark).filter(col("conv_id") === k)) ==
-      ref(Set(kb), k, k).size)
+      ref(Set(kb), k, k))
     assert(scanFiles(p.table.read(spark).filter(
       col("conv_id") >= "conv-0-005" && col("conv_id") <= "conv-1-003")) ==
-      ref(kLo = "conv-0-005", kHi = "conv-1-003").size)
+      ref(kLo = "conv-0-005", kHi = "conv-1-003"))
 
-    // format("graft"), by the files of its planned partitions
+    // format("graft") plans the same scan
     def dsv2 = spark.read.format("graft").load(root)
-    assert(dsv2Files(dsv2.filter(col("conv_id") === k)) == ref(Set(kb), k, k))
-    assert(dsv2Files(dsv2.filter(col("ts") >= new java.sql.Timestamp(dayMs(1)) &&
+    assert(scanFiles(dsv2.filter(col("conv_id") === k)) == ref(Set(kb), k, k))
+    assert(scanFiles(dsv2.filter(col("ts") >= new java.sql.Timestamp(dayMs(1)) &&
       col("ts") < new java.sql.Timestamp(dayMs(2)))) ==
       ref(tLo = dayMs(1), tHi = dayMs(2) - 1))
-    assert(dsv2Files(dsv2.filter(col("_lsn") > 16L)) == ref(lLo = 17L))
+    assert(scanFiles(dsv2.filter(col("_lsn") > 16L)) == ref(lLo = 17L))
     // an _lsn UPPER bound must not prune below the LWW merge (neither a
     // file nor a parquet row group): the day-0 deltas (lsn 200+) displace
     // base rows whose lsn passes the filter
