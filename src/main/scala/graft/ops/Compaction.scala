@@ -12,8 +12,10 @@ import org.apache.spark.sql.functions._
   * small files continuously and relies on downstream batching,
   * LocalFileSink.java:183-252; a lakehouse table must compact instead).
   * Compaction rewrites the buckets whose file count exceeds a threshold
-  * and drops tombstones older than `tombstoneHorizonLsn` (a tombstone only
-  * needs to outlive the maximum redelivery window of the source).
+  * (and every bucket holding a merge-on-read delta) and drops tombstones
+  * older than `tombstoneHorizonLsn` (a tombstone only needs to outlive the
+  * maximum redelivery window of the source). Victims read through the
+  * readers' scan ([[ChronicleTable.readRewrite]]), merging with no shuffle.
   *
   * The rewrite is a SORT-ORDERED, SIZE-BOUNDED split (Iceberg's bin-pack +
   * sort rewrite): rows range-partition on (bucket, conv_id) into
@@ -95,18 +97,13 @@ object Compaction {
     if (targets.isEmpty)
       return CompactionResult(base, 0, 0, 0, 0)
 
-    val schema = base.schema
     val victims = targets.values.flatten.toSeq
-    val src = spark.read.schema(schema).parquet(victims.map(_.path): _*)
-    // LWW-collapse base+delta versions per key BEFORE the tombstone horizon
-    // filter: dropping an old tombstone pre-merge would let the even-older
-    // base row it masks win the merge and resurrect a deleted key
-    val merged =
-      if (victims.exists(_.delta)) ChronicleTable.mergeDeltas(src, schema)
-      else src
+    // The horizon filter sits ABOVE the scan's LWW merge: dropping an old
+    // tombstone pre-merge would let the even-older base row it masks win
+    // the merge and resurrect a deleted key
     val horizonDrop = col(Model.deletedColumn) &&
       col(Model.lsnColumn) <= lit(tombstoneHorizonLsn)
-    val kept = merged.filter(!horizonDrop)
+    val kept = table.readRewrite(spark, base, victims).filter(!horizonDrop)
 
     val (next, added) = rewrite(table, base, "compact", "compaction",
       victims, kept, base.numBuckets, targetRowsPerFile)

@@ -44,11 +44,13 @@ case class MergeResult(
   *      range, affected bucket set, op counts and the lineage checksum;
   *   3. file pruning is metadata-only: only files in affected buckets whose
   *      conv_id range intersects the batch's are rewritten — untouched files
-  *      carry forward in the manifest without any IO;
-  *   4. the existing-LSN guard reads ONLY (conv_id, turn_idx, _lsn) of
-  *      touched files (column-pruned parquet scan) and semi-joins a
-  *      broadcast of the batch keys — result is at most batch-sized;
-  *   5. survivors = touched-files LEFT ANTI JOIN broadcast(winner keys):
+  *      carry forward in the manifest without any IO (a touched delta
+  *      brings its whole bucket);
+  *   4. touched files read key-unique through the readers' scan
+  *      ([[ChronicleTable.readRewrite]]); the existing-LSN guard reads ONLY
+  *      (conv_id, turn_idx, _lsn) of them and semi-joins a broadcast of
+  *      the batch keys — result is at most batch-sized;
+  *   5. survivors = touched rows LEFT ANTI JOIN broadcast(winner keys):
   *      table data never shuffles, it streams through whole-stage codegen;
   *   6. new files are hash-split within each bucket and sorted by
   *      (bucket, conv_id, turn_idx) inside every file, so parquet row-group
@@ -441,14 +443,19 @@ object MergeInto {
       }
 
       // --- metadata-only file pruning --------------------------------------
-      val touched = table.files(base,
+      // The commit removes a touched delta whole, with rows of keys whose
+      // base file the key range pruned: its whole bucket comes along, or
+      // those rows would land as second base rows beside the pruned ones.
+      val pruned = table.files(base,
         FilePrune(Some(buckets), Some(minKey), Some(maxKey)))
-      val touchedPaths = touched.map(_.path)
+      val deltaBuckets = pruned.filter(_.delta).map(_.bucket).toSet
+      val touched =
+        if (deltaBuckets.isEmpty) pruned
+        else pruned.filterNot(f => deltaBuckets(f.bucket)) ++
+          table.files(base, FilePrune(Some(deltaBuckets)))
       val touchedRows = touched.map(_.rows).sum
-      // Touched delta files fold into this rewrite: a key may then appear
-      // several times across the touched set (base + newer delta versions),
-      // so the guard and survivor scans must LWW-collapse it first.
-      val touchedHasDeltas = touched.exists(_.delta)
+      // key-unique: the scan LWW-merges each delta-carrying bucket
+      lazy val current = table.readRewrite(sess, base, touched)
 
       // Broadcast the batch-key side only when the table side dwarfs it:
       // building a broadcast hash relation is SERIAL driver work (collect +
@@ -465,16 +472,12 @@ object MergeInto {
       val winners: DataFrame =
         if (touched.isEmpty || orderedSource) deduped
         else {
-          val keyLsnSchema = StructType(physicalSchema.fields.filter(f =>
-            Model.keyColumns.contains(f.name) || f.name == Model.lsnColumn))
-          // max per key: exact in pure-CoW (keys unique across base files,
-          // the agg is a no-op) and REQUIRED once touched deltas can carry
-          // several versions of one key
-          val contested = sess.read.schema(keyLsnSchema).parquet(touchedPaths: _*)
+          // one existing row per contested key: the scan merged its versions
+          val contested = current
+            .select((Model.keyColumns :+ Model.lsnColumn).map(col): _*)
             .join(maybeBroadcast(deduped.select(Model.keyColumns.map(col): _*)),
               Model.keyColumns, "left_semi")
-            .groupBy(Model.keyColumns.map(col): _*)
-            .agg(max(col(Model.lsnColumn)).as("__existing_lsn"))
+            .withColumnRenamed(Model.lsnColumn, "__existing_lsn")
           // contested is at most batch-sized, which a bulk unordered backfill
           // can push past the broadcast cutoff — gate it like every other
           // batch-derived side (AQE falls back to a shuffled join).
@@ -485,19 +488,12 @@ object MergeInto {
         }
 
       // --- survivors: touched rows whose key is NOT displaced --------------
+      // (conformed: the scan reads the base schema, the commit the evolved)
       val winnerKeys = winners.select(Model.keyColumns.map(col): _*)
       val survivors: Option[DataFrame] =
         if (touched.isEmpty) None
-        else {
-          val scan = sess.read.schema(physicalSchema).parquet(touchedPaths: _*)
-          // collapse base+delta versions of a key before the rewrite — the
-          // new base files must be key-unique (pure-CoW scans already are,
-          // and skip the aggregate)
-          val collapsed =
-            if (touchedHasDeltas) ChronicleTable.mergeDeltas(scan, physicalSchema)
-            else scan
-          Some(collapsed.join(maybeBroadcast(winnerKeys), Model.keyColumns, "left_anti"))
-        }
+        else Some(conform(current, physicalSchema)
+          .join(maybeBroadcast(winnerKeys), Model.keyColumns, "left_anti"))
 
       // Winning deletes persist as tombstones (payload nulled), so a later
       // redelivery of an older change for the key loses the LSN comparison
@@ -531,7 +527,7 @@ object MergeInto {
         else 256L
       val added = writeStaged(newData,
         bytesHint = touchedBytes + n * avgRowBytes)
-      val (next, upserts, deletes) = commitFiles(touchedPaths, added)
+      val (next, upserts, deletes) = commitFiles(touched.map(_.path), added)
       MergeResult(next, skipped = false, upserts, deletes, touched.size, added.size)
     } finally dedupedAll.unpersist()
   }

@@ -10,9 +10,10 @@ import org.apache.spark.sql.SparkSession
   * grows — at 100 TB a 32-bucket layout serializes merge writes and makes
   * every batch touch every bucket's manifest. Iceberg solves this with
   * partition-spec evolution; here the layout is one hash transform deep,
-  * so rescaling IS a full rewrite: read every live row (folding any
-  * merge-on-read deltas in the same pass), re-bucket under the new
-  * transform, and commit with the previous inventory removed. Readers see
+  * so rescaling IS a full rewrite: read every live row through the
+  * readers' scan (its LWW merge folds merge-on-read deltas, no shuffle),
+  * re-bucket under the new transform, and commit with the previous
+  * inventory removed. Readers see
   * the old or the new layout atomically; a concurrent merge that commits
   * first wins the version race and the rescale aborts cleanly (rebase is
   * impossible once its removed set changed — rerun at a quiet moment).
@@ -42,19 +43,12 @@ object Rescale {
     if (newNumBuckets == base.numBuckets)
       return RescaleResult(base, base.numBuckets, newNumBuckets, 0, 0)
 
-    val schema = base.schema
     val victims = table.filesOf(base)
-    val scan = spark.read.schema(schema).parquet(victims.map(_.path): _*)
-    // fold merge-on-read deltas in the same pass — the rewrite must emit
-    // key-unique base files
-    val rows =
-      if (victims.exists(_.delta)) ChronicleTable.mergeDeltas(scan, schema)
-      else scan
-
-    // the shared maintenance rewrite, bucketed under the NEW count
+    // the shared maintenance rewrite, bucketed under the NEW count; the
+    // scan folds merge-on-read deltas, so it emits key-unique base files
     val (next, added) = Compaction.rewrite(table, base, "rescale",
-      s"rescale-${base.numBuckets}-to-$newNumBuckets", victims, rows,
-      newNumBuckets, targetRowsPerFile)
+      s"rescale-${base.numBuckets}-to-$newNumBuckets", victims,
+      table.readRewrite(spark, base, victims), newNumBuckets, targetRowsPerFile)
     RescaleResult(next, base.numBuckets, newNumBuckets, victims.size, added.size)
   }
 }

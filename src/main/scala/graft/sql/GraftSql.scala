@@ -29,10 +29,10 @@ import scala.jdk.CollectionConverters._
   * Semantics: a scan serves the snapshot's VISIBLE state — merge-on-read
   * deltas LWW-collapse per key, tombstoned rows are hidden. The system
   * columns (`_lsn`, `_source`) stay queryable. The same scan serves every
-  * [[ChronicleTable]] reader too, told whether to merge and to keep
-  * tombstone winners ([[LibraryRead]]); each reader states its pruning as
-  * column filters: one LWW merge and one read path for the library, SQL
-  * and `format("graft")`.
+  * [[ChronicleTable]] reader and every rewrite, told whether to merge, to
+  * keep tombstone winners and which files a rewrite removes
+  * ([[LibraryRead]]); readers state their pruning as column filters: one
+  * LWW merge and one read path for the library, SQL and `format("graft")`.
   *
   * Scale shape:
   *  - filter pushdown prunes manifests and data files during planning
@@ -125,10 +125,11 @@ private[sql] class MissingGraftTable(root: String) extends Table with SupportsRe
 
 /** What one of [[ChronicleTable]]'s readers asks of the scan: `merge`
   * LWW-merges delta-carrying buckets (off = raw rows, superseded versions
-  * included), and `tombstones` keeps `_deleted` winners visible.
+  * included), `tombstones` keeps `_deleted` winners visible, and `rewrite`
+  * pins exactly the files a rewrite removes: no filter drops one of them.
   */
 private[graft] case class LibraryRead(merge: Boolean = true,
-    tombstones: Boolean = true)
+    tombstones: Boolean = true, rewrite: Option[Seq[DataFileMeta]] = None)
 
 /** One snapshot of one ChronicleTable as a DSv2 batch table. The snapshot
   * is PINNED at resolution time (repeatable reads within a query; time
@@ -316,7 +317,7 @@ private[graft] class GraftScan(table: ChronicleTable, snap: Snapshot,
   }
 
   /** Manifest-pruned file set (re-computed when runtime filters land). */
-  private def files: Seq[DataFileMeta] = {
+  private def files: Seq[DataFileMeta] = library.flatMap(_.rewrite).getOrElse {
     val memo = filesMemo
     if (memo != null) return memo
     val computed = table.files(snap,
@@ -437,7 +438,8 @@ private[sql] class GraftReaderFactory(
     val p = partition.asInstanceOf[GraftPartition]
     val rows: Iterator[InternalRow] =
       if (p.merge)
-        new SortedLwwMerge(p.open(mergeReadFunc).toSeq, convIdx, turnIdx, lsnIdx)
+        new SortedLwwMerge(p.open(mergeReadFunc).toSeq,
+          p.files.map(_.filePath.toString), convIdx, turnIdx, lsnIdx)
       else p.open(readFunc).flatten
     // visible state: tombstone winners are hidden
     val it = if (delIdx < 0) rows else rows.filter(r => !r.getBoolean(delIdx))
@@ -466,16 +468,17 @@ private[sql] class GraftBatchReaderFactory(
       .asInstanceOf[Iterator[ColumnarBatch]])
 }
 
-/** Streaming k-way LWW merge of per-file row streams, each sorted by
-  * (conv_id, turn_idx) with unique keys within a stream — the invariant
-  * every engine write upholds (hash-split AND compaction writes sort
-  * within files). Per key the max-`_lsn` row wins; memory is O(streams)
-  * (one buffered row each — buffered rows are COPIES, the parquet reader
-  * reuses its row). A stream delivering out of order fails loudly (a
-  * foreign file snuck into the bucket) instead of merging wrong.
+/** The engine's one LWW merge, for readers and rewrites alike: a streaming
+  * k-way merge of per-file row streams, each sorted by (conv_id, turn_idx)
+  * with unique keys within a stream — the invariant every engine write
+  * upholds. Per key the max-`_lsn` row wins; memory is O(streams) (one
+  * buffered row each — buffered rows are COPIES, the parquet reader reuses
+  * its row). A stream delivering out of order (a foreign file in the
+  * bucket) fails every read and rewrite of the bucket, naming `files`.
   */
 private[sql] class SortedLwwMerge(streams: Seq[Iterator[InternalRow]],
-    convIdx: Int, turnIdx: Int, lsnIdx: Int) extends Iterator[InternalRow] {
+    files: Seq[String], convIdx: Int, turnIdx: Int, lsnIdx: Int)
+  extends Iterator[InternalRow] {
 
   private val its = streams.toArray
   private val heads = its.map(it => if (it.hasNext) it.next().copy() else null)
@@ -505,8 +508,9 @@ private[sql] class SortedLwwMerge(streams: Seq[Iterator[InternalRow]],
         val n = if (its(i).hasNext) its(i).next().copy() else null
         if (n != null && cmp(n, h) <= 0)
           throw new IllegalStateException(
-            "unsorted or key-duplicated data file in bucket merge — " +
-              "compact the table to restore the sorted-file invariant")
+            s"unsorted or key-duplicated data file ${files(i)} in the bucket " +
+              s"merge of ${files.mkString("[", ", ", "]")}: every data file " +
+              "must be sorted by (conv_id, turn_idx) with unique keys")
         heads(i) = n
       }
       i += 1

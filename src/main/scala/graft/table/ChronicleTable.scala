@@ -755,6 +755,21 @@ class ChronicleTable(val root: String) {
     org.apache.spark.sql.graft.DatasetFactory.ofTable(spark,
       new GraftTable(this, snapshot, Some(spec)))
 
+  /** The rows a rewrite carries forward from `victims`, the files its
+    * commit removes: the readers' scan pinned to exactly those files,
+    * tombstone winners kept. A victim delta brings its whole bucket (the
+    * merge unit), or a key's base file left in place would gain a twin.
+    */
+  private[graft] def readRewrite(spark: SparkSession, snapshot: Snapshot,
+      victims: Seq[DataFileMeta]): DataFrame = {
+    val deltaBuckets = victims.filter(_.delta).map(_.bucket).toSet
+    val removed = victims.map(_.path).toSet
+    require(deltaBuckets.isEmpty ||
+      files(snapshot, FilePrune(Some(deltaBuckets))).forall(f => removed(f.path)),
+      s"a rewrite of $root removing a delta file must remove its whole bucket")
+    scan(spark, snapshot, LibraryRead(rewrite = Some(victims)))
+  }
+
   def read(spark: SparkSession): DataFrame = read(spark, loadCurrent())
 
   /** Time-sliced read of event-time range [fromMs, toMs] (epoch millis,
@@ -1199,19 +1214,4 @@ object ChronicleTable {
       .eval(org.apache.spark.sql.catalyst.InternalRow.empty)
       .asInstanceOf[Long].toInt
   }
-
-  /** Per-key last-writer-wins merge of a base+delta scan for the writers
-    * that rewrite buckets (compaction, rescale, the copy-on-write survivor
-    * scan; readers merge inside the DSv2 scan instead): one shuffle by
-    * key + one reduce-side sort + row_number filter — the write-side
-    * dedup's window ([[graft.ops.Dedup.latestByKeyWindow]]). NOT
-    * `max_by(struct(...))`: a string-bearing struct buffer plans as
-    * SortAggregate, which sorts on BOTH sides of the exchange. Ties (same
-    * key and lsn: one event landing in two deltas via distinct replay
-    * epochs) carry identical payloads by construction of the log, so
-    * either wins. Output columns follow `schema`.
-    */
-  def mergeDeltas(scan: DataFrame, schema: StructType): DataFrame =
-    graft.ops.Dedup.latestByKeyWindow(scan, graft.model.Model.keyColumns,
-      graft.model.Model.lsnColumn).select(schema.fieldNames.map(col): _*)
 }

@@ -318,4 +318,46 @@ class FileIndexSpec extends SparkSpec {
     assert(spark.read.format("graft").load(t.root).filter(day1).count() == 0L)
     assert(planned(t.read(spark).filter(day1)) == t.filesOf(t.loadCurrent()).map(_.path).toSet)
   }
+
+  test("a rewrite's scan plans exactly the files it removes, whatever the filters above it") {
+    val t = daysTable
+    val all = t.filesOf(t.loadCurrent())
+    val victims = all.filterNot(_.minKey.startsWith("conv-1"))
+    assert(victims.size == 2)
+    // conv_id, ts and _lsn filters that would each prune a reader's files
+    val narrow = col("conv_id") === "conv-0-001" &&
+      col("ts") >= new java.sql.Timestamp(dayMs(2)) && col(graft.model.Model.lsnColumn) > 150L
+    assert(planned(t.read(spark).filter(narrow)).size < 2)
+    assert(planned(t.readRewrite(spark, t.loadCurrent(), victims).filter(narrow)) ==
+      victims.map(_.path).toSet)
+  }
+
+  test("compaction with a tombstone horizon keeps the visible state of a late delta and drops only GC'd tombstones") {
+    // the late-delta fixture above (a delta older than its base row), plus
+    // tombstones below and above the horizon
+    val p = new CdcPipeline(PipelineConfig("", tmpDir("fidx-late-gc"), numBuckets = 1))
+    p.ensureTable()
+    def rows(rs: (Long, String, String)*) = rs.map { case (lsn, op, k) =>
+      (lsn, op, k, 0, "user", s"text $lsn", None: Option[String],
+        new java.sql.Timestamp(dayMs(1)))
+    }.toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+    val t = p.table
+    MergeInto(spark, t, rows((100L, "I", "conv-k"), (10L, "I", "conv-j"),
+      (20L, "I", "conv-d")), "late#0", "t", orderedSource = false)
+    // conv-k's and conv-j's deltas are older than their base rows
+    MergeInto(spark, t, rows((50L, "U", "conv-k"), (5L, "D", "conv-j"),
+      (30L, "D", "conv-d"), (200L, "D", "conv-e")), "late#1", "t",
+      orderedSource = false, mergeOnRead = true)
+    assert(t.hasDeltas(t.loadCurrent()))
+    def state = t.read(spark)
+      .select("conv_id", graft.model.Model.lsnColumn, graft.model.Model.deletedColumn)
+      .as[(String, Long, Boolean)].collect().toSet
+    val before = state
+    assert(before == Set(("conv-k", 100L, false), ("conv-j", 10L, false),
+      ("conv-d", 30L, true), ("conv-e", 200L, true)))
+    val r = graft.ops.Compaction(spark, t, tombstoneHorizonLsn = 100L)
+    assert(!t.hasDeltas(t.loadCurrent()))
+    assert(state == before.filterNot { case (_, lsn, del) => del && lsn <= 100L })
+    assert(r.droppedRows == 7 - 3)
+  }
 }

@@ -114,6 +114,34 @@ class MergeOnReadSpec extends SparkSpec {
     assert(dups == 0, "read-time merge must collapse base+delta versions")
   }
 
+  test("a copy-on-write commit touching a delta rewrites the delta's whole bucket (ordered and unordered batch)") {
+    // the mixed-mode case above has one base file per bucket; here the
+    // bucket's base is range-split, so the batch's key range prunes the
+    // base file of a key the touched delta also holds
+    import graft.ops.MergeInto
+    import spark.implicits._
+    def batch(rows: (Long, Int)*) = rows.map { case (lsn, k) =>
+      (lsn, "U", s"c-$k", 0, "user", s"text $lsn", None: Option[String],
+        new java.sql.Timestamp(1704067200000L + lsn))
+    }.toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+    for (ordered <- Seq(true, false)) {
+      val t = new graft.table.ChronicleTable(tmpDir("table-mor-cowdelta"))
+      t.create(Model.physicalSchemaV1, numBuckets = 1)
+      MergeInto(spark, t, batch((1 to 9).map(k => (k.toLong, k)): _*), "w#0", "t")
+      Compaction(spark, t, maxFilesPerBucket = 0, targetRowsPerFile = 3)
+      assert(t.filesOf(t.loadCurrent()).size > 2,
+        "fixture: compaction must split the bucket into key-disjoint files")
+      MergeInto(spark, t, batch(20L -> 1, 21L -> 9), "w#1", "t", mergeOnRead = true)
+      if (ordered) MergeInto(spark, t, batch(30L -> 2), "w#2", "t")
+      else MergeInto(spark, t, batch(30L -> 2), "u#0", "t", orderedSource = false)
+      val rows = t.read(spark).select("conv_id", Model.lsnColumn).as[(String, Long)]
+        .collect().toSeq.sorted
+      val want = ((1 to 9).map(k => s"c-$k" -> k.toLong).toMap ++
+        Map("c-1" -> 20L, "c-2" -> 30L, "c-9" -> 21L)).toSeq.sorted
+      assert(rows == want, s"ordered=$ordered: a stale version is visible again")
+    }
+  }
+
   test("MOR kill-resume converges exactly-once") {
     val cfg = BinlogConfig(numEvents = 1500, numConversations = 10,
       segmentSize = 150, dupPct = 10, pDelete = 0.2)

@@ -6,8 +6,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The sorted-file invariant every read relies on: the scan's bucket merge
-  * (`graft.sql.SortedLwwMerge`) streams each data file in
+/** The sorted-file invariant every read and rewrite relies on: the scan's
+  * bucket merge (`graft.sql.SortedLwwMerge`) streams each data file in
   * (conv_id, turn_idx) order and refuses a file that is unsorted or repeats
   * a key. Every writer must land its files that way.
   */
@@ -81,6 +81,38 @@ class SortedFilesSpec extends SparkSpec {
     Rescale(spark, mor, 3, targetRowsPerFile = 20L)
     assertSorted(mor, "rescale")
     assert(mor.read(spark).filter(!$"_deleted").collect().toSet == beforeRescale)
+  }
+
+  test("an unsorted file in a delta-carrying bucket fails reads and compaction, naming the bucket's files") {
+    import graft.table.{DataFileMeta, LineageEntry, PendingCommit}
+    val t = new ChronicleTable(tmpDir("sorted-foreign"))
+    t.create(graft.model.Model.physicalSchemaV1, 1)
+    MergeInto(spark, t, events(0L, 100, 50), "w#0", "t")
+    MergeInto(spark, t, events(1000L, 100, 51), "w#1", "t", mergeOnRead = true)
+    // a foreign delta: the table's rows, newer, in DESCENDING key order
+    val dir = s"${tmpDir("sorted-foreign-file")}/bucket=0"
+    t.read(spark).withColumn("_lsn", $"_lsn" + 5000L).repartition(1)
+      .sortWithinPartitions($"conv_id".desc, $"turn_idx".desc)
+      .write.parquet(dir)
+    val foreign = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).head
+    val before = t.commit(t.loadCurrent(), PendingCommit("foreign#0", Nil,
+      Seq(DataFileMeta(foreign.getPath, spark.read.parquet(foreign.getPath).count(), 0,
+        "", "\uffff", delta = true, bytes = foreign.length())),
+      None, LineageEntry("foreign#0", "t", -1, -1, 0, 0, 0, 0L, Map.empty, -1L)))
+    def failure(f: => Any): String = {
+      val e = intercept[Exception](f)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString("\n")
+    }
+    for ((what, msg) <- Seq("read" -> failure(t.read(spark).collect()),
+        "compaction" -> failure(Compaction(spark, t)))) {
+      assert(msg.contains(s"unsorted or key-duplicated data file ${foreign.getPath}"),
+        s"$what: $msg")
+      t.filesOf(before).foreach(f =>
+        assert(msg.contains(f.path), s"$what: the error does not name ${f.path}:\n$msg"))
+      assert(!msg.contains("compact the table"), s"$what: $msg")
+    }
+    assert(t.loadCurrent().version == before.version)
   }
 
   test("SQL INSERT/DELETE and the format(graft) stream sink land sorted, key-unique files") {
