@@ -363,8 +363,6 @@ class CdcPipeline(val cfg: PipelineConfig) {
     */
   def metrics(spark: SparkSession): DataFrame = Metrics.view(spark, metricsDir)
 
-  @volatile private var listenerAdded = false
-
   /** The query [[startStream]] started last; its progress log carries the
     * measured epoch durations the adaptive trigger sizing feeds on.
     */
@@ -417,11 +415,11 @@ class CdcPipeline(val cfg: PipelineConfig) {
       maxFilesPerTrigger: Int = 8): StreamingQuery = {
     ensureTable()
     val queryName = s"graft-${cfg.sourceId}"
-    if (cfg.recordMetrics && !listenerAdded) {
-      listenerAdded = true
-      spark.streams.addListener(new Metrics.EpochListener(queryName, metricsDir))
-    }
-    val q = GraftStreamSink.startThrough(table) {
+    // progress lines of this run only; the listener leaves with the run
+    val listener = Option.when(cfg.recordMetrics)(
+      new Metrics.EpochListener(queryName, metricsDir, spark.streams))
+    listener.foreach(spark.streams.addListener)
+    val q = try GraftStreamSink.startThrough(table) {
       changeStream(spark, maxFilesPerTrigger).writeStream
         .queryName(queryName)
         .format("graft")
@@ -432,7 +430,7 @@ class CdcPipeline(val cfg: PipelineConfig) {
         .option("saltBuckets", cfg.saltBuckets)
         .trigger(Trigger.AvailableNow())
         .start()
-    }
+    } catch { case t: Throwable => listener.foreach(spark.streams.removeListener); throw t }
     lastStream = Some(q)
     q
   }

@@ -3,7 +3,7 @@ package graft.cdc
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryManager}
 import org.apache.spark.sql.types._
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
@@ -115,21 +115,27 @@ object Metrics {
     }
   }
 
-  /** StreamingQueryListener recording one metrics line per epoch of the
-    * named query — the Structured Streaming half of the surface (progress
-    * events carry input rows and trigger durations; the sink records
-    * merge-level upsert/delete counts separately).
+  /** StreamingQueryListener recording one metrics line per progress event
+    * of ONE query run — the Structured Streaming half of the surface (the
+    * sink records merge-level upsert/delete counts separately). It binds
+    * to the first run named `queryName` that starts after it is added
+    * (Spark delivers start events synchronously), so no other run of that
+    * name writes to `dir`, and leaves `streams` when its run terminates.
     */
-  class EpochListener(queryName: String, dir: String) extends StreamingQueryListener {
-    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+  class EpochListener(queryName: String, dir: String,
+      streams: StreamingQueryManager) extends StreamingQueryListener {
+    @volatile private var runId: java.util.UUID = _
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+      synchronized { if (runId == null && e.name == queryName) runId = e.runId }
     override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-      if (e.progress.name == queryName) {
+      if (e.progress.runId == runId) {
         val sec = Option(e.progress.durationMs.get("triggerExecution"))
           .map(_.toDouble / 1000).getOrElse(0.0)
         append(dir, MetricEvent(queryName, e.progress.batchId,
           System.currentTimeMillis(), e.progress.numInputRows, sec,
           -1L, -1L, "stream-progress"))
       }
-    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+      if (e.runId == runId) streams.removeListener(this)
   }
 }

@@ -1,14 +1,11 @@
 package graft.changes
 
-import graft.table.{ChronicleTable, FilePrune, Snapshot}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
+import graft.sql.{GraftScan, LibraryRead}
+import graft.table.{ChangeMarks, ChronicleTable, Snapshot}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -62,8 +59,10 @@ import scala.jdk.CollectionConverters._
   *    the mark filter needs them.
   *
   * Batch (fromV, toV] semantics mirror `readChanges(fromV)` evaluated at
-  * `toV`: every row LIVE at `toV` whose `_lsn` exceeds ITS OWN source's
-  * high-water mark in the `fromV` snapshot. Each surviving row version is
+  * `toV`, under the same marks ([[graft.table.ChangeMarks.since]]): every
+  * row LIVE at `toV` whose `_lsn` exceeds ITS OWN source's high-water mark
+  * in the `fromV` snapshot (a row tagged with a source that has no mark
+  * at `toV` ships in neither). Each surviving row version is
   * emitted exactly once across the stream's lifetime (later batches raise
   * the marks past it; copy-on-write rewrites and compactions re-add files
   * but never un-mark rows), tombstones ride along as `_deleted = true`
@@ -75,12 +74,15 @@ import scala.jdk.CollectionConverters._
   * (`_lsn`, `_deleted`, `_source`) are part of the stream schema — they
   * ARE the change metadata.
   *
-  * Scale shape: per trigger the driver reads the manifest list, prunes by
-  * aggregate `maxLsn`, and plans one input partition per surviving file —
-  * metadata + O(new files), independent of table size. Executors scan
-  * parquet through Spark's own codegen'd reader (the same
-  * [[ParquetFileFormat]] the batch path plans through) with an exact
-  * per-source mark filter on top; no driver-side row movement.
+  * Scale shape: each batch is the readers' DSv2 scan
+  * ([[graft.sql.GraftScan]]) of the `toV` snapshot with its merge off. The
+  * driver reads the manifest list, prunes by the batch's `_lsn` bounds and
+  * packs the surviving files into partitions of about
+  * `spark.sql.files.maxPartitionBytes` — metadata + O(new files),
+  * independent of table size. The same bounds skip parquet row groups, and
+  * the scan keeps exactly the rows the batch's marks ship
+  * ([[graft.table.ChangeMarks]], the rule `readChanges` applies too); no
+  * driver-side row movement.
   *
   * Schema is FIXED at stream start (the v2 contract): upstream ADDED
   * columns are simply not read until the stream restarts; upstream type
@@ -203,32 +205,12 @@ private[changes] object VersionOffset {
     }
 }
 
-/** One pruned data file of the batch's version range, with the per-source
-  * marks its rows must clear (marks travel IN the partition so each batch
-  * is self-contained — the factory is static across batches).
-  */
-private[graft] case class ChangeFilePartition(
-    path: String,
-    fileSize: Long,
-    marks: Map[String, Long],
-    globalMark: Long,
-    /** false = bootstrap batch: every row ships, no mark filter. */
-    filtered: Boolean,
-    /** Bootstrap-slice `_lsn` interval (inclusive); (MinValue, MaxValue)
-      * = unsliced. Applied only when `filtered` is false — a sliced
-      * bootstrap ships each row in exactly the one slice whose interval
-      * holds its lsn.
-      */
-    lsnLo: Long = Long.MinValue,
-    lsnHi: Long = Long.MaxValue) extends InputPartition
-
 private[changes] class ChangesMicroBatchStream(schema0: StructType,
     root: String, options: CaseInsensitiveStringMap)
   extends MicroBatchStream with SupportsAdmissionControl
   with SupportsTriggerAvailableNow {
 
   private val table = new ChronicleTable(root)
-  private def spark = SparkSession.active
 
   private val maxVersionsPerTrigger: Long = {
     val v = options.getLong("maxVersionsPerTrigger", Long.MaxValue)
@@ -257,19 +239,11 @@ private[changes] class ChangesMicroBatchStream(schema0: StructType,
     */
   @volatile private var availableNowTarget: Option[Long] = None
 
-  /** The CURRENT batch's conservative lsn bounds (exclusive floor,
-    * inclusive ceiling), stashed by [[planInputPartitions]] for
-    * [[createReaderFactory]] to push into the parquet reader as data
-    * filters — row groups and pages whose `_lsn` stats sit wholly outside
-    * are skipped inside files that survived manifest pruning (a
-    * rewritten/compacted file is mostly pre-cursor rows). Tail batches
-    * push the minimum per-source mark as the floor (sound under the exact
-    * per-source filter on top: every row's own mark is >= the minimum, so
-    * a row the floor removes could never pass); bootstrap slices push
-    * their interval's two bounds exactly. Micro-batches execute strictly
-    * sequentially (plan -> execute -> commit), so one slot suffices.
+  /** The CURRENT batch's scan, built by [[planInputPartitions]] for
+    * [[createReaderFactory]]. Micro-batches execute strictly sequentially
+    * (plan -> execute -> commit), so one slot suffices.
     */
-  @volatile private var batchLsnRange: (Option[Long], Option[Long]) = (None, None)
+  @volatile private[changes] var batch: GraftScan = _
 
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowTarget = Some(table.loadCurrent().version)
@@ -356,111 +330,33 @@ private[changes] class ChangesMicroBatchStream(schema0: StructType,
         "or vanished) — restart the stream to adopt the new schema")
   }
 
+  /** The batch's rows: a bootstrap slice ships every row of the pinned
+    * snapshot whose `_lsn` lies in the slice's interval, a tail batch the
+    * net changes of (fromV, toV] under the cursor's per-source marks —
+    * both the readers' scan of the `to` snapshot, merge off, picking its
+    * rows by [[ChangeMarks]], with the marks' `_lsn` bounds pushed to
+    * manifest pruning and the parquet reader.
+    */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val so = start.asInstanceOf[VersionOffset]
     val eo = end.asInstanceOf[VersionOffset]
-
-    // bootstrap SLICE batch: files of the pinned snapshot intersecting the
-    // slice's lsn interval (manifest-pruned), exact interval filter on rows
-    if (eo.inBootstrap && eo.slice >= 0) {
-      val to = table.loadVersion(eo.version)
-      table.requireTailable(to)
-      requireSchemaCompatible(to)
-      val (lo, hi) = ChronicleTable.lsnSliceInterval(
-        eo.lsnMin, eo.lsnMax, eo.slice, eo.slices)
-      batchLsnRange = (
-        if (lo == Long.MinValue) None else Some(lo - 1L),
-        if (hi == Long.MaxValue) None else Some(hi))
-      return table.files(to, FilePrune(fromLsn = lo, toLsn = hi))
-        .map { f =>
-          ChangeFilePartition(f.path, ChronicleTable.fileBytes(spark, f),
-            Map.empty, -1L, filtered = false, lsnLo = lo, lsnHi = hi): InputPartition
-        }.toArray
-    }
-
-    val fromV = so.version
-    val toV = eo.version
-    if (toV <= fromV) return Array.empty
-    val to = table.loadVersion(toV)
+    val to = table.loadVersion(eo.version)
     table.requireTailable(to)
     requireSchemaCompatible(to)
-
-    val (files, marks, globalMark, filtered) =
-      if (fromV < 0L) {
+    val marks =
+      if (eo.inBootstrap && eo.slice >= 0) {
+        val (lo, hi) = ChronicleTable.lsnSliceInterval(
+          eo.lsnMin, eo.lsnMax, eo.slice, eo.slices)
+        ChangeMarks.slice(lo, hi)
+      } else if (so.version < 0L) {
         // legacy (pre-sliced-checkpoint) single-batch bootstrap
-        batchLsnRange = (None, None)
-        (table.filesOf(to), Map.empty[String, Long], -1L, false)
-      } else {
-        val since = table.loadVersion(fromV)
-        val m = to.hwms.map { case (s, _) => s -> since.hwmFor(s) }
-        val thr = if (m.nonEmpty) m.values.min else since.hwmLsn
-        batchLsnRange = (Some(thr), None)
-        (table.files(to, FilePrune(fromLsn = FilePrune.above(thr))),
-          m, since.hwmLsn, true)
-      }
-    files.map { f =>
-      ChangeFilePartition(f.path, ChronicleTable.fileBytes(spark, f), marks,
-        globalMark, filtered)
-        : InputPartition
-    }.toArray
+        ChangeMarks.slice(Long.MinValue, Long.MaxValue)
+      } else ChangeMarks.since(table, table.loadVersion(so.version), to)
+    batch = new GraftScan(table, to, marks.lsnFilters.toArray, schema0,
+      library = Some(LibraryRead(merge = false, changes = Some(marks))))
+    batch.planInputPartitions()
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // Spark's own codegen'd parquet reader, planned once on the driver and
-    // shipped (it broadcasts its hadoop conf internally); row-based output
-    // so the mark filter below sees InternalRows. The conservative lsn
-    // floor rides along as a parquet data filter (row-group/page pruning
-    // inside kept files); the exact per-source filter still runs on top.
-    val (floor, ceil) = batchLsnRange
-    val pushed =
-      floor.toSeq.map(thr =>
-        org.apache.spark.sql.sources.GreaterThan(graft.model.Model.lsnColumn, thr)
-          : org.apache.spark.sql.sources.Filter) ++
-      ceil.toSeq.map(hi =>
-        org.apache.spark.sql.sources.LessThanOrEqual(graft.model.Model.lsnColumn, hi)
-          : org.apache.spark.sql.sources.Filter)
-    val readFunc = new ParquetFileFormat().buildReaderWithPartitionValues(
-      sparkSession = spark,
-      dataSchema = schema0,
-      partitionSchema = new StructType(),
-      requiredSchema = schema0,
-      filters = pushed,
-      options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-      hadoopConf = spark.sessionState.newHadoopConf())
-    val lsnIdx = schema0.fieldIndex(graft.model.Model.lsnColumn)
-    val srcIdx = schema0.fieldNames.indexOf(graft.model.Model.sourceColumn)
-    new ChangesReaderFactory(readFunc, lsnIdx, srcIdx)
-  }
-}
-
-private[changes] class ChangesReaderFactory(
-    readFunc: PartitionedFile => Iterator[InternalRow],
-    lsnIdx: Int, srcIdx: Int) extends PartitionReaderFactory {
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[ChangeFilePartition]
-    val file = graft.sql.GraftScan.wholeFile(p.path, p.fileSize)
-    // exact per-source mark filter (the readChanges row filter, evaluated
-    // executor-side): a row passes when its _lsn exceeds ITS OWN source's
-    // mark in the from-snapshot; untagged rows compare against the global
-    // mark, a source the from-snapshot never saw has mark -1 (all rows new)
-    val rows = readFunc(file)
-    val it =
-      if (!p.filtered) {
-        // bootstrap: no mark filter; a SLICED bootstrap ships each row in
-        // exactly the one slice whose lsn interval holds it
-        if (p.lsnLo == Long.MinValue && p.lsnHi == Long.MaxValue) rows
-        else rows.filter { r =>
-          val lsn = r.getLong(lsnIdx)
-          lsn >= p.lsnLo && lsn <= p.lsnHi
-        }
-      } else rows.filter { r =>
-        val lsn = r.getLong(lsnIdx)
-        val mark =
-          if (srcIdx < 0 || r.isNullAt(srcIdx)) p.globalMark
-          else p.marks.getOrElse(r.getUTF8String(srcIdx).toString, -1L)
-        lsn > mark
-      }
-    graft.sql.GraftScan.reader(it)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    batch.createReaderFactory()
 }

@@ -1,7 +1,7 @@
 package graft.sql
 
 import graft.model.Model
-import graft.table.{ChronicleTable, DataFileMeta, FilePrune, LineageEntry, PendingCommit, Snapshot}
+import graft.table.{ChangeMarks, ChronicleTable, DataFileMeta, FilePrune, LineageEntry, PendingCommit, Snapshot}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -29,10 +29,13 @@ import scala.jdk.CollectionConverters._
   * Semantics: a scan serves the snapshot's VISIBLE state — merge-on-read
   * deltas LWW-collapse per key, tombstoned rows are hidden. The system
   * columns (`_lsn`, `_source`) stay queryable. The same scan serves every
-  * [[ChronicleTable]] reader and every rewrite, told whether to merge, to
-  * keep tombstone winners and which files a rewrite removes
+  * [[ChronicleTable]] reader, every rewrite and every batch of the
+  * `graft.changes` stream, told whether to merge, to keep tombstone
+  * winners, which files a rewrite removes and which changelog rows to pick
   * ([[LibraryRead]]); readers state their pruning as column filters: one
-  * LWW merge and one read path for the library, SQL and `format("graft")`.
+  * LWW merge, one changelog rule and one read path for the library, SQL,
+  * `format("graft")` and the change stream. Its reader factory builds the
+  * engine's only parquet reader.
   *
   * Scale shape:
   *  - filter pushdown prunes manifests and data files during planning
@@ -125,11 +128,14 @@ private[sql] class MissingGraftTable(root: String) extends Table with SupportsRe
 
 /** What one of [[ChronicleTable]]'s readers asks of the scan: `merge`
   * LWW-merges delta-carrying buckets (off = raw rows, superseded versions
-  * included), `tombstones` keeps `_deleted` winners visible, and `rewrite`
-  * pins exactly the files a rewrite removes: no filter drops one of them.
+  * included), `tombstones` keeps `_deleted` winners visible, `rewrite`
+  * pins exactly the files a rewrite removes: no filter drops one of them,
+  * and `changes` keeps only the rows the changelog's mark rule ships
+  * ([[ChangeMarks]]; `readChanges` and the change stream's batches).
   */
 private[graft] case class LibraryRead(merge: Boolean = true,
-    tombstones: Boolean = true, rewrite: Option[Seq[DataFileMeta]] = None)
+    tombstones: Boolean = true, rewrite: Option[Seq[DataFileMeta]] = None,
+    changes: Option[ChangeMarks] = None)
 
 /** One snapshot of one ChronicleTable as a DSv2 batch table. The snapshot
   * is PINNED at resolution time (repeatable reads within a query; time
@@ -258,6 +264,7 @@ private[graft] class GraftScan(table: ChronicleTable, snap: Snapshot,
 
   private val merge = library.forall(_.merge)
   private val tombstones = library.exists(_.tombstones)
+  private[graft] val changes: Option[ChangeMarks] = library.flatMap(_.changes)
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -274,13 +281,13 @@ private[graft] class GraftScan(table: ChronicleTable, snap: Snapshot,
   private def merged: Set[Int] =
     if (merge) files.filter(_.delta).map(_.bucket).toSet else Set.empty
 
-  /** A scan that merges no bucket and keeps tombstone winners hands on
-    * parquet's columnar batches as they are (a delta-free library read).
-    * Decided once, from the pruned file set: runtime filtering only drops
-    * files, so it never adds a merging bucket.
+  /** A scan that merges no bucket, keeps tombstone winners and picks no
+    * changelog rows hands on parquet's columnar batches as they are (a
+    * delta-free library read). Decided once, from the pruned file set:
+    * runtime filtering only drops files, so it never adds a merging bucket.
     */
-  private lazy val columnar: Boolean = tombstones && merged.isEmpty &&
-    new ParquetFileFormat().supportBatch(SparkSession.active, required)
+  private lazy val columnar: Boolean = tombstones && changes.isEmpty &&
+    merged.isEmpty && new ParquetFileFormat().supportBatch(SparkSession.active, required)
 
   /** `readStream` on the SAME table object serves the changelog: the
     * unified surface delegates to the DSv2 micro-batch change stream
@@ -327,12 +334,14 @@ private[graft] class GraftScan(table: ChronicleTable, snap: Snapshot,
   }
 
   /** Columns the row READER must materialize beyond the projection: the
-    * LWW merge keys + order + tombstone flag (pushed filters' columns are
-    * in the projection — Spark re-applies every filter above the scan).
+    * LWW merge keys + order + tombstone flag, and the source tag when the
+    * scan picks changelog rows (pushed filters' columns are in the
+    * projection — Spark re-applies every filter above the scan).
     */
   private lazy val readAll: StructType = {
     val need = required.fieldNames.toSet ++
-      Model.keyColumns ++ Seq(Model.lsnColumn, Model.deletedColumn)
+      Model.keyColumns ++ Seq(Model.lsnColumn, Model.deletedColumn) ++
+      changes.map(_ => Model.sourceColumn)
     StructType(snap.schema.fields.filter(f => need.contains(f.name)))
   }
 
@@ -384,6 +393,7 @@ private[graft] class GraftScan(table: ChronicleTable, snap: Snapshot,
       convIdx = idx("conv_id"), turnIdx = idx("turn_idx"),
       lsnIdx = idx(Model.lsnColumn),
       delIdx = if (tombstones) -1 else idx(Model.deletedColumn),
+      marks = changes.orNull, srcIdx = idx.getOrElse(Model.sourceColumn, -1),
       outIdx = required.fields.map(f => idx(f.name)),
       outTypes = required.fields.map(_.dataType))
   }
@@ -409,7 +419,7 @@ private[graft] case class GraftPartition(files: Seq[PartitionedFile],
     files.iterator.map(read)
 }
 
-private[graft] object GraftScan {
+private[sql] object GraftScan {
 
   /** One whole data file as Spark's parquet reader takes it. */
   def wholeFile(path: String, len: Long): PartitionedFile =
@@ -427,11 +437,15 @@ private[graft] object GraftScan {
   }
 }
 
-/** Reads partitions as rows; `delIdx` < 0 keeps tombstone winners visible. */
+/** Reads partitions as rows; `delIdx` < 0 keeps tombstone winners visible,
+  * non-null `marks` keep only the rows they ship (`srcIdx` < 0: the table
+  * has no source tag, every row is untagged).
+  */
 private[sql] class GraftReaderFactory(
     readFunc: PartitionedFile => Iterator[InternalRow],
     mergeReadFunc: PartitionedFile => Iterator[InternalRow],
     convIdx: Int, turnIdx: Int, lsnIdx: Int, delIdx: Int,
+    marks: ChangeMarks, srcIdx: Int,
     outIdx: Array[Int], outTypes: Array[DataType]) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
@@ -442,7 +456,11 @@ private[sql] class GraftReaderFactory(
           p.files.map(_.filePath.toString), convIdx, turnIdx, lsnIdx)
       else p.open(readFunc).flatten
     // visible state: tombstone winners are hidden
-    val it = if (delIdx < 0) rows else rows.filter(r => !r.getBoolean(delIdx))
+    val visible = if (delIdx < 0) rows else rows.filter(r => !r.getBoolean(delIdx))
+    // changelog: above the merge, as readChanges' net changes are
+    val it = if (marks == null) visible else visible.filter(r => marks.ships(
+      if (srcIdx < 0 || r.isNullAt(srcIdx)) null else r.getUTF8String(srcIdx),
+      r.getLong(lsnIdx)))
     val project = UnsafeProjection.create(
       outIdx.zip(outTypes).map { case (i, t) =>
         BoundReference(i, t, nullable = true)

@@ -53,9 +53,10 @@ case class DataFileMeta(
       */
     minLsn: Long = -1L,
     maxLsn: Long = -1L,
-    /** File size in bytes — lets scan planning (the Catalyst, DSv2 and
-      * change-stream scans) build splits and size estimates from the
-      * manifest alone, with no per-file filesystem stat. 0 = unknown
+    /** File size in bytes — lets scan planning (the DSv2 scan that every
+      * reader, rewrite and change-stream batch plans through) pack files
+      * into partitions and estimate sizes from the manifest alone, with no
+      * per-file filesystem stat. 0 = unknown
       * (pre-upgrade manifest) → statted once when planned
       * ([[ChronicleTable.fileBytes]]).
       */
@@ -801,8 +802,10 @@ class ChronicleTable(val root: String) {
     * SuroClient.java / SuroSink.java:15-38, keeping positions per input,
     * InputManager.java:36-56; Iceberg calls it an incremental scan).
     *
-    * METADATA-PRUNED: the minimum mark rides as its own `_lsn` filter (the
-    * per-source `OR` implies no bounds), so files whose maxLsn is
+    * The marks are the changelog's one rule ([[ChangeMarks.since]], shared
+    * with the change stream's tail batches), applied per row inside the
+    * scan after its merge-on-read LWW fold. METADATA-PRUNED: the lowest
+    * mark rides as an `_lsn` column filter, so files whose maxLsn is
     * at-or-below every relevant mark are pruned from manifest stats —
     * tailing a huge table costs metadata + O(new files) per poll. Pruning
     * below the merge-on-read LWW fold is sound: a pruned file's rows can
@@ -820,27 +823,11 @@ class ChronicleTable(val root: String) {
     * that cannot be tailed ([[requireTailable]]) error clearly.
     */
   def readChanges(spark: SparkSession, sinceVersion: Long): DataFrame = {
-    import graft.model.Model
     val since = loadVersion(sinceVersion)
     val cur = loadCurrent()
-    requireTailable(cur)
-    val marks: Map[String, Long] =
-      cur.hwms.map { case (s, _) => s -> since.hwmFor(s) }
-    val lsn = col(Model.lsnColumn)
-    val rowFilter =
-      // legacy table without the row tag: single-source (requireTailable)
-      if (!cur.schema.fieldNames.contains(Model.sourceColumn))
-        lsn > since.hwmLsn
-      else {
-        val src = col(Model.sourceColumn)
-        marks.foldLeft(src.isNull && lsn > since.hwmLsn) {
-          case (acc, (s, m)) => acc || (src === s && lsn > m)
-        }
-      }
-    // prune threshold: the MINIMUM mark any surviving row could have been
-    // compared against (per-source marks are each <= the global mark)
-    val thr = if (marks.nonEmpty) marks.values.min else since.hwmLsn
-    read(spark, cur).filter(lsn > thr && rowFilter)
+    val marks = ChangeMarks.since(this, since, cur)
+    scan(spark, cur, LibraryRead(changes = Some(marks)))
+      .filter(col(graft.model.Model.lsnColumn) > marks.floor)
   }
 
   /** Refuse a snapshot whose changelog cannot be tailed by `_lsn` marks —
@@ -897,15 +884,17 @@ class ChronicleTable(val root: String) {
 
   /** RAW scan of a snapshot restricted to rows with `_lsn` in [lo, hi]:
     * the readers' DSv2 scan with its merge off, whose `_lsn` filter prunes
-    * files by lsn-bounds overlap. NO merge-on-read collapse and NO
-    * tombstone drop — rows ship as changelog rows (superseded versions and
-    * retained tombstones included), for consumers
-    * that LWW on `_lsn` downstream anyway. This is the unit of the
-    * CHUNKED chain/stream bootstrap ([[graft.cdc.Chain.pollOnce]]): a
-    * huge upstream ships as K disjoint lsn intervals instead of one
-    * table-sized batch, each interval's scan touching only the files it
-    * intersects — the reference's notice-at-a-time consumer granularity
-    * (S3Consumer.java:226-290) applied to the initial sync.
+    * files by lsn-bounds overlap and selects the rows exactly. NO
+    * merge-on-read collapse and NO tombstone drop — rows ship as changelog
+    * rows (superseded versions and retained tombstones included), for
+    * consumers that LWW on `_lsn` downstream anyway. This is the unit of
+    * the CHUNKED chain bootstrap ([[graft.cdc.Chain.pollOnce]]): a huge
+    * upstream ships as K disjoint lsn intervals instead of one table-sized
+    * batch, each interval's scan touching only the files it intersects —
+    * the reference's notice-at-a-time consumer granularity
+    * (S3Consumer.java:226-290) applied to the initial sync. The change
+    * stream's bootstrap slices are the same intervals, picked inside its
+    * scan by [[ChangeMarks.slice]].
     */
   def scanLsnInterval(spark: SparkSession, snapshot: Snapshot,
       lo: Long, hi: Long): DataFrame =

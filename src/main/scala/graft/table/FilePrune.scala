@@ -62,7 +62,7 @@ final case class FilePrune(
 object FilePrune {
 
   /** The smallest long strictly above `v`, saturating at `Long.MaxValue`. */
-  def above(v: Long): Long = if (v == Long.MaxValue) v else v + 1L
+  private def above(v: Long): Long = if (v == Long.MaxValue) v else v + 1L
 
   private def below(v: Long): Long = if (v == Long.MinValue) v else v - 1L
 

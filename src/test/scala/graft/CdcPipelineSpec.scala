@@ -113,6 +113,36 @@ class CdcPipelineSpec extends SparkSpec {
       s"listener progress metrics missing: $modes")
   }
 
+  test("stream-progress lines go to the started query's own ledger, once each, and the listener leaves with it") {
+    import org.apache.spark.sql.functions.col
+    val cfg = BinlogConfig(numEvents = 600, numConversations = 6, segmentSize = 200)
+    val src = tmpDir("binlog-listener")
+    BinlogGenerator.writeSegments(spark, cfg, src)
+    def listeners = spark.streams.listListeners()
+      .count(_.isInstanceOf[graft.cdc.Metrics.EpochListener])
+    val before = listeners
+    // two pipelines of the SAME source id (so the same query name) on two
+    // tables, streamed one after the other in one session
+    val runs = Seq("a", "b").map { t =>
+      val p = new CdcPipeline(PipelineConfig(src, tmpDir(s"table-listener-$t"),
+        sourceId = "same", numBuckets = 2, recordMetrics = true))
+      val q = p.startStream(spark, tmpDir(s"ckpt-listener-$t"), maxFilesPerTrigger = 1)
+      q.awaitTermination(120000)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      p -> q
+    }
+    runs.foreach { case (p, q) =>
+      val lines = p.metrics(spark).filter(col("mode") === "stream-progress")
+        .select("epoch", "rows").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+      val events = q.recentProgress.map(e => (e.batchId, e.numInputRows)).toSeq.sorted
+      assert(events.nonEmpty)
+      assert(lines == events,
+        s"${p.cfg.tableRoot}: ledger lines $lines, its query's progress events $events")
+    }
+    assert(listeners == before, "an EpochListener outlived its query")
+  }
+
   test("RunCdc stats counts committed ledger units: N pipeline batches, one stream epoch") {
     def statsLine(root: String): String = {
       val out = new java.io.ByteArrayOutputStream()

@@ -210,6 +210,33 @@ class PlanSpec extends SparkSpec {
     before.destroy(); after.destroy()
   }
 
+  test("counter guard: a change-stream tail batch over many small files packs them into few partitions") {
+    import graft.ops.MergeInto
+    import spark.implicits._
+    val root = tmpDir("table-stream-parts")
+    val t = new graft.table.ChronicleTable(root)
+    t.create(graft.model.Model.physicalSchemaV1, numBuckets = 8)
+    // 6 merge-on-read commits over 48 keys: one small delta file per
+    // bucket per commit, every one of them past the cursor (version 0)
+    (0 until 6).foreach { b =>
+      val rows = (0 until 48).map(k => (b * 100L + k, "U", f"k-$k%02d", 0,
+        "user", s"text $b $k", None: Option[String], new java.sql.Timestamp(0L)))
+        .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+      MergeInto(spark, t, rows, s"s#$b", "t", mergeOnRead = true)
+    }
+    val snap = t.loadCurrent()
+    val files = t.filesOf(snap).size
+    assert(files == 48, s"fixture: $files files")
+    val ms = graft.changes.DefaultSource.microBatchStream(snap.schema, root,
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        java.util.Map.of("path", root)))
+    val parts = ms.planInputPartitions(ms.deserializeOffset("""{"version":0}"""),
+      ms.deserializeOffset(s"""{"version":${snap.version}}"""))
+    // one partition per file (48) while the stream read parquet itself
+    assert(parts.flatMap(partitionPaths).length == files)
+    assert(parts.length == 4, s"${parts.length} input partitions for $files files")
+  }
+
   /** The executed plans of the queries `body` runs on this session. */
   private def plansOf(body: => Any): Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}

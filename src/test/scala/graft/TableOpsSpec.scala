@@ -1135,7 +1135,7 @@ class TableOpsSpec extends SparkSpec {
         java.util.Map.of("path", root)))
     def planned(from: String, to: String) =
       ms.planInputPartitions(ms.deserializeOffset(from), ms.deserializeOffset(to))
-        .map(_.asInstanceOf[graft.changes.ChangeFilePartition].path).toSet
+        .flatMap(partitionPaths).toSet
     assert(planned(s"""{"version":$sinceV}""", s"""{"version":${snap.version}}""") ==
       ref(lLo = thr + 1))
     val (gMin, gMax) = p.table.lsnBounds(snap)

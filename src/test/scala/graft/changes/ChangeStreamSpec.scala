@@ -4,7 +4,7 @@ import graft.SparkSpec
 import graft.cdc.{CdcPipeline, Chain, PipelineConfig}
 import graft.model.Model
 import graft.source.{BinlogConfig, BinlogGenerator}
-import graft.table.ChronicleTable
+import graft.table.{ChangeMarks, ChronicleTable}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -34,6 +34,65 @@ class ChangeStreamSpec extends SparkSpec {
     new ChangesMicroBatchStream(
       new ChronicleTable(root).loadCurrent().schema, root,
       new CaseInsensitiveStringMap((opts + ("path" -> root)).asJava))
+
+  /** The rows one micro-batch ships, read on the driver through the
+    * stream's own partitions and reader factory:
+    * (conv_id, turn_idx, _lsn, _deleted, _source).
+    */
+  private def shipped(root: String, ms: org.apache.spark.sql.connector.read
+      .streaming.MicroBatchStream, from: VersionOffset, to: VersionOffset)
+      : Seq[(String, Int, Long, Boolean, String)] = {
+    val parts = ms.planInputPartitions(from, to)
+    val factory = ms.createReaderFactory()
+    val schema = new ChronicleTable(root).loadCurrent().schema
+    def at(n: String) = schema.fieldIndex(n)
+    val (k, t, l, d, src) = (at("conv_id"), at("turn_idx"),
+      at(Model.lsnColumn), at(Model.deletedColumn), at(Model.sourceColumn))
+    parts.toSeq.flatMap { p =>
+      val r = factory.createReader(p)
+      try Iterator.continually(r).takeWhile(_.next()).map(_.get()).map { row =>
+        (row.getUTF8String(k).toString, row.getInt(t), row.getLong(l),
+          row.getBoolean(d),
+          if (row.isNullAt(src)) null else row.getUTF8String(src).toString)
+      }.toList
+      finally r.close()
+    }
+  }
+
+  /** Change rows as a table's merge takes them (`_lsn` as `lsn`). */
+  private def changeBatch(rows: Seq[(Long, String, String, Int)]) = {
+    import spark.implicits._
+    rows.map { case (lsn, op, k, turn) =>
+      (lsn, op, k, turn, "user", s"text $lsn", None: Option[String],
+        new java.sql.Timestamp(1704067200000L))
+    }.toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+  }
+
+  /** Commits rows (table columns, `_source` null or a tag) as one merge-on-
+    * read delta file that no engine write made: its commit raises no
+    * source mark, and `stats = false` strips its `_lsn` stats.
+    */
+  private def commitForeignFile(t: ChronicleTable, key: String,
+      rows: Seq[(Long, String, Int, String)], stats: Boolean): Unit = {
+    import org.apache.spark.sql.Row
+    val base = t.loadCurrent()
+    val data = spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.map { case (lsn, k, turn, tag) =>
+        val v = Map("conv_id" -> k, "turn_idx" -> turn, "role" -> "user",
+          "text" -> s"foreign $lsn", "ts" -> new java.sql.Timestamp(1704067200000L),
+          Model.lsnColumn -> lsn, Model.deletedColumn -> false,
+          Model.sourceColumn -> tag)
+        Row.fromSeq(base.schema.fieldNames.toSeq.map(v.getOrElse(_, null)))
+      }), base.schema)
+      .withColumn("bucket", ChronicleTable.bucketExpr("conv_id", base.numBuckets))
+      .repartition(col("bucket")).sortWithinPartitions("conv_id", "turn_idx")
+    val files = graft.ops.StagedWrite(t, data).map { f =>
+      if (stats) f.copy(delta = true) else f.copy(delta = true, minLsn = -1L, maxLsn = -1L)
+    }
+    t.commit(base, graft.table.PendingCommit(key, Nil, files, None,
+      graft.table.LineageEntry(key, "foreign file", -1L, -1L, 0L, 0L,
+        rows.size.toLong, 0L, Map.empty, -1L)))
+  }
 
   test("syncStream bootstraps, then tails a TWO-SOURCE upstream exactly-once") {
     val cfgA = BinlogConfig(numEvents = 800, numConversations = 6,
@@ -172,8 +231,7 @@ class ChangeStreamSpec extends SparkSpec {
     // offsets round-trip through the WAL json
     assert(ms.deserializeOffset(o2.json()) == o2)
     val counts = Seq((o0, o1), (o1, o2), (o2, o3)).map { case (a, b) =>
-      ms.planInputPartitions(a, b).map(
-        _.asInstanceOf[ChangeFilePartition]).toSeq
+      ms.planInputPartitions(a, b).toSeq
     }
     assert(counts.flatten.nonEmpty)
     val intervals = Seq(o1, o2, o3).map(o => ChronicleTable
@@ -250,29 +308,131 @@ class ChangeStreamSpec extends SparkSpec {
     val s = stream(t.root)
     val parts = s
       .planInputPartitions(VersionOffset(fromV), VersionOffset(toV))
-      .map(_.asInstanceOf[ChangeFilePartition])
+      .flatMap(partitionPaths)
     val since = t.loadVersion(fromV)
     val thr = since.hwms.values.min
     val live = t.filesOf(t.loadVersion(toV))
     // every planned file can contain post-cursor rows; at least one live
     // file (an untouched bucket's) is pruned without being opened
     assert(parts.nonEmpty)
-    assert(parts.forall(f => live.exists(_.path == f.path)))
-    val planned = parts.map(_.path).toSet
+    assert(parts.forall(f => live.exists(_.path == f)))
+    val planned = parts.toSet
     val keptMeta = live.filter(f => planned.contains(f.path))
     assert(keptMeta.forall(f => f.maxLsn < 0L || f.maxLsn > thr))
     assert(planned.size < live.size,
       s"changelog planning read all ${live.size} live files — no pruning")
     // the batch itself carries exactly the per-source marks of the cursor
-    assert(parts.forall(_.marks == since.hwms.map {
+    assert(s.batch.changes.map(_.floors) == Some(since.hwms.map {
       case (k, _) => k -> since.hwmFor(k)
     }))
 
     // bootstrap (fromV = -1) plans the FULL live set, unfiltered
     val boot = s.planInputPartitions(VersionOffset(-1L), VersionOffset(toV))
-      .map(_.asInstanceOf[ChangeFilePartition])
-    assert(boot.map(_.path).toSet == live.map(_.path).toSet)
-    assert(boot.forall(!_.filtered))
+      .flatMap(partitionPaths)
+    assert(boot.toSet == live.map(_.path).toSet)
+    assert(s.batch.changes == Some(ChangeMarks.slice(Long.MinValue, Long.MaxValue)))
+  }
+
+  test("every stream batch, LWW-collapsed per key, equals readChanges over the same versions") {
+    import graft.ops.{Compaction, MergeInto, Rescale}
+    // two ordered sources on disjoint keys (b's lsn sequence runs below
+    // a's), merge-on-read with tombstones, a compaction, a rescale and a
+    // copy-on-write commit between versions, then a foreign file whose
+    // rows carry a source tag with no mark
+    val t = new ChronicleTable(tmpDir("cs-agree"))
+    t.create(Model.physicalSchemaV1, numBuckets = 4)
+    def keys(s: String) = (0 until 8).map(i => f"$s-$i%02d")
+    def inserts(s: String, lsn0: Long) = keys(s).zipWithIndex.flatMap {
+      case (k, i) => Seq((lsn0 + 2 * i, "I", k, 0), (lsn0 + 2 * i + 1, "I", k, 1))
+    }
+    def mor(rows: Seq[(Long, String, String, Int)], key: String) =
+      MergeInto(spark, t, changeBatch(rows), key, "t", mergeOnRead = true)
+    val steps: Seq[() => Any] = Seq(
+      () => mor(inserts("a", 100L), "a#0"),
+      () => mor(inserts("b", 1L), "b#0"),
+      () => mor(Seq((200L, "U", "a-00", 0), (201L, "U", "a-01", 1),
+        (202L, "D", "a-02", 0), (203L, "D", "a-03", 1)), "a#1"),
+      () => Compaction(spark, t),
+      () => mor(Seq((30L, "U", "b-00", 0), (31L, "D", "b-01", 0),
+        (32L, "D", "b-02", 1)), "b#1"),
+      () => Rescale(spark, t, 2),
+      () => mor(Seq((300L, "I", "a-02", 0), (301L, "U", "a-04", 1),
+        (302L, "D", "a-05", 0)), "a#2"),
+      () => MergeInto(spark, t, changeBatch(Seq((40L, "U", "b-03", 0),
+        (41L, "U", "b-04", 1))), "b#2", "t"),
+      () => commitForeignFile(t, "foreign#0",
+        Seq((500L, "g-00", 0, "ghost"), (501L, "g-01", 0, "ghost")), stats = true))
+    def collapse(rows: Seq[(String, Int, Long, Boolean, String)]) =
+      rows.groupBy(r => (r._1, r._2)).values.map(_.maxBy(_._3)).toSet
+    var pairs = 0
+    var tombstones = 0
+    steps.zipWithIndex.foreach { case (step, i) =>
+      step()
+      val to = t.loadCurrent()
+      val raw = t.scanLsnInterval(spark, to, Long.MinValue, Long.MaxValue)
+        .select(Model.sourceColumn).distinct().collect().map(_.getString(0)).toSet
+      if (i < steps.size - 1)
+        // no engine write lands a row whose source has no mark
+        assert(raw.subsetOf(to.hwms.keySet), s"v${to.version}: tags $raw, marks ${to.hwms}")
+      else assert(raw.contains("ghost") && !to.hwms.contains("ghost"))
+      val ms = stream(t.root)
+      (0L until to.version).foreach { fromV =>
+        val want = t.readChanges(spark, fromV)
+          .select("conv_id", "turn_idx", Model.lsnColumn, Model.deletedColumn,
+            Model.sourceColumn)
+          .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2),
+            r.getBoolean(3), r.getString(4))).toSet
+        val got = shipped(t.root, ms, VersionOffset(fromV), VersionOffset(to.version))
+        assert(collapse(got) == want, s"($fromV, ${to.version}]")
+        assert(!got.exists(_._5 == "ghost"), s"($fromV, ${to.version}] shipped a markless row")
+        pairs += 1
+        tombstones += want.count(_._4)
+      }
+    }
+    assert(pairs == 45 && tombstones > 0, s"$pairs pairs, $tombstones tombstones")
+  }
+
+  test("the mark rule is exact at the lsn extremes: sliced bootstrap ships every row once, a Long.MaxValue mark ships nothing") {
+    import graft.ops.MergeInto
+    val t = new ChronicleTable(tmpDir("cs-extreme"))
+    t.create(Model.physicalSchemaV1, numBuckets = 2)
+    // engine rows at lsn 0 and Long.MaxValue share bucket 0; a file with
+    // no lsn stats (untagged rows, Long.MinValue among them) sits alone in
+    // bucket 1, so the manifests still bound the slicing axis at [0, max]
+    def inBucket(b: Int) = Iterator.from(0).map(i => f"x-$i%02d")
+      .filter(ChronicleTable.bucketOf(_, 2) == b)
+    val Seq(k0, k1, k2) = inBucket(0).take(3).toSeq
+    val Seq(f0, f1, f2) = inBucket(1).take(3).toSeq
+    MergeInto(spark, t, changeBatch(Seq((0L, "I", k0, 0), (1L, "I", k1, 0),
+      (Long.MaxValue, "I", k2, 0))), "a#0", "t", mergeOnRead = true)
+    val markV = t.loadCurrent().version
+    assert(t.loadCurrent().hwms == Map("a" -> Long.MaxValue))
+    commitForeignFile(t, "foreign#0", Seq((Long.MinValue, f0, 0, null),
+      (5L, f1, 0, null), (1L << 62, f2, 0, null)), stats = false)
+    val snap = t.loadCurrent()
+    assert(t.lsnBounds(snap) == (0L, Long.MaxValue))
+    assert(t.filesOf(snap).exists(_.maxLsn < 0L), "fixture: a file without lsn stats")
+
+    val ms = stream(t.root,
+      Map("startingVersion" -> "bootstrap", "bootstrapSlices" -> "3"))
+    val o0 = ms.initialOffset().asInstanceOf[VersionOffset]
+    assert(o0.slices == 3)
+    val offsets = Iterator.iterate(o0)(o =>
+      ms.latestOffset(o, null).asInstanceOf[VersionOffset]).take(4).toSeq
+    val slices = offsets.sliding(2).map { case Seq(a, b) =>
+      shipped(t.root, ms, a, b).map(r => r._1 -> r._3) }.toSeq
+    val all = Seq(k0 -> 0L, k1 -> 1L, k2 -> Long.MaxValue,
+      f0 -> Long.MinValue, f1 -> 5L, f2 -> (1L << 62))
+    assert(slices.flatten.sorted == all.sorted, s"slices shipped $slices")
+    assert(slices.forall(_.nonEmpty), s"every slice ships a row: $slices")
+
+    // a cursor whose only mark is Long.MaxValue: the tail batch plans the
+    // files (Long.MaxValue floors prune nothing) and ships none of their rows
+    val tail = stream(t.root)
+    assert(tail.planInputPartitions(VersionOffset(markV),
+      VersionOffset(snap.version)).nonEmpty)
+    assert(shipped(t.root, tail, VersionOffset(markV), VersionOffset(snap.version)).isEmpty)
+    assert(t.readChanges(spark, markV).count() == 0L)
   }
 
   test("columns option prunes the stream schema; tail batches stay exact under the pushed lsn floor") {
