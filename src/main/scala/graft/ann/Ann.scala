@@ -25,15 +25,6 @@ object Ann {
   def quantized(c: Column): Column =
     transform(c, x => round(x.cast("double") * 1000).cast("long"))
 
-  /** Exact integer inner product of two quantized vectors. Array
-    * higher-order functions are INTERPRETED (measured ~3x slower than the
-    * posexplode + hash-aggregate equivalent) — kept only as the readable
-    * scalar form; every candidate-path caller scores through
-    * [[scorePairs]] instead.
-    */
-  def dotQ(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, z) => acc + z)
-
   /** Bucket-size cap for LSH candidate generation (the stop-bucket analog
     * of [[graft.dedup.DocDedup.maxShingleDf]]): candidate pairs are
     * generated all-pairs WITHIN a bucket, so one degenerate bucket (near-
@@ -68,8 +59,9 @@ object Ann {
 
   /** Exact quantized inner product for a set of candidate (a, b) pairs via
     * posexplode + hash aggregate — every operator stays inside whole-stage
-    * codegen, unlike a per-pair `dotQ` (interpreted higher-order function,
-    * measured ~3x slower on the brute-force path and fixed there first).
+    * codegen, unlike a per-pair `aggregate(zip_with(…))` dot product
+    * (interpreted higher-order functions, measured ~3x slower on the
+    * brute-force path and fixed there first).
     * `flat` must be the [[flatQ]] of the vectors to score (callers
     * restrict it to the candidate ids when the pair set is selective, so
     * the corpus is never exploded twice in full); output (a, b, dot_q).

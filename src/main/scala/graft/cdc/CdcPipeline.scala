@@ -58,11 +58,8 @@ case class PipelineConfig(
     maintenanceEveryBatches: Int = 0,
     compactMaxFilesPerBucket: Int = 8,
     retainSnapshots: Int = 10,
-    /** Record one [[MetricEvent]] per applied batch under
-      * <tableRoot>/metrics (the reference's /surosinkstat surface,
-      * SinkStat.java:29-41, as an append-only queryable ledger), plus the
-      * stream listener's `stream-progress` lines. Stream epochs are
-      * always recorded, by the sink that applies them.
+    /** Add [[CdcPipeline.startStream]]'s `stream-progress` lines to the
+      * metrics ledger; every merge records its own commit line anyway.
       */
     recordMetrics: Boolean = false,
     /** Merge-on-read writes: each batch lands as DELTA files (O(batch)
@@ -100,8 +97,16 @@ class CdcPipeline(val cfg: PipelineConfig) {
 
   def ensureTable(): Unit =
     if (!table.exists) table.create(Model.physicalSchemaV1, cfg.numBuckets)
-    else Chain.requireNotChainFed(table,
-      s"a direct pipeline drain (source ${cfg.sourceId})")
+    else {
+      Chain.requireNotChainFed(table,
+        s"a direct pipeline drain (source ${cfg.sourceId})")
+      // an unordered source's keys (SQL `dml-…`, stream epochs) do not
+      // number batches, and its mark does not bound redelivery
+      require(!table.loadCurrent().unordered(cfg.sourceId),
+        s"source ${cfg.sourceId} is an unordered source of ${cfg.tableRoot} " +
+          "(written by SQL or a stream): a pipeline drain under the same id " +
+          "would misread its ledger keys — use another sourceId")
+    }
 
   def listSegments(): Seq[String] = {
     val p = Paths.get(cfg.sourceDir)
@@ -280,9 +285,9 @@ class CdcPipeline(val cfg: PipelineConfig) {
   private var appliedBatches = 0
 
   /** The one drain loop (suro's QueuedSink.run, QueuedSink.java:96-153):
-    * select the next slice, apply it, then the per-batch tail — adaptive
-    * sizing, timing line, metrics line, maintenance. Returns the batches
-    * applied and the last merge.
+    * select the next slice, apply it (the merge times and records its own
+    * commit), then the per-batch tail — adaptive sizing, timing line,
+    * maintenance. Returns the batches applied and the last merge.
     *
     * Slices are selected by segment NUMBER strictly past the previous
     * slice (the persisted cursor for the first) — not by position in the
@@ -310,23 +315,21 @@ class CdcPipeline(val cfg: PipelineConfig) {
       val raw = readBatch(spark, slice)
       // quarantine splits the batch twice; persist so both read the cache
       if (cfg.quarantine) raw.persist(StorageLevel.MEMORY_AND_DISK)
-      val t0 = System.nanoTime()
       val r =
         try MergeInto(spark, table, route(spark, raw, next), batchKey(next),
           source = slice.mkString(","), saltBuckets = cfg.saltBuckets,
           cursor = Some(cfg.sourceId -> segNum(slice.last)),
-          prepared = prepared, mergeOnRead = cfg.mergeOnRead)
+          prepared = prepared, mergeOnRead = cfg.mergeOnRead,
+          mode = if (prepareAhead) "pipelined" else "batch")
         finally if (cfg.quarantine) raw.unpersist()
-      val sec = (System.nanoTime() - t0) / 1e9
       if (cfg.adaptiveBatching)
-        dynamicSpb = nextBatchSize(slice.size, sec, cfg.targetBatchSec,
+        dynamicSpb = nextBatchSize(slice.size, r.sec, cfg.targetBatchSec,
           cfg.segmentsPerBatch)
       n += 1
       appliedBatches += 1
       lastResult = Some(r)
-      if (verbose) println(f"[cdc] batch applied in $sec%.2fs " +
+      if (verbose) println(f"[cdc] batch applied in ${r.sec}%.2fs " +
         f"(upserts=${r.upserts} deletes=${r.deletes} rewrote=${r.rewrittenFiles} added=${r.addedFiles})")
-      recordMetric(r, sec, if (prepareAhead) "pipelined" else "batch")
       // Periodic in-drain maintenance ([[Chain.maintain]]): a normal commit
       // in the same ledger. Safe alongside an in-flight next-batch PREPARE
       // — prepare reads no table state, and the commit-conflict rebase
@@ -352,11 +355,6 @@ class CdcPipeline(val cfg: PipelineConfig) {
 
   /** Metrics directory (next to the table, like lineage). */
   def metricsDir: String = s"${cfg.tableRoot}/metrics"
-
-  private def recordMetric(r: MergeResult, sec: Double, mode: String): Unit =
-    if (cfg.recordMetrics)
-      Metrics.record(cfg.tableRoot, cfg.sourceId, r.snapshot.version,
-        Seq(r), sec, mode)
 
   /** The metrics ledger as a DataFrame (rates/durations per batch/epoch,
     * alongside [[lineage]]).

@@ -170,7 +170,6 @@ object Chain {
     val key = cursorKey(src.root)
     val lastV = dstCursors.getOrElse(key, -1L)
     if (lastV >= cur.version) return None
-    val t0 = System.nanoTime()
     var known = knownPrefixes(dst.loadCurrent())
     var shipped = Set.empty[String]
 
@@ -212,10 +211,6 @@ object Chain {
           }
         }
       }
-    // one metrics line per applied poll on the DOWNSTREAM table, so
-    // `/stats` on a chain-fed table serves live per-mode rates
-    Metrics.record(dst.root, src.root, cur.version, merges,
-      (System.nanoTime() - t0) / 1e9, "chain-poll")
     Some(ChainResult(lastV, cur.version, shipped.toSeq.sorted, merges))
   }
 
@@ -294,6 +289,7 @@ object Chain {
     * shipped for it before, so the wider claim is vacuous) — a source
     * joining mid-stream then tiles from 0 and its floor folds immediately
     * instead of leaving a permanent pre-join gap.
+    * Each merge records its line (`chain-poll`/`chain-stream`) downstream.
     */
   private def shipPerSource(dst: ChronicleTable, changes0: DataFrame,
       known: Set[String], unitLo: Long, unitHi: Long, rangeKeys: Boolean,
@@ -317,7 +313,8 @@ object Chain {
           batchKey = if (!rangeKeys && lo == unitHi) s"$s#$unitHi" else s"$s#$lo-$unitHi",
           source = what,
           cursor = if (i == prefixes.size - 1) cursor else None,
-          mergeOnRead = mergeOnRead)
+          mergeOnRead = mergeOnRead,
+          mode = if (rangeKeys) "chain-poll" else "chain-stream")
       }
     } finally { changes.unpersist(); () }
   }
@@ -401,12 +398,9 @@ object Chain {
         // exactly-once per batch: ledger keys `<src>#<batchId>` — batch
         // ids are contiguous across restarts (the offset WAL), so the
         // ledger floor folds them and a replayed batch skips
-        val t0 = System.nanoTime()
-        val (_, ms) = shipPerSource(dst, batch, knownPrefixes(dst.loadCurrent()),
+        shipPerSource(dst, batch, knownPrefixes(dst.loadCurrent()),
           batchId, batchId, rangeKeys = false, Some(markerKey -> batchId),
           s"chainstream $markerKey batch $batchId", mergeOnRead)
-        Metrics.record(dst.root, src.root, batchId, ms,
-          (System.nanoTime() - t0) / 1e9, "chain-stream")
         // same housekeeping as [[follow]]'s — batch ids are contiguous
         // across restarts, so the cadence survives a resume
         if (maintainEveryTriggers > 0 && batchId > 0 &&

@@ -8,13 +8,17 @@ import org.apache.spark.sql.types._
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-/** One operational metrics record per applied micro-batch/epoch — the
-  * engine's live-stats surface. The reference exposes per-sink rates and
-  * health over REST (`/surosinkstat`: SinkStat.java:29-41,
+/** One operational metrics record per change commit — the engine's
+  * live-stats surface. The reference exposes per-sink rates and health
+  * over REST (`/surosinkstat`: SinkStat.java:29-41,
   * StatusServer.java:46-56, backed by Servo meters, QueuedSink.java:45);
   * here the same numbers land as an append-only JSONL ledger next to the
   * table, queryable as a DataFrame alongside lineage. Writes are
-  * driver-side appends of one small line per batch — never a Spark job.
+  * driver-side appends of one small line per commit — never a Spark job.
+  * [[graft.ops.MergeInto]] writes every commit's line: `source` is the
+  * batch key's prefix (without a stream epoch's `-ss`), `epoch` the
+  * committed version. A `stream-progress` line names the query and its
+  * batch id instead.
   */
 case class MetricEvent(
     source: String,
@@ -42,23 +46,19 @@ object Metrics {
 
   def file(dir: String): java.nio.file.Path = Paths.get(dir, "events.jsonl")
 
-  def append(dir: String, e: MetricEvent): Unit = synchronized {
+  private def append(dir: String, e: MetricEvent): Unit = synchronized {
     val p = file(dir)
     if (!Files.exists(p.getParent)) Files.createDirectories(p.getParent)
     Files.writeString(p, mapper.writeValueAsString(e) + "\n",
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
 
-  /** Appends the line of one applied batch/epoch — one or more merges of
-    * one drain step — to the ledger under `<tableRoot>/metrics`.
-    */
-  def record(tableRoot: String, source: String, epoch: Long,
-      merges: Seq[graft.ops.MergeResult], sec: Double, mode: String): Unit = {
-    val up = merges.map(_.upserts).sum
-    val del = merges.map(_.deletes).sum
-    append(s"$tableRoot/metrics", MetricEvent(source, epoch,
-      System.currentTimeMillis(), up + del, sec, up, del, mode))
-  }
+  /** Appends one change commit's line under `<tableRoot>/metrics`. */
+  def record(tableRoot: String, source: String, r: graft.ops.MergeResult,
+      mode: String): Unit =
+    append(s"$tableRoot/metrics", MetricEvent(source, r.snapshot.version,
+      System.currentTimeMillis(), r.upserts + r.deletes, r.sec, r.upserts,
+      r.deletes, mode))
 
   /** The metrics ledger as a DataFrame (explicit schema — no inference scan). */
   def view(spark: SparkSession, dir: String): DataFrame =
@@ -116,11 +116,11 @@ object Metrics {
   }
 
   /** StreamingQueryListener recording one metrics line per progress event
-    * of ONE query run — the Structured Streaming half of the surface (the
-    * sink records merge-level upsert/delete counts separately). It binds
-    * to the first run named `queryName` that starts after it is added
-    * (Spark delivers start events synchronously), so no other run of that
-    * name writes to `dir`, and leaves `streams` when its run terminates.
+    * of ONE query run — the Structured Streaming half of the surface (each
+    * epoch's merge records its own commit line). It binds to the first
+    * run named `queryName` that starts after it is added (Spark delivers
+    * start events synchronously), so no other run of that name writes to
+    * `dir`, and leaves `streams` when its run terminates.
     */
   class EpochListener(queryName: String, dir: String,
       streams: StreamingQueryManager) extends StreamingQueryListener {

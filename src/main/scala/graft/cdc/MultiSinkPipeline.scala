@@ -167,7 +167,8 @@ class MultiSinkPipeline(val cfg: PipelineConfig, val routes: Seq[RouteConfig],
         sink -> (() => MergeInto(batch.sparkSession, sinkTable(sink), rows,
           batchKey, source = source, saltBuckets = cfg.saltBuckets,
           orderedSource = orderedSource, cursor = cursor,
-          mergeOnRead = cfg.mergeOnRead))
+          mergeOnRead = cfg.mergeOnRead,
+          mode = if (orderedSource) "multisink" else "multisink-stream"))
       })
     } finally batch.unpersist()
   }

@@ -59,10 +59,7 @@ object RunCdc {
         numBuckets = if (args.length > 4) args(4).toInt else 16,
         saltBuckets = if (args.length > 5) args(5).toInt else 0,
         routeFilterFile = if (args.length > 6) Some(args(6)) else None,
-        mergeOnRead = sys.env.get("GRAFT_MOR").contains("1"),
-        // GRAFT_METRICS=1: append one JSONL metrics event per batch under
-        // <tableRoot>/metrics — surfaced by `stats` as per-mode rates
-        recordMetrics = sys.env.get("GRAFT_METRICS").contains("1")))
+        mergeOnRead = sys.env.get("GRAFT_MOR").contains("1")))
       p.verbose = true
       val t0 = System.nanoTime()
       // GRAFT_PIPELINED=1: overlap next batch's dedup with current apply;
@@ -173,7 +170,7 @@ object RunCdc {
       }
       // live rates off the metrics ledger tail (the /surosinkstat numbers,
       // SinkStat.java:29-41; the same fold /stats serves) — per mode, over
-      // the last 20 batches/epochs; absent when nothing recorded metrics
+      // the last 20 lines; every change commit of every writer writes one
       val rates = Metrics.recentRates(s"${args(1)}/metrics")
       if (rates.nonEmpty) {
         println("recent rates (last 20 per mode):")

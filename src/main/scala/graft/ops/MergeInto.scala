@@ -8,14 +8,15 @@ import org.apache.spark.sql.types.StructType
 
 import scala.jdk.CollectionConverters._
 
-/** Result of one merge attempt. */
+/** Result of one merge attempt; `sec` is the apply's wall time. */
 case class MergeResult(
     snapshot: Snapshot,
     skipped: Boolean,
     upserts: Long,
     deletes: Long,
     rewrittenFiles: Int,
-    addedFiles: Int)
+    addedFiles: Int,
+    sec: Double)
 
 /** Hand-rolled MERGE INTO (copy-on-write) against a [[ChronicleTable]].
   *
@@ -59,7 +60,8 @@ case class MergeResult(
   *      construction of the hash split — the single write pass is worth more
   *      than narrow per-file ranges, which would need a second
   *      sampling/range pass);
-  *   7. commit is a metadata-only atomic pointer flip recording the batchKey.
+  *   7. commit is a metadata-only atomic pointer flip recording the batchKey,
+  *      then the commit's [[graft.cdc.Metrics]] line (under the writer's `mode`).
   */
 object MergeInto {
 
@@ -255,7 +257,8 @@ object MergeInto {
         * small relative to the touched working set (the 100 TB steady
         * state); CoW stays right when reads dominate commits.
         */
-      mergeOnRead: Boolean = false): MergeResult = {
+      mergeOnRead: Boolean = false, mode: String = "merge"): MergeResult = {
+    val t0 = System.nanoTime()
     // A streaming epoch's batch DataFrame rides the micro-batch's CLONED
     // session, not the caller's. Every internal scan and the staged write
     // must run on the BATCH's session: the final action executes under the
@@ -268,7 +271,7 @@ object MergeInto {
     if (ChronicleTable.isCommitted(base, batchKey)) {
       // Exactly-once: replay of an already-applied batch is a no-op.
       prepared.foreach(_.unpersist())
-      return MergeResult(base, skipped = true, 0, 0, 0, 0)
+      return MergeResult(base, skipped = true, 0, 0, 0, 0, 0.0)
     }
 
     // --- schema evolution ------------------------------------------------
@@ -286,6 +289,15 @@ object MergeInto {
     def sig(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
     val evolved = sig(physicalSchema) != sig(base.schema)
     val srcPrefix = batchKey.takeWhile(_ != '#')
+
+    // every commit ends here: timed and recorded, `-ss` (stream epoch) dropped
+    def committed(next: Snapshot, upserts: Long, deletes: Long,
+        rewritten: Int, added: Int): MergeResult = {
+      val r = MergeResult(next, skipped = false, upserts, deletes, rewritten,
+        added, (System.nanoTime() - t0) / 1e9)
+      graft.cdc.Metrics.record(table.root, srcPrefix.stripSuffix("-ss"), r, mode)
+      r
+    }
 
     val prep0 = prepared.getOrElse(
       prepare(spark, batch, base.numBuckets, saltBuckets))
@@ -333,9 +345,8 @@ object MergeInto {
       if (n == 0 ||
           (orderedSource && prep.maxLsn <= base.hwmFor(srcPrefix))) {
         val lineage = LineageEntry(batchKey, source, -1L, -1L, 0, 0, 0, 0L, Map.empty, -1L)
-        val next = table.commit(base, PendingCommit(batchKey, Nil, Nil, None,
-          lineage, cursor, ordered = orderedSource))
-        return MergeResult(next, skipped = false, 0, 0, 0, 0)
+        return committed(table.commit(base, PendingCommit(batchKey, Nil, Nil,
+          None, lineage, cursor, ordered = orderedSource)), 0, 0, 0, 0)
       }
       val minKey = prep.minKey
       val maxKey = prep.maxKey
@@ -439,7 +450,7 @@ object MergeInto {
         val added = writeStaged(deltaRows, bytesHint = n * 256L)
           .map(_.copy(delta = true))
         val (next, upserts, deletes) = commitFiles(Nil, added)
-        return MergeResult(next, skipped = false, upserts, deletes, 0, added.size)
+        return committed(next, upserts, deletes, 0, added.size)
       }
 
       // --- metadata-only file pruning --------------------------------------
@@ -528,7 +539,7 @@ object MergeInto {
       val added = writeStaged(newData,
         bytesHint = touchedBytes + n * avgRowBytes)
       val (next, upserts, deletes) = commitFiles(touched.map(_.path), added)
-      MergeResult(next, skipped = false, upserts, deletes, touched.size, added.size)
+      committed(next, upserts, deletes, touched.size, added.size)
     } finally dedupedAll.unpersist()
   }
 

@@ -31,15 +31,11 @@ case class RoutingTable(
 
 /** Spark-native re-expression of `MessageRouter.process`
   * (suro-core/.../routing/MessageRouter.java:60-102): the routing table
-  * compiles once into Catalyst predicates.
-  *
-  * Two surfaces:
-  *  - [[Router.fanout]] returns one lazy DataFrame per sink (composable,
-  *    but each sink's ACTION re-executes the source scan — callers that
-  *    write every sink should persist the input first or use fanoutWrite);
-  *  - [[Router.fanoutWrite]] is the one-pass path: events are tagged with
-  *    the sinks they match, exploded, and written `partitionBy(sink)` —
-  *    exactly ONE scan and ONE write job regardless of route count.
+  * compiles once into Catalyst predicates, and [[Router.fanoutWrite]]
+  * tags events with the sinks they match, explodes them and writes
+  * `partitionBy(sink)` — exactly ONE scan and ONE write job regardless of
+  * route count. (Table sinks fan out through
+  * [[graft.cdc.MultiSinkPipeline]].)
   */
 object Router {
 
@@ -89,46 +85,6 @@ object Router {
       .write.partitionBy("__sink").mode("overwrite").parquet(outDir)
     obs.get.map { case (s, n) => s -> n.asInstanceOf[Long] }
       .filter(_._2 > 0)
-  }
-
-  /** Compile and fan out. Returns sinkName -> DataFrame. A route's alias
-    * rewrites the routing-key column, payload preserved (MessageRouter
-    * alias semantics, MessageRouter.java:85-99). An event can match
-    * multiple routes (suro writes to every matching route's sink).
-    *
-    * NOTE: the returned frames share the input PLAN, not materialized data;
-    * running an action per sink re-executes the source scan each time.
-    * Persist the input first, or use [[fanoutWrite]] for a one-pass write.
-    */
-  def fanout(df: DataFrame, table: RoutingTable): Map[String, DataFrame] = {
-    val key = col(table.keyColumn)
-    val keyless = key.isNull || (key.cast("string") === lit(""))
-    val valid = df.filter(!keyless)
-
-    val compiled: Seq[(RouteConfig, Column)] = table.routes.map { r =>
-      r -> r.filter.map(FilterDsl.compile).getOrElse(lit(true))
-    }
-    val routed: Map[String, DataFrame] = compiled
-      .groupBy(_._1.sink)
-      .map { case (sink, rs) =>
-        val frames = rs.map { case (r, pred) =>
-          val m = valid.filter(pred)
-          r.alias match {
-            case Some(a) => m.withColumn(table.keyColumn, lit(a))
-            case None => m
-          }
-        }
-        sink -> frames.reduce(_ unionByName _)
-      }
-
-    val noneMatched = compiled.map { case (_, p) => !coalesce(p, lit(false)) }
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val defaulted = valid.filter(noneMatched)
-
-    routed ++ Map(
-      table.defaultSink -> routed.get(table.defaultSink)
-        .map(_.unionByName(defaulted)).getOrElse(defaulted),
-      table.quarantineSink -> df.filter(keyless))
   }
 
   /** Parse a routes JSON file: `[{"sink": "...", "filter": "...", "alias": "..."}]`

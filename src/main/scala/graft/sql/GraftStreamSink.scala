@@ -1,6 +1,5 @@
 package graft.sql
 
-import graft.cdc.Metrics
 import graft.model.Model
 import graft.ops.MergeInto
 import graft.table.ChronicleTable
@@ -17,7 +16,7 @@ import org.apache.spark.sql.types.StructType
   * so Spark's offset checkpoint composes with the table's replay ledger —
   * a replayed epoch after a crash/restart is skipped by its batch key,
   * which is the crash-safety contract every other engine write upholds —
-  * and appends one `stream` line to the metrics ledger under
+  * and its commit appends one `stream` line to the metrics ledger under
   * `<root>/metrics` ([[graft.cdc.Metrics]]; served by `/stats`).
   *
   * Input rows may arrive in either change shape:
@@ -56,12 +55,9 @@ private[sql] class GraftStreamSink(table: ChronicleTable, source: String,
         f.name == Model.ordColumn || f.name == "op"))
       table.create(StructType(payload ++ Model.systemFields), buckets)
     }
-    val t0 = System.nanoTime()
-    val r = MergeInto(batch.sparkSession, table, batch, s"$source-ss#$batchId",
+    MergeInto(batch.sparkSession, table, batch, s"$source-ss#$batchId",
       source = s"$source-epoch-$batchId", saltBuckets = saltBuckets,
-      orderedSource = false, mergeOnRead = mergeOnRead)
-    Metrics.record(table.root, source, r.snapshot.version, Seq(r),
-      (System.nanoTime() - t0) / 1e9, "stream")
+      orderedSource = false, mergeOnRead = mergeOnRead, mode = "stream")
   }
 
   override def toString: String = s"GraftStreamSink(${table.root})"

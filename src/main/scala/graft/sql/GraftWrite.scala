@@ -111,13 +111,22 @@ object GraftWrite {
         s" values ${srcs.mkString(", ")} — split the statement per source")
     val src = srcs.headOption.getOrElse("sql")
     require(!src.contains('#'), s"source tag may not contain '#': $src")
+    // An ordered source's ledger keys are numbered units under its mark;
+    // a `dml-…` key under the same prefix never folds away, breaks the
+    // drain's batch numbering and turns the source unordered.
+    val snap = table.loadCurrent()
+    require(snap.unordered(src) ||
+        !(ChronicleTable.committedUnits(snap).contains(src) || snap.hwms.contains(src)),
+      s"source tag $src is an ordered source of ${table.root}: an INSERT " +
+        "under it would wedge that source's drain — tag the statement with " +
+        "a source of its own")
     val batchKey = s"$src#dml-${s.getAs[Long]("lo")}-${s.getAs[Long]("hi")}" +
       s"-$n-${java.lang.Long.toHexString(s.getAs[Long]("sig"))}"
 
     // unordered source: SQL statements carry no global ordering discipline,
     // so correctness rides the per-key LSN guard, never the batch HWM
     MergeInto(spark, table, MergeInto.eventsOf(d0), batchKey, src,
-      orderedSource = false, mergeOnRead = mergeOnRead)
+      orderedSource = false, mergeOnRead = mergeOnRead, mode = "sql")
   }
 
   private def withDefault(f: StructField, sql: String): StructField =

@@ -94,19 +94,22 @@ class FilterDslSpec extends SparkSpec {
       RouteConfig("hot", Some("""xpath("value") >= 10"""), None),
       RouteConfig("hot", Some("""xpath("routingKey") = "errors""""), Some("errs")),
       RouteConfig("cold", Some("""xpath("routingKey") = "clicks""""))))
-    val out = Router.fanout(events, table)
-    // hot: value>=10 (clicks/50) + errors aliased
-    val hot = out("hot").collect().map(r => (r.getString(0), r.getDouble(1))).toSet
-    assert(hot == Set(("clicks", 50.0), ("errs", 1.0)))
-    val cold = out("cold").collect().map(_.getDouble(1)).toSet
-    assert(cold == Set(5.0, 50.0))
+    val out = tmpDir("fanout-two-routes")
+    val counts = Router.fanoutWrite(events, table, out)
+    def sink(name: String) = spark.read.parquet(s"$out/__sink=$name")
+      .select("routingKey", "value").as[(String, Double)].collect().toSet
+    // hot: two routes into one sink — value>=10 (clicks/50) + errors aliased
+    assert(sink("hot") == Set(("clicks", 50.0), ("errs", 1.0)))
+    assert(sink("cold").map(_._2) == Set(5.0, 50.0))
     // default: matched no route (misc)
-    assert(out("default").collect().map(_.getString(0)).toSeq == Seq("misc"))
+    assert(sink("default").map(_._1) == Set("misc"))
     // quarantine: null key
-    assert(out("quarantine").count() == 1)
+    assert(sink("quarantine").size == 1)
+    assert(counts == Map("hot" -> 2L, "cold" -> 2L, "default" -> 1L,
+      "quarantine" -> 1L))
   }
 
-  test("fanoutWrite (one-pass) produces the same per-sink row sets as fanout") {
+  test("fanoutWrite (one-pass): per-sink counts, alias rewrite, multi-match duplication") {
     val events = Seq(
       ("clicks", 5.0), ("clicks", 50.0), ("errors", 1.0), ("misc", 2.0), (null, 3.0)
     ).toDF("routingKey", "value")

@@ -4,6 +4,7 @@ import graft.model.Model
 import graft.ops.MergeInto
 import graft.table.ChronicleTable
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The SQL DDL/DML surface: CREATE TABLE, INSERT INTO as change-batch
   * application, and maintenance procedures via CALL — the full
@@ -374,5 +375,46 @@ class SqlWriteSpec extends SparkSpec {
     val dels = spark.sql(s"SELECT deletes FROM $cat.t.lineage " +
       s"WHERE version > $preDelete").collect().map(_.getLong(0)).toSeq
     assert(dels.sorted == Seq(1L, 2L), s"2 then 1 tombstones, got $dels")
+  }
+
+  test("an INSERT tagged with an ordered source's id is refused, in either order, and the drain still converges") {
+    import graft.cdc.{CdcPipeline, PipelineConfig}
+    import graft.source.{BinlogConfig, BinlogGenerator}
+    import graft.sql.GraftWrite
+    val cfg = BinlogConfig(numEvents = 300, numConversations = 4, segmentSize = 100)
+    val src = tmpDir("sqltag-bl")
+    BinlogGenerator.writeSegments(spark, cfg, src)
+    def tagged(lsn: Long) = spark.createDataFrame(java.util.List.of(
+        org.apache.spark.sql.Row("conv-0", 0, "user", "sql row", null,
+          java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), lsn, "binlog")),
+      StructType(Model.turnSchema.fields ++ Seq(
+        StructField(Model.lsnColumn, LongType), StructField(Model.sourceColumn, StringType))))
+    def visible(p: CdcPipeline) = p.currentState(spark)
+      .select("conv_id", "turn_idx", "text").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
+    val oracle = BinlogGenerator.referenceReduction(cfg).values
+      .map(e => (e.conv_id, e.turn_idx, e.text)).toSet
+
+    // pipeline first: the source is ordered, so the INSERT refuses up front
+    val p = new CdcPipeline(PipelineConfig(src, tmpDir("sqltag-pipe"),
+      segmentsPerBatch = 1, numBuckets = 2))
+    assert(p.runAll(spark, maxBatches = 1) == 1)
+    val v = p.table.loadCurrent().version
+    val e1 = intercept[IllegalArgumentException](GraftWrite.insertChanges(p.table, tagged(1000L)))
+    assert(e1.getMessage.contains("source tag binlog"), e1.getMessage)
+    assert(p.table.loadCurrent().version == v)
+    assert(p.runAll(spark) == 2)
+    assert(visible(p) == oracle)
+
+    // INSERT first: the source is unordered, so the drain refuses up front
+    val t = new ChronicleTable(tmpDir("sqltag-sql"))
+    t.create(Model.physicalSchemaV1, 2)
+    GraftWrite.insertChanges(t, tagged(5L))
+    val v2 = t.loadCurrent().version
+    val p2 = new CdcPipeline(PipelineConfig(src, t.root, segmentsPerBatch = 1,
+      numBuckets = 2))
+    val e2 = intercept[IllegalArgumentException](p2.runAll(spark))
+    assert(e2.getMessage.contains("source binlog"), e2.getMessage)
+    assert(t.loadCurrent().version == v2)
   }
 }
