@@ -3,7 +3,7 @@ package graft.cdc
 import graft.model.Model
 import graft.ops.{MergeInto, MergeResult}
 import graft.sql.GraftStreamSink
-import graft.table.ChronicleTable
+import graft.table.{ChronicleTable, Snapshot}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -95,17 +95,22 @@ class CdcPipeline(val cfg: PipelineConfig) {
 
   val table = new ChronicleTable(cfg.tableRoot)
 
-  def ensureTable(): Unit =
+  /** Creates the table, or checks that this pipeline may drain it;
+    * returns its current snapshot.
+    */
+  def ensureTable(): Snapshot =
     if (!table.exists) table.create(Model.physicalSchemaV1, cfg.numBuckets)
     else {
-      Chain.requireNotChainFed(table,
+      val snap = table.loadCurrent()
+      Chain.requireNotChainFed(table, snap,
         s"a direct pipeline drain (source ${cfg.sourceId})")
       // an unordered source's keys (SQL `dml-…`, stream epochs) do not
       // number batches, and its mark does not bound redelivery
-      require(!table.loadCurrent().unordered(cfg.sourceId),
+      require(!snap.unordered(cfg.sourceId),
         s"source ${cfg.sourceId} is an unordered source of ${cfg.tableRoot} " +
           "(written by SQL or a stream): a pipeline drain under the same id " +
           "would misread its ledger keys — use another sourceId")
+      snap
     }
 
   def listSegments(): Seq[String] = {
@@ -125,8 +130,7 @@ class CdcPipeline(val cfg: PipelineConfig) {
   /** Highest committed batch id (for batch-key allocation): max over the
     * explicit ledger window and the compacted contiguous floor.
     */
-  def lastCommittedBatch(): Int = {
-    val snap = table.loadCurrent()
+  def lastCommittedBatch(snap: Snapshot = table.loadCurrent()): Int = {
     val prefix = s"${cfg.sourceId}#"
     val fromKeys = snap.committedBatches.keys
       .filter(_.startsWith(prefix))
@@ -206,11 +210,11 @@ class CdcPipeline(val cfg: PipelineConfig) {
     * is what actually ran, so it seeds the cursor — new commits record the
     * real consumed segment number and partial trailing batches become safe.
     */
-  def consumedSegment(): Long =
-    table.loadCurrent().cursors.get(cfg.sourceId) match {
+  def consumedSegment(snap: Snapshot = table.loadCurrent()): Long =
+    snap.cursors.get(cfg.sourceId) match {
       case Some(c) => c // authoritative: what was actually consumed
       case None => // pre-cursor table: the index mapping is what ran
-        (lastCommittedBatch() + 1).toLong * cfg.segmentsPerBatch - 1
+        (lastCommittedBatch(snap) + 1).toLong * cfg.segmentsPerBatch - 1
     }
 
   /** Current adaptive batch size (segments); meaningful only when
@@ -297,11 +301,15 @@ class CdcPipeline(val cfg: PipelineConfig) {
     * selection; under prepare-ahead, selection runs one batch AHEAD of the
     * apply that measures the rate (that overlap is the point of the
     * pipeline), so sizing reacts with a one-batch lag.
+    *
+    * The drain loads one snapshot for its own bookkeeping; after that, each
+    * merge's result snapshot numbers the next batch (the merge loads its
+    * own commit base).
     */
   private def drain(spark: SparkSession, maxBatches: Int,
       prepareAhead: Boolean): (Int, Option[MergeResult]) = {
-    ensureTable()
-    val slices = Iterator.unfold(consumedSegment()) { cursor =>
+    @volatile var latest = ensureTable()
+    val slices = Iterator.unfold(consumedSegment(latest)) { cursor =>
       val spb = if (cfg.adaptiveBatching) dynamicSpb else cfg.segmentsPerBatch
       val slice =
         if (diskFull()) Nil
@@ -311,7 +319,7 @@ class CdcPipeline(val cfg: PipelineConfig) {
     var n = 0
     var lastResult: Option[MergeResult] = None
     def applyOne(slice: Seq[String], prepared: Option[MergeInto.Prepared]): Unit = {
-      val next = lastCommittedBatch() + 1
+      val next = lastCommittedBatch(latest) + 1
       val raw = readBatch(spark, slice)
       // quarantine splits the batch twice; persist so both read the cache
       if (cfg.quarantine) raw.persist(StorageLevel.MEMORY_AND_DISK)
@@ -328,6 +336,7 @@ class CdcPipeline(val cfg: PipelineConfig) {
       n += 1
       appliedBatches += 1
       lastResult = Some(r)
+      latest = r.snapshot
       if (verbose) println(f"[cdc] batch applied in ${r.sec}%.2fs " +
         f"(upserts=${r.upserts} deletes=${r.deletes} rewrote=${r.rewrittenFiles} added=${r.addedFiles})")
       // Periodic in-drain maintenance ([[Chain.maintain]]): a normal commit
@@ -344,7 +353,7 @@ class CdcPipeline(val cfg: PipelineConfig) {
     if (prepareAhead)
       MergeInto.prepareAhead(spark, slices)(slice =>
         MergeInto.prepare(spark, readBatch(spark, slice),
-          table.loadCurrent().numBuckets, cfg.saltBuckets))(
+          latest.numBuckets, cfg.saltBuckets))(
         (slice, prepared) => applyOne(slice, Some(prepared)))
     else slices.foreach(applyOne(_, None))
     (n, lastResult)

@@ -2,7 +2,7 @@ package graft.cdc
 
 import graft.model.Model
 import graft.ops.{MergeInto, MergeResult}
-import graft.table.ChronicleTable
+import graft.table.{ChronicleTable, Snapshot}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -68,14 +68,17 @@ object Chain {
     * cursors. Multi-chain and multi-source-pipeline tables stay legal.
     */
   def requireNotChainFed(t: ChronicleTable, who: String): Unit =
-    if (t.exists) {
-      val chains = t.loadCurrent().cursors.keys.filter(isChainCursor)
-      require(chains.isEmpty,
-        s"table ${t.root} is chain-fed (${chains.mkString(",")}): $who would " +
-          "collide with the chain's ledger floors (version-range keys vs " +
-          "batch-index keys under one prefix) — drain into a separate table " +
-          "and chain it, or drop the chain first")
-    }
+    if (t.exists) requireNotChainFed(t, t.loadCurrent(), who)
+
+  /** [[requireNotChainFed]] against a snapshot of `t` the caller holds. */
+  def requireNotChainFed(t: ChronicleTable, snap: Snapshot, who: String): Unit = {
+    val chains = snap.cursors.keys.filter(isChainCursor)
+    require(chains.isEmpty,
+      s"table ${t.root} is chain-fed (${chains.mkString(",")}): $who would " +
+        "collide with the chain's ledger floors (version-range keys vs " +
+        "batch-index keys under one prefix) — drain into a separate table " +
+        "and chain it, or drop the chain first")
+  }
 
   /** The checks both chain modes make before anything ships, returning the
     * downstream's cursors: the upstream must be tailable — failing BEFORE

@@ -26,8 +26,9 @@ import org.apache.spark.sql.functions._
   * ([[graft.table.ChronicleTable.readKey]]) or key-range scan prunes to a
   * single file per bucket. Range partitioning's sampling pass over the
   * victims is acceptable HERE because compaction is periodic maintenance;
-  * the per-batch merge write stays hash-split exactly to avoid that
-  * second pass on the hot path (MergeInto.writeStaged).
+  * the per-batch copy-on-write commit avoids that second pass on the hot
+  * path by writing each touched bucket's merge as one file from one task,
+  * and a merge-on-read delta write hash-splits its batch.
   *
   * Runs through the same atomic commit protocol as MERGE, so readers always
   * see either the old or the new file set, and a crash mid-compaction

@@ -4,7 +4,8 @@ import graft.model.Model
 import graft.table._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.graft.{DatasetFactory, RowShuffle}
+import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StructField, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -47,47 +48,30 @@ case class MergeResult(
   *      conv_id range intersects the batch's are rewritten — untouched files
   *      carry forward in the manifest without any IO (a touched delta
   *      brings its whole bucket);
-  *   4. touched files read key-unique through the readers' scan
-  *      ([[ChronicleTable.readRewrite]]); the existing-LSN guard reads ONLY
-  *      (conv_id, turn_idx, _lsn) of them and semi-joins a broadcast of
-  *      the batch keys — result is at most batch-sized;
-  *   5. survivors = touched rows LEFT ANTI JOIN broadcast(winner keys):
-  *      table data never shuffles, it streams through whole-stage codegen;
-  *   6. new files are hash-split within each bucket and sorted by
-  *      (bucket, conv_id, turn_idx) inside every file, so parquet row-group
-  *      stats stay tight; pruning granularity for the NEXT merge is the
-  *      bucket (per-file conv_id bounds inside a bucket are near-full by
-  *      construction of the hash split — the single write pass is worth more
-  *      than narrow per-file ranges, which would need a second
-  *      sampling/range pass);
+  *   4. copy-on-write: ONE stage, one task per touched bucket. The rewrite
+  *      scan ([[ChronicleTable.readRewrite]]) plans one partition per
+  *      bucket the batch touches, each the bucket's touched files as one
+  *      sorted, key-unique stream — table data never crosses an exchange;
+  *   5. the batch's winners are the only rows shuffled: partition i holds
+  *      bucket i's winners, sorted by key. Each task two-way merges the
+  *      pair ([[graft.sql.SortedLwwMerge]]; an ordered source's row
+  *      displaces unconditionally, an unordered source's only with a
+  *      strictly greater `_lsn`);
+  *   6. the task writes the bucket's one file, sorted by (conv_id,
+  *      turn_idx), so parquet row-group stats stay tight; pruning
+  *      granularity for the NEXT merge is the bucket. Merge-on-read writes
+  *      only the batch, hash-split within each bucket;
   *   7. commit is a metadata-only atomic pointer flip recording the batchKey,
   *      then the commit's [[graft.cdc.Metrics]] line (under the writer's `mode`).
   */
 object MergeInto {
 
-  /** Broadcast the anti-join key side when the deduped batch has fewer keys
-    * than this; larger batches use a shuffled join instead. Building a
-    * multi-million-entry broadcast hash relation is SERIAL driver work per
-    * micro-batch — measured to cap cluster scaling long before the shuffle
-    * would — so the cutoff stays modest (typical CDC micro-batches are far
-    * below it; a bulk backfill is exactly the case where the shuffled join
-    * is right). Settable only from specs, which lower it to plan the
-    * shuffled join on small fixtures.
-    */
-  @volatile private[graft] var broadcastKeyLimit: Long = 1000000L
-
-  /** Broadcast-hint a batch-derived join side only under the key cutoff
-    * (above it the hint is omitted and the join shuffles / AQE decides).
-    */
-  private[graft] def maybeBroadcastDf(df: DataFrame, keyCount: Long): DataFrame =
-    if (keyCount <= broadcastKeyLimit) broadcast(df) else df
-
-  /** Floor on the estimated bytes a single staged-write task should own
-    * (guide §2.5/§6: derive partitioning from input size, keep output
-    * files from fragmenting). Only ever REDUCES the write's task count —
-    * the shuffle-partition/bucket cap still bounds it above — so cluster-
-    * scale merges plan exactly as before while micro-batches stop paying
-    * a fleet of near-empty write tasks. A production floor would sit
+  /** Floor on the estimated bytes a single merge-on-read delta-write task
+    * should own (guide §2.5/§6: derive partitioning from input size, keep
+    * output files from fragmenting). Only ever REDUCES the write's task
+    * count — the shuffle-partition/bucket cap still bounds it above — so
+    * cluster-scale merges plan exactly as before while micro-batches stop
+    * paying a fleet of near-empty write tasks. A production floor would sit
     * toward a full target file size (128M+); 16 MiB stays modest so the
     * local bench's mid-size merges keep their parallelism.
     */
@@ -122,7 +106,7 @@ object MergeInto {
 
   /** A prepared (deduped, cached) batch plus the slim planning stats the
     * apply phase needs BEFORE writing: key range + bucket set (file
-    * pruning), row count (broadcast sizing, empty-batch exit) and max LSN
+    * pruning), row count (delta write sizing, empty-batch exit) and max LSN
     * (fully-stale-batch exit). Computed over the PRE-HWM dedup result —
     * for pruning that is a safe superset; correctness of redelivery
     * handling stays with the HWM filter at apply time.
@@ -250,9 +234,8 @@ object MergeInto {
         * reads and rewrites every touched file. Readers pay a per-key LWW
         * merge (the scan's sorted bucket merge, `graft.sql.SortedLwwMerge`)
         * until compaction folds the deltas into base files; the per-key
-        * `_lsn` comparison that the
-        * CoW guard join performs at write time happens there at read time,
-        * so unordered sources need no guard scan either. The
+        * `_lsn` comparison that the copy-on-write merge makes at write time
+        * happens there at read time. The
         * write-amplification arm of the LSM trade — right when batches are
         * small relative to the touched working set (the 100 TB steady
         * state); CoW stays right when reads dominate commits.
@@ -324,16 +307,13 @@ object MergeInto {
     // sources (Kafka partitions, binlog shards) are independent, so a
     // global mark would silently drop a second source whose sequence runs
     // below the first's.
-    val deduped =
-      if (orderedSource)
-        dedupedAll.filter(col(Model.ordColumn) > lit(base.hwmFor(srcPrefix)))
-      else dedupedAll
+    val mark = if (orderedSource) Some(base.hwmFor(srcPrefix)) else None
 
     try {
       // Write planning runs off the stats the PREPARE pass already
       // computed with its materializing action (key range + bucket set are
-      // a safe superset of the post-HWM batch; broadcast sizing needs only
-      // the order of magnitude). The expensive lineage stats (LSN range,
+      // a safe superset of the post-HWM batch; the delta write's size needs
+      // only the order of magnitude). The expensive lineage stats (LSN range,
       // delete count, payload checksum over the full text column) ride the
       // WRITE job as observed metrics — no apply-side aggregate job at
       // all, which under the pipelined drain's FIFO scheduling used to
@@ -342,8 +322,7 @@ object MergeInto {
       // empty batch, or an ordered batch that is redeliveries end-to-end
       // (its max LSN at-or-below this source's mark): ledger the batchKey
       // and advance the cursor without touching data
-      if (n == 0 ||
-          (orderedSource && prep.maxLsn <= base.hwmFor(srcPrefix))) {
+      if (n == 0 || mark.exists(prep.maxLsn <= _)) {
         val lineage = LineageEntry(batchKey, source, -1L, -1L, 0, 0, 0, 0L, Map.empty, -1L)
         return committed(table.commit(base, PendingCommit(batchKey, Nil, Nil,
           None, lineage, cursor, ordered = orderedSource)), 0, 0, 0, 0)
@@ -352,11 +331,14 @@ object MergeInto {
       val maxKey = prep.maxKey
       val buckets = prep.buckets
 
-      // Lineage metrics collected by the write job. The CollectMetrics
-      // node must sit on a branch the write plan executes EXACTLY ONCE
-      // (the upsert side of the union, below the ordered-mode tombstone
-      // drop) — on a shared subplan like `deduped` it would execute once
-      // per branch and the bit_xor checksum would self-cancel.
+      // Lineage metrics collected by the write job over the rows it writes:
+      // `__win` marks the batch's winners (every delta row; a copy-on-write
+      // batch row that displaced or joined the table), `__ck` carries each
+      // upsert's checksum term, hashed over the batch's own column types.
+      // The CollectMetrics node must sit where the write plan executes
+      // EXACTLY ONCE (below the ordered-mode tombstone drop) — on a shared
+      // subplan it would execute once per branch and the bit_xor checksum
+      // would self-cancel.
       val obs = org.apache.spark.sql.Observation()
       // lineage checksum columns: keys + text for transcript tables (the
       // per-turn text equality invariant), keys + full payload for derived
@@ -365,57 +347,45 @@ object MergeInto {
         (if (mergedPayload.fieldNames.contains("text")) Seq("text")
          else mergedPayload.fieldNames.toSeq
            .filterNot(Model.keyColumns.contains))).map(col)
+      val win = col("__win")
       val metricExprs = Seq(
-        coalesce(min(col(Model.ordColumn)), lit(-1L)).as("minLsn"),
-        coalesce(max(col(Model.ordColumn)), lit(-1L)).as("maxLsn"),
-        coalesce(sum(when(col("op") === "D", 1L).otherwise(0L)), lit(0L))
-          .as("deletes"),
-        coalesce(sum(when(col("op") =!= "D", 1L).otherwise(0L)), lit(0L))
-          .as("upserts"),
-        coalesce(bit_xor(when(col("op") =!= "D",
-          xxhash64(checksumCols: _*))), lit(0L))
-          .as("checksum"))
+        coalesce(min(when(win, col(Model.lsnColumn))), lit(-1L)).as("minLsn"),
+        coalesce(max(when(win, col(Model.lsnColumn))), lit(-1L)).as("maxLsn"),
+        coalesce(sum(when(win && col(Model.deletedColumn), 1L).otherwise(0L)),
+          lit(0L)).as("deletes"),
+        coalesce(sum(when(win && !col(Model.deletedColumn), 1L).otherwise(0L)),
+          lit(0L)).as("upserts"),
+        coalesce(bit_xor(col("__ck")), lit(0L)).as("checksum"))
       var obsInput: DataFrame = null
       def observed(rows: DataFrame): DataFrame = {
         obsInput = rows
         rows.observe(obs, metricExprs.head, metricExprs.tail: _*)
       }
+      // The rows the write and the metrics see, each in the bucket it lands
+      // in: the table's physical columns, then `bucket`, `__win`, `__ck`.
+      val rowSchema = StructType(physicalSchema.fields ++ Seq(
+        StructField("bucket", IntegerType), StructField("__win", BooleanType),
+        StructField("__ck", LongType)))
+      def inRowShape(rows: DataFrame, isWinner: Boolean,
+          derived: (String, Column)*): DataFrame = conform(rows, rowSchema,
+        (derived ++ Seq("__win" -> lit(isWinner),
+          "bucket" -> ChronicleTable.bucketExpr("conv_id", base.numBuckets))).toMap)
+      // every deduped batch row; the mark filter is the caller's
+      val batchRows = inRowShape(dedupedAll, isWinner = true,
+        "__ck" -> when(col("op") =!= "D", xxhash64(checksumCols: _*)),
+        Model.lsnColumn -> col(Model.ordColumn),
+        Model.deletedColumn -> (col("op") === "D"),
+        Model.sourceColumn -> lit(srcPrefix))
+      def written(rows: DataFrame): DataFrame = rows.drop("__win", "__ck")
 
-      // hash-split sorted write of the new files, which report their own
-      // manifest stats (shared by both modes). `bytesHint` is the manifest-
-      // derived estimate of the staged output (touched bytes + batch
-      // estimate): the split count derives from DATA SIZE, floored so no
-      // write task owns less than ~MinWritePartitionBytes — a core-count
-      // constant here produced 32 near-empty files (and a 32-entry commit)
-      // for an 800-row micro-batch, pure fixed overhead that shrinks at
-      // neither cluster size nor data size. At scale the size-derived count
-      // saturates the same shuffle-partition cap as before, so large merges
-      // are unchanged.
-      def writeStaged(newData: DataFrame, bytesHint: Long): Seq[DataFileMeta] = {
-        val cap = math.max(1, math.min(
-          sess.conf.get("spark.sql.shuffle.partitions").toInt, buckets.size * 4))
-        val parts = math.max(1L, math.min(cap.toLong,
-          (bytesHint + MinWritePartitionBytes - 1) / MinWritePartitionBytes))
-          .toInt
-        val splitsPerBucket = math.max(1, parts / math.max(1, buckets.size))
-        tick("write")(StagedWrite(table, newData
-          .withColumn("bucket", ChronicleTable.bucketExpr("conv_id", base.numBuckets))
-          .withColumn("__split",
-            pmod(xxhash64(col("conv_id"), lit(1)), lit(splitsPerBucket)))
-          .repartition(parts, col("bucket"), col("__split"))
-          .drop("__split")
-          .sortWithinPartitions("bucket", "conv_id", "turn_idx")))
-      }
-
-      // (reads obs — call only after writeStaged's action completed)
+      // (reads obs — call only after the write's action completed)
       def commitFiles(removed: Seq[String], added: Seq[DataFileMeta]): (Snapshot, Long, Long) = {
         // When the staged write lands ZERO rows end-to-end (a pure-delete
         // batch displacing every touched row), AQE's empty-relation
-        // propagation re-plans the finished map stage away and the
-        // CollectMetrics node vanishes from the final plan — the
+        // propagation may plan the CollectMetrics node away — the
         // observation then completes with an EMPTY row. Recompute the same
-        // aggregates directly over the observed input (cached, and tiny in
-        // exactly this case) instead of committing bogus lineage.
+        // aggregates directly over the observed input (tiny in exactly this
+        // case) instead of committing bogus lineage.
         val m0 = obs.get
         val m =
           if (m0.nonEmpty) m0
@@ -440,14 +410,24 @@ object MergeInto {
       if (mergeOnRead) {
         // --- merge-on-read: the batch IS the write — no table reads --------
         // Tombstones persist unconditionally (ordered or not): read-time
-        // LWW needs them to mask the base rows they delete.
-        val deltaRows = conform(
-          observed(deduped
-            .withColumn(Model.lsnColumn, col(Model.ordColumn))
-            .withColumn(Model.deletedColumn, col("op") === "D")
-            .withColumn(Model.sourceColumn, lit(srcPrefix))),
-          physicalSchema)
-        val added = writeStaged(deltaRows, bytesHint = n * 256L)
+        // LWW needs them to mask the base rows they delete. The delta rows
+        // hash-split within each bucket, sorted by key inside every file;
+        // the split count derives from DATA SIZE, floored so no write task
+        // owns less than ~MinWritePartitionBytes (a core-count constant
+        // produced 32 near-empty files for an 800-row micro-batch).
+        val cap = math.max(1, math.min(
+          sess.conf.get("spark.sql.shuffle.partitions").toInt, buckets.size * 4))
+        val parts = math.max(1L, math.min(cap.toLong,
+          (n * 256L + MinWritePartitionBytes - 1) / MinWritePartitionBytes)).toInt
+        val splitsPerBucket = math.max(1, parts / math.max(1, buckets.size))
+        val winners =
+          mark.fold(batchRows)(m => batchRows.filter(col(Model.lsnColumn) > m))
+        val added = tick("write")(StagedWrite(table, written(observed(winners))
+          .withColumn("__split",
+            pmod(xxhash64(col("conv_id"), lit(1)), lit(splitsPerBucket)))
+          .repartition(parts, col("bucket"), col("__split"))
+          .drop("__split")
+          .sortWithinPartitions("bucket", "conv_id", "turn_idx")))
           .map(_.copy(delta = true))
         val (next, upserts, deletes) = commitFiles(Nil, added)
         return committed(next, upserts, deletes, 0, added.size)
@@ -464,94 +444,66 @@ object MergeInto {
         if (deltaBuckets.isEmpty) pruned
         else pruned.filterNot(f => deltaBuckets(f.bucket)) ++
           table.files(base, FilePrune(Some(deltaBuckets)))
-      val touchedRows = touched.map(_.rows).sum
-      // key-unique: the scan LWW-merges each delta-carrying bucket
-      lazy val current = table.readRewrite(sess, base, touched)
 
-      // Broadcast the batch-key side only when the table side dwarfs it:
-      // building a broadcast hash relation is SERIAL driver work (collect +
-      // hash build), measured ~2s for a 500k-key batch — pure Amdahl loss
-      // when the touched table side is batch-sized anyway. The row counts
-      // come free from the manifest.
-      def maybeBroadcast(df: DataFrame): DataFrame =
-        if (n * 8 <= touchedRows) maybeBroadcastDf(df, n) else df
-
-      // --- per-key existing-LSN guard (column-pruned scan of touched files)
-      // For an ordered source the HWM filter already guarantees every batch
-      // event is strictly newer than anything applied, so the guard is
-      // skipped — one fewer scan+join per micro-batch.
-      val winners: DataFrame =
-        if (touched.isEmpty || orderedSource) deduped
-        else {
-          // one existing row per contested key: the scan merged its versions
-          val contested = current
-            .select((Model.keyColumns :+ Model.lsnColumn).map(col): _*)
-            .join(maybeBroadcast(deduped.select(Model.keyColumns.map(col): _*)),
-              Model.keyColumns, "left_semi")
-            .withColumnRenamed(Model.lsnColumn, "__existing_lsn")
-          // contested is at most batch-sized, which a bulk unordered backfill
-          // can push past the broadcast cutoff — gate it like every other
-          // batch-derived side (AQE falls back to a shuffled join).
-          deduped.join(maybeBroadcast(contested), Model.keyColumns, "left")
-            .filter(col("__existing_lsn").isNull ||
-              col(Model.ordColumn) > col("__existing_lsn"))
-            .drop("__existing_lsn")
+      // --- bucket-aligned merge: one task per touched bucket ----------------
+      // Partition i of both sides is bucket bs(i). The table side is the
+      // rewrite scan (each bucket's touched files as one sorted, key-unique
+      // stream; table data never crosses an exchange); the batch side is
+      // the only shuffle, its winners moved to their bucket's partition and
+      // sorted by key. Each task merges the pair — an ordered source's row
+      // displaces the table's unconditionally (its high-water mark already
+      // made every batch event newer than anything applied), an unordered
+      // source's only with a strictly greater `_lsn` — and writes the
+      // bucket's one sorted file.
+      val bs = buckets.toSeq.sorted
+      val tableRows = inRowShape(table.readRewrite(sess, base, touched, bs),
+        isWinner = false)
+      val layout = StructType(tableRows.schema.zip(batchRows.schema).map {
+        case (t, b) => t.copy(nullable = t.nullable || b.nullable) })
+      val Seq(convIdx, turnIdx, lsnIdx, bucketIdx) =
+        Seq("conv_id", "turn_idx", Model.lsnColumn, "bucket").map(layout.fieldIndex)
+      val partOf = bs.zipWithIndex.toMap
+      // The mark filters the rows as they enter the shuffle: as a column
+      // filter, its per-commit constant would compile the batch side's
+      // generated code anew on every commit.
+      val winners = batchRows.queryExecution.toRdd
+        .filter(r => mark.forall(r.getLong(lsnIdx) > _))
+      val batchSide = DatasetFactory.ofRows(sess,
+        RowShuffle(winners, layout, bs.size)(r => partOf(r.getInt(bucketIdx))), layout)
+        .sortWithinPartitions("conv_id", "turn_idx").queryExecution.toRdd
+      val added = tick("write") {
+        val merged = tableRows.queryExecution.toRdd.zipPartitions(batchSide) {
+          (t, b) => new graft.sql.SortedLwwMerge(Seq(t, b),
+            Seq("the bucket's files", "the batch"), convIdx, turnIdx, lsnIdx,
+            lastWins = orderedSource)
         }
-
-      // --- survivors: touched rows whose key is NOT displaced --------------
-      // (conformed: the scan reads the base schema, the commit the evolved)
-      val winnerKeys = winners.select(Model.keyColumns.map(col): _*)
-      val survivors: Option[DataFrame] =
-        if (touched.isEmpty) None
-        else Some(conform(current, physicalSchema)
-          .join(maybeBroadcast(winnerKeys), Model.keyColumns, "left_anti"))
-
-      // Winning deletes persist as tombstones (payload nulled), so a later
-      // redelivery of an older change for the key loses the LSN comparison
-      // instead of resurrecting the row. An ordered source needs no
-      // tombstones — the HWM filter already makes deletes final — so they
-      // are dropped there ABOVE the metrics node (the delete count and LSN
-      // range must still see them).
-      val upsertRows = conform({
-        val o = observed(winners
-          .withColumn(Model.lsnColumn, col(Model.ordColumn))
-          .withColumn(Model.deletedColumn, col("op") === "D")
-          .withColumn(Model.sourceColumn, lit(srcPrefix)))
-        if (orderedSource) o.filter(col("op") =!= "D") else o
-      }, physicalSchema)
-      val newData = survivors match {
-        case Some(s) => s.unionByName(upsertRows)
-        case None => upsertRows
+        // Winning deletes persist as tombstones, so a later redelivery of an
+        // older change for the key loses the LSN comparison instead of
+        // resurrecting the row. An ordered source needs no tombstones — the
+        // HWM filter already makes deletes final — so they are dropped there
+        // ABOVE the metrics node (the delete count and LSN range must still
+        // see them).
+        val rows = observed(DatasetFactory.ofRows(sess, merged, layout,
+          sortedBy = Seq("bucket", "conv_id", "turn_idx")))
+        StagedWrite(table, written(
+          if (orderedSource) rows.filter(!(win && col(Model.deletedColumn))) else rows)
+          .sortWithinPartitions("bucket", "conv_id", "turn_idx"))
       }
-
-      // --- write new files, sorted within each bucket split -----------------
-      // Hash repartition on (bucket, sub-split), NOT repartitionByRange:
-      // range partitioning runs a sampling job that would execute the whole
-      // merge pipeline a second time — at scale that doubles the pass over
-      // the touched data. The deterministic hash split keeps hot buckets
-      // from serializing into one writer; files stay sorted by key so
-      // row-group stats and the footer min/max remain useful.
-      val touchedBytes = touched.map(_.bytes).sum
-      val avgRowBytes =
-        if (touchedRows > 0 && touchedBytes > 0)
-          math.max(64L, touchedBytes / touchedRows)
-        else 256L
-      val added = writeStaged(newData,
-        bytesHint = touchedBytes + n * avgRowBytes)
       val (next, upserts, deletes) = commitFiles(touched.map(_.path), added)
       committed(next, upserts, deletes, touched.size, added.size)
     } finally dedupedAll.unpersist()
   }
 
-  /** Project `df` onto `schema`: shared columns pass through, columns the
-    * frame lacks become typed nulls (schema-on-read fill for pre-evolution
-    * data).
+  /** Project `df` onto `schema` in one select: a `derived` column is its
+    * expression, shared columns pass through, columns the frame lacks
+    * become typed nulls (schema-on-read fill for pre-evolution data).
     */
-  def conform(df: DataFrame, schema: StructType): DataFrame = {
+  def conform(df: DataFrame, schema: StructType,
+      derived: Map[String, Column] = Map.empty): DataFrame = {
     val have = df.columns.toSet
     df.select(schema.fields.toSeq.map { f =>
-      if (have(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
+      derived.getOrElse(f.name,
+        if (have(f.name)) col(f.name) else lit(null)).cast(f.dataType).as(f.name)
     }: _*)
   }
 

@@ -129,13 +129,22 @@ private[sql] class MissingGraftTable(root: String) extends Table with SupportsRe
 /** What one of [[ChronicleTable]]'s readers asks of the scan: `merge`
   * LWW-merges delta-carrying buckets (off = raw rows, superseded versions
   * included), `tombstones` keeps `_deleted` winners visible, `rewrite`
-  * pins exactly the files a rewrite removes: no filter drops one of them,
-  * and `changes` keeps only the rows the changelog's mark rule ships
-  * ([[ChangeMarks]]; `readChanges` and the change stream's batches).
+  * pins exactly the files a rewrite removes ([[Rewrite]]), and `changes`
+  * keeps only the rows the changelog's mark rule ships ([[ChangeMarks]];
+  * `readChanges` and the change stream's batches).
   */
 private[graft] case class LibraryRead(merge: Boolean = true,
-    tombstones: Boolean = true, rewrite: Option[Seq[DataFileMeta]] = None,
+    tombstones: Boolean = true, rewrite: Option[Rewrite] = None,
     changes: Option[ChangeMarks] = None)
+
+/** The files a rewrite removes, read as ONE partition per bucket of
+  * `buckets` (ascending, a superset of the files' buckets), each the sorted
+  * LWW merge of the bucket's files: key-unique, sorted by (conv_id,
+  * turn_idx), a bucket without a file empty. Partition i is bucket
+  * `buckets(i)`, so a writer can zip other per-bucket rows against it. No
+  * filter drops one of the files.
+  */
+private[graft] case class Rewrite(files: Seq[DataFileMeta], buckets: Seq[Int])
 
 /** One snapshot of one ChronicleTable as a DSv2 batch table. The snapshot
   * is PINNED at resolution time (repeatable reads within a query; time
@@ -277,9 +286,15 @@ private[graft] class GraftScan(table: ChronicleTable, snap: Snapshot,
     if (columnar) Scan.ColumnarSupportMode.SUPPORTED
     else Scan.ColumnarSupportMode.UNSUPPORTED
 
-  /** The buckets whose partition LWW-merges its files. */
+  private val rewrite: Option[Rewrite] = library.flatMap(_.rewrite)
+
+  /** The buckets whose partition LWW-merges its files: every bucket of a
+    * rewrite, else the delta-carrying ones.
+    */
   private def merged: Set[Int] =
-    if (merge) files.filter(_.delta).map(_.bucket).toSet else Set.empty
+    if (rewrite.isDefined) rewrite.get.buckets.toSet
+    else if (merge) files.filter(_.delta).map(_.bucket).toSet
+    else Set.empty
 
   /** A scan that merges no bucket, keeps tombstone winners and picks no
     * changelog rows hands on parquet's columnar batches as they are (a
@@ -324,7 +339,7 @@ private[graft] class GraftScan(table: ChronicleTable, snap: Snapshot,
   }
 
   /** Manifest-pruned file set (re-computed when runtime filters land). */
-  private def files: Seq[DataFileMeta] = library.flatMap(_.rewrite).getOrElse {
+  private def files: Seq[DataFileMeta] = rewrite.map(_.files).getOrElse {
     val memo = filesMemo
     if (memo != null) return memo
     val computed = table.files(snap,
@@ -351,10 +366,11 @@ private[graft] class GraftScan(table: ChronicleTable, snap: Snapshot,
       GraftScan.wholeFile(f.path, ChronicleTable.fileBytes(spark, f))
     val buckets = merged
     val (merging, plain) = files.partition(f => buckets(f.bucket))
-    // delta-carrying bucket: ONE partition streaming-merges its files
-    // (keys never span buckets, so the per-bucket merge is exact)
-    val merges = merging.groupBy(_.bucket).toSeq.sortBy(_._1)
-      .map { case (_, fs) => GraftPartition(fs.map(whole), merge = true) }
+    // a merged bucket: ONE partition streaming-merges its files (keys never
+    // span buckets, so the per-bucket merge is exact)
+    val byBucket = merging.groupBy(_.bucket)
+    val merges = rewrite.map(_.buckets).getOrElse(byBucket.keys.toSeq.sorted)
+      .map(b => GraftPartition(byBucket.getOrElse(b, Nil).map(whole), merge = true))
     // the other files pack by size, largest first, as Spark's file scans do
     val wholes = plain.map(whole).sortBy(-_.length)
     val openCost = spark.sessionState.conf.filesOpenCostInBytes
@@ -486,16 +502,19 @@ private[sql] class GraftBatchReaderFactory(
       .asInstanceOf[Iterator[ColumnarBatch]])
 }
 
-/** The engine's one LWW merge, for readers and rewrites alike: a streaming
-  * k-way merge of per-file row streams, each sorted by (conv_id, turn_idx)
-  * with unique keys within a stream — the invariant every engine write
-  * upholds. Per key the max-`_lsn` row wins; memory is O(streams) (one
-  * buffered row each — buffered rows are COPIES, the parquet reader reuses
-  * its row). A stream delivering out of order (a foreign file in the
-  * bucket) fails every read and rewrite of the bucket, naming `files`.
+/** The engine's one LWW merge, for readers, rewrites and copy-on-write
+  * commits alike: a streaming k-way merge of row streams, each sorted by
+  * (conv_id, turn_idx) with unique keys within a stream — the invariant
+  * every engine write upholds. Per key the max-`_lsn` row wins, a tie going
+  * to the earlier stream; with `lastWins` the last stream's row wins
+  * whatever its `_lsn` (an ordered source's batch). Memory is O(streams)
+  * (one buffered row each — buffered rows are COPIES, the parquet reader
+  * reuses its row). A stream delivering out of order (a foreign file in
+  * the bucket) fails every read and rewrite of the bucket, naming `files`.
   */
-private[sql] class SortedLwwMerge(streams: Seq[Iterator[InternalRow]],
-    files: Seq[String], convIdx: Int, turnIdx: Int, lsnIdx: Int)
+private[graft] class SortedLwwMerge(streams: Seq[Iterator[InternalRow]],
+    files: Seq[String], convIdx: Int, turnIdx: Int, lsnIdx: Int,
+    lastWins: Boolean = false)
   extends Iterator[InternalRow] {
 
   private val its = streams.toArray
@@ -521,7 +540,8 @@ private[sql] class SortedLwwMerge(streams: Seq[Iterator[InternalRow]],
     while (i < heads.length) {
       val h = heads(i)
       if (h != null && cmp(h, min) == 0) {
-        if (winner == null || h.getLong(lsnIdx) > winner.getLong(lsnIdx))
+        if (winner == null || h.getLong(lsnIdx) > winner.getLong(lsnIdx) ||
+            (lastWins && i == heads.length - 1))
           winner = h
         val n = if (its(i).hasNext) its(i).next().copy() else null
         if (n != null && cmp(n, h) <= 0)

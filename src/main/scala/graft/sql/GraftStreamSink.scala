@@ -33,10 +33,11 @@ import org.apache.spark.sql.types.StructType
   * epoch), `saltBuckets` (hot-key shuffle salting).
   *
   * This is the v1 `Sink` bridge, not a DSv2 per-task StreamingWrite, by
-  * DESIGN: MERGE is a whole-batch transform (dedup shuffle, guard join,
-  * bucket-pruned rewrite) — blind per-task writers cannot express it
-  * without staging the batch to disk twice. The micro-batch is re-rooted
-  * as a batch DataFrame first ([[org.apache.spark.sql.graft.MicroBatch]]).
+  * DESIGN: MERGE is a whole-batch transform (dedup shuffle, batch rows
+  * moved to their buckets, bucket-pruned rewrite) — blind per-task
+  * writers cannot express it without staging the batch to disk twice.
+  * The micro-batch is re-rooted as a batch DataFrame first
+  * ([[org.apache.spark.sql.graft.MicroBatch]]).
   */
 private[sql] class GraftStreamSink(table: ChronicleTable, source: String,
     mergeOnRead: Boolean, buckets: Int, saltBuckets: Int) extends Sink {

@@ -2,7 +2,7 @@ package graft.table
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import graft.sql.{GraftTable, LibraryRead}
+import graft.sql.{GraftTable, LibraryRead, Rewrite}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
@@ -758,17 +758,22 @@ class ChronicleTable(val root: String) {
 
   /** The rows a rewrite carries forward from `victims`, the files its
     * commit removes: the readers' scan pinned to exactly those files,
-    * tombstone winners kept. A victim delta brings its whole bucket (the
-    * merge unit), or a key's base file left in place would gain a twin.
+    * tombstone winners kept, one merged, sorted, key-unique partition per
+    * bucket of `buckets` in ascending order (a bucket without a victim
+    * reads empty; [[graft.sql.Rewrite]]). A victim delta brings its whole
+    * bucket (the merge unit), or a key's base file left in place would gain
+    * a twin.
     */
   private[graft] def readRewrite(spark: SparkSession, snapshot: Snapshot,
-      victims: Seq[DataFileMeta]): DataFrame = {
+      victims: Seq[DataFileMeta],
+      buckets: Seq[Int] = Nil): DataFrame = {
     val deltaBuckets = victims.filter(_.delta).map(_.bucket).toSet
     val removed = victims.map(_.path).toSet
     require(deltaBuckets.isEmpty ||
       files(snapshot, FilePrune(Some(deltaBuckets))).forall(f => removed(f.path)),
       s"a rewrite of $root removing a delta file must remove its whole bucket")
-    scan(spark, snapshot, LibraryRead(rewrite = Some(victims)))
+    scan(spark, snapshot, LibraryRead(rewrite = Some(Rewrite(victims,
+      (victims.map(_.bucket) ++ buckets).distinct.sorted))))
   }
 
   def read(spark: SparkSession): DataFrame = read(spark, loadCurrent())

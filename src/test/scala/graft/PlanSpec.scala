@@ -119,36 +119,52 @@ class PlanSpec extends SparkSpec {
       s"point-lookup key filter not pushed:\n${pKey.linesIterator.take(8).mkString("\n")}")
   }
 
-  /** Runs `f` with a job counter: `f`'s argument runs a block and returns
-    * the Spark jobs it started. Job counts are noise-free evidence that a
-    * commit does the same work: a change that moves them changed the commit
-    * path. Only jobs carrying this thread's tag count (broadcast and
-    * subquery threads inherit it), so stray jobs from other suites cannot
-    * leak in.
+  /** What a block ran: Spark jobs, and the bytes their tasks wrote to
+    * shuffle files.
     */
-  private def withJobCounter[T](f: ((=> Any) => Int) => T): T = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  private case class Work(jobs: Int, shuffleWriteBytes: Long)
+
+  /** Runs `f` with a work counter: `f`'s argument runs a block and returns
+    * the Spark jobs it started and their shuffle-write bytes. Both are
+    * noise-free evidence that a commit does the same work: a change that
+    * moves them changed the commit path. Only jobs carrying this thread's
+    * tag count (broadcast and subquery threads inherit it), so stray jobs
+    * from other suites cannot leak in.
+    */
+  private def withWorkCounter[T](f: ((=> Any) => Work) => T): T = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
     val sc = spark.sparkContext
     val tag = "graft.test.jobGuard"
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val bytes = new java.util.concurrent.atomic.AtomicLong()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(tag) != null)
+        if (e.properties != null && e.properties.getProperty(tag) != null) {
           jobs.incrementAndGet()
+          e.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          bytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
     }
     sc.addSparkListener(listener)
     sc.setLocalProperty(tag, "counted")
     try f { body =>
       org.apache.spark.ListenerBusDrain(sc)
-      jobs.set(0)
+      jobs.set(0); stages.clear(); bytes.set(0L)
       body
       org.apache.spark.ListenerBusDrain(sc)
-      jobs.get
+      Work(jobs.get, bytes.get)
     } finally {
       sc.setLocalProperty(tag, null)
       sc.removeSparkListener(listener)
     }
   }
+
+  /** [[withWorkCounter]], counting jobs only. */
+  private def withJobCounter[T](f: ((=> Any) => Int) => T): T =
+    withWorkCounter(work => f(body => work(body).jobs))
 
   test("counter guard: Spark jobs per runOnce commit, copy-on-write and merge-on-read") {
     import graft.cdc.{CdcPipeline, PipelineConfig}
@@ -169,8 +185,10 @@ class PlanSpec extends SparkSpec {
       }
       val cow = jobsPerCommit(mergeOnRead = false)
       val mor = jobsPerCommit(mergeOnRead = true)
-      // counts measured on this fixture before the drain loop was unified
-      assert(cow == Seq(6, 7, 7), s"jobs per copy-on-write commit moved: $cow")
+      // counts measured on this fixture: 6,7,7 while the commit ran a
+      // broadcast of the batch keys and a table-row repartition stage;
+      // 5,5,5 since each touched bucket merges in one write task
+      assert(cow == Seq(5, 5, 5), s"jobs per copy-on-write commit moved: $cow")
       assert(mor == Seq(6, 6, 6), s"jobs per merge-on-read commit moved: $mor")
     }
   }
@@ -254,11 +272,51 @@ class PlanSpec extends SparkSpec {
     plans.toArray(Array.empty[SparkPlan]).toSeq
   }
 
+  /** The stages of the jobs `body` runs, as they completed. */
+  private def stagesOf(body: => Any): Seq[org.apache.spark.scheduler.StageInfo] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stages.add(e.stageInfo)
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    stages.toArray(Array.empty[StageInfo]).toSeq
+  }
+
+  /** Asserts the stages of a copy-on-write commit read table files once,
+    * through the graft scan (the engine's only DataSource v2 read, a
+    * `DataSourceRDD`; a raw parquet read is a `FileScanRDD`), in one stage
+    * that shuffles nothing and runs `tasks` tasks.
+    */
+  private def assertTableRowsStay(what: String,
+      stages: Seq[org.apache.spark.scheduler.StageInfo], tasks: Int): Unit = {
+    def shuffled(s: org.apache.spark.scheduler.StageInfo) =
+      s.taskMetrics.shuffleWriteMetrics.recordsWritten
+    def show(s: org.apache.spark.scheduler.StageInfo) = s"stage ${s.stageId} " +
+      s"(${s.numTasks} tasks, ${shuffled(s)} rows shuffled): " +
+      s.rddInfos.map(_.name).mkString(", ")
+    val all = stages.map(show).mkString("\n")
+    assert(!stages.exists(_.rddInfos.exists(_.name == "FileScanRDD")),
+      s"$what reads files outside the graft scan:\n$all")
+    val reads = stages.filter(_.rddInfos.exists(_.name == "DataSourceRDD"))
+    assert(reads.size == 1, s"$what: stages reading the table:\n$all")
+    assert(shuffled(reads.head) == 0, s"$what: table rows cross an exchange:\n$all")
+    assert(reads.head.numTasks == tasks,
+      s"$what: the write runs one task per touched bucket:\n$all")
+  }
+
   /** `plans` read table files only through the graft scan, and no window
     * sits above a table read (the batch's own dedup window may remain).
     */
   private def assertOneMerge(what: String,
-      plans: Seq[org.apache.spark.sql.execution.SparkPlan]): Unit = {
+      plans: Seq[org.apache.spark.sql.execution.SparkPlan],
+      readsInPlans: Boolean = true): Unit = {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     import org.apache.spark.sql.execution.window.WindowExec
@@ -266,7 +324,8 @@ class PlanSpec extends SparkSpec {
     def isRead(p: SparkPlan) =
       p.isInstanceOf[BatchScanExec] || p.isInstanceOf[FileSourceScanExec]
     val reads = plans.flatMap(h.collect(_) { case p if isRead(p) => p })
-    assert(reads.nonEmpty, s"$what read no table files")
+    assert(reads.nonEmpty == readsInPlans,
+      s"$what: ${if (readsInPlans) "no" else "a"} table read in its plans")
     reads.foreach {
       case b: BatchScanExec if b.scan.isInstanceOf[graft.sql.GraftScan] => ()
       case other => fail(s"$what reads table files outside the graft scan: $other")
@@ -307,21 +366,53 @@ class PlanSpec extends SparkSpec {
       var compact = Seq.empty[org.apache.spark.sql.execution.SparkPlan]
       val nCompact = jobsOf { compact = plansOf(Compaction(spark, mor.table)) }
       var cow = Seq.empty[org.apache.spark.sql.execution.SparkPlan]
-      val nCow = jobsOf { cow = plansOf(MergeInto(spark, t, batch(10 until 30, 200L),
-        "u#2", "t", orderedSource = false)) }
+      var cowStages = Seq.empty[org.apache.spark.scheduler.StageInfo]
+      val nCow = jobsOf { cowStages = stagesOf { cow = plansOf(MergeInto(spark, t,
+        batch(10 until 30, 200L), "u#2", "t", orderedSource = false)) } }
       assertOneMerge("merge-on-read compaction", compact)
-      assertOneMerge("unordered copy-on-write commit", cow)
+      // the commit reads the table inside its write job, through the rows
+      // of the scan's plan: the plans hold no table read, the stages do
+      assertOneMerge("unordered copy-on-write commit", cow, readsInPlans = false)
+      assertTableRowsStay("unordered copy-on-write commit", cowStages, tasks = 2)
       // measured on these fixtures: 3 and 13 while the rewrites read raw
       // parquet and merged through a key shuffle (a window; the guard's
-      // max-per-key aggregate too), 2 and 11 since they merge in the scan
+      // max-per-key aggregate too), 2 and 11 since they merge in the scan,
+      // 2 and 5 since the commit merges each bucket in its write task
       assert(nCompact == 2, s"jobs of a merge-on-read compaction moved: $nCompact")
-      assert(nCow == 11, s"jobs of an unordered copy-on-write commit moved: $nCow")
+      assert(nCow == 5, s"jobs of an unordered copy-on-write commit moved: $nCow")
     }
     assert(!mor.table.hasDeltas(mor.table.loadCurrent()))
     assert(!t.hasDeltas(t.loadCurrent()))
     val rows = t.read(spark).select("conv_id", "_lsn").as[(String, Long)].collect().toMap
     assert(rows == (0 until 40).map(k => f"conv-$k%03d" ->
       (if (k >= 10 && k < 30) 200L + k else if (k < 10) 100L + k else k.toLong)).toMap)
+  }
+
+  test("counter guard: a copy-on-write commit's shuffle writes do not grow with the table") {
+    import graft.ops.MergeInto
+    import spark.implicits._
+    def rows(keys: Seq[Int], lsn0: Long) = keys.map(k =>
+      (lsn0 + k, "U", f"conv-$k%05d", 0, "user", s"text ${lsn0 + k}",
+        None: Option[String], new java.sql.Timestamp(1704067200000L + k)))
+      .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+    withWorkCounter { workOf =>
+      // the same 50-row batch, spread over the key range of a table of
+      // `tableRows` rows, so the commit rewrites every file of the table
+      def commitBytes(tableRows: Int): Long = {
+        val t = new graft.table.ChronicleTable(tmpDir("table-shufflebytes"))
+        t.create(graft.model.Model.physicalSchemaV1, numBuckets = 2)
+        MergeInto(spark, t, rows(0 until tableRows, 0L), "w#0", "t")
+        val w = workOf { MergeInto(spark, t, rows(0 until 1000 by 20, 100000L), "w#1", "t") }
+        assert(t.loadCurrent().totalRows == tableRows)
+        w.shuffleWriteBytes
+      }
+      val small = commitBytes(1000)
+      val large = commitBytes(4000)
+      info(s"shuffle-write bytes: $small at 1000 table rows, $large at 4000")
+      assert(small > 0)
+      // 2.6x while the commit shuffled the rows it rewrote
+      assert(large <= small, s"shuffle bytes grew with the table: $small -> $large")
+    }
   }
 
   test("counter guard: Spark jobs of a commit adding more than 256 files") {
@@ -362,70 +453,52 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("unordered merge over the broadcast cutoff converges via shuffled joins") {
+  test("an unordered batch with more keys than the touched table converges") {
     import spark.implicits._
-    val saved = graft.ops.MergeInto.broadcastKeyLimit
-    val savedThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // force every batch-derived side over the cutoff AND disable Spark's
-      // size-based auto-broadcast: both merge joins must run shuffled
-      graft.ops.MergeInto.broadcastKeyLimit = 1
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val tbl = tmpDir("plan-unordered")
-      val table = new graft.table.ChronicleTable(tbl)
-      table.create(graft.model.Model.physicalSchemaV1, numBuckets = 2)
-      val mk = (i: Long, lsn: Long, text: String) =>
-        (lsn, if (text == null) "D" else "U", s"conv-$i", 0, "user", text,
-          None: Option[String], new java.sql.Timestamp(0L))
-      val init = (0L until 40L).map(i => mk(i, i, s"v0-$i"))
-        .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
-      graft.ops.MergeInto(spark, table, init, "u0", "plan", orderedSource = false)
-      // second unordered batch: updates + deletes arriving out of order
-      val upd = ((0L until 20L).map(i => mk(i, 100L + i, s"v1-$i")) ++
-        (20L until 30L).map(i => mk(i, 100L + i, null)))
-        .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
-      graft.ops.MergeInto(spark, table, upd, "u1", "plan", orderedSource = false)
-      val state = table.read(spark)
-        .filter(!org.apache.spark.sql.functions.col("_deleted"))
-        .select("conv_id", "text").as[(String, String)].collect().toMap
-      assert(state.size == 30)
-      (0L until 20L).foreach(i => assert(state(s"conv-$i") == s"v1-$i"))
-      (30L until 40L).foreach(i => assert(state(s"conv-$i") == s"v0-$i"))
-    } finally {
-      graft.ops.MergeInto.broadcastKeyLimit = saved
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", savedThresh)
-    }
-  }
-
-  test("broadcast hint present under the key cutoff, absent above it") {
-    import spark.implicits._
-    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
-    val df = Seq((1, "a")).toDF("k", "v")
-    def hasHint(d: org.apache.spark.sql.DataFrame) =
-      d.queryExecution.analyzed.collect { case h: ResolvedHint => h }.nonEmpty
-    val saved = graft.ops.MergeInto.broadcastKeyLimit
-    try {
-      graft.ops.MergeInto.broadcastKeyLimit = 10
-      assert(hasHint(graft.ops.MergeInto.maybeBroadcastDf(df, 10)))
-      assert(!hasHint(graft.ops.MergeInto.maybeBroadcastDf(df, 11)))
-    } finally graft.ops.MergeInto.broadcastKeyLimit = saved
-  }
-
-  test("merge anti-join broadcasts small batch keys against the table side") {
-    import spark.implicits._
-    val tbl = tmpDir("plan-merge")
-    val table = new graft.table.ChronicleTable(tbl)
+    val table = new graft.table.ChronicleTable(tmpDir("plan-unordered"))
     table.create(graft.model.Model.physicalSchemaV1, numBuckets = 2)
-    val mk = (i: Long) => (i, "I", s"conv-$i", 0, "user", s"t$i",
+    val mk = (i: Long, lsn: Long, text: String) =>
+      (lsn, if (text == null) "D" else "U", s"conv-$i", 0, "user", text,
+        None: Option[String], new java.sql.Timestamp(0L))
+    def df(rows: Seq[(Long, String, String, Int, String, String, Option[String], java.sql.Timestamp)]) =
+      rows.toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+    graft.ops.MergeInto(spark, table, df((0L until 40L).map(i => mk(i, i, s"v0-$i"))),
+      "u0", "plan", orderedSource = false)
+    // 100 keys against 40 table rows: updates, deletes, stale updates that
+    // lose to the table's newer row, and 60 new keys
+    val upd = (0L until 20L).map(i => mk(i, 100L + i, s"v1-$i")) ++
+      (20L until 30L).map(i => mk(i, 100L + i, null)) ++
+      (30L until 35L).map(i => mk(i, i - 30L, s"stale-$i")) ++
+      (40L until 100L).map(i => mk(i, 100L + i, s"v1-$i"))
+    graft.ops.MergeInto(spark, table, df(upd), "u1", "plan", orderedSource = false)
+    val state = table.read(spark)
+      .filter(!org.apache.spark.sql.functions.col("_deleted"))
+      .select("conv_id", "text").as[(String, String)].collect().toMap
+    val expected = ((0L until 20L) ++ (40L until 100L)).map(i => s"conv-$i" -> s"v1-$i") ++
+      (30L until 40L).map(i => s"conv-$i" -> s"v0-$i")
+    assert(state == expected.toMap)
+  }
+
+  test("a copy-on-write commit shuffles only the batch: no exchange above the table scan") {
+    import spark.implicits._
+    val table = new graft.table.ChronicleTable(tmpDir("plan-merge"))
+    table.create(graft.model.Model.physicalSchemaV1, numBuckets = 4)
+    val mk = (i: Long, lsn: Long) => (lsn, "U", f"conv-$i%04d", 0, "user", s"t$lsn",
       None: Option[String], new java.sql.Timestamp(0L))
-    val df1 = (0L until 50L).map(mk)
-      .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
-    graft.ops.MergeInto(spark, table, df1, "b0", "plan")
-    // capture the plan of the survivors anti-join shape indirectly: a small
-    // second batch must rewrite only via broadcast (no SortMergeJoin in any
-    // executed stage of the merge job group). We assert observable effects:
-    val df2 = Seq(mk(100L)).toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
-    val r = graft.ops.MergeInto(spark, table, df2, "b1", "plan")
-    assert(!r.skipped && r.addedFiles >= 1)
+    def df(rows: Seq[(Long, String, String, Int, String, String, Option[String], java.sql.Timestamp)]) =
+      rows.toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+    graft.ops.MergeInto(spark, table, df((0L until 400L).map(i => mk(i, i))), "b#0", "plan")
+    val touched = table.filesOf(table.loadCurrent()).map(_.bucket).distinct.size
+    assert(touched == 4, s"fixture: $touched buckets")
+    var r: graft.ops.MergeResult = null
+    var plans = Seq.empty[org.apache.spark.sql.execution.SparkPlan]
+    val stages = stagesOf { plans = plansOf { r = graft.ops.MergeInto(spark, table,
+      df((0L until 400L by 10L).map(i => mk(i, 1000L + i))), "b#1", "plan") } }
+    assert(!r.skipped && r.rewrittenFiles == 4 && r.addedFiles == 4)
+    assertTableRowsStay("copy-on-write commit", stages, tasks = touched)
+    // the write plan sorts nothing: the merged rows arrive sorted
+    val sorts = plans.flatMap(_.collect { case s: org.apache.spark.sql.execution.SortExec => s })
+    assert(sorts.forall(!_.child.treeString.contains("ExistingRDD")),
+      s"the write re-sorts the merged rows:\n${plans.map(_.treeString).mkString("\n")}")
   }
 }
