@@ -21,6 +21,10 @@ case class PipelineConfig(
     sourceId: String = "binlog",
     segmentsPerBatch: Int = 4,
     numBuckets: Int = 16,
+    /** No effect: the merge's in-task dedup keeps O(1) state per key and
+      * spills through its sort, so hot keys need no salting. Kept so
+      * existing callers that name it still compile.
+      */
     saltBuckets: Int = 0,
     /** Optional DSL filter gating which change events reach the table
       * (a route in suro terms); re-read from this file at EVERY batch, so
@@ -265,10 +269,11 @@ class CdcPipeline(val cfg: PipelineConfig) {
   def runAll(spark: SparkSession, maxBatches: Int = Int.MaxValue): Int =
     drain(spark, maxBatches, prepareAhead = false)._1
 
-  /** Pipelined drain: batch k+1's PREPARE (scan + dedup shuffle) runs
-    * concurrently with batch k's APPLY ([[MergeInto.prepareAhead]]).
-    * Correctness is unchanged: prepare touches no table state, and the
-    * exact high-water-mark redelivery filter runs inside apply (see
+  /** Pipelined drain: batch k+1's PREPARE (scan + the map stage of its
+    * one shuffle, to its buckets) runs concurrently with batch k's APPLY
+    * ([[MergeInto.prepareAhead]]). Correctness is unchanged: prepare
+    * touches no table state, and the dedup and the exact high-water-mark
+    * redelivery filter run in the apply's write tasks (see
     * [[graft.ops.MergeInto.prepare]]). This is the engine's analogue of
     * the reference's concurrent queue-drain + uploader pool
     * (QueuedSink.run feeding RemoteFileSink's upload executor,
@@ -325,7 +330,7 @@ class CdcPipeline(val cfg: PipelineConfig) {
       if (cfg.quarantine) raw.persist(StorageLevel.MEMORY_AND_DISK)
       val r =
         try MergeInto(spark, table, route(spark, raw, next), batchKey(next),
-          source = slice.mkString(","), saltBuckets = cfg.saltBuckets,
+          source = slice.mkString(","),
           cursor = Some(cfg.sourceId -> segNum(slice.last)),
           prepared = prepared, mergeOnRead = cfg.mergeOnRead,
           mode = if (prepareAhead) "pipelined" else "batch")
@@ -352,8 +357,7 @@ class CdcPipeline(val cfg: PipelineConfig) {
     }
     if (prepareAhead)
       MergeInto.prepareAhead(spark, slices)(slice =>
-        MergeInto.prepare(spark, readBatch(spark, slice),
-          latest.numBuckets, cfg.saltBuckets))(
+        MergeInto.prepare(spark, readBatch(spark, slice), latest.numBuckets))(
         (slice, prepared) => applyOne(slice, Some(prepared)))
     else slices.foreach(applyOne(_, None))
     (n, lastResult)
@@ -434,7 +438,6 @@ class CdcPipeline(val cfg: PipelineConfig) {
         .option("checkpointLocation", checkpointDir)
         .option("source", cfg.sourceId)
         .option("mor", cfg.mergeOnRead)
-        .option("saltBuckets", cfg.saltBuckets)
         .trigger(Trigger.AvailableNow())
         .start()
     } catch { case t: Throwable => listener.foreach(spark.streams.removeListener); throw t }

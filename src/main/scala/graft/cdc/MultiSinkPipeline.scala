@@ -165,7 +165,7 @@ class MultiSinkPipeline(val cfg: PipelineConfig, val routes: Seq[RouteConfig],
       } :+ (defaultSink -> batch.filter(noneMatched))
       applyAll(sinks.map { case (sink, rows) =>
         sink -> (() => MergeInto(batch.sparkSession, sinkTable(sink), rows,
-          batchKey, source = source, saltBuckets = cfg.saltBuckets,
+          batchKey, source = source,
           orderedSource = orderedSource, cursor = cursor,
           mergeOnRead = cfg.mergeOnRead,
           mode = if (orderedSource) "multisink" else "multisink-stream"))

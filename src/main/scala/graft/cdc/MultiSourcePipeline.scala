@@ -35,7 +35,7 @@ import scala.jdk.CollectionConverters._
   */
 class MultiSourcePipeline(val tableRoot: String, val sourcesFile: String,
     val segmentsPerBatch: Int = 4, val numBuckets: Int = 16,
-    val saltBuckets: Int = 0, val mergeOnRead: Boolean = false) {
+    val mergeOnRead: Boolean = false) {
 
   /** The source set in force right now (re-parsed per drain cycle — one
     * tiny driver-side read, the same discipline as the routes hot-swap).
@@ -67,8 +67,7 @@ class MultiSourcePipeline(val tableRoot: String, val sourcesFile: String,
   private def drainFor(id: String, dir: String): CdcPipeline = {
     val p = drains.computeIfAbsent(id, _ => new CdcPipeline(PipelineConfig(
       dir, tableRoot, sourceId = id, segmentsPerBatch = segmentsPerBatch,
-      numBuckets = numBuckets, saltBuckets = saltBuckets,
-      mergeOnRead = mergeOnRead)))
+      numBuckets = numBuckets, mergeOnRead = mergeOnRead)))
     require(p.cfg.sourceDir == dir,
       s"source $id re-pointed from ${p.cfg.sourceDir} to $dir — an existing " +
         "cursor must not be replayed against a different feed; use a new id")

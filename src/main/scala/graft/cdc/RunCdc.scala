@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * {{{
   * spark-submit --class graft.cdc.RunCdc ... \
   *   generate <binlogDir> <numEvents> <numConversations> <segmentSize> [evolveAtLsn] [dupPct]
-  *   run      <binlogDir> <tableRoot> [segmentsPerBatch] [numBuckets] [saltBuckets]
+  *   run      <binlogDir> <tableRoot> [segmentsPerBatch] [numBuckets] [routeFilterFile]
   *   stream   <binlogDir> <tableRoot> <checkpointDir> [maxFilesPerTrigger]
   *   state    <tableRoot> [version]
   *   get      <tableRoot> <convId>
@@ -57,8 +57,7 @@ object RunCdc {
       val p = new CdcPipeline(PipelineConfig(args(1), args(2),
         segmentsPerBatch = if (args.length > 3) args(3).toInt else 4,
         numBuckets = if (args.length > 4) args(4).toInt else 16,
-        saltBuckets = if (args.length > 5) args(5).toInt else 0,
-        routeFilterFile = if (args.length > 6) Some(args(6)) else None,
+        routeFilterFile = if (args.length > 5) Some(args(5)) else None,
         mergeOnRead = sys.env.get("GRAFT_MOR").contains("1")))
       p.verbose = true
       val t0 = System.nanoTime()

@@ -3,10 +3,13 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Last-writer-wins dedup: keep, per key, the row with the highest ordering
-  * value (LSN). This collapses (a) exact duplicate LSNs re-emitted on replay
-  * boundaries and (b) multiple changes to the same key inside one batch, so
-  * that downstream MERGE sees at most one change per key.
+/** Last-writer-wins dedup as DataFrame queries: keep, per key, the row
+  * with the highest ordering value (LSN). This collapses (a) exact
+  * duplicate LSNs re-emitted on replay boundaries and (b) multiple changes
+  * to the same key inside one batch. The engine's MERGE does not use these:
+  * its write tasks dedup their buckets' rows in place (sorted by key and
+  * LSN descending, each key's first row wins; [[MergeInto]]), riding the
+  * batch's one shuffle; these serve the dedup queries and their oracles.
   *
   * The reference dedups replayed deliveries by Elasticsearch document id
   * (suro-elasticsearch/.../ElasticSearchSink.java:337 treats
@@ -30,22 +33,6 @@ object Dedup {
     df.groupBy(keys.map(col): _*)
       .agg(max_by(struct(payload.map(col): _*), col(ord)).as("__latest"))
       .select(keys.map(col) ++ payload.map(c => col(s"__latest.$c")): _*)
-  }
-
-  /** Window-based variant of [[latestByKey]]: ONE hash shuffle of the batch
-    * followed by a single reduce-side sort + row_number filter. When keys
-    * rarely repeat within a map task (the common CDC shape: keyspace >>
-    * events per batch per task), max_by's partial aggregation reduces
-    * nothing, so its map-side sort of the full batch is pure overhead —
-    * this plan skips it. Prefer [[latestByKey]] when duplicates are heavy
-    * (map-side combine then collapses them before the shuffle).
-    */
-  def latestByKeyWindow(df: DataFrame, keys: Seq[String], ord: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(ord).desc)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
   }
 
   /** Explicit two-phase (salted) variant: phase 1 reduces per (key, salt)

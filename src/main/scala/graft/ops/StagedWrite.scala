@@ -2,7 +2,8 @@ package graft.ops
 
 import graft.model.Model
 import graft.table.{ChronicleTable, DataFileMeta}
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptContext}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -57,8 +58,13 @@ object StagedWrite {
       // under concurrent same-session sink merges); engine sessions set it
       // at construction ([[graft.util.Sessions]]), this covers the rest.
       spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      // `file:` through [[ForkFreeLocalFileSystem]] for this write only (Spark
+      // copies write options into the job's Hadoop conf, on the driver and
+      // in the tasks); uncached, so the cached default never stands in
       rows.write.format(classOf[StatsParquetFormat].getName)
         .option(TokenOption, token)
+        .option("fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+        .option("fs.file.impl.disable.cache", "true")
         .partitionBy("bucket").mode("overwrite").save(staging)
     } finally accumulators.remove(token)
     val stagingPath = new Path(staging)
@@ -139,5 +145,28 @@ private final class LongBounds(ordinal: Int) {
     if (!seen || v < lo) lo = v
     if (!seen || v > hi) hi = v
     seen = true
+  }
+}
+
+/** Hadoop's local filesystem, with permissions set through `java.nio`:
+  * without Hadoop's native IO, `RawLocalFileSystem.setPermission` forks a
+  * `chmod` process for every file (and its `.crc`) and directory it
+  * creates, several milliseconds each. The bits are the same (644 files,
+  * 755 directories under the default umask); a permission with bits
+  * beyond rwx, or a filesystem without POSIX permissions, takes Hadoop's
+  * own path.
+  */
+class ForkFreeLocalFileSystem extends LocalFileSystem(new ForkFreeRawLocalFileSystem)
+
+class ForkFreeRawLocalFileSystem extends RawLocalFileSystem {
+  override def setPermission(p: Path, permission: FsPermission): Unit = {
+    val bits = permission.toShort.toInt
+    val posix = java.nio.file.attribute.PosixFilePermission.values
+    if ((bits & ~0x1ff) != 0) super.setPermission(p, permission)
+    else try java.nio.file.Files.setPosixFilePermissions(pathToFile(p).toPath,
+      posix.indices.filter(i => (bits & (0x100 >> i)) != 0).map(posix(_)).toSet.asJava)
+    catch {
+      case _: UnsupportedOperationException => super.setPermission(p, permission)
+    }
   }
 }

@@ -82,10 +82,11 @@ object CdcQueries {
 
   /** Replay `numBatches` LSN-range batches of `ch` through MERGE with the
     * pipelined drain's prepare-ahead ([[MergeInto.prepareAhead]]): batch
-    * b+1's table-independent dedup runs CONCURRENTLY with batch b's apply,
-    * exactly like CdcPipeline.runAllPipelined. Identical results: prepare
-    * reads no table state and the HWM redelivery filter still runs at
-    * apply time.
+    * b+1's table-independent map stage (its rows shuffled to their
+    * buckets) runs CONCURRENTLY with batch b's apply, exactly like
+    * CdcPipeline.runAllPipelined. Identical results: prepare reads no
+    * table state, and the dedup and the HWM redelivery filter run in the
+    * apply's write tasks.
     */
   private def replayBatches(spark: SparkSession, ch: DataFrame,
       table: ChronicleTable, numBatches: Int, keyPrefix: String,

@@ -107,8 +107,7 @@ class GraftDataSource extends TableProvider
     new GraftStreamSink(GraftStreamSink.tableFor(pathOf(opts)),
       source = opts.getOrDefault("source", "wstream"),
       mergeOnRead = opts.getBoolean("mor", false),
-      buckets = opts.getInt("buckets", 16),
-      saltBuckets = opts.getInt("saltBuckets", 0))
+      buckets = opts.getInt("buckets", 16))
   }
 }
 

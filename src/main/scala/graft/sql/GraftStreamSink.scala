@@ -30,17 +30,17 @@ import org.apache.spark.sql.types.StructType
   * (ledger identity of this stream, default "wstream" — two different
   * streams into one table need distinct names), `mor` (merge-on-read
   * epochs), `buckets` (layout when the sink creates the table on first
-  * epoch), `saltBuckets` (hot-key shuffle salting).
+  * epoch).
   *
   * This is the v1 `Sink` bridge, not a DSv2 per-task StreamingWrite, by
-  * DESIGN: MERGE is a whole-batch transform (dedup shuffle, batch rows
-  * moved to their buckets, bucket-pruned rewrite) — blind per-task
+  * DESIGN: MERGE is a whole-batch transform (batch rows shuffled to
+  * their buckets, deduped there, bucket-pruned rewrite) — blind per-task
   * writers cannot express it without staging the batch to disk twice.
   * The micro-batch is re-rooted as a batch DataFrame first
   * ([[org.apache.spark.sql.graft.MicroBatch]]).
   */
 private[sql] class GraftStreamSink(table: ChronicleTable, source: String,
-    mergeOnRead: Boolean, buckets: Int, saltBuckets: Int) extends Sink {
+    mergeOnRead: Boolean, buckets: Int) extends Sink {
 
   override def addBatch(batchId: Long, data: Dataset[Row]): Unit = {
     val batch0 = org.apache.spark.sql.graft.MicroBatch.stripStreaming(data)
@@ -57,8 +57,7 @@ private[sql] class GraftStreamSink(table: ChronicleTable, source: String,
       table.create(StructType(payload ++ Model.systemFields), buckets)
     }
     MergeInto(batch.sparkSession, table, batch, s"$source-ss#$batchId",
-      source = s"$source-epoch-$batchId", saltBuckets = saltBuckets,
-      orderedSource = false, mergeOnRead = mergeOnRead, mode = "stream")
+      source = s"$source-epoch-$batchId", orderedSource = false, mergeOnRead = mergeOnRead, mode = "stream")
   }
 
   override def toString: String = s"GraftStreamSink(${table.root})"

@@ -286,8 +286,9 @@ case class PendingCommit(
   *     files for exactly the buckets the commit touches are written under
   *     meta/manifests/ (the "stage" phase; a crash here leaves orphans that
   *     nothing references — harmless, GC-able);
-  *  2. the new manifest list v(N+1).json is created with CREATE_NEW — the
-  *     optimistic-concurrency barrier. On conflict the commit RELOADS the
+  *  2. the new manifest list v(N+1).json is published whole (a hard link
+  *     to its fully written temporary file, which fails if the version
+  *     exists) — the optimistic-concurrency barrier. On conflict the commit RELOADS the
   *     winner and REBASES: if its removed-file set is still live there (the
   *     writers touched disjoint buckets — e.g. compaction racing a merge),
   *     fresh bucket manifests are written against the new base and the
@@ -512,7 +513,7 @@ class ChronicleTable(val root: String) {
 
   /** Atomically publish a commit on top of `base`. Returns the new snapshot.
     *
-    * Concurrency: losing the CREATE_NEW version race triggers an automatic
+    * Concurrency: losing the version race triggers an automatic
     * reload-and-rebase — valid whenever the commit's removed files are all
     * still live in the winner's snapshot (disjoint-bucket writers, e.g.
     * compaction racing a streaming merge, both land). A conflict on the
@@ -529,7 +530,7 @@ class ChronicleTable(val root: String) {
       val next = buildNext(attempt, pending)
       beforePublishHook(next)
       try {
-        writeSnapshotJson(next) // CREATE_NEW: optimistic-concurrency barrier
+        writeSnapshotJson(next) // fails if the version exists: the barrier
         flipPointer(next.version)
         return next
       } catch {
@@ -705,10 +706,18 @@ class ChronicleTable(val root: String) {
     (expired, deadData)
   }
 
+  /** Publishes `v<N>.json` whole: its bytes go to a temporary file that a
+    * hard link then names, so a reader listing versions never opens a
+    * partly written snapshot (nor does a crash leave one), and the link
+    * fails with FileAlreadyExistsException when the version exists — the
+    * commit's optimistic-concurrency barrier.
+    */
   private def writeSnapshotJson(s: Snapshot): Unit = {
     val p = metaDir.resolve(f"v${s.version}%09d.json")
-    Files.write(p, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(s),
+    val tmp = metaDir.resolve(s".${p.getFileName}.${UUID.randomUUID()}.tmp")
+    Files.write(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(s),
       StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+    try Files.createLink(p, tmp) finally Files.deleteIfExists(tmp)
   }
 
   private def flipPointer(version: Long): Unit = {

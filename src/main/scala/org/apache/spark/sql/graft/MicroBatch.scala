@@ -1,14 +1,15 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.Partitioner
-import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.{Partitioner, ShuffleDependency}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.connector.catalog.Table
-import org.apache.spark.sql.execution.{LogicalRDD, UnsafeRowSerializer}
+import org.apache.spark.sql.execution.{CoalescedPartitionSpec, LogicalRDD, ShuffledRowRDD, UnsafeRowSerializer}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.execution.metric.SQLShuffleReadMetricsReporter
 import org.apache.spark.sql.types.StructType
 
 /** A Spark-internal bridge, isolated with the engine's other ones
@@ -65,15 +66,20 @@ object DatasetFactory {
 
 /** A shuffle of SQL rows to partitions the caller numbers, in Spark SQL's
   * own exchange format (`UnsafeRowSerializer`: the row bytes, no key and
-  * no object header), which is `private[sql]`.
+  * no object header), which is `private[sql]`. The map stage runs as its
+  * own job, the way adaptive execution runs a query stage
+  * (`submitMapStage`); a later job reading the same dependency skips it.
   */
 object RowShuffle {
 
+  type Rows = ShuffleDependency[Int, InternalRow, InternalRow]
+
   /** `rows` (in `schema`'s layout) moved to partition `partitionOf(row)`
-    * of `numPartitions`; each partition's order is arbitrary.
+    * of `numPartitions`, with the map stage already run (no job when
+    * `rows` has no partition).
     */
-  def apply(rows: RDD[InternalRow], schema: StructType, numPartitions: Int)(
-      partitionOf: InternalRow => Int): RDD[InternalRow] = {
+  def mapStage(rows: RDD[InternalRow], schema: StructType, numPartitions: Int)(
+      partitionOf: InternalRow => Int): Rows = {
     val n = numPartitions
     val keyed = rows.mapPartitions { it =>
       lazy val unsafe = UnsafeProjection.create(schema)
@@ -82,9 +88,20 @@ object RowShuffle {
         (partitionOf(r), row.copy(): InternalRow)
       }
     }
-    new ShuffledRDD[Int, InternalRow, InternalRow](keyed, new Partitioner {
-      def numPartitions: Int = n
-      def getPartition(key: Any): Int = key.asInstanceOf[Int]
-    }).setSerializer(new UnsafeRowSerializer(schema.length)).values
+    val dep = new ShuffleDependency[Int, InternalRow, InternalRow](keyed,
+      new Partitioner {
+        def numPartitions: Int = n
+        def getPartition(key: Any): Int = key.asInstanceOf[Int]
+      }, new UnsafeRowSerializer(schema.length))
+    if (keyed.partitions.nonEmpty) rows.sparkContext.submitMapStage(dep).get()
+    dep
   }
+
+  /** The shuffled rows: partition i holds partitions `[from, until)` of
+    * `ranges(i)`, in partition order; each partition's order is arbitrary.
+    */
+  def read(rows: Rows, ranges: Seq[(Int, Int)]): RDD[InternalRow] =
+    new ShuffledRowRDD(rows,
+      SQLShuffleReadMetricsReporter.createShuffleReadMetrics(rows.rdd.sparkContext),
+      ranges.map { case (from, until) => CoalescedPartitionSpec(from, until) }.toArray)
 }

@@ -508,7 +508,7 @@ class CdcPipelineSpec extends SparkSpec {
     assert(tableRows(p2) == oracleRows(cfg))
   }
 
-  test("salted dedup path produces identical state (hot-key fixture)") {
+  test("hot-key batch: in-task dedup produces identical state") {
     // zipfS high => one conversation dominates
     val cfg = BinlogConfig(numEvents = 3000, numConversations = 10,
       zipfS = 2.5, segmentSize = 500, dupPct = 5)
@@ -516,7 +516,7 @@ class CdcPipelineSpec extends SparkSpec {
     val tbl = tmpDir("table-hot")
     BinlogGenerator.writeSegments(spark, cfg, src)
     val p = new CdcPipeline(PipelineConfig(src, tbl, segmentsPerBatch = 2,
-      numBuckets = 4, saltBuckets = 8))
+      numBuckets = 4))
     p.runAll(spark)
     assert(tableRows(p) == oracleRows(cfg))
   }

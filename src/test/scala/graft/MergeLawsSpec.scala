@@ -94,18 +94,23 @@ class MergeLawsSpec extends SparkSpec {
     assert(del.deletes == 1L && del.upserts == 0L && del.endLsn == 4L)
   }
 
-  test("all dedup strategies (max_by, salted, window) agree on any stream") {
+  test("all dedup strategies (max_by, salted, in-task) agree on any stream") {
     holds(Prop.forAllNoShrink(genEvents, Gen.choose(42L, 46L)) { (evs, seed) =>
       val rnd = new scala.util.Random(seed)
       val delivered = rnd.shuffle(evs ++ evs.filter(_ => rnd.nextInt(3) == 0))
       val df = toDf(delivered)
-      def rows(d: org.apache.spark.sql.DataFrame) = d.collect()
+      def rows(d: org.apache.spark.sql.DataFrame, lsn: String) = d.collect()
         .map(r => (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx"),
-          r.getAs[Long]("lsn"), r.getAs[String]("text")))
+          r.getAs[Long](lsn), r.getAs[String]("text")))
         .sortBy(x => (x._1, x._2)).toSeq
-      val base = rows(graft.ops.Dedup.latestByKey(df, Model.keyColumns, "lsn"))
-      base == rows(graft.ops.Dedup.saltedLatest(df, Model.keyColumns, "lsn", 4)) &&
-        base == rows(graft.ops.Dedup.latestByKeyWindow(df, Model.keyColumns, "lsn"))
+      // the merge's own dedup: one unordered merge-on-read commit into an
+      // empty table writes exactly the batch's winners, tombstones included
+      val t = new ChronicleTable(tmpDir("laws-dedup"))
+      t.create(Model.physicalSchemaV1, numBuckets = 2)
+      MergeInto(spark, t, df, "d#0", "laws", orderedSource = false, mergeOnRead = true)
+      val base = rows(graft.ops.Dedup.latestByKey(df, Model.keyColumns, "lsn"), "lsn")
+      base == rows(graft.ops.Dedup.saltedLatest(df, Model.keyColumns, "lsn", 4), "lsn") &&
+        base == rows(t.read(spark), Model.lsnColumn)
     }, 10)
   }
 
@@ -136,7 +141,12 @@ class MergeLawsSpec extends SparkSpec {
     * copy-on-write commit draws distinct lsns at random below its commit's
     * ceiling (so a batch can sit below another source's row, or below its
     * own source's mark), and may repeat an earlier commit's (key, lsn) — a
-    * tie. A merge-on-read commit's lsns lie above every earlier one.
+    * tie. A merge-on-read commit's lsns lie above every earlier one. Any
+    * batch may change one key several times, re-emit its own events
+    * exactly (same lsn and payload), keep to one conversation (one
+    * bucket), and redeliver earlier ordered commits' events — each at or
+    * below the ordered source's mark (the newest of them at it when it
+    * was applied).
     */
   private val genScenario: Gen[List[Commit]] = Gen.choose(2, 5).flatMap { k =>
     (0 until k).foldLeft(Gen.const(List.empty[Commit])) { (acc, c) =>
@@ -145,19 +155,35 @@ class MergeLawsSpec extends SparkSpec {
           ordered <- Gen.oneOf(true, false)
           mor <- Gen.frequency(3 -> false, 1 -> (c > 0))
           note <- Gen.frequency(4 -> false, 1 -> true)
+          single <- Gen.frequency(4 -> false, 1 -> true)
           n <- Gen.choose(1, 10)
+          repeats <- Gen.choose(0, 3)
           keys <- Gen.listOfN(n, Gen.zip(Gen.choose(0, if (c == 0) 1 else 7), Gen.choose(0, 2)))
-          ops <- Gen.listOfN(n, Gen.frequency(3 -> "U", 1 -> "D"))
+          ops <- Gen.listOfN(n + repeats, Gen.frequency(3 -> "U", 1 -> "D"))
           lsns <-
-            if (mor) Gen.const((0 until n).map(i => (c + 1) * 100L + 50L + i))
-            else Gen.pick(n, 0L until (c + 1) * 100L)
+            if (mor) Gen.const((0 until n + repeats).map(i => (c + 1) * 100L + 50L + i))
+            else Gen.pick(n + repeats, 0L until (c + 1) * 100L)
           ties <- Gen.someOf(done.flatMap(_.evs))
+          reemits <- Gen.choose(0, 2)
+          redelivered <- Gen.someOf(done.filter(_.ordered).flatMap(_.evs))
+          newest <- Gen.oneOf(true, false)
         } yield {
-          val evs = keys.zip(ops).zip(lsns).map { case (((cc, t), op), lsn) =>
-            Ev(lsn, op, s"conv-$cc", t) }
+          val ks = if (single) keys.map { case (_, t) => (keys.head._1, t) } else keys
+          // repeats change the batch's first keys again
+          val evs = (ks ++ ks.take(repeats)).zip(ops).zip(lsns)
+            .map { case (((cc, t), op), lsn) => Ev(lsn, op, s"conv-$cc", t) }
           val tied = if (mor) Nil else ties.toList.take(2)
             .filterNot(e => evs.exists(_.lsn == e.lsn)).map(_.copy(op = "U"))
-          done :+ Commit(ordered, mor, note, evs ++ tied)
+          val ordered0 = done.filter(_.ordered).flatMap(_.evs)
+          val again = (redelivered.toList.take(2) ++
+              (if (newest && ordered0.nonEmpty) Seq(ordered0.maxBy(_.lsn)) else Nil))
+            .filterNot(e => (evs ++ tied).exists(x => x.lsn == e.lsn &&
+              x.conv_id == e.conv_id && x.turn_idx == e.turn_idx))
+            .distinctBy(e => (e.lsn, e.conv_id, e.turn_idx))
+          // an unordered merge-on-read batch keeps its lsns above every
+          // earlier one (its winners displace unconditionally)
+          val redelivery = if (mor && !ordered) Nil else again
+          done :+ Commit(ordered, mor, note, evs ++ evs.take(reemits) ++ tied ++ redelivery)
         }
       }
     }

@@ -187,10 +187,62 @@ class PlanSpec extends SparkSpec {
       val mor = jobsPerCommit(mergeOnRead = true)
       // counts measured on this fixture: 6,7,7 while the commit ran a
       // broadcast of the batch keys and a table-row repartition stage;
-      // 5,5,5 since each touched bucket merges in one write task
-      assert(cow == Seq(5, 5, 5), s"jobs per copy-on-write commit moved: $cow")
-      assert(mor == Seq(6, 6, 6), s"jobs per merge-on-read commit moved: $mor")
+      // 5,5,5 (merge-on-read 6,6,6) while prepare cached a window dedup
+      // and aggregated over it; 2,2,2 since prepare is the batch's one map
+      // stage and the write dedups in its tasks
+      assert(cow == Seq(2, 2, 2), s"jobs per copy-on-write commit moved: $cow")
+      assert(mor == Seq(2, 2, 2), s"jobs per merge-on-read commit moved: $mor")
     }
+  }
+
+  test("counter guard: an empty or fully redelivered batch commits after one job") {
+    import graft.ops.MergeInto
+    import spark.implicits._
+    val t = new graft.table.ChronicleTable(tmpDir("table-nojobs"))
+    t.create(graft.model.Model.physicalSchemaV1, numBuckets = 2)
+    val rows = (0 until 40).map(k => (k.toLong, "U", f"conv-$k%03d", 0, "user",
+        s"text $k", None: Option[String], new java.sql.Timestamp(k.toLong)))
+      .toDF("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+    val dir = s"${tmpDir("batch-nojobs")}/batch"
+    rows.write.parquet(dir)
+    val batch = spark.read.parquet(dir)
+    MergeInto(spark, t, batch, "s#0", "t")
+    withJobCounter { jobsOf =>
+      var r: graft.ops.MergeResult = null
+      // the prepare's map stage finds no row (the filter is only known
+      // empty at run time) or only rows at or below the source's mark
+      assert(jobsOf { r = MergeInto(spark, t, batch.filter($"lsn" < 0), "s#1", "t") } == 1)
+      assert(!r.skipped && r.addedFiles == 0)
+      assert(jobsOf { r = MergeInto(spark, t, batch, "s#2", "t") } == 1)
+      assert(!r.skipped && r.addedFiles == 0 && r.upserts == 0)
+    }
+    assert(t.loadCurrent().version == 3)
+  }
+
+  test("counter guard: runOnce commits compile no new classes after the first, copy-on-write and merge-on-read") {
+    import graft.cdc.{CdcPipeline, PipelineConfig}
+    import graft.source.{BinlogConfig, BinlogGenerator}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val cfg = BinlogConfig(numEvents = 800, numConversations = 6, segmentSize = 200)
+    val src = tmpDir("binlog-compiles")
+    BinlogGenerator.writeSegments(spark, cfg, src)
+    def compilesPerCommit(mergeOnRead: Boolean): Seq[Long] = {
+      val p = new CdcPipeline(PipelineConfig(src, tmpDir("table-compiles"),
+        segmentsPerBatch = 1, numBuckets = 2, mergeOnRead = mergeOnRead))
+      p.ensureTable()
+      Iterator.continually {
+        val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        p.runOnce(spark).map(_ => CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
+      }.takeWhile(_.isDefined).flatten.toSeq
+    }
+    val cow = compilesPerCommit(mergeOnRead = false)
+    val mor = compilesPerCommit(mergeOnRead = true)
+    info(s"classes compiled per commit: copy-on-write $cow, merge-on-read $mor")
+    assert(cow.size == 4 && mor.size == 4)
+    // merge-on-read compiled 3 per commit while its mark was a column
+    // filter's literal
+    assert(cow.tail.forall(_ == 0), s"copy-on-write commits compile: $cow")
+    assert(mor.tail.forall(_ == 0), s"merge-on-read commits compile: $mor")
   }
 
   test("counter guard: a merge-on-read lookup and a changelog poll each run one job; planning builds no reader") {
@@ -377,9 +429,10 @@ class PlanSpec extends SparkSpec {
       // measured on these fixtures: 3 and 13 while the rewrites read raw
       // parquet and merged through a key shuffle (a window; the guard's
       // max-per-key aggregate too), 2 and 11 since they merge in the scan,
-      // 2 and 5 since the commit merges each bucket in its write task
+      // 2 and 5 since the commit merges each bucket in its write task,
+      // 2 and 2 since the batch's one shuffle also carries its dedup
       assert(nCompact == 2, s"jobs of a merge-on-read compaction moved: $nCompact")
-      assert(nCow == 5, s"jobs of an unordered copy-on-write commit moved: $nCow")
+      assert(nCow == 2, s"jobs of an unordered copy-on-write commit moved: $nCow")
     }
     assert(!mor.table.hasDeltas(mor.table.loadCurrent()))
     assert(!t.hasDeltas(t.loadCurrent()))

@@ -579,6 +579,32 @@ class TableOpsSpec extends SparkSpec {
       s"manifest grew: v10=${manifestSize(10L)}B v200=${manifestSize(200L)}B")
   }
 
+  test("a reader loading the current snapshot while commits land never opens a partly written one") {
+    import graft.table._
+    val tbl = new ChronicleTable(tmpDir("table-publish-race"))
+    var s = tbl.create(graft.model.Model.physicalSchemaV1, 4)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    var loads = 0
+    val reader = new Thread(() => while (!done.get) {
+      try { new ChronicleTable(tbl.root).loadCurrent(); loads += 1 }
+      catch { case t: Throwable => failures.add(t) }
+    })
+    reader.start()
+    // the snapshot used to be created empty and then written: a reader
+    // listing the new version in between failed to parse it
+    try (0 until 2000).foreach(i => s = tbl.commit(s, PendingCommit(s"src#$i", Nil, Nil, None,
+      LineageEntry(s"src#$i", "t", i, i, 1, 0, 1, 0L, Map.empty, -1L),
+      cursor = Some("src" -> i.toLong))))
+    finally { done.set(true); reader.join() }
+    assert(loads > 0)
+    assert(failures.isEmpty, s"${failures.size} of ${failures.size + loads} loads failed: " +
+      failures.peek())
+    assert(tbl.loadCurrent().version == 2000L)
+    assert(!java.nio.file.Files.list(java.nio.file.Paths.get(tbl.root, "meta"))
+      .anyMatch(_.getFileName.toString.endsWith(".tmp")))
+  }
+
   test("split manifests: per-commit metadata is O(touched buckets), untouched buckets carry by reference") {
     import graft.table._
     val root = tmpDir("table-split")
