@@ -58,13 +58,9 @@ object StagedWrite {
       // under concurrent same-session sink merges); engine sessions set it
       // at construction ([[graft.util.Sessions]]), this covers the rest.
       spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // `file:` through [[ForkFreeLocalFileSystem]] for this write only (Spark
-      // copies write options into the job's Hadoop conf, on the driver and
-      // in the tasks); uncached, so the cached default never stands in
       rows.write.format(classOf[StatsParquetFormat].getName)
         .option(TokenOption, token)
-        .option("fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
-        .option("fs.file.impl.disable.cache", "true")
+        .options(ForkFreeLocalFileSystem.writeOptions)
         .partitionBy("bucket").mode("overwrite").save(staging)
     } finally accumulators.remove(token)
     val stagingPath = new Path(staging)
@@ -157,6 +153,17 @@ private final class LongBounds(ordinal: Int) {
   * own path.
   */
 class ForkFreeLocalFileSystem extends LocalFileSystem(new ForkFreeRawLocalFileSystem)
+
+object ForkFreeLocalFileSystem {
+  /** Write options that put `file:` through [[ForkFreeLocalFileSystem]] for
+    * one write only (Spark copies write options into the job's Hadoop conf,
+    * on the driver and in the tasks); uncached, so the cached default never
+    * stands in.
+    */
+  val writeOptions: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+}
 
 class ForkFreeRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit = {

@@ -111,7 +111,10 @@ object BinlogGenerator {
     }
   }
 
-  /** Write the log as ordered parquet segment dirs: <dir>/segment=K/... */
+  /** Write the log as ordered parquet segment dirs: <dir>/segment=K/...,
+    * through [[graft.ops.ForkFreeLocalFileSystem]] (no forked `chmod` per
+    * file, as the staged writes).
+    */
   def writeSegments(spark: SparkSession, cfg: BinlogConfig, dir: String): Unit = {
     deliveries(spark, cfg)
       .toDF("segment", "ev")
@@ -120,7 +123,8 @@ object BinlogGenerator {
         org.apache.spark.sql.functions.col("segment"),
         org.apache.spark.sql.functions.col("lsn"))
       .sortWithinPartitions("segment", "lsn")
-      .write.partitionBy("segment").mode("overwrite").parquet(dir)
+      .write.options(graft.ops.ForkFreeLocalFileSystem.writeOptions)
+      .partitionBy("segment").mode("overwrite").parquet(dir)
   }
 
   /** The oracle: an in-memory last-writer-wins fold of the true log

@@ -15,6 +15,7 @@ import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.util.OptionalLong
 import scala.jdk.CollectionConverters._
@@ -55,6 +56,11 @@ import scala.jdk.CollectionConverters._
   *    with O(files) memory — no shuffle, no per-bucket hash map. The
   *    files of pure-base buckets pack into partitions of about
   *    `spark.sql.files.maxPartitionBytes`, as Spark's file scans do.
+  *  - a scan whose pushed filters pin one `conv_id` applies that equality
+  *    exactly in its reader, below the merge (no residual filter), and,
+  *    when its pruned files fit one task's input, reads in the planning
+  *    thread as a `LocalScan` ([[GraftLocalScan]]): a point lookup starts
+  *    no Spark job;
   *  - statistics (bytes/rows) come from the manifest, so the optimizer
   *    can broadcast a small pruned read.
   *
@@ -246,21 +252,32 @@ private[graft] class GraftScanBuilder(table: ChronicleTable, snap: Snapshot,
   private var required: StructType = snap.schema
 
   /** Accept every filter whose referenced columns all exist at the top
-    * level (they feed manifest pruning and the parquet reader); hand ALL
-    * filters back to Spark as residuals — the engine prunes, Spark stays
-    * responsible for exactness.
+    * level (they feed manifest pruning and the parquet reader). The one
+    * `conv_id` equality that pins the scan's key ([[GraftScan.pinnedKey]])
+    * the reader applies exactly, so it is not handed back; every other
+    * filter stays a residual, Spark responsible for its exactness.
     */
   override def pushFilters(filters: Array[sources.Filter]): Array[sources.Filter] = {
     pushed = filters.filter(_.references.forall(tableCols.contains))
-    filters
+    val key = GraftScan.pinnedKey(pushed)
+    filters.filterNot(f => key.exists(k => f == sources.EqualTo("conv_id", k)))
   }
   override def pushedFilters(): Array[sources.Filter] = pushed
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  override def build(): Scan =
-    new GraftScan(table, snap, pushed, required, options, library)
+  /** A scan pinned to one key whose pruned files fit one task's input
+    * (`spark.sql.files.maxPartitionBytes`) is read in the planning thread
+    * ([[GraftLocalScan]]): no Spark job for a point lookup. A rewrite's
+    * partitions zip with its batch's, so it always stays distributed.
+    */
+  override def build(): Scan = {
+    val scan = new GraftScan(table, snap, pushed, required, options, library)
+    if (scan.key.isDefined && library.forall(_.rewrite.isEmpty) && scan.inputBytes <=
+        SparkSession.active.sessionState.conf.filesMaxPartitionBytes) new GraftLocalScan(scan)
+    else scan
+  }
 }
 
 private[graft] class GraftScan(table: ChronicleTable, snap: Snapshot,
@@ -273,6 +290,8 @@ private[graft] class GraftScan(table: ChronicleTable, snap: Snapshot,
   private val merge = library.forall(_.merge)
   private val tombstones = library.exists(_.tombstones)
   private[graft] val changes: Option[ChangeMarks] = library.flatMap(_.changes)
+  /** The one key the pushed filters pin: the reader keeps only its rows. */
+  private[sql] val key: Option[String] = GraftScan.pinnedKey(pushed)
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -295,13 +314,14 @@ private[graft] class GraftScan(table: ChronicleTable, snap: Snapshot,
     else if (merge) files.filter(_.delta).map(_.bucket).toSet
     else Set.empty
 
-  /** A scan that merges no bucket, keeps tombstone winners and picks no
-    * changelog rows hands on parquet's columnar batches as they are (a
-    * delta-free library read). Decided once, from the pruned file set:
-    * runtime filtering only drops files, so it never adds a merging bucket.
+  /** A scan that merges no bucket, keeps tombstone winners, picks no
+    * changelog rows and pins no key hands on parquet's columnar batches as
+    * they are (a delta-free library read). Decided once, from the pruned
+    * file set: runtime filtering only drops files, so it never adds a
+    * merging bucket.
     */
   private lazy val columnar: Boolean = tombstones && changes.isEmpty &&
-    merged.isEmpty && new ParquetFileFormat().supportBatch(SparkSession.active, required)
+    key.isEmpty && merged.isEmpty && new ParquetFileFormat().supportBatch(SparkSession.active, required)
 
   /** `readStream` on the SAME table object serves the changelog: the
     * unified surface delegates to the DSv2 micro-batch change stream
@@ -338,7 +358,7 @@ private[graft] class GraftScan(table: ChronicleTable, snap: Snapshot,
   }
 
   /** Manifest-pruned file set (re-computed when runtime filters land). */
-  private def files: Seq[DataFileMeta] = rewrite.map(_.files).getOrElse {
+  private[sql] def files: Seq[DataFileMeta] = rewrite.map(_.files).getOrElse {
     val memo = filesMemo
     if (memo != null) return memo
     val computed = table.files(snap,
@@ -358,6 +378,10 @@ private[graft] class GraftScan(table: ChronicleTable, snap: Snapshot,
       changes.map(_ => Model.sourceColumn)
     StructType(snap.schema.fields.filter(f => need.contains(f.name)))
   }
+
+  /** The pruned files' bytes, as split planning counts them. */
+  private[sql] def inputBytes: Long =
+    files.map(ChronicleTable.fileBytes(SparkSession.active, _)).sum
 
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
@@ -409,6 +433,7 @@ private[graft] class GraftScan(table: ChronicleTable, snap: Snapshot,
       lsnIdx = idx(Model.lsnColumn),
       delIdx = if (tombstones) -1 else idx(Model.deletedColumn),
       marks = changes.orNull, srcIdx = idx.getOrElse(Model.sourceColumn, -1),
+      key = key.orNull,
       outIdx = required.fields.map(f => idx(f.name)),
       outTypes = required.fields.map(_.dataType))
   }
@@ -429,9 +454,12 @@ private[graft] class GraftScan(table: ChronicleTable, snap: Snapshot,
 private[graft] case class GraftPartition(files: Seq[PartitionedFile],
     merge: Boolean) extends InputPartition {
 
-  /** Each file's rows (or columnar batches) through the parquet `read`. */
-  def open(read: PartitionedFile => Iterator[InternalRow]): Iterator[Iterator[InternalRow]] =
-    files.iterator.map(read)
+  /** Each file's rows (or columnar batches) through the parquet `read`,
+    * every file reader handed to `opened` as it opens.
+    */
+  def open(read: PartitionedFile => Iterator[InternalRow],
+      opened: Iterator[InternalRow] => Unit): Iterator[Iterator[InternalRow]] =
+    files.iterator.map { f => val it = read(f); opened(it); it }
 }
 
 private[sql] object GraftScan {
@@ -441,47 +469,107 @@ private[sql] object GraftScan {
     PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path), 0L, len,
       Array.empty[String], 0L, len)
 
-  /** A partition reader over `it`; parquet record readers close themselves
-    * at task completion.
+  /** A partition reader over the iterator `rows` builds from the file
+    * readers it opens ([[GraftPartition.open]]); closing it, or `rows`
+    * failing, closes every one of them. A parquet record reader closes
+    * itself only at its end, so a read stopped early, or one in the
+    * planning thread (no task whose end would close it), leaks its file
+    * otherwise.
     */
-  def reader[T](it: Iterator[T]): PartitionReader[T] = new PartitionReader[T] {
-    private var cur: T = _
-    override def next(): Boolean = it.hasNext && { cur = it.next(); true }
-    override def get(): T = cur
-    override def close(): Unit = ()
+  def reader[T](rows: (Iterator[InternalRow] => Unit) => Iterator[T]): PartitionReader[T] = {
+    val opened = scala.collection.mutable.ArrayBuffer.empty[AutoCloseable]
+    def closeAll(): Unit = opened.foreach(_.close())
+    val it = try rows {
+      case c: AutoCloseable => opened += c
+      case _ => ()
+    } catch { case e: Throwable => closeAll(); throw e }
+    new PartitionReader[T] {
+      private var cur: T = _
+      override def next(): Boolean = it.hasNext && { cur = it.next(); true }
+      override def get(): T = cur
+      override def close(): Unit = closeAll()
+    }
   }
+
+  /** The one `conv_id` the filters pin by string equality, if exactly one. */
+  def pinnedKey(filters: Array[sources.Filter]): Option[String] =
+    filters.collect { case sources.EqualTo("conv_id", k: String) => k }.distinct match {
+      case Array(k) => Some(k)
+      case _ => None
+    }
+}
+
+/** A scan pinned to one key whose files fit one task
+  * ([[GraftScanBuilder.build]]), read in the planning thread: Spark plans
+  * it as a `LocalTableScanExec`, and collecting it starts no job. `rows()`
+  * runs the distributed scan's own reader over each of its partitions, so
+  * the rows are the same; they are read once, when the query is physically
+  * planned (`explain()` included). Statistics are the scan's manifest
+  * numbers, so a join still broadcasts a point lookup.
+  */
+private[graft] class GraftLocalScan(val scan: GraftScan)
+  extends org.apache.spark.sql.connector.read.LocalScan with SupportsReportStatistics {
+
+  override def readSchema(): StructType = scan.readSchema()
+  override def estimateStatistics(): Statistics = scan.estimateStatistics()
+  override def description(): String =
+    s"${scan.description()} key=${scan.key.get} files=${scan.files.map(_.path).mkString("[", ",", "]")}"
+
+  private lazy val read: Array[InternalRow] = {
+    val parts = scan.planInputPartitions()
+    if (parts.isEmpty) Array.empty
+    else {
+      val factory = scan.createReaderFactory()
+      parts.flatMap { p =>
+        val r = factory.createReader(p)
+        try {
+          val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+          while (r.next()) out += r.get().copy()
+          out
+        } finally r.close()
+      }
+    }
+  }
+  override def rows(): Array[InternalRow] = read
 }
 
 /** Reads partitions as rows; `delIdx` < 0 keeps tombstone winners visible,
   * non-null `marks` keep only the rows they ship (`srcIdx` < 0: the table
-  * has no source tag, every row is untagged).
+  * has no source tag, every row is untagged), non-null `key` keeps only
+  * that `conv_id`'s rows.
   */
 private[sql] class GraftReaderFactory(
     readFunc: PartitionedFile => Iterator[InternalRow],
     mergeReadFunc: PartitionedFile => Iterator[InternalRow],
     convIdx: Int, turnIdx: Int, lsnIdx: Int, delIdx: Int,
-    marks: ChangeMarks, srcIdx: Int,
+    marks: ChangeMarks, srcIdx: Int, key: String,
     outIdx: Array[Int], outTypes: Array[DataType]) extends PartitionReaderFactory {
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[GraftPartition]
-    val rows: Iterator[InternalRow] =
-      if (p.merge)
-        new SortedLwwMerge(p.open(mergeReadFunc).toSeq,
-          p.files.map(_.filePath.toString), convIdx, turnIdx, lsnIdx)
-      else p.open(readFunc).flatten
-    // visible state: tombstone winners are hidden
-    val visible = if (delIdx < 0) rows else rows.filter(r => !r.getBoolean(delIdx))
-    // changelog: above the merge, as readChanges' net changes are
-    val it = if (marks == null) visible else visible.filter(r => marks.ships(
-      if (srcIdx < 0 || r.isNullAt(srcIdx)) null else r.getUTF8String(srcIdx),
-      r.getLong(lsnIdx)))
-    val project = UnsafeProjection.create(
-      outIdx.zip(outTypes).map { case (i, t) =>
-        BoundReference(i, t, nullable = true)
-      }.toSeq)
-    GraftScan.reader(it.map(project))
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    GraftScan.reader { opened =>
+      val p = partition.asInstanceOf[GraftPartition]
+      // the key filter goes below the merge: the merge is per key, so other
+      // keys' rows cannot change this key's winner
+      val k = if (key == null) null else UTF8String.fromString(key)
+      def open(read: PartitionedFile => Iterator[InternalRow]) = p.open(read, opened)
+        .map(it => if (k == null) it else it.filter(r => r.getUTF8String(convIdx) == k))
+      val rows: Iterator[InternalRow] =
+        if (p.merge)
+          new SortedLwwMerge(open(mergeReadFunc).toSeq,
+            p.files.map(_.filePath.toString), convIdx, turnIdx, lsnIdx)
+        else open(readFunc).flatten
+      // visible state: tombstone winners are hidden
+      val visible = if (delIdx < 0) rows else rows.filter(r => !r.getBoolean(delIdx))
+      // changelog: above the merge, as readChanges' net changes are
+      val it = if (marks == null) visible else visible.filter(r => marks.ships(
+        if (srcIdx < 0 || r.isNullAt(srcIdx)) null else r.getUTF8String(srcIdx),
+        r.getLong(lsnIdx)))
+      val project = UnsafeProjection.create(
+        outIdx.zip(outTypes).map { case (i, t) =>
+          BoundReference(i, t, nullable = true)
+        }.toSeq)
+      it.map(project)
+    }
 }
 
 /** Hands on each file's parquet batches (the reader returns them typed as
@@ -497,8 +585,8 @@ private[sql] class GraftBatchReaderFactory(
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[ColumnarBatch] =
-    GraftScan.reader(partition.asInstanceOf[GraftPartition].open(readFunc).flatten
-      .asInstanceOf[Iterator[ColumnarBatch]])
+    GraftScan.reader(opened => partition.asInstanceOf[GraftPartition]
+      .open(readFunc, opened).flatten.asInstanceOf[Iterator[ColumnarBatch]])
 }
 
 /** The engine's one LWW merge, for readers, rewrites and copy-on-write

@@ -954,11 +954,17 @@ class ChronicleTable(val root: String) {
     * size — the serving-path read a 100 TB transcript store needs (the
     * reference's ES sink serves exactly this doc-id lookup,
     * ElasticSearchSink.java / DefaultIndexInfoBuilder.java:66-73).
-    * Merge-on-read deltas in the bucket LWW-merge inside the one scan task
-    * (no shuffle: one Spark job, one task); key-range pruning is sound for
-    * them too (a delta file whose range excludes the key cannot displace
-    * or tombstone it). Tombstoned keys return no rows — the scan hides
-    * their winners.
+    * Merge-on-read deltas in the bucket LWW-merge inside the scan's reader
+    * (no shuffle); key-range pruning is sound for them too (a delta file
+    * whose range excludes the key cannot displace or tombstone it).
+    * Tombstoned keys return no rows — the scan hides their winners.
+    *
+    * The snapshot is pinned when this is called. When the key's pruned
+    * files fit one task's input (`spark.sql.files.maxPartitionBytes`), the
+    * scan reads them in the planning thread ([[graft.sql.GraftLocalScan]])
+    * and `collect()` starts no Spark job; the rows are read during
+    * physical planning, so `explain()` or `queryExecution.executedPlan`
+    * of the lookup reads its files too. Larger keys read through a Spark job.
     */
   def readKey(spark: SparkSession, convId: String): DataFrame =
     scan(spark, loadCurrent(), LibraryRead(tombstones = false))

@@ -76,6 +76,40 @@ class ClusterModeSpec extends AnyFunSuite {
     assert(tableRows(p) == oracleRows(cfg))
   }
 
+  test("a point lookup on a cluster's table reads in the driver, runs no job, and equals the executors' read of its key") {
+    val cfg = BinlogConfig(numEvents = 6000, numConversations = 30,
+      maxTurns = 16, segmentSize = 2000, dupPct = 5, pDelete = 0.1)
+    val src = SparkSpec.tmpDir("cluster-binlog-lookup")
+    BinlogGenerator.writeSegments(spark, cfg, src)
+    val p = new CdcPipeline(PipelineConfig(src, SparkSpec.tmpDir("cluster-table-lookup"),
+      segmentsPerBatch = 1, numBuckets = 4, mergeOnRead = true))
+    p.runAll(spark)
+    assert(p.table.hasDeltas(p.table.loadCurrent()))
+    def triples(rows: Seq[Row]) = rows.map(r => (r.getAs[String]("conv_id"),
+      r.getAs[Int]("turn_idx"), r.getAs[String]("text"), r.getAs[Long]("_lsn"))).toSet
+    // the executors' read: the whole visible table, no key pinned
+    val byKey = p.table.read(spark)
+      .filter(!org.apache.spark.sql.functions.col(graft.model.Model.deletedColumn))
+      .collect().toSeq.groupBy(_.getAs[String]("conv_id"))
+    assert(byKey.size > 8)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      for (k <- byKey.keys.toSeq.sorted :+ "conv-absent") {
+        val got = triples(p.table.readKey(spark, k).collect().toSeq)
+        assert(got == triples(byKey.getOrElse(k, Nil)), s"lookup of $k")
+      }
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 0, s"point lookups ran ${jobs.get} Spark jobs")
+  }
+
   test("structured-streaming epochs on real executors equal the oracle") {
     val cfg = BinlogConfig(numEvents = 8000, numConversations = 30,
       maxTurns = 16, segmentSize = 2000, dupPct = 5)
@@ -236,10 +270,12 @@ class ClusterModeSpec extends AnyFunSuite {
       .select("lsn", "op", "conv_id", "turn_idx", "role", "text", "tool", "ts")
     graft.ops.MergeInto(spark, t, upd, "cm#0", "cm", mergeOnRead = true)
     assert(t.hasDeltas(t.loadCurrent()))
+    // no key pinned: a key-pinned query reads in the driver instead
     val merged = spark.sql(
-      "SELECT text FROM gclu.t WHERE conv_id = 'c-7' AND turn_idx = 0")
-      .collect().map(_.getString(0)).toSeq
-    assert(merged == Seq("upd7"), s"executor-side LWW merge must win, got $merged")
+      "SELECT conv_id, text FROM gclu.t WHERE turn_idx = 0")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(merged == (0 until 50).map(i => s"c-$i" -> s"upd$i").toMap,
+      s"executor-side LWW merge must win, got $merged")
     assert(spark.sql("SELECT count(*) FROM gclu.t").collect()(0).getLong(0) == 200L)
 
     val r = spark.sql("CALL gclu.compact(table => 't')").collect()(0)

@@ -93,6 +93,12 @@ class CommitCostSpec extends SparkSpec {
     val compact = processStarts(Compaction(spark, t))
     assert(compact.isEmpty, s"a compaction started ${compact.size} processes: ${compact.take(3)}")
     assert(!t.hasDeltas(t.loadCurrent()))
+    // the generator's segment files too (66 forks in one intake_tail set-up)
+    val src = tmpDir("binlog-forks")
+    val gen = processStarts(graft.source.BinlogGenerator.writeSegments(spark,
+      graft.source.BinlogConfig(numEvents = 400, numConversations = 6, segmentSize = 200), src))
+    assert(gen.isEmpty, s"writing binlog segments started ${gen.size} processes: ${gen.take(3)}")
+    assert(spark.read.parquet(src).count() >= 400)
 
     // the same modes as Hadoop's chmod under its default umask (022)
     val data = Paths.get(root, "data")

@@ -96,20 +96,11 @@ class FileIndexSpec extends SparkSpec {
     * read planned (file paths + merge flags) and its pruned read schema.
     */
   private def dsv2Scan(df: DataFrame): (Seq[graft.sql.GraftPartition], StructType) = {
-    df.collect()
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    def unwrap(p: SparkPlan): SparkPlan = p match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case other => other
-    }
-    val scans = unwrap(df.queryExecution.executedPlan)
-      .collect { case b: BatchScanExec => b }
+    val scans = graftScans(df)
     assert(scans.size == 1, s"expected one v2 scan, got ${scans.size}")
-    (scans.head.batch.planInputPartitions()
+    (scans.head.planInputPartitions()
       .map(_.asInstanceOf[graft.sql.GraftPartition]).toSeq,
-      scans.head.scan.readSchema())
+      scans.head.readSchema())
   }
   private def dsv2FileCount(df: DataFrame): Long =
     dsv2Scan(df)._1.flatMap(partitionPaths).distinct.size.toLong

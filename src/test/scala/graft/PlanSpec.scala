@@ -83,7 +83,8 @@ class PlanSpec extends SparkSpec {
 
     // MOR table: read and point lookup merge inside the scan (one sorted
     // k-way merge per delta-carrying bucket) — no shuffle, no window, no
-    // aggregate
+    // aggregate; the point lookup reads in the planning thread, a local
+    // table scan
     val mor = new CdcPipeline(PipelineConfig(src, tmpDir("table-planmor"),
       segmentsPerBatch = 1, numBuckets = 2, mergeOnRead = true))
     mor.runAll(spark)
@@ -97,7 +98,8 @@ class PlanSpec extends SparkSpec {
       assert(!pMor.contains("Exchange") && !pMor.contains("Window") &&
         !pMor.contains("Aggregate"),
         s"MOR $what must merge without a shuffle:\n${pMor.linesIterator.take(10).mkString("\n")}")
-      assert(pMor.contains("BatchScan"), pMor)
+      if (what == "read") assert(pMor.contains("BatchScan"), pMor)
+      else assert(pMor.contains("LocalTableScan") && !pMor.contains("BatchScan"), pMor)
     }
 
     // changelog read: the _lsn cursor filter is among the DSv2 scan's
@@ -108,15 +110,21 @@ class PlanSpec extends SparkSpec {
     assert(pChg.contains("GreaterThan(_lsn"), s"changelog _lsn filter not pushed: $pChg")
 
     // point lookup: bare scan (no merge/shuffle) with the key equality
-    // pushed down to the parquet row groups
+    // pushed down to the parquet row groups, as the optimized plan's scan
+    // describes it
     val k = cow.table.read(spark)
       .agg(org.apache.spark.sql.functions.min("conv_id"))
       .collect()(0).getString(0)
-    val pKey = plan(cow.table.readKey(spark, k))
+    val lookup = cow.table.readKey(spark, k)
+    val pKey = plan(lookup)
     assert(!pKey.contains("Exchange") && !pKey.contains("Window"),
       s"point lookup should stay a bare filtered scan:\n${pKey.linesIterator.take(8).mkString("\n")}")
-    assert(pushed(pKey).contains("EqualTo(conv_id"),
-      s"point-lookup key filter not pushed:\n${pKey.linesIterator.take(8).mkString("\n")}")
+    val described = lookup.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+        r.scan.description()
+    }.mkString("\n")
+    assert(described.contains("EqualTo(conv_id"),
+      s"point-lookup key filter not pushed:\n$described")
   }
 
   /** What a block ran: Spark jobs, and the bytes their tasks wrote to
@@ -245,7 +253,7 @@ class PlanSpec extends SparkSpec {
     assert(mor.tail.forall(_ == 0), s"merge-on-read commits compile: $mor")
   }
 
-  test("counter guard: a merge-on-read lookup and a changelog poll each run one job; planning builds no reader") {
+  test("counter guard: a merge-on-read lookup runs no job and a changelog poll one; planning builds no reader") {
     import graft.cdc.{CdcPipeline, PipelineConfig}
     import graft.source.{BinlogConfig, BinlogGenerator}
     import graft.table.FilePrune
@@ -264,20 +272,27 @@ class PlanSpec extends SparkSpec {
       "fixture: the looked-up key's bucket must carry deltas")
     withJobCounter { jobsOf =>
       var rows = 0
-      // each ran 2 jobs while the merge was a key shuffle plus a window
-      assert(jobsOf { rows = p.table.readKey(spark, k).collect().length } == 1)
+      // each ran 2 jobs while the merge was a key shuffle plus a window; the
+      // lookup ran 1 while its one-task read was a Spark job
+      assert(jobsOf { rows = p.table.readKey(spark, k).collect().length } == 0)
       assert(rows > 0)
       assert(jobsOf { p.table.readChanges(spark, 1L).collect() } == 1)
     }
     // a parquet reader broadcasts its Hadoop conf: broadcast ids taken
-    // around planning show that planning built none (it built two while
-    // the scan left its columnar support to be asked per partition)
+    // around physical planning count the readers it built. A distributed
+    // scan builds none (it built two while the scan left its columnar
+    // support to be asked per partition); a point lookup reads while it is
+    // planned, through exactly one
     val sc = spark.sparkContext
-    val before = sc.broadcast(0)
-    plannedFiles(p.table.readKey(spark, k))
-    val after = sc.broadcast(0)
-    assert(after.id == before.id + 1, s"planning broadcast ${after.id - before.id - 1} times")
-    before.destroy(); after.destroy()
+    def readersPlanning(df: org.apache.spark.sql.DataFrame): Long = {
+      val before = sc.broadcast(0)
+      df.queryExecution.executedPlan
+      val after = sc.broadcast(0)
+      before.destroy(); after.destroy()
+      after.id - before.id - 1
+    }
+    assert(readersPlanning(p.table.readChanges(spark, 1L)) == 0)
+    assert(readersPlanning(p.table.readKey(spark, k)) == 1)
   }
 
   test("counter guard: a change-stream tail batch over many small files packs them into few partitions") {

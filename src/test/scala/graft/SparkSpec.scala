@@ -29,17 +29,25 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   def tmpDir(prefix: String): String = SparkSpec.tmpDir(prefix)
 
+  /** The graft scans of a DataFrame's optimized plan: each `GraftScan`,
+    * read by Spark's tasks or, pinned to one key, wrapped in the
+    * planning-thread `GraftLocalScan`. Optimizes the query; plans nothing
+    * physical, so reads nothing.
+    */
+  private[graft] def graftScans(df: org.apache.spark.sql.DataFrame): Seq[graft.sql.GraftScan] =
+    df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
+    }.collect {
+      case s: graft.sql.GraftScan => s
+      case l: graft.sql.GraftLocalScan => l.scan
+    }
+
   /** The data files a DataFrame's graft scans planned: the partitions of
-    * every `GraftScan` in its physical plan, adaptive stages included
-    * (`Dataset.inputFiles` sees no files under a DSv2 relation). Plans the
-    * query; runs nothing.
+    * every scan in [[graftScans]] (`Dataset.inputFiles` sees no files under
+    * a DSv2 relation).
     */
   private[graft] def plannedFiles(df: org.apache.spark.sql.DataFrame): Seq[String] =
-    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-      .collect(df.queryExecution.executedPlan) {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-            if b.scan.isInstanceOf[graft.sql.GraftScan] => b.inputPartitions
-      }.flatten.flatMap(partitionPaths)
+    graftScans(df).flatMap(_.planInputPartitions()).flatMap(partitionPaths)
 
   /** The data files one scan partition reads. */
   private[graft] def partitionPaths(p: org.apache.spark.sql.connector.read.InputPartition)
